@@ -120,6 +120,16 @@ def decode_media(media_df, repartition: int | None = None):
 # simple.py:68). We do the same: the driver plans over FILE POINTERS
 # (at production scale, Iceberg manifest entries) and each task reads
 # its parquet split directly with pyarrow — vectorized, no JVM copy.
+#
+# The decode runs ONE Python task per core, not more: every Python task
+# pays a fixed ~0.15-0.2 CPU-s before it touches a row (a trivial
+# 6-task mapInPandas at local[3] costs 1.0-1.1 worker CPU-s on a 4-core
+# x86 host, Python 3.11). Wrapping pyspark.worker.main in cProfile,
+# through a ``pyspark_``-prefixed module set as spark.python.worker.module,
+# puts >99% of it in worker_util.setup_spark_files ->
+# importlib.invalidate_caches(), which re-reads the 1,328-entry zip
+# directory of pyspark.zip 16 times per task. Byte-balanced groups
+# leave no straggler worth extra tasks to rebalance.
 
 MANIFEST_SUFFIX = "_manifest"
 MANIFEST_SCHEMA = "file string, n_rows long, n_bytes long"
@@ -143,9 +153,9 @@ def write_store_manifest(spark, store_path: str):
     (toddleocr/datasets/lmdb.py:51-65) — so query planning reads a
     table instead of listing the filesystem. The driver-side listing
     below runs only here, at write time (the Iceberg-commit analogue);
-    footers are read executor-side. At real manifest scale (millions
-    of files) this table is itself partitioned parquet — still never
-    O(files) driver memory at PLAN time."""
+    footers are read executor-side. Planning collects this table to
+    the driver (one (file, bytes) pair per file, see
+    ``_store_files_df``)."""
     import os as _os
 
     files = _list_store_files(store_path)
@@ -181,9 +191,9 @@ def write_store_manifest(spark, store_path: str):
 
 
 def _list_store_files(path: str) -> list[str]:
-    """Driver-side glob fallback — used at manifest WRITE time and for
-    ad-hoc stores that never wrote one (tests, single files). The hot
-    query path plans from the manifest table instead."""
+    """Driver-side glob — used at manifest WRITE time and for ad-hoc
+    stores that never wrote one (single files, tests). Stores with a
+    manifest plan from the manifest table instead."""
     import glob as _glob
     import os as _os
 
@@ -192,83 +202,66 @@ def _list_store_files(path: str) -> list[str]:
     return sorted(_glob.glob(_os.path.join(path, "*.parquet")))
 
 
-# back-compat alias (tests exercise the fallback path by this name)
-list_store_files = _list_store_files
+def _pack_groups(files: list[tuple[str, int]],
+                 n_groups: int) -> list[list[str]]:
+    """Greedy byte packing of (path, n_bytes) pairs: largest file first,
+    each onto the group with the fewest bytes so far. No group exceeds
+    the ideal share (total / n_groups) by more than the largest file."""
+    import heapq
+
+    groups: list[list[str]] = [[] for _ in range(n_groups)]
+    loads = [(0, g) for g in range(n_groups)]
+    for path, n_bytes in sorted(files, key=lambda f: (-f[1], f[0])):
+        load, g = heapq.heappop(loads)
+        groups[g].append(path)
+        heapq.heappush(loads, (load + n_bytes, g))
+    return groups
 
 
 def _store_files_df(spark, store_path: str, n_tasks: int):
-    """DataFrame of data-file paths, packed into byte-balanced tasks.
+    """DataFrame of data-file paths with exactly one partition per
+    byte-balanced group of files, ``min(#files, n_tasks)`` groups.
 
-    Manifest path (the default): read the manifest TABLE, assign each
-    file a task id by its start offset in the cumulative-bytes order,
-    and range-partition on it — planning is a tiny Spark job over one
-    row per file, never an O(files) driver listing, and task sizes
-    track bytes (a skewed file-size distribution still packs evenly).
-
-    The cumulative sum is a DISTRIBUTED prefix sum, not a global-order
-    window: files hash into ``n_tasks`` chunks, the running sum within
-    a chunk is a partitioned window, and each chunk's starting offset
-    comes from the tiny per-chunk byte totals (one row per chunk,
-    broadcast back). Packing only needs SOME deterministic total order
-    for contiguous byte ranges — (chunk, file) is as good as (file) —
-    so no stage ever holds more than ~files/n_tasks rows in one
-    partition, and a million-file manifest plans without a
-    single-partition sort.
-    """
+    The file list comes from the manifest table (one small collect —
+    the Iceberg seam) or, for ad-hoc stores that never wrote one, from
+    a glob; both go through the same driver-side packer. The driver
+    holds one (path, bytes) pair per file, as ``spark.read.parquet``
+    already does when it lists a directory. The groups reach the JVM
+    as a literal array of path arrays indexed by ``spark.range`` — no
+    shuffle, no window and no Python task before the decode itself
+    (``createDataFrame`` of a Python list would convert through a
+    Python RDD: one more Python task per partition)."""
     import os as _os
 
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     man = manifest_path(store_path)
     if _os.path.exists(_os.path.join(man, "_SUCCESS")):
-        chunk = F.pmod(F.xxhash64("file"), F.lit(n_tasks)).alias("chunk")
-        man_df = spark.read.parquet(man).withColumn("chunk", chunk)
-        # per-chunk byte totals: <= n_tasks rows; the offset window runs
-        # over this TINY table only (bounded by task count, not files)
-        per_chunk = (man_df.groupBy("chunk")
-                     .agg(F.sum("n_bytes").alias("chunk_bytes")))
-        w_off = Window.orderBy("chunk")
-        offsets = (per_chunk
-                   .withColumn("chunk_off",
-                               F.sum("chunk_bytes").over(w_off)
-                               - F.col("chunk_bytes"))
-                   .crossJoin(F.broadcast(
-                       per_chunk.agg(F.sum("chunk_bytes")
-                                     .alias("tot_bytes"))))
-                   .select("chunk", "chunk_off", "tot_bytes"))
-        w_local = Window.partitionBy("chunk").orderBy("file")
-        return (man_df
-                .join(F.broadcast(offsets), "chunk")
-                .withColumn("cum",
-                            F.col("chunk_off")
-                            + F.sum("n_bytes").over(w_local)
-                            - F.col("n_bytes"))
-                .withColumn("task",
-                            F.floor(F.col("cum") * n_tasks
-                                    / F.greatest(F.col("tot_bytes"),
-                                                 F.lit(1))))
-                .select(F.concat(
-                    F.lit((_os.path.dirname(store_path)
-                           if _os.path.isfile(store_path)
-                           else store_path).rstrip("/") + "/"),
-                    F.col("file")).alias("path"), "task")
-                .repartitionByRange(n_tasks, "task")
-                .select("path"))
-    files = _list_store_files(store_path)
-    return (spark.createDataFrame([(f,) for f in files], "path string")
-            .repartition(max(1, min(len(files), n_tasks))))
+        root = (_os.path.dirname(store_path)
+                if _os.path.isfile(store_path) else store_path)
+        # explicit schema: no footer-inference job before the collect
+        files = [(_os.path.join(root, r.file), r.n_bytes) for r in
+                 spark.read.schema(MANIFEST_SCHEMA).parquet(man).collect()]
+    else:
+        files = [(f, _os.path.getsize(f))
+                 for f in _list_store_files(store_path)]
+    groups = _pack_groups(files, max(1, min(len(files), n_tasks)))
+    table = F.array(*[F.array(*map(F.lit, g)) for g in groups]).cast(
+        "array<array<string>>")
+    return (spark.range(len(groups), numPartitions=len(groups))
+            .select(F.explode(F.element_at(
+                table, F.col("id").cast("int") + 1)).alias("path")))
 
 
 def map_media_store(spark, store_path: str, batch_fn, schema,
                     columns: list[str] | None = None):
     """Run ``batch_fn(iter_of_pandas)`` over the media store with
-    executor-side pyarrow reads, planned from the store's manifest
-    table (write_store_manifest): one input row per data file, packed
-    into ~2 byte-balanced tasks/core — fewer task boundaries than
-    one-task-per-file, still enough for stragglers to rebalance."""
-    n_tasks = spark.sparkContext.defaultParallelism * 2
-    files_df = _store_files_df(spark, store_path, n_tasks)
+    executor-side pyarrow reads: one Python task per core, each reading
+    one byte-balanced group of data files (``_store_files_df``). One
+    task per core rather than more, because every Python task has a
+    fixed cost (see "Fast path" above) that no rebalancing repays."""
+    files_df = _store_files_df(spark, store_path,
+                               spark.sparkContext.defaultParallelism)
     cols = columns
 
     def per_file(batches):

@@ -38,7 +38,7 @@ import shutil
 import time
 
 from paddleocr_spark import __version__
-from paddleocr_spark.operators.extract import extract_spans
+from paddleocr_spark.operators.extract import auto_salt_width, extract_spans
 
 __all__ = ["run_with_checkpoint", "completed_buckets", "read_output"]
 
@@ -126,12 +126,9 @@ def run_with_checkpoint(spark, docs_df, media_df, out_dir: str,
         decode_media_store,
     )
     from paddleocr_spark.operators._cache import eager_persist, release_one
-    from paddleocr_spark.operators.extract import SALT_WIDTH
 
     if salt_width is None:
-        max_spans = docs_df.agg(
-            F.max(F.size("spans")).alias("m")).collect()[0]["m"] or 0
-        salt_width = SALT_WIDTH if max_spans > SALT_WIDTH else 0
+        salt_width = auto_salt_width(docs_df)
     fragments = eager_persist(
         decode_media_store(spark, media_df) if isinstance(media_df, str)
         else decode_media(media_df))

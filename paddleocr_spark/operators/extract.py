@@ -55,7 +55,7 @@ from paddleocr_spark.functions.udfs import (
 )
 
 __all__ = ["explode_spans", "clean_text_col", "extract_spans",
-           "SALT_WIDTH"]
+           "SALT_WIDTH", "auto_salt_width"]
 
 # Default offset-bucket width for the salted per-doc ordering: docs
 # with fewer spans see a single bucket (plain-window behavior); a
@@ -63,6 +63,17 @@ __all__ = ["explode_spans", "clean_text_col", "extract_spans",
 # bounded by salt_width x fragments-per-span (~10), independent of how
 # pathological the doc is.
 SALT_WIDTH = 4096
+
+
+def auto_salt_width(docs_df) -> int:
+    """The "auto" salt choice: SALT_WIDTH when some doc has more than
+    SALT_WIDTH spans, else 0 (plain per-doc window). One max-statistic
+    job over the docs."""
+    from pyspark.sql import functions as F
+
+    max_spans = docs_df.agg(
+        F.max(F.size("spans")).alias("m")).collect()[0]["m"] or 0
+    return SALT_WIDTH if max_spans > SALT_WIDTH else 0
 
 
 def clean_text_col(col):
@@ -106,9 +117,7 @@ def extract_spans(docs_df, media, decode_partitions: int | None = None,
     from pyspark.sql import functions as F
 
     if salt_width == "auto":
-        max_spans = docs_df.agg(
-            F.max(F.size("spans")).alias("m")).collect()[0]["m"] or 0
-        salt_width = SALT_WIDTH if max_spans > SALT_WIDTH else 0
+        salt_width = auto_salt_width(docs_df)
     if fragments_df is not None:
         # pre-decoded fragments (the checkpoint loop decodes the store
         # ONCE and shares it across buckets instead of paying the

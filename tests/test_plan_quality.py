@@ -76,54 +76,72 @@ def test_extract_shuffle_budget(spark):
     assert count_exchanges(df) <= 5
 
 
-def test_media_store_planning_from_manifest(spark):
-    """Store decode must plan from the manifest TABLE (a parquet scan
-    of <store>/_manifest), not a driver-side file glob — the
-    self-managed Iceberg-manifest stand-in. The store's fat data files
-    must NOT appear as a Catalyst FileScan (they are read executor-side
-    via pyarrow pointer passing)."""
+def test_media_store_planning_from_manifest(spark, monkeypatch):
+    """Store decode must plan from the manifest TABLE, not a driver-side
+    file glob — the self-managed Iceberg-manifest stand-in. The store's
+    fat data files must NOT appear as a Catalyst FileScan (they are read
+    executor-side via pyarrow pointer passing)."""
     import os as _os
+    import re
 
-    from paddleocr_spark.functions.udfs import (
-        decode_media_store,
-        manifest_path,
-    )
+    from paddleocr_spark.functions import udfs
     from paddleocr_spark.plans.inspect import formatted_plan
 
     _, media_path = entry_mod.corpus_paths(spark, SF, n_docs=50)
-    assert _os.path.exists(_os.path.join(manifest_path(media_path),
+    assert _os.path.exists(_os.path.join(udfs.manifest_path(media_path),
                                          "_SUCCESS"))
-    df = decode_media_store(spark, media_path)
-    plan = formatted_plan(df)
-    # every Catalyst file scan points at the manifest table; the media
-    # data dir never appears as a scan location (its files are read
-    # executor-side inside the mapInPandas)
-    import re
 
-    locs = re.findall(r"Location: \S+ \[([^\]]*)\]", plan)
-    assert locs and all("media_manifest" in loc for loc in locs), plan
+    def no_glob(path):
+        raise AssertionError(f"store {path} was globbed at plan time")
+
+    monkeypatch.setattr(udfs, "_list_store_files", no_glob)
+    plan = formatted_plan(udfs.decode_media_store(spark, media_path))
+    media_dir = _os.path.basename(media_path.rstrip("/"))
+    for loc in re.findall(r"Location: \S+ \[([^\]]*)\]", plan):
+        assert not re.search(rf"/{re.escape(media_dir)}(,|$)", loc), plan
 
 
 def test_manifest_packing_has_no_global_file_window(spark):
-    """The byte-balanced task packing must compute its cumulative sum
-    as a distributed prefix sum: any window ordered over the per-FILE
-    rows must be partitioned (by chunk); an unpartitioned window may
-    only run over the per-chunk offsets table (rows bounded by task
-    count, not file count)."""
-    import re
-
-    from paddleocr_spark.functions.udfs import _store_files_df
+    """Store decode plans with no Window and no Exchange at all: the
+    byte packing happens on the driver and the decode reads a
+    JVM-only relation with one partition per group."""
+    from paddleocr_spark.functions.udfs import decode_media_store
     from paddleocr_spark.plans.inspect import formatted_plan
 
     _, media_path = entry_mod.corpus_paths(spark, SF, n_docs=50)
-    files_df = _store_files_df(spark, media_path, n_tasks=8)
-    plan = formatted_plan(files_df)
-    specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
-    assert specs, plan
-    for spec in specs:
-        if re.search(r"\bfile#\d+ ASC", spec):
-            # file-ordered window: first arg must be the chunk column
-            assert spec.lstrip().startswith("chunk#"), spec
+    df = decode_media_store(spark, media_path)
+    plan = formatted_plan(df)
+    assert "Window" not in plan, plan
+    assert count_exchanges(df) == 0, plan
+
+
+def test_store_decode_is_one_task_per_core_in_two_jobs(spark):
+    """The whole store decode — manifest read, planning and the decode
+    action — runs at most 2 Spark jobs, and the decode stage runs
+    exactly min(#files, defaultParallelism) tasks. A range-partition
+    sampling job, or a Python-RDD conversion of the file list, fails
+    this."""
+    from paddleocr_spark.functions.udfs import (
+        _list_store_files,
+        decode_media_store,
+    )
+
+    _, media_path = entry_mod.corpus_paths(spark, SF, n_docs=50)
+    sc = spark.sparkContext
+    group = "test_store_decode_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        decode_media_store(spark, media_path).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) <= 2, jobs
+    last = max(jobs)
+    tasks = [tracker.getStageInfo(s).numTasks
+             for s in tracker.getJobInfo(last).stageIds]
+    want = min(len(_list_store_files(media_path)), sc.defaultParallelism)
+    assert tasks == [want], tasks
 
 
 def test_manifest_packing_is_byte_balanced(spark):
@@ -146,6 +164,49 @@ def test_manifest_packing_is_byte_balanced(spark):
     tot = sum(by_task.values())
     max_file = max(_os.path.getsize(r.path) for r in rows)
     assert max(by_task.values()) <= tot / 4 * 2 + max_file, by_task
+
+
+def test_skewed_store_packs_within_share_plus_largest_file(spark,
+                                                          tmp_path):
+    """A store with one file ~10x the others, with and without a
+    manifest (both go through the same packer): no group's bytes exceed
+    the ideal share plus the largest file."""
+    import os as _os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from paddleocr_spark.functions.udfs import (
+        _store_files_df,
+        write_store_manifest,
+    )
+
+    rng = np.random.default_rng(7)
+    for name, kind in (("plain", None), ("manifested", "manifest")):
+        store = tmp_path / name
+        store.mkdir()
+        for i in range(12):
+            n = 200_000 if i == 5 else 20_000  # incompressible bytes
+            blob = rng.integers(0, 256, n, dtype=np.uint8).tobytes()
+            pq.write_table(pa.table({"b": [blob]}),
+                           store / f"part-{i:05d}.parquet",
+                           compression="none")
+        if kind:
+            write_store_manifest(spark, str(store))
+        rows = (_store_files_df(spark, str(store), n_tasks=4)
+                .select(F.spark_partition_id().alias("pid"), "path")
+                .collect())
+        assert len(rows) == 12
+        sizes = {r.path: _os.path.getsize(r.path) for r in rows}
+        by_task: dict[int, int] = {}
+        for r in rows:
+            by_task[r.pid] = by_task.get(r.pid, 0) + sizes[r.path]
+        assert len(by_task) == 4, by_task
+        share = sum(sizes.values()) / 4
+        assert max(by_task.values()) <= share + max(sizes.values()), \
+            (kind, by_task)
 
 
 def test_bm25_plan_shape(spark):
