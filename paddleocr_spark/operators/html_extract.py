@@ -171,23 +171,27 @@ def _link_graph_dir(sf_dir: str) -> str:
     ident = hashlib.md5(
         f"{os.path.abspath(sf_dir)}:{mtime}:{LINK_COEFFS}"
         .encode()).hexdigest()[:12]
-    return cache_root("link_graph", f"v1_{ident}")
+    # v2: (src, dst, deg) — a v1 (src, dst) table is never served
+    return cache_root("link_graph", f"v2_{ident}")
 
 
 def build_link_graph_table(spark, sf_dir: str) -> str:
     """Build (or load) the persisted link-graph edge table for this
     corpus — the same build-once shape as the near-dup edge table
     (operators/dedup.py) and the IVF index: the HTML parse runs ONCE
-    and every downstream consumer (PageRank's 10 join rounds,
-    re-runs across sessions) reads (src, dst) rows from parquet. At
-    production scale the link graph IS its own table, written by the
-    link-extraction job. Returns the table directory."""
+    and every downstream consumer (PageRank's rounds, re-runs across
+    sessions) reads (src, dst, deg) rows from parquet, deg being the
+    outdegree of src. At production scale the link graph IS its own
+    table, written by the link-extraction job. Returns the table
+    directory."""
     import os
 
     out = _link_graph_dir(sf_dir)
     if os.path.exists(os.path.join(out, "_SUCCESS")):
         return out
-    html_link_graph(spark, sf_dir).write.mode("overwrite").parquet(out)
+    (html_link_graph(spark, sf_dir)
+     .selectExpr("src", "dst", "count(*) OVER (PARTITION BY src) AS deg")
+     .write.mode("overwrite").parquet(out))
     return out
 
 
@@ -198,20 +202,22 @@ def html_pagerank(spark, sf_dir: str, iters: int = PR_ITERS,
     graph — the canonical web-scale iterative DataFrame job.
 
     All arithmetic is 64-bit integer on ranks scaled by PR_SCALE
-    (rank 1.0 == 10^12): contribution = rank DIV outdeg, damping =
-    (85 * inflow) DIV 100 + (15 * PR_SCALE DIV 100) DIV N. Integer
-    sums are order-independent, so the result is bit-exact across
-    partitionings, engines, and the DuckDB oracle's unrolled-CTE
-    twin — no float-summation-order caveats. Each round is one join +
-    one map-side-combinable sum; a checkpoint every third round keeps
-    the logical plan depth bounded (the operators/graph.py lesson)
-    while paying the eager-materialization barrier 4x instead of 10x —
-    measured 12.2 s -> 4.5 s cold / 4.8 -> 3.7 warm at sf0.01,
-    hash-identical output. The default localCheckpoint is right for
-    local[*]; pass ``checkpoint_dir=`` for the cluster-durable
-    reliable mode (operators/_iter.py — survives executor loss,
-    output-identical). Every node has outdegree >= 1 by construction,
-    so no dangling-mass term."""
+    (rank 1.0 == 10^12): contribution = rank DIV outdeg, rank = base
+    + (85 * inflow) DIV 100 with base = (15 * PR_SCALE DIV 100) DIV N.
+    Integer sums are order-independent, so the result is bit-exact
+    across partitionings, engines, and the DuckDB oracle's
+    unrolled-CTE twin. Each round is one equi-join (edges LEFT JOIN
+    ranks; a node absent from ranks had no inflow, so its rank is
+    base) and one map-side-combinable sum over dst; round 1 joins
+    nothing, N is counted once and inlined as a literal, and the
+    documents are joined once, after the last round. Measured at 5
+    rounds on 2,000 pages (local[3], 4-core host): 16 Spark jobs per
+    call. A checkpoint every third round but the last (the caller's
+    action computes that one) keeps the plan depth bounded (the
+    operators/graph.py lesson). The default localCheckpoint is right
+    for local[*]; ``checkpoint_dir=`` selects the cluster-durable
+    reliable mode (operators/_iter.py, output-identical). Every node
+    has outdegree >= 1 by construction, so no dangling-mass term."""
     from pyspark.sql import functions as F
 
     from paddleocr_spark.operators._cache import eager_persist
@@ -222,51 +228,39 @@ def html_pagerank(spark, sf_dir: str, iters: int = PR_ITERS,
     # the link graph is a PERSISTED corpus-prep table (built once per
     # corpus by build_link_graph_table, reused across sessions — the
     # HTML parse never re-runs for PageRank); the memory persist on
-    # top keeps the 10 join rounds off the parquet scan. Measured at
-    # sf0.1: 17 s with the parse inline per round -> ~4 s with a
-    # session cache -> ~1.5 s serving from the prebuilt table.
-    # materialize=False: outdeg's count below is edges' first
-    # (sequential) consumer and fills both caches in one job
+    # top keeps the rounds off the parquet scan, and round 1 fills it.
+    # Both reads name their schema: inferring it from the parquet
+    # footers costs one Spark job per table
     edges = eager_persist(
-        spark.read.parquet(build_link_graph_table(spark, sf_dir)),
+        spark.read.schema("src long, dst long, deg long")
+        .parquet(build_link_graph_table(spark, sf_dir)),
         materialize=False)
-    nodes = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-             .select(F.col("doc_id").cast("long").alias("doc_id")))
-    n_row = nodes.agg(F.count("*").alias("_n"))
-    # nodes is joined in EVERY round (same access pattern as edges) —
-    # persist it too, or each eager round re-scans the parquet and
-    # recomputes the count aggregation
-    nodes = eager_persist(nodes.crossJoin(F.broadcast(n_row)))
-
-    outdeg = eager_persist(
-        edges.groupBy("src").agg(F.count("*").alias("deg")))
+    nodes = spark.read.schema("doc_id long").parquet(
+        f"{sf_dir}/documents.parquet")
+    n = nodes.count() or 1  # an empty corpus ranks no node
     # `div` is Spark's true 64-bit integer division — NOT `/` +
     # cast(long), which routes through a double and can round across
     # an integer boundary once N or the ranks grow
-    base = F.expr(f"{15 * PR_SCALE // 100} div _n")
-    # the initial ranks are a zero-depth projection of the cached
-    # nodes — checkpointing them would buy no plan truncation and
-    # cost a whole job; the first in-loop checkpoint (round 3) is the
-    # earliest one that pays for itself
-    ranks = nodes.select(
-        "doc_id", "_n",
-        F.expr(f"{PR_SCALE} div _n").alias("rank_fp"))
+    base = f"{15 * PR_SCALE // 100 // n}L"
+    rank0 = f"{PR_SCALE // n}L"  # every node's rank before round 1
+    # a node absent from ranks had no inflow in the round before
+    rank = f"coalesce(rank_fp, {base})"
+    if not iters:
+        return nodes.select("doc_id", F.expr(rank0).alias("rank_fp"))
 
+    contrib = edges  # round 1 joins nothing
     for it in range(iters):
-        contrib = (ranks
-                   .join(outdeg, ranks.doc_id == outdeg.src)
-                   .select(F.col("doc_id").alias("c_src"),
-                           F.expr("rank_fp div deg").alias("c")))
-        inflow = (edges.join(contrib, edges.src == F.col("c_src"))
-                  .groupBy("dst").agg(F.sum("c").alias("inflow")))
-        ranks = (nodes
-                 .join(inflow, nodes.doc_id == inflow.dst, "left")
-                 .select(
-                     "doc_id", "_n",
-                     (base + F.expr(
-                         "(85 * coalesce(inflow, 0L)) div 100"))
-                     .alias("rank_fp")))
-        if checkpoint and ((it + 1) % 3 == 0 or it == iters - 1):
+        if it:
+            contrib = edges.join(ranks, edges.src == ranks.doc_id, "left")
+        ranks = (contrib.groupBy("dst")
+                 .agg(F.sum(F.expr(f"{rank if it else rank0} div deg"))
+                      .alias("inflow"))
+                 .select(F.col("dst").alias("doc_id"), F.expr(
+                     f"{base} + (85 * inflow) div 100").alias("rank_fp")))
+        if checkpoint and (it + 1) % 3 == 0 and it != iters - 1:
             ranks = ckpt(ranks)
 
-    return ranks.select("doc_id", "rank_fp")
+    # a dst outside the documents never appears as a src, so it
+    # contributed nothing; this join drops it
+    return (nodes.join(ranks, "doc_id", "left")
+            .select("doc_id", F.expr(rank).alias("rank_fp")))

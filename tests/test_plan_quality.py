@@ -417,10 +417,10 @@ def test_html_pipeline_prunes_columns(spark):
 
 
 def test_pagerank_no_cartesian_beyond_count_broadcast(spark):
-    """Each PageRank round must be equi-joins + one map-side-
-    combinable sum. The ONLY nested-loop join allowed is the
-    broadcast of the one-row corpus-count used by the link formulas
-    and the damping base."""
+    """Each PageRank round must be one equi-join + one map-side-
+    combinable sum. The corpus count is inlined as a literal, so no
+    nested-loop join of any kind is left in the plan (the name is
+    kept from when the one-row count was broadcast)."""
     from paddleocr_spark.operators import html_extract
     from paddleocr_spark.plans.inspect import formatted_plan
 
@@ -428,7 +428,81 @@ def test_pagerank_no_cartesian_beyond_count_broadcast(spark):
                                     checkpoint=False)
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
     assert has_partial_aggregate(df)
+
+
+def _pagerank_jobs(spark, iters: int) -> int:
+    from paddleocr_spark.operators import html_extract
+
+    sc = spark.sparkContext
+    group = f"test_pagerank_jobs_{iters}"
+    sc.setJobGroup(group, group)
+    try:
+        html_extract.html_pagerank(spark, SF, iters=iters,
+                                   checkpoint=False).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pagerank_job_budget_per_round(spark):
+    """At most 2 Spark jobs per extra PageRank round (the sum's shuffle
+    stage and the broadcast of the ranks it joins), counted through the
+    status tracker on a built link-graph table."""
+    from paddleocr_spark.operators import html_extract
+
+    html_extract.build_link_graph_table(spark, SF)
+    one = _pagerank_jobs(spark, 1)
+    three = _pagerank_jobs(spark, 3)
+    assert three - one <= 4, (one, three)
+
+
+def test_pagerank_reads_documents_once_in_plan(spark):
+    """The documents table is read twice per call whatever the round
+    count: once by the eager count of N, and once in the plan, by the
+    join after the last round that keeps pages without in-links."""
+    import re
+
+    from paddleocr_spark.operators import html_extract
+    from paddleocr_spark.plans.inspect import formatted_plan
+
+    for iters in (1, 3, 5):
+        plan = formatted_plan(html_extract.html_pagerank(
+            spark, SF, iters=iters, checkpoint=False))
+        scans = re.findall(r"Location: \S+ \[[^\]]*documents\.parquet",
+                           plan)
+        assert len(scans) == 1, (iters, len(scans))
+
+
+def test_link_graph_table_carries_outdegree(spark, tmp_path, monkeypatch):
+    """The link-graph table is exactly (src, dst, deg), deg being the
+    distinct-edge count of src; and it lives under a key no two-column
+    v1 table can occupy, so a stale table is never served."""
+    from pyspark.sql import functions as F
+
+    from paddleocr_spark import cachedir
+    from paddleocr_spark.operators import html_extract
+
+    monkeypatch.setattr(cachedir, "_ROOT", str(tmp_path))
+    key = html_extract._link_graph_dir(SF)
+    stale = os.path.join(os.path.dirname(key),
+                         "v1_" + os.path.basename(key).split("_", 1)[1])
+    assert stale != key
+    spark.createDataFrame([(0, 1)], "src long, dst long") \
+        .write.parquet(stale)
+
+    out = html_extract.build_link_graph_table(spark, SF)
+    assert out == key
+    table = spark.read.parquet(out)
+    assert table.columns == ["src", "dst", "deg"]
+    assert dict(table.dtypes)["deg"] == "bigint"
+    want = (html_extract.html_link_graph(spark, SF)
+            .groupBy("src").agg(F.count("*").alias("deg")))
+    got = table.select("src", "deg").distinct()
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+    assert table.count() == html_extract.html_link_graph(spark, SF).count()
 
 
 def test_bucket_count_mismatch_refused(spark, tmp_path):
