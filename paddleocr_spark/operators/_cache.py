@@ -1,4 +1,5 @@
-"""Tracked eager caching for multi-consumer intermediates.
+"""Tracked caching: one registry for every cache a query or a session
+owns.
 
 Several operators persist a small intermediate DataFrame that multiple
 branches of one query consume (pred/gt salt families, LSH band rows,
@@ -8,40 +9,58 @@ races (concurrent stages each compute the subtree; measured 63.6 s vs
 22.3 s at sf0.1) — but a bare ``persist()`` leaks: cached partitions
 accumulate across a multi-query bench/correctness run on one session.
 
-``eager_persist`` registers every such cache in a per-session registry;
-``release_persisted`` (called by ``bench.py`` between queries, and by
-any long-lived session when a query's results have been materialized)
-unpersists them all; ``release_one`` unpersists a single tracked cache
-without touching the rest of the session's registry. At production
-scale these intermediates are their own tables and the issue
-disappears.
+Every such cache is registered under its session with a scope:
+
+- ``"query"``: ``eager_persist`` caches and the localCheckpoint blocks
+  of iterative jobs (``checkpointer``). Unpersisting a localCheckpoint
+  discards data with no recompute path (the lineage was truncated), so
+  ``release(spark)`` is called only once a query's results are written
+  or collected (``bench.py`` between queries, a stream's batch body
+  after its sinks).
+- ``"session"``: ``pinned_persist`` pins, intermediates shared ACROSS
+  queries of one session (the decoded KIE token fragments). Only an
+  explicit ``release(spark, "session")`` at teardown drops them.
+
+``release_one`` unpersists a single cache without touching the rest of
+the session's registry. At production scale these intermediates are
+their own tables and the problem disappears.
 """
 
 from __future__ import annotations
 
-import weakref
+__all__ = ["eager_persist", "pinned_persist", "checkpointer", "release",
+           "release_one"]
 
-__all__ = ["eager_persist", "release_persisted", "release_one",
-           "pinned_persist", "release_pinned", "track_checkpoint",
-           "release_checkpoints"]
-
-# session id -> (weakref to the session, list of persisted DataFrames).
-# The DataFrame references are STRONG: the query function's local goes
-# out of scope as soon as it returns (the returned result holds only
-# the JVM plan), so a weakref to the df would be dead by release time
-# and the cache would leak exactly as before. The SESSION reference is
-# weak so a stopped-and-collected session's entries can be purged —
-# and so a CPython id()-reuse collision (new session allocated at a
-# dead session's address) is detected by identity instead of handing
-# the new session a DataFrame bound to a stopped SparkContext.
-_REGISTRY: dict[int, tuple] = {}
+# session -> {key: (scope, df)}; key is id(df) for query-scope entries
+# and the caller's logical key for pins. Keyed by the session OBJECT:
+# every registered DataFrame holds its session strongly, so an entry
+# keeps its session alive and no other session can ever be handed it.
+# The DataFrame references are strong too: the query function's local
+# goes out of scope as soon as it returns (the returned result holds
+# only the JVM plan), so a weak reference would be dead by release time
+# and the cache would leak.
+_REGISTRY: dict = {}
 
 
-def _purge_dead() -> None:
-    for key in [k for k, (ref, _) in _REGISTRY.items() if ref() is None]:
-        del _REGISTRY[key]
-    for key in [k for k, (ref, _) in _PINNED.items() if ref() is None]:
-        del _PINNED[key]
+def _track(df):
+    _REGISTRY.setdefault(df.sparkSession, {})[id(df)] = ("query", df)
+    return df
+
+
+def _unpersist(df) -> bool:
+    try:
+        df.unpersist()
+        # Dataset.unpersist does not reach a checkpoint's blocks: they
+        # belong to the checkpointed RDD under the plan. Dropped through
+        # the context, because RDD.unpersist WARNs on every locally
+        # checkpointed RDD that the drop this release intends is final
+        plan = df._jdf.queryExecution().logical()
+        if plan.nodeName() == "LogicalRDD" and plan.rdd().isCheckpointed():
+            df.sparkSession.sparkContext._jsc.sc().unpersistRDD(
+                plan.rdd().id(), False)
+        return True
+    except Exception:
+        return False  # session already stopped
 
 
 def eager_persist(df, materialize: bool = True):
@@ -58,34 +77,75 @@ def eager_persist(df, materialize: bool = True):
     side effect) — saves one whole job of scheduler overhead, which on
     small inputs is the dominant cost of a multi-branch query.
     """
-    _purge_dead()
-    spark = df.sparkSession
-    key = id(spark)
-    ent = _REGISTRY.get(key)
-    if ent is None or ent[0]() is not spark:  # new session (or id reuse)
-        ent = (weakref.ref(spark), [])
-        _REGISTRY[key] = ent
-    df = df.persist()
-    ent[1].append(df)
+    df = _track(df.persist())
     if materialize:
         df.count()
     return df
 
 
-def release_persisted(spark=None) -> int:
-    """Unpersist every tracked cache (of ``spark``, or of all
-    sessions). Returns the number released. Safe to call while a
-    released query's DataFrame is still around — Spark recomputes."""
+def pinned_persist(spark, key: str, builder):
+    """Build-once-per-session persist of ``builder()`` under ``key``;
+    returns the cached DataFrame on later calls. The extract-once /
+    analyze-many layout at session scale: bounded by the handful of
+    fragment tables a session touches (small-string rows)."""
+    ent = _REGISTRY.get(spark, {}).get(key)
+    if ent is not None:
+        return ent[1]
+    df = builder().persist()
+    df.count()
+    _REGISTRY.setdefault(spark, {})[key] = ("session", df)
+    return df
+
+
+def checkpointer(spark, checkpoint_dir: str | None):
+    """Returns ``ckpt(df) -> df``, lineage truncation for iterative
+    jobs in the chosen durability mode.
+
+    Loop-carried state (PageRank ranks, connected-components labels)
+    must be checkpointed every few rounds or the logical plan nests and
+    multiplies (see operators/graph.py). Two modes:
+
+    - ``localCheckpoint(eager=True)`` (``checkpoint_dir=None``): blocks
+      live on EXECUTORS and are tracked in query scope. Fast, zero
+      configuration — and exactly right on local[*] where "executor
+      loss" cannot happen without losing the whole JVM.
+    - reliable ``checkpoint(eager=True)`` into ``checkpoint_dir``
+      (installed as the context's checkpoint dir, idempotently): blocks
+      go to the (distributed) filesystem, so on a real cluster one
+      executor loss after an eager checkpoint leaves a recompute path —
+      localCheckpoint there kills the lineage WITHOUT a recovery copy,
+      turning one lost executor into a failed job. At 100-TB scale pass
+      a DFS path (or write every k-th round's state to an intermediate
+      table, the pattern the prep tables already use).
+
+    The two modes are output-identical (tests/test_iter_checkpoint.py);
+    reliable checkpoint files are cleaned by Spark only with
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` — a
+    bounded per-job directory either way."""
+    if checkpoint_dir is None:
+        return lambda df: _track(df.localCheckpoint(eager=True))
+    sc = spark.sparkContext
+    current = sc.getCheckpointDir()
+    if not current or checkpoint_dir not in current:
+        sc.setCheckpointDir(checkpoint_dir)
+    return lambda df: df.checkpoint(eager=True)
+
+
+def release(spark, scope: str = "query") -> int:
+    """Unpersist every tracked cache of ``scope`` of ``spark`` and drop
+    it from the registry. Returns the number released. Query scope is
+    safe only once the owning queries' results are materialized (see
+    the module docstring); a released eager persist is simply
+    recomputed, a released localCheckpoint is gone — which is why there
+    is no all-sessions form: it would discard the in-flight iterative
+    state of a query another thread runs in another session. Later
+    ``pinned_persist`` calls after a session-scope release rebuild."""
+    entries = _REGISTRY.get(spark, {})
     n = 0
-    keys = [id(spark)] if spark is not None else list(_REGISTRY)
-    for key in keys:
-        _, dfs = _REGISTRY.pop(key, (None, []))
-        for df in dfs:
-            try:
-                df.unpersist()
-                n += 1
-            except Exception:
-                pass  # session already stopped
+    for key in [k for k, (sc, _) in entries.items() if sc == scope]:
+        n += _unpersist(entries.pop(key)[1])
+    if not entries:
+        _REGISTRY.pop(spark, None)
     return n
 
 
@@ -93,105 +153,8 @@ def release_one(df) -> bool:
     """Unpersist ONE tracked cache and drop it from the registry,
     leaving the session's other caches alone (a function that created
     a cache must not release siblings a caller is still filling)."""
-    ent = _REGISTRY.get(id(df.sparkSession))
-    if ent is not None and any(d is df for d in ent[1]):
-        ent[1][:] = [d for d in ent[1] if d is not df]
-    try:
-        df.unpersist()
-        return True
-    except Exception:
-        return False
-
-
-# session-lifetime pins: intermediates shared ACROSS queries in one
-# session (the decoded KIE token fragments) — deliberately NOT touched
-# by release_persisted, which clears per-query caches between bench
-# queries. At production scale these are their own tables (the
-# extract-once / analyze-many layout); here the pin is the session-
-# scale stand-in. Keyed by (session id, logical key) with a weak
-# session ref checked by IDENTITY on every hit, so a stopped session's
-# pins are purged and id() reuse can never serve a dead session's
-# DataFrame to a new one. Bounded by the handful of fragment tables a
-# session touches (small-string rows).
-_PINNED: dict[tuple, tuple] = {}
-
-
-def pinned_persist(spark, key: str, builder):
-    """Build-once-per-session persist of ``builder()`` under ``key``;
-    returns the cached DataFrame on later calls."""
-    _purge_dead()
-    k = (id(spark), key)
-    ent = _PINNED.get(k)
-    if ent is not None:
-        ref, df = ent
-        if ref() is spark and not spark.sparkContext._jsc.sc().isStopped():
-            return df
-        del _PINNED[k]  # dead/stopped session (or id-reuse collision)
-    df = builder().persist()
-    df.count()
-    _PINNED[k] = (weakref.ref(spark), df)
-    return df
-
-
-def release_pinned(spark=None) -> int:
-    """End-of-session teardown: unpersist every PINNED cache (of
-    ``spark``, or of all sessions) and drop the registry entries.
-    ``release_persisted`` deliberately leaves pins alone between
-    queries; a session that is DONE issuing queries (bench teardown,
-    long-lived service shutdown) calls this so the block manager ends
-    at zero resident bytes. Later pinned_persist calls simply
-    rebuild. Returns the number released."""
-    n = 0
-    for k in list(_PINNED):
-        ref, df = _PINNED[k]
-        if spark is not None and ref() is not spark:
-            continue
-        del _PINNED[k]
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped
-    return n
-
-
-# localCheckpoint blocks: lineage-truncation state of ITERATIVE jobs
-# (operators/_iter.py). Unlike eager_persist caches these must NOT be
-# released while the query's returned DataFrame may still be consumed
-# — unpersisting a localCheckpointed RDD discards data with no
-# recompute path (the lineage was truncated). So they get their own
-# registry, released only by callers that KNOW the results are fully
-# materialized (bench.py between queries; a service after sinking a
-# result). Intermediate rounds unpersist themselves inside the loops;
-# this catches the FINAL round's blocks, which otherwise sit in the
-# block manager until the context cleaner's GC sweep.
-_CHECKPOINTED: dict[int, tuple] = {}
-
-
-def track_checkpoint(df):
-    """Register a localCheckpointed DataFrame for deferred release."""
-    spark = df.sparkSession
-    key = id(spark)
-    ent = _CHECKPOINTED.get(key)
-    if ent is None or ent[0]() is not spark:
-        ent = (weakref.ref(spark), [])
-        _CHECKPOINTED[key] = ent
-    ent[1].append(df)
-    return df
-
-
-def release_checkpoints(spark=None) -> int:
-    """Unpersist every tracked localCheckpoint block (of ``spark``, or
-    all sessions). ONLY safe once the owning queries' results are
-    fully materialized — see the registry comment."""
-    n = 0
-    keys = [id(spark)] if spark is not None else list(_CHECKPOINTED)
-    for key in keys:
-        _, dfs = _CHECKPOINTED.pop(key, (None, []))
-        for df in dfs:
-            try:
-                df.unpersist()
-                n += 1
-            except Exception:
-                pass  # session already stopped
-    return n
+    entries = _REGISTRY.get(df.sparkSession, {})
+    entries.pop(id(df), None)
+    if not entries:
+        _REGISTRY.pop(df.sparkSession, None)
+    return _unpersist(df)

@@ -440,6 +440,8 @@ def _edges_dir(sf_dir: str, threshold: float) -> str:
     import hashlib
     import os
 
+    from paddleocr_spark.cachedir import cache_root
+
     src = os.path.join(sf_dir, "documents.parquet")
     try:
         mtime = int(os.path.getmtime(src))
@@ -452,12 +454,9 @@ def _edges_dir(sf_dir: str, threshold: float) -> str:
     ident = hashlib.md5(
         f"{os.path.abspath(sf_dir)}:{mtime}:{plants}"
         .encode()).hexdigest()[:12]
-    here = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.abspath(os.path.join(here, "..", "..", ".cache",
-                                        "near_dup_edges"))
-    return os.path.join(
-        root, f"v3_{ident}_t{threshold}_k{N_HASHES}"
-              f"b{N_BANDS}s{SHINGLE_N}")
+    return cache_root("near_dup_edges",
+                      f"v3_{ident}_t{threshold}_k{N_HASHES}"
+                      f"b{N_BANDS}s{SHINGLE_N}")
 
 
 def build_near_dup_edges(spark, sf_dir: str,

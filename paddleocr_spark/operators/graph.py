@@ -16,7 +16,7 @@ component's minimum node id:
   loop is unacceptable.
 
 Loop-carried state (labels / the rewired edge set) is truncated every
-round via ``operators/_iter.checkpointer``: a cache alone keeps the
+round via ``operators/_cache.checkpointer``: a cache alone keeps the
 EXECUTION flat but the logical plan still nests and multiplies every
 round (the join/union/groupBy tree references the previous round's
 tree several times — measured driver blowup from plan stringification
@@ -78,8 +78,11 @@ def connected_components(edges, src: str = "doc_a", dst: str = "doc_b",
 def _propagation(edges, src, dst, max_iters, checkpoint_dir=None):
     from pyspark.sql import functions as F
 
-    from paddleocr_spark.operators._cache import eager_persist
-    from paddleocr_spark.operators._iter import checkpointer
+    from paddleocr_spark.operators._cache import (
+        checkpointer,
+        eager_persist,
+        release_one,
+    )
 
     ckpt = checkpointer(edges.sparkSession, checkpoint_dir)
     sym = eager_persist(_sym_edges(F, edges, src, dst))
@@ -97,7 +100,7 @@ def _propagation(edges, src, dst, max_iters, checkpoint_dir=None):
         # the previous round's checkpoint blocks are dead once the
         # changed-count is materialized — release them instead of
         # accumulating one cached label table per round
-        labels.unpersist()
+        release_one(labels)
         labels = new_labels
         if changed == 0:
             return labels.select("node", F.col("lbl").alias("label")), rounds
@@ -142,8 +145,11 @@ def _small_star(F, e):
 def _star(edges, src, dst, max_iters, checkpoint_dir=None):
     from pyspark.sql import functions as F
 
-    from paddleocr_spark.operators._cache import eager_persist
-    from paddleocr_spark.operators._iter import checkpointer
+    from paddleocr_spark.operators._cache import (
+        checkpointer,
+        eager_persist,
+        release_one,
+    )
 
     ckpt = checkpointer(edges.sparkSession, checkpoint_dir)
     e = eager_persist(_sym_edges(F, edges, src, dst))
@@ -161,9 +167,9 @@ def _star(edges, src, dst, max_iters, checkpoint_dir=None):
                  + e.exceptAll(e2).limit(1).count())
         if not e_is_symmetric:
             # previous round's checkpoint blocks are dead now (round
-            # 1's `e` is the tracked eager cache, released by the
-            # registry instead)
-            e.unpersist()
+            # 1's `e` is the tracked eager cache, released with the
+            # query instead)
+            release_one(e)
         e = e2
         e_is_symmetric = False
         if moved == 0:

@@ -216,12 +216,12 @@ def html_pagerank(spark, sf_dir: str, iters: int = PR_ITERS,
     action computes that one) keeps the plan depth bounded (the
     operators/graph.py lesson). The default localCheckpoint is right
     for local[*]; ``checkpoint_dir=`` selects the cluster-durable
-    reliable mode (operators/_iter.py, output-identical). Every node
-    has outdegree >= 1 by construction, so no dangling-mass term."""
+    reliable mode (``operators/_cache.checkpointer``, output-identical).
+    Every node has outdegree >= 1 by construction, so no dangling-mass
+    term."""
     from pyspark.sql import functions as F
 
-    from paddleocr_spark.operators._cache import eager_persist
-    from paddleocr_spark.operators._iter import checkpointer
+    from paddleocr_spark.operators._cache import checkpointer, eager_persist
 
     ckpt = checkpointer(spark, checkpoint_dir)
 

@@ -61,11 +61,7 @@ whenever the product lands near a half-integer. Round 5 eliminates it:
 - per-(doc, term) ``contrib_micro = round(idf_nano * (num10/den10)
   / 1e3)`` as bigint, summed exactly; ranking ties break on doc_id;
 - the final result carries an explicit total ``orderBy(query_id,
-  rank)`` so output order can never affect an order-sensitive hash;
-- diagnosability: when run at the driver's correctness scale (sf_dir
-  containing "0.01") the Spark result rows and the injected stats are
-  side-written to ``spark-warehouse/bm25_debug/`` so any future
-  mismatch can be diffed value-by-value instead of hash-by-hash.
+  rank)`` so output order can never affect an order-sensitive hash.
 
 At 10^12-doc scale the driver-side stat collect becomes a persisted
 corpus-stats table (the prep-table pattern of ``operators/curation.py``)
@@ -211,34 +207,8 @@ def bm25_topk(spark, sf_dir: str):
               .agg(F.sum(contrib_micro).alias("score_micro")))
     w = Window.partitionBy("query_id").orderBy(
         F.col("score_micro").desc(), F.col("doc_id"))
-    result = (scored.withColumn("rank",
-                                F.row_number().over(w).cast("long"))
-              .where(F.col("rank") <= BM25_TOPK)
-              .select("query_id", "rank", "doc_id", "score_micro")
-              .orderBy("query_id", "rank"))
-    if "0.01" in sf_dir:  # driver correctness scale: leave a diffable trail
-        _debug_dump(result, n_docs, sum_dl, dfs, idf)
-    return result
-
-
-def _debug_dump(result, n_docs, sum_dl, dfs, idf) -> None:
-    """Side-write the Spark rows + injected literals at correctness
-    scale so a driver-side hash mismatch is diagnosable by value diff
-    (VERDICT r4 'What's wrong' #1). Best-effort: never fails the
-    query."""
-    import json
-    import os
-
-    try:
-        out = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "..", "..", "spark-warehouse", "bm25_debug")
-        out = os.path.abspath(out)
-        os.makedirs(out, exist_ok=True)
-        with open(os.path.join(out, "stats.json"), "w") as fh:
-            json.dump({"n_docs": n_docs, "sum_dl": sum_dl, "df": dfs,
-                       "idf_nano": idf}, fh, indent=2, sort_keys=True)
-        with open(os.path.join(out, "spark_rows.json"), "w") as fh:
-            json.dump([r.asDict() for r in result.collect()], fh,
-                      indent=2)
-    except Exception:
-        pass
+    return (scored.withColumn("rank",
+                              F.row_number().over(w).cast("long"))
+            .where(F.col("rank") <= BM25_TOPK)
+            .select("query_id", "rank", "doc_id", "score_micro")
+            .orderBy("query_id", "rank"))

@@ -237,10 +237,7 @@ def streaming_fuzzy_dedup(spark, docs_dir: str, index_dir: str,
 
     from pyspark.sql import functions as F
 
-    from paddleocr_spark.operators._cache import (
-        eager_persist,
-        release_persisted,
-    )
+    from paddleocr_spark.operators._cache import eager_persist, release
     from paddleocr_spark.operators.dedup import (
         N_HASHES,
         _band_hashes,
@@ -337,12 +334,12 @@ def streaming_fuzzy_dedup(spark, docs_dir: str, index_dir: str,
          .write.mode("append").parquet(sig_dir))
         (fresh_bands.join(loser_ids, "doc_id", "left_anti")
          .write.mode("append").parquet(band_dir))
-        # no session arg: foreachBatch hands the body a NEW wrapped
-        # SparkSession per epoch (pyspark 4.1 ForeachBatchFunction),
-        # so eager_persist registered under THAT session — releasing
-        # by the outer `spark` would free nothing and every epoch's
-        # sig/bands/CC caches would leak for the stream's lifetime
-        release_persisted()
+        # the epoch's results are written: release its query scope
+        # (caches and connected_components localCheckpoint blocks).
+        # foreachBatch hands the body a NEW wrapped SparkSession per
+        # epoch (pyspark 4.1 ForeachBatchFunction) and the caches are
+        # registered under THAT session, not the outer `spark`
+        release(batch_df.sparkSession)
 
     return (stream.writeStream
             .foreachBatch(process)

@@ -61,10 +61,10 @@ def test_fully_resumed_run_is_a_noop(spark, corpus, tmp_path):
     run_with_checkpoint(spark, docs, media, out, "run1", n_buckets=2)
 
     from paddleocr_spark.operators import _cache
-    before = {k: len(v[1]) for k, v in _cache._REGISTRY.items()}
+    before = {k: len(v) for k, v in _cache._REGISTRY.items()}
     again = run_with_checkpoint(spark, docs, media, out, "run1", n_buckets=2)
     assert again == []
-    assert {k: len(v[1]) for k, v in _cache._REGISTRY.items()} == before
+    assert {k: len(v) for k, v in _cache._REGISTRY.items()} == before
 
 
 def test_checkpoint_metrics_rows(spark, corpus, tmp_path):

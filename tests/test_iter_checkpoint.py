@@ -1,4 +1,5 @@
-"""Reliable-checkpoint mode for iterative jobs (operators/_iter.py).
+"""Reliable-checkpoint mode for iterative jobs
+(``operators/_cache.checkpointer``).
 
 localCheckpoint persists blocks on EXECUTORS: on a real cluster one
 executor loss after an eager localCheckpoint kills the lineage with no

@@ -230,6 +230,25 @@ def test_bm25_plan_shape(spark):
         assert set(s) <= {"doc_id", "text"}, s
 
 
+def test_bm25_topk_writes_no_trail_for_any_corpus_path(spark, tmp_path):
+    """The corpus path never switches extra work: under a directory
+    named like the correctness scale the rows are the same and no
+    debug trail is written, neither in the repo nor near the corpus."""
+    import shutil
+
+    from paddleocr_spark.operators.retrieval import bm25_topk
+
+    sf = tmp_path / "sf0.01"
+    sf.mkdir()
+    shutil.copy(os.path.join(SF, "documents.parquet"), sf)
+    rows = bm25_topk(spark, str(sf)).collect()
+    assert rows and rows == bm25_topk(spark, SF).collect()
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    assert not os.path.exists(
+        os.path.join(repo, "spark-warehouse", "bm25_debug"))
+    assert not list(tmp_path.rglob("bm25_debug"))
+
+
 def test_manifest_planned_decode_matches_dataframe_decode(spark):
     """Pointer-passing decode planned from the manifest produces the
     same fragments as the generic DataFrame-decode path."""

@@ -177,12 +177,12 @@ def test_eager_persist_registers_before_count(spark):
 
     bad = spark.range(4).select(
         F.assert_true(F.col("id") < 2, F.lit("boom")).alias("x"))
-    before = sum(len(v[1]) for v in _cache._REGISTRY.values())
+    before = sum(len(v) for v in _cache._REGISTRY.values())
     with pytest.raises(Exception):
         _cache.eager_persist(bad)
-    after = sum(len(v[1]) for v in _cache._REGISTRY.values())
+    after = sum(len(v) for v in _cache._REGISTRY.values())
     assert after == before + 1, "failed persist was not tracked"
-    assert _cache.release_persisted(spark) >= 1
+    assert _cache.release(spark) >= 1
 
 
 def test_release_one_leaves_siblings(spark):
@@ -192,41 +192,42 @@ def test_release_one_leaves_siblings(spark):
         assert _cache.release_one(a)
         assert not a.storageLevel.useMemory
         assert b.storageLevel.useMemory
-        ent = _cache._REGISTRY[id(spark)]
-        assert any(d is b for d in ent[1])
-        assert not any(d is a for d in ent[1])
+        ent = _cache._REGISTRY[spark]
+        assert any(d is b for _, d in ent.values())
+        assert not any(d is a for _, d in ent.values())
     finally:
-        _cache.release_persisted(spark)
+        _cache.release(spark)
 
 
 def test_pinned_persist_rebuilds_for_different_session_object(spark):
-    """An id()-reuse collision (different session object at the same
-    key) must rebuild, never serve the other session's DataFrame."""
+    """A different session object under the same key must build its
+    own pin, never be served the other session's DataFrame."""
     calls = []
 
-    def builder():
-        calls.append(1)
-        return spark.range(5)
+    def builder(session):
+        def build():
+            calls.append(session)
+            return session.range(5)
+        return build
 
-    df1 = _cache.pinned_persist(spark, "t-idreuse", builder)
-    df2 = _cache.pinned_persist(spark, "t-idreuse", builder)
-    assert df1 is df2 and len(calls) == 1
-    # simulate a dead weakref: replace the stored ref with one that
-    # returns None (the session object was collected, id reused)
-    k = (id(spark), "t-idreuse")
-    ref, df = _cache._PINNED[k]
-    _cache._PINNED[k] = ((lambda: None), df)
-    df3 = _cache.pinned_persist(spark, "t-idreuse", builder)
-    assert len(calls) == 2, "dead-session pin was served to a new session"
+    df1 = _cache.pinned_persist(spark, "t-idreuse", builder(spark))
+    df2 = _cache.pinned_persist(spark, "t-idreuse", builder(spark))
+    assert df1 is df2 and calls == [spark]
+    other = spark.newSession()
+    df3 = _cache.pinned_persist(other, "t-idreuse", builder(other))
+    assert calls == [spark, other], "another session's pin was served"
+    assert df3 is not df1 and df3.sparkSession is other
     assert df3.storageLevel.useMemory
-    df3.unpersist()
-    _cache._PINNED.pop(k, None)
+    assert _cache.release(other, "session") == 1
+    assert other not in _cache._REGISTRY
+    assert _cache.pinned_persist(spark, "t-idreuse", builder(spark)) is df1
+    _cache.release(spark, "session")
 
 
 def test_release_pinned_zeroes_resident_storage(spark):
     """End-of-session teardown (bench's leaked_storage_bytes gate):
-    release_pinned unpersists every pin of the session and later calls
-    rebuild from scratch."""
+    a session-scope release unpersists every pin of the session and
+    later calls rebuild from scratch."""
     calls = []
 
     def builder():
@@ -235,11 +236,10 @@ def test_release_pinned_zeroes_resident_storage(spark):
 
     df = _cache.pinned_persist(spark, "t-teardown", builder)
     assert df.storageLevel.useMemory
-    n = _cache.release_pinned(spark)
+    n = _cache.release(spark, "session")
     assert n >= 1
-    assert not any(k[0] == id(spark) and k[1] == "t-teardown"
-                   for k in _cache._PINNED)
+    assert "t-teardown" not in _cache._REGISTRY.get(spark, {})
     assert not df.storageLevel.useMemory  # actually unpersisted
     df2 = _cache.pinned_persist(spark, "t-teardown", builder)
     assert len(calls) == 2  # rebuilt, not served stale
-    _cache.release_pinned(spark)
+    _cache.release(spark, "session")

@@ -5,6 +5,7 @@ within each batch's duplicate components)."""
 
 import itertools
 
+from paddleocr_spark.operators import _cache
 from paddleocr_spark.streaming.incremental import streaming_fuzzy_dedup
 
 WORDS = ("alpha bravo charlie delta echo foxtrot golf hotel india "
@@ -79,9 +80,22 @@ def test_streaming_fuzzy_dedup_two_waves(spark, tmp_path):
          .coalesce(1).write.mode("overwrite")
          .parquet(str(docs_dir / f"wave{k}")))
 
+    # every epoch's caches and connected_components localCheckpoint
+    # blocks are released once its sinks are written: a long-lived
+    # stream must not grow one registry entry, or one resident RDD,
+    # per epoch
+    jsc = spark.sparkContext._jsc.sc()
+
+    def resident():
+        return {r.id() for r in jsc.getRDDStorageInfo()}
+
+    sessions_before, rdds_before = set(_cache._REGISTRY), resident()
     q = streaming_fuzzy_dedup(spark, str(docs_dir) + "/wave*", idx, out,
                               ckpt)
     q.awaitTermination(240)
+    epoch_sessions = set(_cache._REGISTRY) - sessions_before - {spark}
+    assert not epoch_sessions, "an epoch session's caches were kept"
+    assert resident() <= rdds_before, "an epoch's blocks stayed resident"
 
     got = {r.doc_id for r in spark.read.parquet(out).collect()}
     expected = _greedy_oracle([wave1, wave2])
