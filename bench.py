@@ -42,6 +42,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # "host variance" note). Still overridable via the env knob.
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 
+from paddleocr_spark.corpus import docs_schema  # noqa: E402
+from paddleocr_spark.sources.tables import load_table, table_rows  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # override corpus size (docs); default = |documents| at SF_DIR
@@ -219,7 +222,7 @@ def _run_extract_throughput(master_cores: int, n_docs: int) -> float:
         from paddleocr_spark.operators.extract import extract_spans
 
         _warm_workers(spark, master_cores)
-        docs = spark.read.parquet(docs_path)
+        docs = spark.read.schema(docs_schema()).parquet(docs_path)
         extract_spans(docs, media_path).write.mode("overwrite") \
             .format("noop").save()  # warm pass, untimed
         t0 = time.time()
@@ -261,13 +264,13 @@ def _run_skew_study() -> dict:
                                    heavy_frac=0.01, patho_docs=patho,
                                    patho_spans=pspans)
             docs.write.mode("overwrite").parquet(docs_path)
-            docs = spark.read.parquet(docs_path)
+            docs = spark.read.schema(docs_schema()).parquet(docs_path)
             media = synthesize_media(spark, docs, seed=entry_mod.SEED,
                                      partitions=64)
             media.write.mode("overwrite").parquet(media_path)
             write_store_manifest(spark, media_path)
         _warm_workers(spark, CPUS)
-        docs = spark.read.parquet(docs_path)
+        docs = spark.read.schema(docs_schema()).parquet(docs_path)
 
         res: dict = {"n_docs": base + patho, "patho_docs": patho,
                      "patho_spans": pspans, "salt_width": SALT_WIDTH}
@@ -323,9 +326,7 @@ def _run_stress_study() -> dict:
     spark = get_spark("bench_stress", master=f"local[{CPUS}]",
                       shuffle_partitions=CPUS)
     try:
-        base = (spark.read.parquet(f"{SF_DIR}/documents.parquet")
-                .select(F.col("doc_id").cast("long").alias("doc_id"),
-                        "text"))
+        base = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
         tiles = [base.select((F.col("doc_id") + 100_000 * k)
                              .alias("doc_id"),
                              F.concat("text", F.lit(f" variant {k}"))
@@ -430,9 +431,8 @@ def _run_html_throughput(master_cores: int) -> dict:
                       shuffle_partitions=master_cores)
     tmp = tempfile.mkdtemp(prefix="html_scale_")
     try:
-        base = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        tiles = [base.select((F.col("doc_id").cast("long")
-                              + 1_000_000 * k).alias("doc_id"),
+        base = load_table(spark, SF_DIR, "documents")
+        tiles = [base.select((F.col("doc_id") + 1_000_000 * k).alias("doc_id"),
                              *[c for c in base.columns if c != "doc_id"])
                  for k in range(40)]
         tiled = tiles[0]
@@ -443,7 +443,7 @@ def _run_html_throughput(master_cores: int) -> dict:
         # tasks and silently flattens the local[32] measurement
         tiled.repartition(128).write.mode("overwrite") \
             .parquet(f"{tmp}/documents.parquet")
-        n = spark.read.parquet(f"{tmp}/documents.parquet").count()
+        n = table_rows(tmp, "documents")
         _warm_workers(spark, master_cores)
         df = html_main_content(spark, tmp)
         df.write.mode("overwrite") \
@@ -467,7 +467,7 @@ def main() -> None:
     sf = _sf_of(SF_DIR)
     spark = get_spark("bench", master=f"local[{CPUS}]",
                       shuffle_partitions=CPUS)
-    n_docs = entry_mod._corpus_size(spark, SF_DIR)
+    n_docs = table_rows(SF_DIR, "documents")
     # warm the corpus cache and python workers outside the timings
     entry_mod.corpus_paths(spark, SF_DIR, n_docs=n_docs)
     _warm_workers(spark, CPUS)

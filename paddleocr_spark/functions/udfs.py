@@ -222,15 +222,16 @@ def _store_files_df(spark, store_path: str, n_tasks: int):
     """DataFrame of data-file paths with exactly one partition per
     byte-balanced group of files, ``min(#files, n_tasks)`` groups.
 
-    The file list comes from the manifest table (one small collect —
-    the Iceberg seam) or, for ad-hoc stores that never wrote one, from
-    a glob; both go through the same driver-side packer. The driver
-    holds one (path, bytes) pair per file, as ``spark.read.parquet``
-    already does when it lists a directory. The groups reach the JVM
-    as a literal array of path arrays indexed by ``spark.range`` — no
-    shuffle, no window and no Python task before the decode itself
-    (``createDataFrame`` of a Python list would convert through a
-    Python RDD: one more Python task per partition)."""
+    The file list comes from the manifest table (read on the driver
+    with pyarrow, no Spark job — the Iceberg seam) or, for ad-hoc
+    stores that never wrote one, from a glob; both go through the same
+    driver-side packer. The driver holds one (path, bytes) pair per
+    file, as ``spark.read.parquet`` already does when it lists a
+    directory. The groups reach the JVM as a literal array of path
+    arrays indexed by ``spark.range`` — no shuffle, no window and no
+    Python task before the decode itself (``createDataFrame`` of a
+    Python list would convert through a Python RDD: one more Python
+    task per partition)."""
     import os as _os
 
     from pyspark.sql import functions as F
@@ -239,9 +240,10 @@ def _store_files_df(spark, store_path: str, n_tasks: int):
     if _os.path.exists(_os.path.join(man, "_SUCCESS")):
         root = (_os.path.dirname(store_path)
                 if _os.path.isfile(store_path) else store_path)
-        # explicit schema: no footer-inference job before the collect
-        files = [(_os.path.join(root, r.file), r.n_bytes) for r in
-                 spark.read.schema(MANIFEST_SCHEMA).parquet(man).collect()]
+        import pyarrow.parquet as pq
+
+        files = [(_os.path.join(root, r["file"]), r["n_bytes"]) for r in
+                 pq.read_table(man, columns=["file", "n_bytes"]).to_pylist()]
     else:
         files = [(f, _os.path.getsize(f))
                  for f in _list_store_files(store_path)]

@@ -30,8 +30,8 @@ from .kernels.eval_det_iou import evaluate_image
 from .kernels.reading_order import sorted_boxes
 from .reference_path import golden_corpus
 
-__all__ = ["levenshtein", "compute_goldens", "materialize_goldens",
-           "GOLDEN_FILES"]
+__all__ = ["levenshtein", "det_polygon_rows", "compute_goldens",
+           "materialize_goldens", "GOLDEN_FILES"]
 
 GOLDEN_FILES = [
     "golden_spans.parquet",
@@ -72,6 +72,22 @@ def levenshtein(a: str, b: str) -> int:
                            prev[j - 1] + (ca != cb)))
         prev = cur
     return prev[-1]
+
+
+def det_polygon_rows(n_docs: int, seed: int = 42) -> list[dict]:
+    """Poly-mode DB decode (box_type="poly" + use_dilation) over the
+    curved-text fixture maps — sequential twin of operators/det_poly."""
+    rows = []
+    for mid in range(poly_map_count(n_docs)):
+        pm = poly_map_record(mid, seed)
+        polys, poly_scores = db_postprocess_poly(pm, POLY_SHAPE_LIST)
+        for pi, (poly, sc) in enumerate(zip(polys, poly_scores)):
+            smicro = int(round(sc * 1e6))
+            for ki, (x, y) in enumerate(poly.tolist()):
+                rows.append({"map_id": mid, "poly_idx": pi,
+                             "point_idx": ki, "x": int(x),
+                             "y": int(y), "score_micro": smicro})
+    return rows
 
 
 def compute_goldens(n_docs: int, seed: int = 42, heavy_frac: float = 0.01):
@@ -277,19 +293,6 @@ def compute_goldens(n_docs: int, seed: int = 42, heavy_frac: float = 0.01):
             phash_rows.append({"media_ref": ref, "variant": variant,
                                "phash": phash64(img)})
 
-    # --- poly-mode DB decode (box_type="poly" + use_dilation) over the
-    # curved-text fixture maps — sequential twin of operators/det_poly
-    det_polys = []
-    for mid in range(poly_map_count(n_docs)):
-        pm = poly_map_record(mid, seed)
-        polys, poly_scores = db_postprocess_poly(pm, POLY_SHAPE_LIST)
-        for pi, (poly, sc) in enumerate(zip(polys, poly_scores)):
-            smicro = int(round(sc * 1e6))
-            for ki, (x, y) in enumerate(poly.tolist()):
-                det_polys.append({"map_id": mid, "poly_idx": pi,
-                                  "point_idx": ki, "x": int(x),
-                                  "y": int(y), "score_micro": smicro})
-
     return {
         "golden_spans": spans,
         "golden_fragments": frags,
@@ -302,7 +305,7 @@ def compute_goldens(n_docs: int, seed: int = 42, heavy_frac: float = 0.01):
         "golden_det_metric": det_metric,
         "golden_det_iou_metric": det_iou,
         "golden_table_structure_metric": table_metric,
-        "golden_det_polygons": det_polys,
+        "golden_det_polygons": det_polygon_rows(n_docs, seed),
         "golden_image_phash": phash_rows,
     }
 

@@ -37,6 +37,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from paddleocr_spark.sources.tables import load_table
+
 __all__ = ["write_bucketed", "ensure_bucketed_pair", "bucketed_join_agg",
            "N_BUCKETS"]
 
@@ -137,9 +139,8 @@ def ensure_bucketed_pair(spark, sf_dir: str, n_buckets: int = N_BUCKETS):
         if os.path.exists(os.path.join(path, "_SUCCESS")):
             register_bucketed(spark, name, path, key, n_buckets)
         else:
-            write_bucketed(
-                spark.read.parquet(os.path.join(sf_dir, f"{sub}.parquet")),
-                name, path, key, n_buckets, sort_cols=key)
+            write_bucketed(load_table(spark, sf_dir, sub),
+                           name, path, key, n_buckets, sort_cols=key)
     return tuple(name for name, _, _ in spec)
 
 

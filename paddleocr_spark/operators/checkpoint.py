@@ -65,7 +65,7 @@ def completed_buckets(spark, out_dir: str, run_id: str,
 
     ckpt = os.path.join(out_dir, "checkpoint")
     try:
-        df = spark.read.parquet(ckpt)
+        df = spark.read.schema(CHECKPOINT_SCHEMA).parquet(ckpt)
     except AnalysisException as e:
         # only "nothing checkpointed yet" means a fresh start; any
         # OTHER read error (permissions, corruption) must surface —
@@ -157,7 +157,7 @@ def run_with_checkpoint(spark, docs_df, media_df, out_dir: str,
                 os.rename(final_dir, trash_dir)
             os.rename(tmp_dir, final_dir)
             shutil.rmtree(trash_dir, ignore_errors=True)
-            written = spark.read.parquet(final_dir)
+            written = spark.read.schema(out.schema).parquet(final_dir)
             stats = written.agg(
                 F.countDistinct("doc_id").alias("docs"),
                 F.count("*").alias("spans")).collect()[0]

@@ -25,6 +25,8 @@ no corpus-curation layer; these extend SURVEY §6's pipeline surface.
 
 from __future__ import annotations
 
+from paddleocr_spark.sources.tables import load_table
+
 __all__ = [
     "NGRAM_N", "BENCH_MOD", "SAMPLE_RATES", "SAMPLE_DENOM", "LANG_BUDGET",
     "QUALITY_MIN",
@@ -47,11 +49,8 @@ LANG_BUDGET = 2_000   # tokens kept per language by the mixture
 
 
 def _docs(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    return (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select(F.col("doc_id").cast("long").alias("doc_id"),
-                    "text", "lang"))
+    return load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang")
 
 
 def _ngrams(F, toks_col, n: int):

@@ -36,6 +36,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from paddleocr_spark.sources.tables import load_table
+
 __all__ = [
     "N_HASHES", "N_BANDS", "ROWS_PER_BAND", "MINHASH_PRIME", "AFFINE",
     "SHINGLE_N", "NEAR_PLANT_N", "NEAR_PLANT_OFFSET", "NEAR_PLANT_SUFFIX",
@@ -144,8 +146,7 @@ def _augmented_docs(spark, sf_dir: str):
     non-trivial output on a corpus with no natural duplicates."""
     from pyspark.sql import functions as F
 
-    df = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-          .select(F.col("doc_id").cast("long").alias("doc_id"), "text"))
+    df = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     _assert_plant_headroom(df, "doc_id", min(NEAR_PLANT_OFFSET,
                                              EXACT_PLANT_OFFSET), sf_dir)
     near = (df.where(F.col("doc_id") < NEAR_PLANT_N)
@@ -222,8 +223,7 @@ def minhash_signatures(spark, sf_dir: str):
     """Per-doc k=128 minhash over distinct 3-word shingles."""
     from pyspark.sql import functions as F
 
-    df = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-          .select(F.col("doc_id").cast("long").alias("doc_id"), "text"))
+    df = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return _signatures(F, df)
 
 
@@ -350,8 +350,7 @@ def simhash32(spark, sf_dir: str):
     partial-agg row per (partition, doc)."""
     from pyspark.sql import functions as F
 
-    df = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-          .select(F.col("doc_id").cast("long").alias("doc_id"), "text"))
+    df = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return _simhash_df(F, df)
 
 

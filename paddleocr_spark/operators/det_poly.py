@@ -20,10 +20,12 @@ float surface at all.
 
 from __future__ import annotations
 
+from paddleocr_spark.sources.tables import table_rows
+
 __all__ = ["det_polygons"]
 
 
-def det_polygons(spark, sf_dir: str):
+def det_polygons(spark, sf_dir: str, seed: int = 42):
     import pandas as pd
 
     from paddleocr_spark.corpus import (
@@ -33,8 +35,7 @@ def det_polygons(spark, sf_dir: str):
     )
     from paddleocr_spark.kernels.db_poly import db_postprocess_poly
 
-    n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    n_maps = poly_map_count(int(n_docs))
+    n_maps = poly_map_count(table_rows(sf_dir, "documents"))
     schema = ("map_id long, poly_idx long, point_idx long, "
               "x long, y long, score_micro long")
 
@@ -44,7 +45,7 @@ def det_polygons(spark, sf_dir: str):
                                    "x", "y", "score_micro")}
             for mid in pdf["id"]:
                 mid = int(mid)
-                pm = poly_map_record(mid)
+                pm = poly_map_record(mid, seed)
                 polys, scores = db_postprocess_poly(pm, POLY_SHAPE_LIST)
                 for pi, (poly, sc) in enumerate(zip(polys, scores)):
                     smicro = int(round(sc * 1e6))

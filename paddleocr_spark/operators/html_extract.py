@@ -20,6 +20,8 @@ embarrassingly parallel, no shuffle, column-pruned to (doc_id, html).
 
 from __future__ import annotations
 
+from paddleocr_spark.sources.tables import load_table, table_rows
+
 __all__ = ["ENTITY_PLANT_N", "PARA2", "htmlize_documents",
            "html_main_content", "html_links", "html_link_graph",
            "build_link_graph_table", "html_pagerank", "LINK_COEFFS",
@@ -46,12 +48,8 @@ def htmlize_documents(spark, sf_dir: str):
     doc's (escaped) text."""
     from pyspark.sql import functions as F
 
-    df = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-          .select(F.col("doc_id").cast("long").alias("doc_id"), "text"))
-    # corpus size as a broadcast one-row cross join (plan-time, no
-    # driver action) — the link formulas need N
-    n_row = df.agg(F.count("*").alias("_n"))
-    df = df.crossJoin(F.broadcast(n_row))
+    df = load_table(spark, sf_dir, "documents")
+    n = table_rows(sf_dir, "documents")  # the link formulas need N
     body = F.when(F.col("doc_id") < ENTITY_PLANT_N,
                   F.concat(F.col("text"), F.lit(ENTITY_SUFFIX))) \
             .otherwise(F.col("text"))
@@ -61,7 +59,7 @@ def htmlize_documents(spark, sf_dir: str):
         ">", "&gt;")
     related = [F.lit("<div class='related'>")]
     for a, b in LINK_COEFFS:
-        dst = (F.col("doc_id") * a + b) % F.col("_n")
+        dst = (F.col("doc_id") * a + b) % n
         related += [F.lit("<a href='/doc/"), dst, F.lit("'>doc "),
                     dst, F.lit("</a> ")]
     related.append(F.lit("</div>"))
@@ -209,9 +207,9 @@ def html_pagerank(spark, sf_dir: str, iters: int = PR_ITERS,
     unrolled-CTE twin. Each round is one equi-join (edges LEFT JOIN
     ranks; a node absent from ranks had no inflow, so its rank is
     base) and one map-side-combinable sum over dst; round 1 joins
-    nothing, N is counted once and inlined as a literal, and the
+    nothing, N comes from the parquet footers as a literal, and the
     documents are joined once, after the last round. Measured at 5
-    rounds on 2,000 pages (local[3], 4-core host): 16 Spark jobs per
+    rounds on 2,000 pages (local[3], 4-core host): 14 Spark jobs per
     call. A checkpoint every third round but the last (the caller's
     action computes that one) keeps the plan depth bounded (the
     operators/graph.py lesson). The default localCheckpoint is right
@@ -229,15 +227,14 @@ def html_pagerank(spark, sf_dir: str, iters: int = PR_ITERS,
     # corpus by build_link_graph_table, reused across sessions — the
     # HTML parse never re-runs for PageRank); the memory persist on
     # top keeps the rounds off the parquet scan, and round 1 fills it.
-    # Both reads name their schema: inferring it from the parquet
-    # footers costs one Spark job per table
+    # The edge read names its schema: inferring it from the parquet
+    # footers costs one Spark job
     edges = eager_persist(
         spark.read.schema("src long, dst long, deg long")
         .parquet(build_link_graph_table(spark, sf_dir)),
         materialize=False)
-    nodes = spark.read.schema("doc_id long").parquet(
-        f"{sf_dir}/documents.parquet")
-    n = nodes.count() or 1  # an empty corpus ranks no node
+    nodes = load_table(spark, sf_dir, "documents").select("doc_id")
+    n = table_rows(sf_dir, "documents") or 1  # an empty corpus ranks no node
     # `div` is Spark's true 64-bit integer division — NOT `/` +
     # cast(long), which routes through a double and can round across
     # an integer boundary once N or the ranks grow

@@ -18,6 +18,8 @@ IS Spark's partial aggregation; SURVEY.md §2.4).
 
 from __future__ import annotations
 
+from paddleocr_spark.sources.tables import load_table
+
 __all__ = ["training_stats", "rec_metric_pairs", "cls_cnt_metric_pairs", "corpus_rec_metric",
            "corpus_det_metric", "det_iou_metric", "table_structure_metric",
            "sr_metric", "can_metric", "e2e_metric", "ct_metric"]
@@ -52,7 +54,7 @@ def training_stats(spark, sf_dir: str):
     n = F.size(arr)
     lo = F.element_at(arr, (F.floor((n - 1) / 2) + 1).cast("int"))
     hi = F.element_at(arr, (F.floor(n / 2) + 1).cast("int"))
-    return (spark.read.parquet(f"{sf_dir}/events.parquet")
+    return (load_table(spark, sf_dir, "events")
             .select(
                 "event_type",
                 F.row_number().over(w).alias("step"),
@@ -73,8 +75,7 @@ def rec_metric_pairs(spark, sf_dir: str):
     """Pair doc i with doc i+1; metric row over all pairs."""
     from pyspark.sql import functions as F
 
-    df = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-          .select(F.col("doc_id").cast("long").alias("doc_id"), "text"))
+    df = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     norm = lambda c: F.regexp_replace(F.lower(c), "[^0-9a-z]", "")
     a = df.select("doc_id", norm(F.col("text")).alias("pred"))
     b = df.select((F.col("doc_id") - 1).alias("doc_id"),
@@ -102,8 +103,7 @@ def cls_cnt_metric_pairs(spark, sf_dir: str):
     consecutive-doc label pairs so a DuckDB oracle verifies it."""
     from pyspark.sql import functions as F
 
-    df = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-          .select(F.col("doc_id").cast("long").alias("doc_id"), "lang"))
+    df = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     a = df.select("doc_id", F.col("lang").alias("pred"))
     b = df.select((F.col("doc_id") - 1).alias("doc_id"),
                   F.col("lang").alias("label"))

@@ -22,6 +22,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from paddleocr_spark.sources.tables import load_table
+
 __all__ = ["DAY_LO", "DAY_HI", "epoch_day", "ensure_partitioned_events",
            "partitioned_events_agg"]
 
@@ -78,7 +80,7 @@ def ensure_partitioned_events(spark, sf_dir: str) -> str:
         with open(marker) as fh:
             if fh.read().strip() == fp:
                 return path
-    (spark.read.parquet(src)
+    (load_table(spark, sf_dir, "events")
      .withColumn("event_day", epoch_day())
      .write.mode("overwrite").partitionBy("event_day").parquet(path))
     with open(marker, "w") as fh:

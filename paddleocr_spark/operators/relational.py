@@ -9,6 +9,8 @@ dimension.
 
 from __future__ import annotations
 
+from paddleocr_spark.sources.tables import load_table
+
 __all__ = [
     "pricing_summary", "revenue_by_region", "top_customers_per_nation",
     "event_hourly", "event_sessions", "threshold_sweep",
@@ -22,7 +24,7 @@ def pricing_summary(spark, sf_dir: str):
     accumulation (toddleocr/metrics/rec.py:10-59)."""
     from pyspark.sql import functions as F
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     return (li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
             .groupBy("l_returnflag", "l_linestatus")
             .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
@@ -45,9 +47,8 @@ def revenue_by_region(spark, sf_dir: str):
     when a run's statistics say they fit)."""
     from pyspark.sql import functions as F
 
-    rd = lambda t: spark.read.parquet(f"{sf_dir}/{t}.parquet")
-    li, o, c, n, r = (rd("lineitem"), rd("orders"), rd("customer"),
-                      rd("nation"), rd("region"))
+    li, o, c, n, r = (load_table(spark, sf_dir, t) for t in (
+        "lineitem", "orders", "customer", "nation", "region"))
     return (li.join(o, li.l_orderkey == o.o_orderkey)
             .join(c, o.o_custkey == c.c_custkey)
             .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -66,8 +67,8 @@ def top_customers_per_nation(spark, sf_dir: str, k: int = 3):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     spend = (o.groupBy("o_custkey")
              .agg(F.round(F.sum("o_totalprice"), 2).alias("total_spend")))
     joined = c.join(spend, c.c_custkey == spend.o_custkey)
@@ -75,10 +76,7 @@ def top_customers_per_nation(spark, sf_dir: str, k: int = 3):
         F.desc("total_spend"), F.asc("c_custkey"))
     return (joined.withColumn("rank", F.row_number().over(w).cast("int"))
             .where(F.col("rank") <= k)
-            .select(F.col("c_nationkey").cast("int").alias("c_nationkey"),
-                    "rank",
-                    F.col("c_custkey").cast("long").alias("c_custkey"),
-                    "total_spend"))
+            .select("c_nationkey", "rank", "c_custkey", "total_spend"))
 
 
 def event_hourly(spark, sf_dir: str):
@@ -91,7 +89,7 @@ def event_hourly(spark, sf_dir: str):
     # which this repo does not build — the UTC pin is load-bearing for
     # the DuckDB timestamp compare on any host
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     hour = F.floor(F.unix_timestamp("ts") / 3600).cast("long")
     return (ev.groupBy(hour.alias("epoch_hour"), "event_type")
             .agg(F.count("*").cast("long").alias("n"),
@@ -110,7 +108,7 @@ def event_sessions(spark, sf_dir: str, gap_minutes: int = 30):
     # which this repo does not build — the UTC pin is load-bearing for
     # the DuckDB timestamp compare on any host
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
     new_sess = F.when(gap.isNull() | (gap > gap_minutes * 60), 1).otherwise(0)
@@ -130,7 +128,7 @@ def threshold_sweep(spark, sf_dir: str):
     toddleocr/metrics/det.py:56-135) applied to event values."""
     from pyspark.sql import functions as F
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     thresholds = F.array(*[F.lit(t / 10.0) for t in range(3, 10)])
     return (ev.select("value", F.explode(thresholds).alias("thresh"))
             .groupBy("thresh")
@@ -149,7 +147,7 @@ def event_type_majority(spark, sf_dir: str):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     counts = ev.groupBy("user_id", "event_type").agg(
         F.count("*").cast("long").alias("n"))
     w = Window.partitionBy("user_id").orderBy(

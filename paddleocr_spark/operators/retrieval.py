@@ -29,10 +29,10 @@ Plan shape (designed for 10^12 docs):
 - top-k per query is a rank window over the scored rows (rows =
   matched docs, not corpus size).
 
-Cross-engine float parity (round-5 hardening, third iteration): the
-score arithmetic contains NO transcendental in EITHER engine. The two
-prior driver hash mismatches (r03, r04) were not reproducible with the
-in-sandbox DuckDB and the one remaining cross-engine hazard was the
+Cross-engine parity: the score arithmetic contains NO transcendental
+and NO float division in EITHER engine. The two prior driver hash
+mismatches (r03, r04) were not reproducible with the in-sandbox DuckDB
+and the one remaining cross-engine hazard was the
 ``ln`` in idf — a 1-ulp libm difference (JVM ``Math.log`` vs whichever
 libm the driver's DuckDB links) flips ``round(ln(.)*1e9)`` by 1
 whenever the product lands near a half-integer. Round 5 eliminates it:
@@ -55,11 +55,12 @@ whenever the product lands near a half-integer. Round 5 eliminates it:
 - ``tf_norm`` is the exact rational ``num10 / den10`` with
   ``num10 = 22*tf*sum_dl`` and
   ``den10 = 10*tf*sum_dl + 3*sum_dl + 9*dl*n_docs``
-  (the BM25 k1=1.2, b=0.75 form multiplied through by ``10*sum_dl`` —
-  all bigint products < 2^53, so the one IEEE division is bit-identical
-  across engines);
-- per-(doc, term) ``contrib_micro = round(idf_nano * (num10/den10)
-  / 1e3)`` as bigint, summed exactly; ranking ties break on doc_id;
+  (the BM25 k1=1.2, b=0.75 form multiplied through by ``10*sum_dl``);
+- per-(doc, term) ``contrib_micro = round(idf_nano * num10 / (1000 *
+  den10))`` is ``(2a + b) div (2b)``, ``a = idf_nano*num10``,
+  ``b = 1000*den10``: integers only, in ``DECIMAL(38,0)`` on Spark and
+  ``HUGEINT`` in DuckDB so no product can overflow; the bigints are
+  summed exactly; ranking ties break on doc_id;
 - the final result carries an explicit total ``orderBy(query_id,
   rank)`` so output order can never affect an order-sensitive hash.
 
@@ -71,6 +72,8 @@ per-row transcendental.
 """
 
 from __future__ import annotations
+
+from paddleocr_spark.sources.tables import load_table
 
 __all__ = ["BM25_QUERIES", "BM25_K1", "BM25_B", "BM25_TOPK", "bm25_topk",
            "bm25_idf_nano", "bm25_corpus_stats"]
@@ -140,8 +143,7 @@ def bm25_topk(spark, sf_dir: str):
 
     from paddleocr_spark.operators.dedup import norm_content
 
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select(F.col("doc_id").cast("long").alias("doc_id"), "text"))
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = F.split(norm_content(F, F.col("text")), " ")
     all_terms = sorted({t for ts in BM25_QUERIES.values() for t in ts})
     term_arr = F.array(*[F.lit(t) for t in all_terms])
@@ -192,19 +194,20 @@ def bm25_topk(spark, sf_dir: str):
              for t in ts]
     qdf = spark.createDataFrame(qrows, "query_id string, term string")
 
-    # tf_norm = tf*(k1+1) / (tf + k1*(1-b) + k1*b*dl/avgdl), multiplied
-    # through by 10*sum_dl: exact bigint numerator/denominator, one
-    # IEEE division (bit-identical across engines for < 2^53 operands)
-    num10 = 22 * F.col("tf") * F.lit(sum_dl)
-    den10 = (10 * F.col("tf") * F.lit(sum_dl) + F.lit(3 * sum_dl)
-             + 9 * F.col("dl") * F.lit(n_docs))
-    contrib_micro = F.round(
-        idf_map[F.col("term")] * (num10 / den10) / F.lit(1e3),
-        0).cast("long")
+    # tf_norm = tf*(k1+1) / (tf + k1*(1-b) + k1*b*dl/avgdl) multiplied
+    # through by 10*sum_dl is num10/den10; contrib_micro = (2a + b) div
+    # (2b), a = idf_nano*num10, b = 1000*den10 (see module docstring)
+    dec = lambda c: c.cast("decimal(38,0)")
+    tf_n = dec(F.col("tf"))
+    a = dec(idf_map[F.col("term")]) * 22 * tf_n * sum_dl
+    b = 1000 * (10 * tf_n * sum_dl + 3 * sum_dl
+                + 9 * dec(F.col("dl")) * n_docs)
 
     scored = (tf.join(F.broadcast(qdf), "term")
+              .select("query_id", "doc_id", a.alias("a"), b.alias("b"))
               .groupBy("query_id", "doc_id")
-              .agg(F.sum(contrib_micro).alias("score_micro")))
+              .agg(F.sum(F.expr("(2 * a + b) div (2 * b)"))
+                   .alias("score_micro")))
     w = Window.partitionBy("query_id").orderBy(
         F.col("score_micro").desc(), F.col("doc_id"))
     return (scored.withColumn("rank",

@@ -40,6 +40,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 
+from paddleocr_spark.sources.tables import load_table
+
 __all__ = ["N_QUERIES", "TOP_K", "SIGN_BANDS", "SIGN_BITS", "EMB_DIM",
            "PLANES", "PLANT_N", "PLANT_OFFSET", "N_CENTROIDS", "NPROBE",
            "N_LLOYD", "NPROBE_REFINED",
@@ -82,9 +84,8 @@ def _cosine(F, a, b):
 def _load(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    return (spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-            .select(F.col("vec_id").cast("long").alias("vec_id"),
-                    F.col("embedding").cast("array<double>").alias("emb")))
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("emb"))
 
 
 def _augmented(spark, sf_dir):

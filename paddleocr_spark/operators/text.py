@@ -15,6 +15,7 @@ mechanism, ``toddleocr/transforms/custom/label_ops.py:39-42``).
 from __future__ import annotations
 
 from paddleocr_spark.corpus import BOILERPLATE_RE
+from paddleocr_spark.sources.tables import load_table
 
 __all__ = [
     "STOPWORDS", "PROFILE_QS", "tokens_col", "quality_parts",
@@ -44,11 +45,10 @@ def clean_documents(spark, sf_dir: str):
     text branch, applied to the documents table)."""
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = load_table(spark, sf_dir, "documents")
     cleaned = F.trim(F.regexp_replace(
         F.regexp_replace(F.col("text"), BOILERPLATE_RE, ""), r"\s+", " "))
-    return (df.select(F.col("doc_id").cast("long").alias("doc_id"),
-                      cleaned.alias("clean_text"))
+    return (df.select("doc_id", cleaned.alias("clean_text"))
             .withColumn("clean_len", F.length("clean_text").cast("long")))
 
 
@@ -56,10 +56,10 @@ def token_stats(spark, sf_dir: str):
     """Whitespace token count + distinct tokens + mean token length."""
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = load_table(spark, sf_dir, "documents")
     toks = tokens_col(F.col("text"))
     return df.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
+        "doc_id",
         F.size(toks).cast("long").alias("n_tokens"),
         F.size(F.array_distinct(toks)).cast("long").alias("n_distinct_tokens"),
         F.round(
@@ -92,12 +92,12 @@ def quality_scores(spark, sf_dir: str):
     (n-gram/stopword heuristic language-ID)."""
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = load_table(spark, sf_dir, "documents")
     toks = tokens_col(F.col("text"))
     n_tok, stop_ratio, alpha_ratio, score = quality_parts(
         F, F.col("text"), toks)
     return df.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
+        "doc_id",
         n_tok.cast("long").alias("n_tokens"),
         F.round(stop_ratio, 6).alias("stop_ratio"),
         F.round(alpha_ratio, 6).alias("alpha_ratio"),
@@ -120,7 +120,7 @@ def fingerprints(spark, sf_dir: str):
     Python."""
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = load_table(spark, sf_dir, "documents")
     from paddleocr_spark.operators.dedup import norm_content
 
     norm = norm_content(F, F.col("text"))
@@ -133,7 +133,7 @@ def fingerprints(spark, sf_dir: str):
         F.lit(0).cast("long"),
         lambda acc, ch: (acc * ROLL_BASE + F.ascii(ch)) % ROLL_MOD)
     return df.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
+        "doc_id",
         F.md5(norm).alias("content_md5"),
         F.array_min(F.transform(toks, word_hash)).alias("min_word_hash"),
         rolling.alias("rolling_hash"),
@@ -155,8 +155,7 @@ def repetition_scores(spark, sf_dir: str):
 
     from paddleocr_spark.operators.dedup import norm_content
 
-    df = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-          .select(F.col("doc_id").cast("long").alias("doc_id"), "text"))
+    df = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = df.select(
         "doc_id",
         F.split(norm_content(F, F.col("text")), " ").alias("tk"))
@@ -188,8 +187,7 @@ def _pii_docs(spark, sf_dir: str):
     mirrored verbatim in the DuckDB oracle)."""
     from pyspark.sql import functions as F
 
-    df = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-          .select(F.col("doc_id").cast("long").alias("doc_id"), "text"))
+    df = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     pii = (df.where(F.col("doc_id") < PII_PLANT_N)
            .select((F.col("doc_id") + PII_OFFSET).alias("doc_id"),
                    F.concat(F.col("text"),
@@ -239,8 +237,7 @@ def bpe_token_stats(spark, sf_dir: str):
     shuffle."""
     from pyspark.sql import functions as F
 
-    df = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-          .select(F.col("doc_id").cast("long").alias("doc_id"), "text"))
+    df = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     planted = (df.where(F.col("doc_id") < BPE_PLANT_N)
                .select((F.col("doc_id") + BPE_OFFSET).alias("doc_id"),
                        F.concat(F.col("text"),
@@ -276,7 +273,7 @@ def corpus_profile(spark, sf_dir: str):
     internals are engine-specific by design)."""
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = load_table(spark, sf_dir, "documents")
     qs = ", ".join(f"{q}D" for q in PROFILE_QS)
     pct = F.expr(f"percentile(n_chars, array({qs}))")
     return (df.groupBy("lang")

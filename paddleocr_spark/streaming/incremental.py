@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from paddleocr_spark.corpus import docs_schema
 from paddleocr_spark.operators.extract import extract_spans
+from paddleocr_spark.sources.tables import SCHEMAS
 
 __all__ = ["incremental_extract", "windowed_event_counts",
            "streaming_exact_dedup", "streaming_fuzzy_dedup",
@@ -101,8 +102,7 @@ def streaming_exact_dedup(spark, docs_dir: str, watermark: str = "1 hour"):
     from pyspark.sql import functions as F
 
     stream = (spark.readStream
-              .schema("doc_id long, text string, lang string, "
-                      "source string, n_chars long")
+              .schema(SCHEMAS["documents"])
               .option("maxFilesPerTrigger", 4)
               .parquet(docs_dir))
     from paddleocr_spark.operators.dedup import norm_content

@@ -53,12 +53,13 @@ def main(argv=None) -> int:
 
     from pyspark.sql import functions as F
 
+    from paddleocr_spark.corpus import docs_schema
     from paddleocr_spark.operators.checkpoint import (
         completed_buckets,
         run_with_checkpoint,
     )
 
-    docs = spark.read.parquet(args.docs)
+    docs = spark.read.schema(docs_schema()).parquet(args.docs)
     already = sorted(completed_buckets(spark, args.out, args.run_id))
     processed = run_with_checkpoint(
         spark, docs, args.media, args.out, args.run_id,

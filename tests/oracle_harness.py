@@ -7,8 +7,7 @@ from __future__ import annotations
 
 import math
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+from paddleocr_spark.sources.tables import TABLES
 
 
 def duckdb_run(sql: str, sf_dir: str):

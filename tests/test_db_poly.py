@@ -321,3 +321,18 @@ def _seg_dist(p, a, b):
         return _m.hypot(p[0] - ax, p[1] - ay)
     t = max(0.0, min(1.0, ((p[0] - ax) * ex + (p[1] - ay) * ey) / ln2))
     return _m.hypot(p[0] - (ax + t * ex), p[1] - (ay + t * ey))
+
+
+def test_det_polygons_follows_corpus_seed(spark):
+    """The distributed decode and its sequential twin agree at a
+    non-default corpus seed, and the seed changes the maps."""
+    from paddleocr_spark.golden import det_polygon_rows
+    from paddleocr_spark.operators.det_poly import det_polygons
+
+    sf = "/root/testdata/sf0.001"
+    cols = ("map_id", "poly_idx", "point_idx", "x", "y", "score_micro")
+    got = [tuple(r) for r in det_polygons(spark, sf, seed=7).collect()]
+    want = [tuple(r[c] for c in cols) for r in det_polygon_rows(500, 7)]
+    assert got == want
+    assert want != [tuple(r[c] for c in cols)
+                    for r in det_polygon_rows(500, 42)]

@@ -31,3 +31,19 @@ def test_oracle_parity(spark, name):
 def test_every_oracle_has_query():
     missing = set(ORACLES) - set(QUERIES)
     assert not missing, missing
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_bm25_topk_rows_exactly_equal_oracle(spark, monkeypatch, sf):
+    """The same tuples on both engines — not the harness's
+    float-normalized strings: the score is all-integer on both sides."""
+    import duckdb
+
+    sf_dir = f"/root/testdata/{sf}"
+    monkeypatch.setenv("PARITY_SF_DIR", sf_dir)
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM "
+            f"'{sf_dir}/documents.parquet'")
+    want = con.sql(entry_mod.oracle_sql()["bm25_topk"]).fetchall()
+    got = [tuple(r) for r in QUERIES["bm25_topk"](spark, sf_dir).collect()]
+    assert got == want

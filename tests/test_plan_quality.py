@@ -117,10 +117,11 @@ def test_manifest_packing_has_no_global_file_window(spark):
 
 def test_store_decode_is_one_task_per_core_in_two_jobs(spark):
     """The whole store decode — manifest read, planning and the decode
-    action — runs at most 2 Spark jobs, and the decode stage runs
-    exactly min(#files, defaultParallelism) tasks. A range-partition
-    sampling job, or a Python-RDD conversion of the file list, fails
-    this."""
+    action — runs exactly 1 Spark job (the manifest is read on the
+    driver), and the decode stage runs exactly min(#files,
+    defaultParallelism) tasks. A manifest read through Spark, a
+    range-partition sampling job, or a Python-RDD conversion of the
+    file list, fails this."""
     from paddleocr_spark.functions.udfs import (
         _list_store_files,
         decode_media_store,
@@ -136,7 +137,7 @@ def test_store_decode_is_one_task_per_core_in_two_jobs(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
-    assert len(jobs) <= 2, jobs
+    assert len(jobs) == 1, jobs
     last = max(jobs)
     tasks = [tracker.getStageInfo(s).numTasks
              for s in tracker.getJobInfo(last).stageIds]
@@ -478,9 +479,9 @@ def test_pagerank_job_budget_per_round(spark):
 
 
 def test_pagerank_reads_documents_once_in_plan(spark):
-    """The documents table is read twice per call whatever the round
-    count: once by the eager count of N, and once in the plan, by the
-    join after the last round that keeps pages without in-links."""
+    """The documents table is read once per call whatever the round
+    count: in the plan, by the join after the last round that keeps
+    pages without in-links (N comes from the parquet footers)."""
     import re
 
     from paddleocr_spark.operators import html_extract
