@@ -12,7 +12,7 @@ accumulate across a multi-query bench/correctness run on one session.
 Every such cache is registered under its session with a scope:
 
 - ``"query"``: ``eager_persist`` caches and the localCheckpoint blocks
-  of iterative jobs (``checkpointer``). Unpersisting a localCheckpoint
+  of iterative jobs (``iterate``). Unpersisting a localCheckpoint
   discards data with no recompute path (the lineage was truncated), so
   ``release(spark)`` is called only once a query's results are written
   or collected (``bench.py`` between queries, a stream's batch body
@@ -28,7 +28,7 @@ their own tables and the problem disappears.
 
 from __future__ import annotations
 
-__all__ = ["eager_persist", "pinned_persist", "checkpointer", "release",
+__all__ = ["eager_persist", "pinned_persist", "iterate", "release",
            "release_one"]
 
 # session -> {key: (scope, df)}; key is id(df) for query-scope entries
@@ -51,11 +51,12 @@ def _unpersist(df) -> bool:
     try:
         df.unpersist()
         # Dataset.unpersist does not reach a checkpoint's blocks: they
-        # belong to the checkpointed RDD under the plan. Dropped through
-        # the context, because RDD.unpersist WARNs on every locally
-        # checkpointed RDD that the drop this release intends is final
+        # belong to the RDD under the plan, checkpointed or not (a lazy
+        # checkpoint whose first action failed still holds blocks).
+        # Dropped through the context: RDD.unpersist WARNs on every
+        # locally checkpointed RDD that the drop is final
         plan = df._jdf.queryExecution().logical()
-        if plan.nodeName() == "LogicalRDD" and plan.rdd().isCheckpointed():
+        if plan.nodeName() == "LogicalRDD":
             df.sparkSession.sparkContext._jsc.sc().unpersistRDD(
                 plan.rdd().id(), False)
         return True
@@ -97,38 +98,59 @@ def pinned_persist(spark, key: str, builder):
     return df
 
 
-def checkpointer(spark, checkpoint_dir: str | None):
-    """Returns ``ckpt(df) -> df``, lineage truncation for iterative
-    jobs in the chosen durability mode.
+def iterate(state, step, max_rounds: int, converged=None,
+            checkpoint_dir: str | None = None):
+    """The one round loop of iterative jobs: ``state = step(state, r)``
+    for r = 1, 2, ...; returns ``(state, rounds)``.
 
     Loop-carried state (PageRank ranks, connected-components labels)
-    must be checkpointed every few rounds or the logical plan nests and
-    multiplies (see operators/graph.py). Two modes:
+    is checkpointed, or its logical plan nests and multiplies every
+    round (operators/graph.py). Checkpoints are lazy: under AQE building
+    one already runs the plan's shuffle-map stages, and an eager one's
+    count would be a job of its own.
 
-    - ``localCheckpoint(eager=True)`` (``checkpoint_dir=None``): blocks
-      live on EXECUTORS and are tracked in query scope. Fast, zero
-      configuration — and exactly right on local[*] where "executor
-      loss" cannot happen without losing the whole JVM.
-    - reliable ``checkpoint(eager=True)`` into ``checkpoint_dir``
-      (installed as the context's checkpoint dir, idempotently): blocks
-      go to the (distributed) filesystem, so on a real cluster one
-      executor loss after an eager checkpoint leaves a recompute path —
-      localCheckpoint there kills the lineage WITHOUT a recovery copy,
-      turning one lost executor into a failed job. At 100-TB scale pass
-      a DFS path (or write every k-th round's state to an intermediate
-      table, the pattern the prep tables already use).
+    - With ``converged(new, old)``: every round is checkpointed, and
+      ``converged`` runs the round's one action, which must read EVERY
+      partition of ``new`` (a count over a filter or a join, not a
+      ``limit``) because it materializes the checkpoint. Only then is
+      the previous state released. No fixpoint in ``max_rounds``
+      rounds raises ``RuntimeError`` naming ``step``.
+    - Without it: exactly ``max_rounds`` rounds, checkpointed every
+      third but the last (the caller's action computes that one).
+      Nothing is released mid-loop: no action has filled the newer
+      checkpoint yet, so the older blocks stay until ``release``.
 
-    The two modes are output-identical (tests/test_iter_checkpoint.py);
-    reliable checkpoint files are cleaned by Spark only with
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` — a
-    bounded per-job directory either way."""
-    if checkpoint_dir is None:
-        return lambda df: _track(df.localCheckpoint(eager=True))
-    sc = spark.sparkContext
-    current = sc.getCheckpointDir()
-    if not current or checkpoint_dir not in current:
-        sc.setCheckpointDir(checkpoint_dir)
-    return lambda df: df.checkpoint(eager=True)
+    ``checkpoint_dir=None`` keeps ``localCheckpoint`` blocks on the
+    executors, tracked in query scope: right on local[*], where losing
+    an executor loses the JVM anyway. A ``checkpoint_dir`` (a DFS path
+    at cluster scale) selects reliable ``checkpoint``, which survives
+    an executor loss; Spark cleans its files only with
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true``. The
+    modes are output-identical (tests/test_iter_checkpoint.py)."""
+
+    def ckpt(df):
+        if checkpoint_dir is None:
+            return _track(df.localCheckpoint(eager=False))
+        sc = df.sparkSession.sparkContext
+        if checkpoint_dir not in (sc.getCheckpointDir() or ""):
+            sc.setCheckpointDir(checkpoint_dir)
+        return df.checkpoint(eager=False)
+
+    for r in range(1, max_rounds + 1):
+        new = step(state, r)
+        if converged is None:
+            state = ckpt(new) if r % 3 == 0 and r < max_rounds else new
+            continue
+        new = ckpt(new)
+        done = converged(new, state)
+        release_one(state)
+        state = new
+        if done:
+            return state, r
+    if converged is not None:
+        raise RuntimeError(f"{step.__name__}: no fixpoint in "
+                           f"{max_rounds} rounds")
+    return state, max_rounds
 
 
 def release(spark, scope: str = "query") -> int:

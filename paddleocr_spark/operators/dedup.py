@@ -263,9 +263,8 @@ def near_dup_pairs(spark, sf_dir: str, threshold: float = 0.7):
     demonstrated by `lsh_candidate_pairs` (every run) and by the
     table build; the DuckDB oracle recomputes everything
     independently, so a stale or wrong table can never pass."""
-    return (spark.read
-            .parquet(build_near_dup_edges(spark, sf_dir, threshold))
-            .select("doc_a", "doc_b", "jaccard"))
+    return (spark.read.schema(NEAR_DUP_SCHEMA)
+            .parquet(build_near_dup_edges(spark, sf_dir, threshold)))
 
 
 def _compute_near_dup_pairs(spark, sf_dir: str, threshold: float = 0.7):
@@ -458,6 +457,10 @@ def _edges_dir(sf_dir: str, threshold: float) -> str:
                       f"b{N_BANDS}s{SHINGLE_N}")
 
 
+# what build_near_dup_edges writes; reading it declared saves a footer job
+NEAR_DUP_SCHEMA = "doc_a long, doc_b long, jaccard double"
+
+
 def build_near_dup_edges(spark, sf_dir: str,
                          threshold: float = 0.7) -> str:
     """Build (or load) the persisted near-dup edge table for this
@@ -478,23 +481,16 @@ def build_near_dup_edges(spark, sf_dir: str,
 
 
 def duplicate_clusters(spark, sf_dir: str, threshold: float = 0.7,
-                       checkpoint_dir=None,
-                       max_iters: int = 20):
+                       checkpoint_dir=None):
     """Connected components over the verified near-dup graph: every
     document in a duplicate cluster labelled with the cluster's
     minimum doc_id, plus the cluster size.
 
-    Algorithm: iterative min-label propagation (hash-to-min). Each
-    round is one join (labels onto symmetrized edges) + one
-    map-side-combinable min groupBy; a round's labels are eagerly
-    persisted (tracked, released between queries) so lineage stays
-    flat and the fixpoint check reuses materialized rows. Rounds
-    needed = graph diameter for plain propagation — near-dup clusters
-    are shallow (dups of a common source), so this converges in 2-3
-    rounds here and O(log n) rounds with the large-star/small-star
-    variant if 10^12-scale components ever get deep. The fixpoint
-    check is one count per round (driver sees a single long — this is
-    loop control, not data collection).
+    Algorithm: iterative min-label propagation (hash-to-min, see
+    operators/graph.py): one join + one map-side-combinable min
+    groupBy per round, and one count to test the fixpoint. Rounds
+    needed = graph diameter — near-dup clusters are shallow (dups of a
+    common source), so this converges in 2-3 rounds here.
 
     The DuckDB oracle computes the same fixpoint as a recursive CTE —
     an independent algorithm (BFS closure, not label propagation), so
@@ -507,14 +503,10 @@ def duplicate_clusters(spark, sf_dir: str, threshold: float = 0.7,
 
     from paddleocr_spark.operators.graph import connected_components
 
-    # read the edge list from its persisted table (built on first use)
-    # — cluster formation and survivor selection are incremental jobs
-    # over the edges, not re-runs of the LSH chain
-    edges = (spark.read
-             .parquet(build_near_dup_edges(spark, sf_dir, threshold))
-             .select("doc_a", "doc_b"))
-    labels = connected_components(edges, "doc_a", "doc_b",
-                                  max_iters=max_iters,
+    # cluster formation and survivor selection are incremental jobs
+    # over the persisted edge table, not re-runs of the LSH chain
+    edges = near_dup_pairs(spark, sf_dir, threshold).select("doc_a", "doc_b")
+    labels = connected_components(edges, "doc_a", "doc_b", 20,
                                   checkpoint_dir=checkpoint_dir)
     size = F.count("*").over(Window.partitionBy("cluster_id")).cast("long")
     return (labels.select(F.col("node").alias("doc_id"),

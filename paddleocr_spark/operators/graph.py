@@ -15,17 +15,16 @@ component's minimum node id:
   deep or adversarial graphs at 10^12 edges, where a diameter-bound
   loop is unacceptable.
 
-Loop-carried state (labels / the rewired edge set) is truncated every
-round via ``operators/_cache.checkpointer``: a cache alone keeps the
+Both loops are a ``step`` plus a fixpoint test on the one loop driver,
+``operators/_cache.iterate``, which checkpoints the loop-carried state
+(labels / the rewired edge set) every round: a cache alone keeps the
 EXECUTION flat but the logical plan still nests and multiplies every
 round (the join/union/groupBy tree references the previous round's
 tree several times — measured driver blowup from plan stringification
 after ~5 rounds), while the checkpoint replaces the plan with a leaf.
-The default is ``localCheckpoint`` (right for local[*]); pass
-``checkpoint_dir=`` for the cluster-durable reliable ``checkpoint()``
-mode — output-identical, survives executor loss. Static inputs (the
-symmetrized edge set) use the tracked eager cache. Per-round driver
-work is one count — loop control, not data collection.
+``checkpoint_dir=`` selects its cluster-durable reliable mode. Per-round
+driver work is one count over the new state, which also fills its
+checkpoint — loop control, not data collection.
 """
 
 from __future__ import annotations
@@ -71,41 +70,36 @@ def connected_components(edges, src: str = "doc_a", dst: str = "doc_b",
                          checkpoint_dir: str | None = None):
     """(node, label) for every node incident to an edge; label = the
     minimum node id reachable from it. Rounds needed = diameter."""
-    df, _ = _propagation(edges, src, dst, max_iters, checkpoint_dir)
-    return df
+    return _propagation(edges, src, dst, max_iters, checkpoint_dir)[0]
 
 
 def _propagation(edges, src, dst, max_iters, checkpoint_dir=None):
     from pyspark.sql import functions as F
 
-    from paddleocr_spark.operators._cache import (
-        checkpointer,
-        eager_persist,
-        release_one,
-    )
+    from paddleocr_spark.operators._cache import eager_persist, iterate
 
-    ckpt = checkpointer(edges.sparkSession, checkpoint_dir)
-    sym = eager_persist(_sym_edges(F, edges, src, dst))
-    labels = ckpt(_edge_nodes(F, edges, src, dst)
-                  .select("node", F.col("node").alias("lbl")))
-    for rounds in range(1, max_iters + 1):
+    sym = eager_persist(_sym_edges(F, edges, src, dst), materialize=False)
+
+    def propagate(labels, r):
+        # `was` carries each node's previous label through the min
+        # groupBy (null on the propagated side), so the fixpoint test
+        # reads the new state alone instead of joining the old one
         prop = (sym.join(labels, sym.src == labels.node)
-                .select(F.col("dst").alias("node"), F.col("lbl")))
-        new_labels = ckpt(labels.unionByName(prop)
-                          .groupBy("node").agg(F.min("lbl").alias("lbl")))
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "node")
-                   .where(F.col("n.lbl") != F.col("o.lbl"))
-                   .count())
-        # the previous round's checkpoint blocks are dead once the
-        # changed-count is materialized — release them instead of
-        # accumulating one cached label table per round
-        release_one(labels)
-        labels = new_labels
-        if changed == 0:
-            return labels.select("node", F.col("lbl").alias("label")), rounds
-    raise RuntimeError(f"label propagation: no fixpoint in "
-                       f"{max_iters} rounds")
+                .select(F.col("dst").alias("node"), "lbl",
+                        F.lit(None).cast("long").alias("was")))
+        return (labels.select("node", "lbl", F.col("lbl").alias("was"))
+                .unionByName(prop)
+                .groupBy("node")
+                .agg(F.min("lbl").alias("lbl"), F.max("was").alias("was")))
+
+    labels, rounds = iterate(
+        _edge_nodes(F, edges, src, dst)
+        .select("node", F.col("node").alias("lbl")),
+        propagate, max_iters,
+        converged=lambda new, old: (
+            new.where(F.col("lbl") != F.col("was")).count() == 0),
+        checkpoint_dir=checkpoint_dir)
+    return labels.select("node", F.col("lbl").alias("label")), rounds
 
 
 def connected_components_star(edges, src: str = "doc_a",
@@ -113,8 +107,7 @@ def connected_components_star(edges, src: str = "doc_a",
                               checkpoint_dir: str | None = None):
     """(node, label) via alternating large-star/small-star rounds —
     O(log n) rounds regardless of diameter."""
-    df, _ = _star(edges, src, dst, max_iters, checkpoint_dir)
-    return df
+    return _star(edges, src, dst, max_iters, checkpoint_dir)[0]
 
 
 def _large_star(F, e):
@@ -145,38 +138,33 @@ def _small_star(F, e):
 def _star(edges, src, dst, max_iters, checkpoint_dir=None):
     from pyspark.sql import functions as F
 
-    from paddleocr_spark.operators._cache import (
-        checkpointer,
-        eager_persist,
-        release_one,
-    )
+    from paddleocr_spark.operators._cache import eager_persist, iterate
 
-    ckpt = checkpointer(edges.sparkSession, checkpoint_dir)
-    e = eager_persist(_sym_edges(F, edges, src, dst))
-    nodes = eager_persist(_edge_nodes(F, edges, src, dst))
-    e_is_symmetric = True  # _sym_edges output already holds both dirs
-    for rounds in range(1, max_iters + 1):
+    def star_round(e, r):
         # large-star input must see both directions; its output (and
         # small-star's) is directed child -> smaller parent. Round 1's
-        # input is already symmetric — re-symmetrizing it would double
-        # the largest round's shuffle volume for nothing.
-        both = e if e_is_symmetric else e.unionByName(
+        # input is _sym_edges, already symmetric — re-symmetrizing it
+        # would double the largest round's shuffle volume for nothing
+        both = e if r == 1 else e.unionByName(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        e2 = ckpt(_small_star(F, _large_star(F, both)))
-        moved = (e2.exceptAll(e).limit(1).count()
-                 + e.exceptAll(e2).limit(1).count())
-        if not e_is_symmetric:
-            # previous round's checkpoint blocks are dead now (round
-            # 1's `e` is the tracked eager cache, released with the
-            # query instead)
-            release_one(e)
-        e = e2
-        e_is_symmetric = False
-        if moved == 0:
-            # fixpoint: e is a forest of stars (node -> component min)
-            parent = e.select(F.col("src").alias("node"),
-                              F.col("dst").alias("label"))
-            roots = (nodes.join(parent, "node", "left_anti")
-                     .select("node", F.col("node").alias("label")))
-            return parent.unionByName(roots), rounds
-    raise RuntimeError(f"star CC: no fixpoint in {max_iters} rounds")
+        return _small_star(F, _large_star(F, both))
+
+    def unmoved(new, old):
+        # both are distinct (src, dst) sets: count rows on one side only
+        return (new.withColumn("n", F.lit(1))
+                .join(old.withColumn("o", F.lit(1)), ["src", "dst"],
+                      "full_outer")
+                .where(F.col("n").isNull() | F.col("o").isNull())
+                .count() == 0)
+
+    e, rounds = iterate(
+        eager_persist(_sym_edges(F, edges, src, dst), materialize=False),
+        star_round, max_iters, converged=unmoved,
+        checkpoint_dir=checkpoint_dir)
+    # fixpoint: e is a forest of stars (node -> component min)
+    parent = e.select(F.col("src").alias("node"),
+                      F.col("dst").alias("label"))
+    roots = (_edge_nodes(F, edges, src, dst)
+             .join(parent, "node", "left_anti")
+             .select("node", F.col("node").alias("label")))
+    return parent.unionByName(roots), rounds

@@ -194,7 +194,6 @@ def build_link_graph_table(spark, sf_dir: str) -> str:
 
 
 def html_pagerank(spark, sf_dir: str, iters: int = PR_ITERS,
-                  checkpoint: bool = True,
                   checkpoint_dir: str | None = None):
     """Deterministic fixed-point PageRank over the extracted link
     graph — the canonical web-scale iterative DataFrame job.
@@ -209,19 +208,15 @@ def html_pagerank(spark, sf_dir: str, iters: int = PR_ITERS,
     base) and one map-side-combinable sum over dst; round 1 joins
     nothing, N comes from the parquet footers as a literal, and the
     documents are joined once, after the last round. Measured at 5
-    rounds on 2,000 pages (local[3], 4-core host): 14 Spark jobs per
-    call. A checkpoint every third round but the last (the caller's
-    action computes that one) keeps the plan depth bounded (the
-    operators/graph.py lesson). The default localCheckpoint is right
-    for local[*]; ``checkpoint_dir=`` selects the cluster-durable
-    reliable mode (``operators/_cache.checkpointer``, output-identical).
+    rounds on 2,000 pages (local[3], 4-core host): 13 Spark jobs per
+    call. The rounds run on ``operators/_cache.iterate``, whose
+    checkpoint every third round keeps the plan depth bounded;
+    ``checkpoint_dir=`` selects its cluster-durable reliable mode.
     Every node has outdegree >= 1 by construction, so no dangling-mass
     term."""
     from pyspark.sql import functions as F
 
-    from paddleocr_spark.operators._cache import checkpointer, eager_persist
-
-    ckpt = checkpointer(spark, checkpoint_dir)
+    from paddleocr_spark.operators._cache import eager_persist, iterate
 
     # the link graph is a PERSISTED corpus-prep table (built once per
     # corpus by build_link_graph_table, reused across sessions — the
@@ -245,17 +240,18 @@ def html_pagerank(spark, sf_dir: str, iters: int = PR_ITERS,
     if not iters:
         return nodes.select("doc_id", F.expr(rank0).alias("rank_fp"))
 
-    contrib = edges  # round 1 joins nothing
-    for it in range(iters):
-        if it:
-            contrib = edges.join(ranks, edges.src == ranks.doc_id, "left")
-        ranks = (contrib.groupBy("dst")
-                 .agg(F.sum(F.expr(f"{rank if it else rank0} div deg"))
-                      .alias("inflow"))
-                 .select(F.col("dst").alias("doc_id"), F.expr(
-                     f"{base} + (85 * inflow) div 100").alias("rank_fp")))
-        if checkpoint and (it + 1) % 3 == 0 and it != iters - 1:
-            ranks = ckpt(ranks)
+    def pagerank_round(ranks, r):
+        # round 1 joins nothing: every node still has rank0
+        contrib = edges if r == 1 else edges.join(
+            ranks, edges.src == ranks.doc_id, "left")
+        return (contrib.groupBy("dst")
+                .agg(F.sum(F.expr(f"{rank0 if r == 1 else rank} div deg"))
+                     .alias("inflow"))
+                .select(F.col("dst").alias("doc_id"), F.expr(
+                    f"{base} + (85 * inflow) div 100").alias("rank_fp")))
+
+    ranks, _ = iterate(None, pagerank_round, iters,
+                       checkpoint_dir=checkpoint_dir)
 
     # a dst outside the documents never appears as a src, so it
     # contributed nothing; this join drops it

@@ -1,12 +1,12 @@
-"""Reliable-checkpoint mode for iterative jobs
-(``operators/_cache.checkpointer``).
+"""The loop driver of iterative jobs (``operators/_cache.iterate``).
 
 localCheckpoint persists blocks on EXECUTORS: on a real cluster one
-executor loss after an eager localCheckpoint kills the lineage with no
+executor loss after a localCheckpoint kills the lineage with no
 recompute path. The checkpoint_dir mode swaps in reliable
 ``checkpoint()`` — these tests pin that the two modes are
 OUTPUT-IDENTICAL and that the reliable mode really writes recovery
-state to the directory.
+state to the directory; then the driver's round cap, that its blocks
+are all released, and that no other module checkpoints.
 """
 
 import os
@@ -67,3 +67,100 @@ def test_duplicate_clusters_mode_identical(spark, tmp_path):
     durable = _rows(duplicate_clusters(
         spark, SF, checkpoint_dir=str(tmp_path / "dup_ckpt")))
     assert local == durable
+
+
+def _path(spark, n_edges: int):
+    return spark.createDataFrame([(i, i + 1) for i in range(n_edges)],
+                                 "doc_a long, doc_b long")
+
+
+def test_round_cap_raises(spark):
+    """A loop that needs more rounds than its cap raises the loop
+    driver's error, naming the loop, instead of returning a partial
+    labelling."""
+    from paddleocr_spark.operators._cache import release
+    from paddleocr_spark.operators.graph import (
+        connected_components,
+        connected_components_star,
+    )
+
+    # propagation needs 33 rounds on this path, the star loop 6
+    edges = _path(spark, 32)
+    for fn, cap in ((connected_components, 3),
+                    (connected_components_star, 2)):
+        with pytest.raises(RuntimeError,
+                           match=f"no fixpoint in {cap} rounds"):
+            fn(edges, max_iters=cap)
+        release(spark)
+
+
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_release_leaves_no_persistent_rdd(spark):
+    """Every block a fixpoint loop caches or checkpoints is tracked:
+    after the result is collected, release(spark) leaves no persisted
+    RDD behind."""
+    from paddleocr_spark.operators._cache import release
+    from paddleocr_spark.operators.graph import (
+        connected_components,
+        connected_components_star,
+    )
+
+    for fn in (connected_components, connected_components_star):
+        release(spark)
+        before = _persistent_rdds(spark)
+        fn(_path(spark, 6)).collect()
+        assert _persistent_rdds(spark) - before, fn.__name__
+        release(spark)
+        assert not _persistent_rdds(spark) - before, fn.__name__
+
+
+def test_failed_first_action_releases_checkpoint_blocks(spark):
+    """A lazy localCheckpoint whose first action fails is never marked
+    checkpointed, but the partitions computed before the failure hold
+    blocks: releasing it must drop them all the same."""
+    from pyspark.sql import functions as F
+
+    from paddleocr_spark.operators._cache import release_one
+
+    boom = spark.range(0, 400, 1, 4).select(
+        F.when(F.col("id") == 399, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id")).alias("id"))
+    before = _persistent_rdds(spark)
+    ckpt = boom.localCheckpoint(eager=False)
+    with pytest.raises(Exception, match="boom"):
+        ckpt.count()
+    rdd = ckpt._jdf.queryExecution().logical().rdd()
+    assert not rdd.isCheckpointed()
+    assert rdd.id() in _persistent_rdds(spark) - before
+    release_one(ckpt)
+    assert not _persistent_rdds(spark) - before
+
+
+def test_only_the_loop_driver_checkpoints():
+    """No module but operators/_cache.py checkpoints a DataFrame or
+    owns a fixpoint loop: every iterative job goes through
+    ``_cache.iterate``."""
+    import ast
+    import glob
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    offenders = []
+    for path in glob.glob(f"{root}/paddleocr_spark/**/*.py",
+                          recursive=True):
+        if path.endswith(os.path.join("operators", "_cache.py")):
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            func = node.func if isinstance(node, ast.Call) else None
+            name = getattr(func, "attr", getattr(func, "id", None))
+            if (name in ("localCheckpoint", "checkpoint", "checkpointer")
+                    or (isinstance(node, ast.Constant)
+                        and isinstance(node.value, str)
+                        and "no fixpoint" in node.value)):
+                offenders.append(f"{os.path.relpath(path, root)}:"
+                                 f"{node.lineno}")
+    assert not offenders, offenders

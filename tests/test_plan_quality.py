@@ -4,6 +4,8 @@ survive a 100× scale-up, asserted on the actual physical plans."""
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
@@ -444,8 +446,7 @@ def test_pagerank_no_cartesian_beyond_count_broadcast(spark):
     from paddleocr_spark.operators import html_extract
     from paddleocr_spark.plans.inspect import formatted_plan
 
-    df = html_extract.html_pagerank(spark, SF, iters=2,
-                                    checkpoint=False)
+    df = html_extract.html_pagerank(spark, SF, iters=2)
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -459,8 +460,7 @@ def _pagerank_jobs(spark, iters: int) -> int:
     group = f"test_pagerank_jobs_{iters}"
     sc.setJobGroup(group, group)
     try:
-        html_extract.html_pagerank(spark, SF, iters=iters,
-                                   checkpoint=False).collect()
+        html_extract.html_pagerank(spark, SF, iters=iters).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
@@ -478,6 +478,45 @@ def test_pagerank_job_budget_per_round(spark):
     assert three - one <= 4, (one, three)
 
 
+def _path_loop_jobs(spark, loop, n_edges: int) -> tuple[int, int]:
+    """(Spark jobs, rounds) of one connected-components loop, built and
+    collected, over the path 0 - 1 - ... - n_edges."""
+    from paddleocr_spark.operators._cache import release
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(n_edges)],
+                                  "doc_a long, doc_b long")
+    sc = spark.sparkContext
+    group = f"test_cc_jobs_{loop.__name__}_{n_edges}"
+    sc.setJobGroup(group, group)
+    try:
+        labels, rounds = loop(edges, "doc_a", "doc_b", 64)
+        labels.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        release(spark)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), rounds
+
+
+@pytest.mark.parametrize("loop, short, long, per_round", [
+    ("_propagation", 2, 6, 4),  # rounds = diameter + 1
+    ("_star", 2, 32, 11),       # rounds grow with log(diameter)
+])
+def test_convergence_loop_job_budget_per_round(spark, loop, short, long,
+                                               per_round):
+    """A fixpoint round is its step's shuffle stages plus ONE action,
+    the convergence count, which also materializes the round's lazy
+    checkpoint: no eager-checkpoint count and no second job against
+    the previous round."""
+    from paddleocr_spark.operators import graph
+
+    fn = getattr(graph, loop)
+    jobs0, rounds0 = _path_loop_jobs(spark, fn, short)
+    jobs1, rounds1 = _path_loop_jobs(spark, fn, long)
+    assert rounds1 > rounds0, (rounds0, rounds1)
+    assert jobs1 - jobs0 <= per_round * (rounds1 - rounds0), (
+        jobs0, rounds0, jobs1, rounds1)
+
+
 def test_pagerank_reads_documents_once_in_plan(spark):
     """The documents table is read once per call whatever the round
     count: in the plan, by the join after the last round that keeps
@@ -489,7 +528,7 @@ def test_pagerank_reads_documents_once_in_plan(spark):
 
     for iters in (1, 3, 5):
         plan = formatted_plan(html_extract.html_pagerank(
-            spark, SF, iters=iters, checkpoint=False))
+            spark, SF, iters=iters))
         scans = re.findall(r"Location: \S+ \[[^\]]*documents\.parquet",
                            plan)
         assert len(scans) == 1, (iters, len(scans))

@@ -71,7 +71,7 @@ def _second_build_jobs(spark, group: str, build) -> int:
 @pytest.mark.parametrize("name", [
     "revenue_by_region", "pricing_summary", "event_sessions",
     "clean_boilerplate", "html_main_content", "det_polygons",
-    "curated_corpus", "cosine_topk_bruteforce"])
+    "curated_corpus", "cosine_topk_bruteforce", "near_dup_pairs"])
 def test_building_a_query_launches_no_job(spark, name):
     query = entry_mod.queries()[name]
     assert _second_build_jobs(spark, f"test_tables_build_{name}",
@@ -80,14 +80,24 @@ def test_building_a_query_launches_no_job(spark, name):
 
 def test_building_pagerank_launches_no_job(spark):
     """N comes from the footers: no count job while the rounds are
-    planned (checkpoints off; the link graph table already built)."""
+    planned (3 rounds take no checkpoint, the third being the last;
+    the link graph table already built)."""
     from paddleocr_spark.operators import html_extract
 
     html_extract.build_link_graph_table(spark, SF)
     assert _second_build_jobs(
         spark, "test_tables_build_pagerank",
-        lambda: html_extract.html_pagerank(spark, SF, iters=3,
-                                           checkpoint=False)) == 0
+        lambda: html_extract.html_pagerank(spark, SF, iters=3)) == 0
+
+
+def test_near_dup_schema_matches_the_built_table(spark):
+    """The near-dup edge table is read with a declared schema; it must
+    be the one its writer leaves in the parquet footers."""
+    from paddleocr_spark.operators import dedup
+
+    out = dedup.build_near_dup_edges(spark, SF)
+    assert (dedup.near_dup_pairs(spark, SF).schema
+            == spark.read.parquet(out).schema)
 
 
 def _sf_paths(tree) -> set:
