@@ -494,14 +494,14 @@ def main() -> None:
     from paddleocr_spark.operators.html_extract import (
         build_link_graph_table,
     )
-    from paddleocr_spark.operators.similarity import ensure_ivf_index
+    from paddleocr_spark.operators.similarity import build_ivf_index
 
     _prep("link_graph_table",
           lambda: build_link_graph_table(spark, SF_DIR))
     _prep("contam_gram_table", lambda: build_gram_table(spark, SF_DIR))
     _prep("near_dup_edge_table",
           lambda: build_near_dup_edges(spark, SF_DIR))
-    _prep("ivf_index", lambda: ensure_ivf_index(spark, SF_DIR))
+    _prep("ivf_index", lambda: build_ivf_index(spark, SF_DIR))
 
     queries = entry_mod.queries()
     # full coverage, guaranteed: any queries() entry missing from the

@@ -1,12 +1,12 @@
 """The repo-local artifact cache root (``<repo>/.cache``).
 
-Fixture stores, bucketed/partitioned layouts, the IVF index, the
-near-dup edge table, and the synthesized corpus all live under one
-root. This helper is the ONLY place that computes it — the previous
-hand-rolled ``dirname(dirname(dirname(__file__)))`` copies meant a
-module moving one directory level would silently write its fixtures
-somewhere new. (``operators/_cache.py`` is unrelated: that is the
-eager-persist registry, not a filesystem path.)
+Fixture stores, the synthesized corpus and every corpus-derived table
+(the link graph, the near-dup edges, the contamination grams, the IVF
+index, the partitioned and bucketed layouts) all live under one root,
+with no exception. This helper is the ONLY place that computes it; the
+derived tables' keys under it come from ``sources/tables.derived_dir``.
+(``operators/_cache.py`` is unrelated: that is the eager-persist
+registry, not a filesystem path.)
 """
 
 from __future__ import annotations

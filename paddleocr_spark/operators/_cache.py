@@ -66,6 +66,8 @@ def _unpersist(df) -> bool:
 
 def eager_persist(df, materialize: bool = True):
     """persist() + count() + register for later release. Returns df.
+    A DataFrame that is already cached (a ``pinned_persist`` result,
+    say) is returned untouched: no second persist, no count, no entry.
 
     The count() is the eager-materialization barrier that serializes
     the cache fill before consumers race it (no in-flight dedup in
@@ -78,6 +80,10 @@ def eager_persist(df, materialize: bool = True):
     side effect) — saves one whole job of scheduler overhead, which on
     small inputs is the dominant cost of a multi-branch query.
     """
+    from pyspark import StorageLevel
+
+    if df.storageLevel != StorageLevel.NONE:
+        return df
     df = _track(df.persist())
     if materialize:
         df.count()

@@ -21,41 +21,43 @@ disappears — the property the layout exists to buy.
 
 Catalog note: bucketing metadata lives in the session catalog, so with
 the in-memory catalog each fresh session re-attaches the tables. The
-bucketed parquet is written ONCE (``write_bucketed``); later sessions
-only issue a ``CREATE TABLE ... CLUSTERED BY ... LOCATION`` DDL over
-the existing files (``register_bucketed``) — the bucket-id <-> file
-mapping is carried by the writer's file names, so re-declaring the
-same spec is exact (value-guarded in the tests). With a persistent
-metastore (or Iceberg's bucket partition transform) even the DDL
-happens once per ingest, which is the production shape.
+bucketed parquet is written ONCE per source (``write_bucketed`` in
+``sources/tables.derived_table``); sessions attach it with a ``CREATE
+TABLE ... CLUSTERED BY ... LOCATION`` DDL, columns from ``SCHEMAS``
+(``register_bucketed``) — the bucket-id <-> file mapping is carried by
+the writer's file names, so re-declaring the same spec is exact
+(value-guarded in the tests). With a persistent metastore (or Iceberg's
+bucket partition transform) the DDL too happens once per ingest.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import uuid
 
 from pyspark.sql import functions as F
 
-from paddleocr_spark.sources.tables import load_table
+from paddleocr_spark.sources.tables import (
+    SCHEMAS,
+    derived_table,
+    load_table,
+    table_path,
+)
 
-__all__ = ["write_bucketed", "ensure_bucketed_pair", "bucketed_join_agg",
-           "N_BUCKETS"]
+__all__ = ["write_bucketed", "register_bucketed", "ensure_bucketed_pair",
+           "bucketed_join_agg", "N_BUCKETS"]
 
 N_BUCKETS = 8
 
 
-def _cache_root() -> str:
-    from paddleocr_spark.cachedir import cache_root
-
-    return cache_root("bucketed")
-
-
 def write_bucketed(df, name: str, path: str, keys, n_buckets: int = N_BUCKETS,
                    sort_cols=None) -> None:
-    """Write ``df`` as an external bucketed parquet table: hash-bucketed
+    """Write ``df`` as bucketed parquet files at ``path``: hash-bucketed
     on ``keys`` (the once-only shuffle), optionally sorted inside each
-    bucket so merge joins skip the per-task sort too."""
+    bucket so merge joins skip the per-task sort too. The table ``name``
+    ``saveAsTable`` needs is dropped after the write (the files stay):
+    ``register_bucketed`` attaches them."""
     keys = [keys] if isinstance(keys, str) else list(keys)
     w = (df.write.mode("overwrite").format("parquet")
          .option("path", path).bucketBy(n_buckets, *keys))
@@ -63,6 +65,7 @@ def write_bucketed(df, name: str, path: str, keys, n_buckets: int = N_BUCKETS,
         w = w.sortBy(*([sort_cols] if isinstance(sort_cols, str)
                        else list(sort_cols)))
     w.saveAsTable(name)
+    df.sparkSession.sql(f"DROP TABLE {name}")
     # record the written bucket count next to the data: re-attaching
     # with a DIFFERENT count than the files were hashed with would
     # silently drop join rows, so register_bucketed validates this
@@ -72,10 +75,11 @@ def write_bucketed(df, name: str, path: str, keys, n_buckets: int = N_BUCKETS,
                    "sort_cols": sort_cols}, f)
 
 
-def register_bucketed(spark, name: str, path: str, key: str,
+def register_bucketed(spark, name: str, path: str, key: str, schema: str,
                       n_buckets: int = N_BUCKETS) -> None:
-    """Re-attach an already-bucketed parquet location to a fresh
-    session's catalog via DDL — the bucket spec is catalog metadata,
+    """Attach an already-bucketed parquet location to the session's
+    catalog via DDL, its columns declared by the DDL string ``schema``
+    (no footer job) — the bucket spec is catalog metadata,
     the bucket-id <-> file mapping lives in the writer's file names,
     so declaring the same spec over the same files is exact. This is
     the write-once production shape; correctness is guarded by the
@@ -84,64 +88,54 @@ def register_bucketed(spark, name: str, path: str, key: str,
     against the _bucket_spec.json the writer left with the data — a
     mismatched declaration is exactly such a silent wrong-bucket
     mapping."""
-    spec_path = os.path.join(path, "_bucket_spec.json")
-    if os.path.exists(spec_path):
-        with open(spec_path) as f:
-            written = json.load(f)
-        if written["n_buckets"] != n_buckets:
-            raise ValueError(
-                f"bucketed data at {path} was written with "
-                f"{written['n_buckets']} buckets; refusing to register "
-                f"it as {n_buckets}")
-        # the keys/sortedness must match too: declaring CLUSTERED BY a
-        # column the files were NOT hashed on makes Spark elide the
-        # Exchange against the wrong bucket mapping — silent dropped
-        # join rows, no error
-        if written["keys"] != [key]:
-            raise ValueError(
-                f"bucketed data at {path} was hashed on "
-                f"{written['keys']}; refusing to register it as "
-                f"CLUSTERED BY ({key})")
-        wsort = written.get("sort_cols")
-        wsort = [wsort] if isinstance(wsort, str) else wsort
-        # declare SORTED BY only when the files really carry the
-        # bucket-local sort: declaring it over unsorted runs makes
-        # Spark elide the per-task sort and merge-join garbage
-        sorted_by = f"SORTED BY ({key}) " if wsort == [key] else ""
-    else:
-        # no spec alongside the data: nothing proves the sort, so
-        # claim only the clustering the caller asserts
-        sorted_by = ""
-    cols = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                     for f in spark.read.parquet(path).schema.fields)
+    with open(os.path.join(path, "_bucket_spec.json")) as f:
+        written = json.load(f)
+    if written["n_buckets"] != n_buckets:
+        raise ValueError(
+            f"bucketed data at {path} was written with "
+            f"{written['n_buckets']} buckets; refusing to register "
+            f"it as {n_buckets}")
+    # the keys/sortedness must match too: declaring CLUSTERED BY a
+    # column the files were NOT hashed on makes Spark elide the
+    # Exchange against the wrong bucket mapping — silent dropped join
+    # rows, no error
+    if written["keys"] != [key]:
+        raise ValueError(
+            f"bucketed data at {path} was hashed on {written['keys']}; "
+            f"refusing to register it as CLUSTERED BY ({key})")
+    wsort = written.get("sort_cols")
+    wsort = [wsort] if isinstance(wsort, str) else wsort
+    # declare SORTED BY only when the files really carry the
+    # bucket-local sort: declaring it over unsorted runs makes Spark
+    # elide the per-task sort and merge-join garbage
+    sorted_by = f"SORTED BY ({key}) " if wsort == [key] else ""
     spark.sql(
-        f"CREATE TABLE {name} ({cols}) USING parquet "
+        f"CREATE TABLE {name} ({schema}) USING parquet "
         f"CLUSTERED BY ({key}) {sorted_by}"
         f"INTO {n_buckets} BUCKETS LOCATION '{path}'")
 
 
 def ensure_bucketed_pair(spark, sf_dir: str, n_buckets: int = N_BUCKETS):
-    """Register ``b_orders``/``b_lineitem`` bucketed on orderkey for
-    ``sf_dir``. The bucketed parquet is written ONCE (the ingest-time
-    shuffle); later sessions only re-attach the existing location with
-    ``register_bucketed`` — no data rewrite."""
-    import re
-
-    tag = re.sub(r"[^A-Za-z0-9_]", "_",
-                 os.path.basename(os.path.normpath(sf_dir)))
-    root = os.path.join(_cache_root(), tag)
-    spec = (("b_orders_" + tag, "orders", "o_orderkey"),
-            ("b_lineitem_" + tag, "lineitem", "l_orderkey"))
-    for name, sub, key in spec:
-        if spark.catalog.tableExists(name):
-            continue
-        path = os.path.join(root, sub)
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            register_bucketed(spark, name, path, key, n_buckets)
-        else:
+    """Register ``b_orders_<key>``/``b_lineitem_<key>`` bucketed on
+    orderkey for ``sf_dir``, ``<key>`` being the layout's store key, so
+    two corpora never share a catalog name. The bucketed parquet is
+    written ONCE per source (the ingest-time shuffle); later sessions
+    only attach the existing location — no data rewrite."""
+    names = []
+    for sub, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
+        def build(out, sub=sub, key=key):
             write_bucketed(load_table(spark, sf_dir, sub),
-                           name, path, key, n_buckets, sort_cols=key)
-    return tuple(name for name, _, _ in spec)
+                           f"b_{sub}_w{uuid.uuid4().hex}", out, key,
+                           n_buckets, sort_cols=key)
+
+        path = derived_table(f"bucketed_{sub}", "v1",
+                             [table_path(sf_dir, sub)], n_buckets, build)
+        name = f"b_{sub}_{os.path.basename(path)}"
+        if not spark.catalog.tableExists(name):
+            register_bucketed(spark, name, path, key, SCHEMAS[sub],
+                              n_buckets)
+        names.append(name)
+    return tuple(names)
 
 
 def bucketed_join_agg(spark, sf_dir: str):

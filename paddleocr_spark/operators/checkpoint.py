@@ -180,4 +180,15 @@ def run_with_checkpoint(spark, docs_df, media_df, out_dir: str,
 
 
 def read_output(spark, out_dir: str):
-    return spark.read.parquet(os.path.join(out_dir, "spans"))
+    """Every committed bucket's spans plus its ``bucket``, read with a
+    bucket footer's schema (on the driver: no Spark job)."""
+    import glob
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    spans = os.path.join(out_dir, "spans")
+    footer = min(glob.glob(os.path.join(spans, "bucket=*", "*.parquet")))
+    return (spark.read.schema(from_arrow_schema(pq.read_schema(footer))
+                              .add("bucket", "integer"))
+            .parquet(spans))

@@ -25,11 +25,15 @@ no corpus-curation layer; these extend SURVEY §6's pipeline surface.
 
 from __future__ import annotations
 
-from paddleocr_spark.sources.tables import load_table
+from paddleocr_spark.sources.tables import (
+    derived_table,
+    load_table,
+    table_path,
+)
 
 __all__ = [
     "NGRAM_N", "BENCH_MOD", "SAMPLE_RATES", "SAMPLE_DENOM", "LANG_BUDGET",
-    "QUALITY_MIN",
+    "QUALITY_MIN", "GRAM_SCHEMA",
     "benchmark_contamination", "build_gram_table", "stratified_sample",
     "token_budget_mix", "curated_corpus",
 ]
@@ -62,21 +66,8 @@ def _ngrams(F, toks_col, n: int):
     return _shingles(F, toks_col, n)
 
 
-def _gram_table_dir(sf_dir: str, n: int) -> str:
-    import hashlib
-    import os
-
-    from paddleocr_spark.cachedir import cache_root
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = int(os.path.getmtime(src))
-    except OSError:
-        mtime = 0
-    ident = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}:{CONTAM_PLANT_N}:"
-        f"{CONTAM_PREFIX}:{BENCH_MOD}:xxh64".encode()).hexdigest()[:12]
-    return cache_root("contam_grams", f"v1_{ident}_n{n}")
+# what build_gram_table writes
+GRAM_SCHEMA = "doc_id long, gh long"
 
 
 def build_gram_table(spark, sf_dir: str, n: int = NGRAM_N) -> str:
@@ -97,27 +88,27 @@ def build_gram_table(spark, sf_dir: str, n: int = NGRAM_N) -> str:
     live at NEGATIVE doc_ids (-(src+1)), which no real document can
     hold, so a plant can never merge gram sets with a real doc
     whatever the corpus size."""
-    import os
-
-    out = _gram_table_dir(sf_dir, n)
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
     from pyspark.sql import functions as F
 
-    docs = _docs(spark, sf_dir)
-    leaks = (docs.where((F.col("doc_id") % BENCH_MOD == 0)
-                        & (F.col("doc_id") < CONTAM_PLANT_N * BENCH_MOD))
-             .select((-F.col("doc_id") - 1).alias("doc_id"),
-                     F.concat(F.lit(CONTAM_PREFIX),
-                              F.col("text")).alias("text"),
-                     "lang"))
-    docs = docs.unionByName(leaks)
-    toks = docs.select("doc_id", dedup_norm(F, F.col("text")).alias("tk"))
-    grams = toks.select(
-        "doc_id", F.explode(_ngrams(F, F.col("tk"), n)).alias("g"))
-    (grams.select("doc_id", F.xxhash64(F.col("g")).alias("gh"))
-     .write.mode("overwrite").parquet(out))
-    return out
+    def build(out):
+        docs = _docs(spark, sf_dir)
+        leaks = (docs.where((F.col("doc_id") % BENCH_MOD == 0)
+                            & (F.col("doc_id") < CONTAM_PLANT_N * BENCH_MOD))
+                 .select((-F.col("doc_id") - 1).alias("doc_id"),
+                         F.concat(F.lit(CONTAM_PREFIX),
+                                  F.col("text")).alias("text"),
+                         "lang"))
+        docs = docs.unionByName(leaks)
+        toks = docs.select("doc_id",
+                           dedup_norm(F, F.col("text")).alias("tk"))
+        grams = toks.select(
+            "doc_id", F.explode(_ngrams(F, F.col("tk"), n)).alias("g"))
+        (grams.select("doc_id", F.xxhash64(F.col("g")).alias("gh"))
+         .write.parquet(out))
+
+    return derived_table(
+        "contam_grams", "v1", [table_path(sf_dir, "documents")],
+        (n, CONTAM_PLANT_N, CONTAM_PREFIX, BENCH_MOD, "xxh64"), build)
 
 
 def benchmark_contamination(spark, sf_dir: str, n: int = NGRAM_N):
@@ -133,7 +124,8 @@ def benchmark_contamination(spark, sf_dir: str, n: int = NGRAM_N):
     is the property that matters)."""
     from pyspark.sql import functions as F
 
-    grams = spark.read.parquet(build_gram_table(spark, sf_dir, n))
+    grams = (spark.read.schema(GRAM_SCHEMA)
+             .parquet(build_gram_table(spark, sf_dir, n)))
     is_bench = (F.col("doc_id") % BENCH_MOD == 0) & \
         (F.col("doc_id") >= 0) & (F.col("doc_id") < BENCH_CAP)
     bench = (grams.where(is_bench)

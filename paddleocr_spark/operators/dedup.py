@@ -36,7 +36,11 @@ from __future__ import annotations
 
 import numpy as np
 
-from paddleocr_spark.sources.tables import load_table
+from paddleocr_spark.sources.tables import (
+    derived_table,
+    load_table,
+    table_path,
+)
 
 __all__ = [
     "N_HASHES", "N_BANDS", "ROWS_PER_BAND", "MINHASH_PRIME", "AFFINE",
@@ -430,33 +434,6 @@ def simhash_near_dups(spark, sf_dir: str, max_hamming: int = MAX_HAMMING):
             .select("doc_a", "doc_b", "hamming"))
 
 
-def _edges_dir(sf_dir: str, threshold: float) -> str:
-    """Cache key = corpus IDENTITY (absolute path + source-table
-    mtime, so a regenerated corpus at the same path re-keys) + every
-    dedup parameter (so a parameter change re-keys). No count scan —
-    a cache hit must cost nothing."""
-    import hashlib
-    import os
-
-    from paddleocr_spark.cachedir import cache_root
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = int(os.path.getmtime(src))
-    except OSError:
-        mtime = 0
-    # the plant constants change the edge-table CONTENT, so they are
-    # part of "every dedup parameter" and must re-key the cache too
-    plants = (f"{NEAR_PLANT_N}:{NEAR_PLANT_OFFSET}:{NEAR_PLANT_SUFFIX}:"
-              f"{EXACT_PLANT_N}:{EXACT_PLANT_OFFSET}")
-    ident = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}:{plants}"
-        .encode()).hexdigest()[:12]
-    return cache_root("near_dup_edges",
-                      f"v3_{ident}_t{threshold}_k{N_HASHES}"
-                      f"b{N_BANDS}s{SHINGLE_N}")
-
-
 # what build_near_dup_edges writes; reading it declared saves a footer job
 NEAR_DUP_SCHEMA = "doc_a long, doc_b long, jaccard double"
 
@@ -469,15 +446,16 @@ def build_near_dup_edges(spark, sf_dir: str,
     operators/similarity.py): the signatures→bands→candidates→verify
     chain runs ONCE and every downstream consumer (cluster formation,
     survivor selection, incremental re-runs) reads (doc_a, doc_b,
-    jaccard) rows from parquet. Returns the table directory."""
-    import os
-
-    out = _edges_dir(sf_dir, threshold)
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    _compute_near_dup_pairs(spark, sf_dir, threshold).write \
-        .mode("overwrite").parquet(out)
-    return out
+    jaccard) rows from parquet. Returns the table directory. Every
+    dedup parameter keys the table, the plant constants included: they
+    change its content."""
+    params = (threshold, N_HASHES, N_BANDS, SHINGLE_N, NEAR_PLANT_N,
+              NEAR_PLANT_OFFSET, NEAR_PLANT_SUFFIX, EXACT_PLANT_N,
+              EXACT_PLANT_OFFSET)
+    return derived_table(
+        "near_dup_edges", "v3", [table_path(sf_dir, "documents")], params,
+        lambda out: _compute_near_dup_pairs(spark, sf_dir, threshold)
+        .write.parquet(out))
 
 
 def duplicate_clusters(spark, sf_dir: str, threshold: float = 0.7,

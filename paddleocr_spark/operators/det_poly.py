@@ -9,10 +9,12 @@ integer row, hash-comparable against the sequential golden
 (``golden.py`` -> ``golden_det_polygons.parquet``).
 
 Plan shape (designed for 10^12 docs): the fixture ids are an embarrassingly
-parallel ``spark.range`` — at production scale the same UDF body runs
-over the media-store prob maps partition-by-partition with zero
-shuffle; the only exchange here is the final presentation orderBy,
-which the driver's hash-compare requires. Output columns are all
+parallel ``spark.range``, one partition per core — at production scale
+the same UDF body runs over the media-store prob maps
+partition-by-partition with zero shuffle; the only exchange here is the
+final presentation orderBy, which the driver's hash-compare requires,
+over the persisted Python output (its sampling job reruns no Python
+stage). Output columns are all
 bigint (coordinates are integral after the reference's round+clip;
 score is fixed-point micro units), so the cross-engine hash has no
 float surface at all.
@@ -34,6 +36,7 @@ def det_polygons(spark, sf_dir: str, seed: int = 42):
         poly_map_record,
     )
     from paddleocr_spark.kernels.db_poly import db_postprocess_poly
+    from paddleocr_spark.operators._cache import eager_persist
 
     n_maps = poly_map_count(table_rows(sf_dir, "documents"))
     schema = ("map_id long, poly_idx long, point_idx long, "
@@ -58,6 +61,7 @@ def det_polygons(spark, sf_dir: str, seed: int = 42):
                         out["score_micro"].append(smicro)
             yield pd.DataFrame(out)
 
-    ids = spark.range(n_maps).repartition(min(n_maps, 32))
-    return (ids.mapInPandas(gen, schema)
-            .orderBy("map_id", "poly_idx", "point_idx"))
+    ids = spark.range(n_maps, numPartitions=min(
+        n_maps, spark.sparkContext.defaultParallelism))
+    polys = eager_persist(ids.mapInPandas(gen, schema), materialize=False)
+    return polys.orderBy("map_id", "poly_idx", "point_idx")

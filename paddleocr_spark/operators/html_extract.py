@@ -20,11 +20,17 @@ embarrassingly parallel, no shuffle, column-pruned to (doc_id, html).
 
 from __future__ import annotations
 
-from paddleocr_spark.sources.tables import load_table, table_rows
+from paddleocr_spark.sources.tables import (
+    derived_table,
+    load_table,
+    table_path,
+    table_rows,
+)
 
 __all__ = ["ENTITY_PLANT_N", "PARA2", "htmlize_documents",
            "html_main_content", "html_links", "html_link_graph",
            "build_link_graph_table", "html_pagerank", "LINK_COEFFS",
+           "LINK_GRAPH_SCHEMA",
            "PR_ITERS", "PR_SCALE"]
 
 ENTITY_PLANT_N = 10
@@ -153,24 +159,8 @@ def html_link_graph(spark, sf_dir: str):
             .distinct())
 
 
-def _link_graph_dir(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    from paddleocr_spark.cachedir import cache_root
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = int(os.path.getmtime(src))
-    except OSError:
-        mtime = 0
-    # the template coefficients determine the edge content — re-key
-    # the table if they ever change
-    ident = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}:{LINK_COEFFS}"
-        .encode()).hexdigest()[:12]
-    # v2: (src, dst, deg) — a v1 (src, dst) table is never served
-    return cache_root("link_graph", f"v2_{ident}")
+# what build_link_graph_table writes; deg is the outdegree of src
+LINK_GRAPH_SCHEMA = "src long, dst long, deg long"
 
 
 def build_link_graph_table(spark, sf_dir: str) -> str:
@@ -181,16 +171,14 @@ def build_link_graph_table(spark, sf_dir: str) -> str:
     sessions) reads (src, dst, deg) rows from parquet, deg being the
     outdegree of src. At production scale the link graph IS its own
     table, written by the link-extraction job. Returns the table
-    directory."""
-    import os
-
-    out = _link_graph_dir(sf_dir)
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    (html_link_graph(spark, sf_dir)
-     .selectExpr("src", "dst", "count(*) OVER (PARTITION BY src) AS deg")
-     .write.mode("overwrite").parquet(out))
-    return out
+    directory. v2 is the (src, dst, deg) layout, so a v1 (src, dst)
+    table is never served; the template coefficients determine the
+    edges, so they key the table too."""
+    return derived_table(
+        "link_graph", "v2", [table_path(sf_dir, "documents")], LINK_COEFFS,
+        lambda out: html_link_graph(spark, sf_dir)
+        .selectExpr("src", "dst", "count(*) OVER (PARTITION BY src) AS deg")
+        .write.parquet(out))
 
 
 def html_pagerank(spark, sf_dir: str, iters: int = PR_ITERS,
@@ -221,11 +209,9 @@ def html_pagerank(spark, sf_dir: str, iters: int = PR_ITERS,
     # the link graph is a PERSISTED corpus-prep table (built once per
     # corpus by build_link_graph_table, reused across sessions — the
     # HTML parse never re-runs for PageRank); the memory persist on
-    # top keeps the rounds off the parquet scan, and round 1 fills it.
-    # The edge read names its schema: inferring it from the parquet
-    # footers costs one Spark job
+    # top keeps the rounds off the parquet scan, and round 1 fills it
     edges = eager_persist(
-        spark.read.schema("src long, dst long, deg long")
+        spark.read.schema(LINK_GRAPH_SCHEMA)
         .parquet(build_link_graph_table(spark, sf_dir)),
         materialize=False)
     nodes = load_table(spark, sf_dir, "documents").select("doc_id")

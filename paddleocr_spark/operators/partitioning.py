@@ -18,14 +18,17 @@ value-checks the result against the raw table.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
-from paddleocr_spark.sources.tables import load_table
+from paddleocr_spark.sources.tables import (
+    SCHEMAS,
+    derived_table,
+    load_table,
+    table_path,
+)
 
-__all__ = ["DAY_LO", "DAY_HI", "epoch_day", "ensure_partitioned_events",
-           "partitioned_events_agg"]
+__all__ = ["DAY_LO", "DAY_HI", "PARTITIONED_EVENTS_SCHEMA", "epoch_day",
+           "ensure_partitioned_events", "partitioned_events_agg"]
 
 # the driver's events generator spans epoch days 19723..19752 at every
 # sf; this window keeps 10 of the 30 day-partitions (prunes 2/3)
@@ -36,56 +39,22 @@ def epoch_day(col: str = "ts"):
     return F.floor(F.unix_timestamp(col) / 86400).cast("long")
 
 
-def _cache_root() -> str:
-    from paddleocr_spark.cachedir import cache_root
-
-    return cache_root("partitioned")
-
-
-def _source_fingerprint(src: str) -> str:
-    """Identity of the source table: absolute path + (size, mtime) of
-    every file under it. A regenerated source (new mtime/size) or a
-    different directory that happens to share a basename therefore
-    invalidates the cached layout instead of silently serving stale
-    data to a CORRECTNESS query whose oracle reads the fresh raw
-    table."""
-    import hashlib
-
-    h = hashlib.md5(os.path.abspath(src).encode())
-    if os.path.isdir(src):
-        files = sorted(
-            os.path.join(r, f) for r, _, fs in os.walk(src) for f in fs)
-    else:
-        files = [src]
-    for f in files:
-        st = os.stat(f)
-        h.update(f"{os.path.basename(f)}:{st.st_size}:"
-                 f"{st.st_mtime_ns}\n".encode())
-    return h.hexdigest()
+# what ensure_partitioned_events writes: the events columns, then the
+# day key as partition discovery types it
+PARTITIONED_EVENTS_SCHEMA = SCHEMAS["events"] + ", event_day int"
 
 
 def ensure_partitioned_events(spark, sf_dir: str) -> str:
-    """Write the events table day-partitioned under the repo cache
-    (idempotent via a fingerprinted DONE marker; the once-per-ingest
-    layout cost, like the bucketed-pair write). The marker records the
-    source's content fingerprint — a rewrite happens whenever the
-    source changed, not merely whenever some directory with the same
-    basename was cached once."""
-    src = os.path.join(sf_dir, "events.parquet")
-    fp = _source_fingerprint(src)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(_cache_root(), tag, "events")
-    marker = os.path.join(path, "_DONE")
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            if fh.read().strip() == fp:
-                return path
-    (load_table(spark, sf_dir, "events")
-     .withColumn("event_day", epoch_day())
-     .write.mode("overwrite").partitionBy("event_day").parquet(path))
-    with open(marker, "w") as fh:
-        fh.write(fp + "\n")
-    return path
+    """Write the events table day-partitioned under the repo cache,
+    once per source (the once-per-ingest layout cost, like the
+    bucketed-pair write); ``derived_table`` keys it by the source's
+    files, so a regenerated or different events table gets a layout of
+    its own. Returns the layout directory."""
+    return derived_table(
+        "partitioned_events", "v1", [table_path(sf_dir, "events")], (),
+        lambda out: load_table(spark, sf_dir, "events")
+        .withColumn("event_day", epoch_day())
+        .write.partitionBy("event_day").parquet(out))
 
 
 def partitioned_events_agg(spark, sf_dir: str):
@@ -95,7 +64,7 @@ def partitioned_events_agg(spark, sf_dir: str):
     values are layout-independent (the oracle filters the raw table)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = ensure_partitioned_events(spark, sf_dir)
-    ev = spark.read.parquet(path)
+    ev = spark.read.schema(PARTITIONED_EVENTS_SCHEMA).parquet(path)
     return (ev.where(F.col("event_day").between(DAY_LO, DAY_HI))
             .groupBy("event_day", "event_type")
             .agg(F.count("*").cast("long").alias("n"),

@@ -40,14 +40,19 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 
-from paddleocr_spark.sources.tables import load_table
+from paddleocr_spark.sources.tables import (
+    derived_dir,
+    derived_table,
+    load_table,
+    table_path,
+)
 
 __all__ = ["N_QUERIES", "TOP_K", "SIGN_BANDS", "SIGN_BITS", "EMB_DIM",
            "PLANES", "PLANT_N", "PLANT_OFFSET", "N_CENTROIDS", "NPROBE",
            "N_LLOYD", "NPROBE_REFINED",
            "cosine_topk_bruteforce", "cosine_topk_lsh",
            "cosine_topk_ivf", "cosine_topk_ivf_refined",
-           "build_ivf_index", "ivf_index_numpy", "ensure_ivf_index",
+           "build_ivf_index", "ivf_index_numpy", "ivf_dir", "IVF_SCHEMAS",
            "embedding_near_dups"]
 
 N_QUERIES = 8
@@ -329,32 +334,22 @@ N_LLOYD = 2
 NPROBE_REFINED = 8
 
 
-def _ivf_root() -> str:
-    import os
+# what build_ivf_index writes, one table per subdirectory
+IVF_SCHEMAS = {"centroids": "cid long, cemb array<double>",
+               "assign": "vec_id long, cid long"}
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    return os.path.abspath(os.path.join(here, "..", "..", ".cache", "ivf"))
+
+def _ivf_key(sf_dir: str, iters: int):
+    # v3: exact integer-micro Lloyd means (the centroid-content rule
+    # keys the index — a stale v2 index would diverge from the twin)
+    return ("ivf", "v3", [table_path(sf_dir, "embeddings")],
+            (N_CENTROIDS, iters))
 
 
 def ivf_dir(sf_dir: str) -> str:
-    """Index cache key = corpus IDENTITY (absolute path + embeddings
-    mtime) + hyperparameters — a different corpus with the same row
-    count must never be served a foreign index (same rule as the
-    near-dup edge table in operators/dedup.py)."""
-    import hashlib
-    import os
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        mtime = int(os.path.getmtime(src))
-    except OSError:
-        mtime = 0
-    ident = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
-    # v3: exact integer-micro Lloyd means (the centroid-content rule is
-    # part of the key — a stale v2 index would diverge from the twin)
-    return os.path.join(_ivf_root(),
-                        f"v3_{ident}_k{N_CENTROIDS}_i{N_LLOYD}")
+    """Where the IVF index of ``sf_dir`` lives, whichever builder wrote
+    it (no SparkSession needed: the oracle reads it)."""
+    return derived_dir(*_ivf_key(sf_dir, N_LLOYD))
 
 
 def _refine_centroids(F, emb, cent, Window):
@@ -388,28 +383,26 @@ def _refine_centroids(F, emb, cent, Window):
 
 def build_ivf_index(spark, sf_dir: str, iters: int = N_LLOYD) -> str:
     """Build (or load) the persisted IVF index for this corpus:
-    Lloyd-refined centroids + final cell assignment, written once under
-    .cache/ivf and reused by every cosine_topk_ivf_refined call.
-    Returns the index directory."""
+    Lloyd-refined centroids + final cell assignment, committed together
+    once and reused by every cosine_topk_ivf_refined call. Returns the
+    index directory."""
     import os
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    emb = _load(spark, sf_dir).withColumn("nrm", _norm(F, F.col("emb")))
-    out = ivf_dir(sf_dir)
-    if os.path.exists(os.path.join(out, "assign", "_SUCCESS")):
-        return out
-    cent = _centroids(F, emb)
-    for _ in range(iters):
-        cent = _refine_centroids(F, emb, cent, Window)
-    assign = (_best_cells(F, Window, emb, cent, "vec_id", 1)
-              .select("vec_id", "cid"))
-    (cent.select("cid", "cemb").repartition(1)
-     .write.mode("overwrite").parquet(os.path.join(out, "centroids")))
-    (assign.repartition(1)
-     .write.mode("overwrite").parquet(os.path.join(out, "assign")))
-    return out
+    def build(out):
+        emb = _load(spark, sf_dir).withColumn("nrm", _norm(F, F.col("emb")))
+        cent = _centroids(F, emb)
+        for _ in range(iters):
+            cent = _refine_centroids(F, emb, cent, Window)
+        assign = (_best_cells(F, Window, emb, cent, "vec_id", 1)
+                  .select("vec_id", "cid"))
+        (cent.select("cid", "cemb").repartition(1)
+         .write.parquet(os.path.join(out, "centroids")))
+        assign.repartition(1).write.parquet(os.path.join(out, "assign"))
+
+    return derived_table(*_ivf_key(sf_dir, iters), build)
 
 
 def ivf_index_numpy(sf_dir: str, iters: int = N_LLOYD):
@@ -485,40 +478,29 @@ def ivf_index_numpy(sf_dir: str, iters: int = N_LLOYD):
 
 
 def write_ivf_index_numpy(sf_dir: str) -> str:
-    """Materialize the NumPy-built index in the same parquet layout as
-    build_ivf_index (oracle-side ensure, no SparkSession needed)."""
+    """Materialize the NumPy-built index in the same parquet layout and
+    at the same key as build_ivf_index (oracle-side ensure, no
+    SparkSession needed). Returns the index directory."""
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    # cache check FIRST: the NumPy build below reads every embedding
-    # and runs the Lloyd rounds — pointless on a hit
-    out = ivf_dir(sf_dir)
-    if os.path.exists(os.path.join(out, "assign", "_SUCCESS")):
-        return out
-    cents, assign = ivf_index_numpy(sf_dir)
-    os.makedirs(os.path.join(out, "centroids"), exist_ok=True)
-    os.makedirs(os.path.join(out, "assign"), exist_ok=True)
-    cid_order = sorted(cents)
-    pq.write_table(
-        pa.table({"cid": pa.array(cid_order, pa.int64()),
-                  "cemb": pa.array([cents[c] for c in cid_order],
-                                   pa.list_(pa.float64()))}),
-        os.path.join(out, "centroids", "part-0.parquet"))
-    vids = sorted(assign)
-    pq.write_table(
-        pa.table({"vec_id": pa.array(vids, pa.int64()),
-                  "cid": pa.array([assign[v] for v in vids],
-                                  pa.int64())}),
-        os.path.join(out, "assign", "part-0.parquet"))
-    for sub in ("centroids", "assign"):
-        open(os.path.join(out, sub, "_SUCCESS"), "w").close()
-    return out
+    def build(out):
+        cents, assign = ivf_index_numpy(sf_dir)
+        cids, vids = sorted(cents), sorted(assign)
+        for sub, cols in (
+                ("centroids", {"cid": pa.array(cids, pa.int64()),
+                               "cemb": pa.array([cents[c] for c in cids],
+                                                pa.list_(pa.float64()))}),
+                ("assign", {"vec_id": pa.array(vids, pa.int64()),
+                            "cid": pa.array([assign[v] for v in vids],
+                                            pa.int64())})):
+            os.makedirs(os.path.join(out, sub))
+            pq.write_table(pa.table(cols),
+                           os.path.join(out, sub, "part-0.parquet"))
 
-
-def ensure_ivf_index(spark, sf_dir: str) -> str:
-    return build_ivf_index(spark, sf_dir)
+    return derived_table(*_ivf_key(sf_dir, N_LLOYD), build)
 
 
 def cosine_topk_ivf_refined(spark, sf_dir: str,
@@ -533,10 +515,12 @@ def cosine_topk_ivf_refined(spark, sf_dir: str,
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    idx = ensure_ivf_index(spark, sf_dir)
-    cent = (spark.read.parquet(os.path.join(idx, "centroids"))
+    idx = build_ivf_index(spark, sf_dir)
+    cent = (spark.read.schema(IVF_SCHEMAS["centroids"])
+            .parquet(os.path.join(idx, "centroids"))
             .withColumn("cnrm", _norm(F, F.col("cemb"))))
-    assign = spark.read.parquet(os.path.join(idx, "assign"))
+    assign = (spark.read.schema(IVF_SCHEMAS["assign"])
+              .parquet(os.path.join(idx, "assign")))
     emb = _load(spark, sf_dir).withColumn("nrm", _norm(F, F.col("emb")))
     return _ivf_probe_rerank(F, Window, emb, cent, assign,
                              n_queries, k, nprobe)

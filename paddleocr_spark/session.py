@@ -19,6 +19,13 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _driver_memory() -> str:
+    """24g, capped at half the host's RAM: a heap the host cannot hold
+    lets the JVM grow until the kernel kills it instead of collecting."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24 << 10, ram >> 21)}m"
+
+
 def get_spark(app_name: str = "paddleocr_spark", master: str | None = None,
               shuffle_partitions: int | None = None, **extra_conf):
     from pyspark.sql import SparkSession
@@ -38,7 +45,8 @@ def get_spark(app_name: str = "paddleocr_spark", master: str | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", _driver_memory()))
         .config("spark.ui.enabled", "false")
     )
     for k, v in extra_conf.items():

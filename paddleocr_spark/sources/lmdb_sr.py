@@ -18,7 +18,11 @@ mapInPandas stage (kernels/imgcodec), feeding ``sr_metric``.
 
 from __future__ import annotations
 
-__all__ = ["str_filt_col", "read_sr_pairs", "SR_VOC_CLASSES"]
+__all__ = ["str_filt_col", "read_sr_pairs", "SR_VOC_CLASSES",
+           "SR_PAIR_SCHEMA"]
+
+# the SR-pair table's columns, as a parquet path is read
+SR_PAIR_SCHEMA = "idx long, image_hr binary, image_lr binary, label string"
 
 # str_filt's alpha_dict as KEEP character classes (Java regex);
 # \p{Punct} is exactly string.punctuation for ASCII
@@ -54,7 +58,8 @@ def read_sr_pairs(spark, source, voc_type: str = "upper",
     empty also drop (nothing for the rec head to supervise)."""
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(source) if isinstance(source, str) else source
+    df = (spark.read.schema(SR_PAIR_SCHEMA).parquet(source)
+          if isinstance(source, str) else source)
     return (df
             .where(F.length("label") <= max_len)
             .select("idx", "image_hr", "image_lr",

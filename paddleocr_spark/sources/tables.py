@@ -1,4 +1,5 @@
-"""The one reader of the fixture tables.
+"""The one reader of the fixture tables, and the one store of the tables
+derived from them.
 
 Every fixture table is read through ``load_table`` with the DDL schema
 declared once in ``SCHEMAS``, so building a plan over it launches no
@@ -9,6 +10,12 @@ with no Spark job. A table is either one parquet file or a directory of
 part files (what ``DataFrame.write.parquet`` leaves); both shapes read
 and count the same way. A table written with fewer columns than declared
 reads the missing ones as null.
+
+A derived table (link graph, near-dup edges, contamination grams, IVF
+index, partitioned events, bucketed pair) is built once per corpus and
+read many times, as the reference builds its dataset index once
+(``toddleocr/datasets/lmdb.py:51-65``). ``derived_table`` decides its
+key, location and commit; its builder declares its read schema.
 
 These stand in for the reference's dataset classes (``SimpleDataSet``
 at ``toddleocr/datasets/simple.py:10-93``, ``LMDBDataSet`` at
@@ -21,8 +28,16 @@ schema and row counts are catalog metadata in the same way; parquet here
 
 from __future__ import annotations
 
-__all__ = ["TABLES", "SCHEMAS", "load_table", "table_rows",
-           "load_documents_sampled", "union_sources"]
+import hashlib
+import os
+import shutil
+import uuid
+
+from paddleocr_spark.cachedir import cache_root
+
+__all__ = ["TABLES", "SCHEMAS", "table_path", "load_table", "table_rows",
+           "derived_dir", "derived_table", "load_documents_sampled",
+           "union_sources"]
 
 # the timestamps are timestamp_ntz: the fixtures were written without a
 # time zone, and this is what Spark infers from their footers
@@ -52,25 +67,65 @@ SCHEMAS = {
 TABLES = list(SCHEMAS)
 
 
-def _path(sf_dir: str, name: str) -> str:
+def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
 
 
 def load_table(spark, sf_dir: str, name: str):
-    return spark.read.schema(SCHEMAS[name]).parquet(_path(sf_dir, name))
+    return spark.read.schema(SCHEMAS[name]).parquet(table_path(sf_dir, name))
 
 
 def table_rows(sf_dir: str, name: str) -> int:
     """Row count from the parquet footers, read on the driver."""
-    import os
-
     import pyarrow.parquet as pq
 
-    path = _path(sf_dir, name)
+    path = table_path(sf_dir, name)
     files = ([path] if os.path.isfile(path) else
              [os.path.join(path, f) for f in os.listdir(path)
               if f.endswith(".parquet")])
     return sum(pq.read_metadata(f).num_rows for f in files)
+
+
+def derived_dir(name: str, version: str, sources, params=()) -> str:
+    """Where the derived table ``name`` lives: ``cache_root(name, ...)``
+    under a hash of ``version``, the absolute path of each source table
+    plus each of its files' (name, size, ``mtime_ns``), and the
+    builder's ``params``. So a regenerated source, another corpus that
+    shares a directory basename, or a changed builder gets a key of its
+    own. Needs no SparkSession: an oracle finds what Spark built."""
+    h = hashlib.md5(f"{version}\n{params!r}\n".encode())
+    for src in map(os.path.abspath, sources):
+        files = ([src] if os.path.isfile(src) else sorted(
+            os.path.join(r, f) for r, _, fs in os.walk(src) for f in fs))
+        h.update(f"{src}\n".encode())
+        for f in files:
+            st = os.stat(f)
+            h.update(f"{os.path.relpath(f, src)}:{st.st_size}:"
+                     f"{st.st_mtime_ns}\n".encode())
+    return cache_root(name, f"{version}_{h.hexdigest()[:16]}")
+
+
+def derived_table(name: str, version: str, sources, params, build) -> str:
+    """``derived_dir(name, version, sources, params)``, built on first
+    use by ``build(tmp)``, which writes the whole table into a fresh
+    sibling directory that is then ``os.rename``d into place (the
+    protocol of ``operators/checkpoint.py``'s buckets). An existing key
+    directory is therefore a complete table; a build that loses the
+    rename race to a concurrent one drops its copy."""
+    out = derived_dir(name, version, sources, params)
+    if os.path.isdir(out):
+        return out
+    os.makedirs(os.path.dirname(out), exist_ok=True)
+    tmp = f"{out}.tmp-{uuid.uuid4().hex}"
+    try:
+        build(tmp)
+        os.rename(tmp, out)
+    except OSError:
+        if not os.path.isdir(out):
+            raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out
 
 
 def load_documents_sampled(spark, sf_dir: str, ratio: float, seed: int = 42):

@@ -277,8 +277,8 @@ def streaming_fuzzy_dedup(spark, docs_dir: str, index_dir: str,
         # replay re-appends, covered by the at-least-once caveat),
         # never to an unreadable or silently-partial index
         if os.path.exists(sig_dir) and os.path.exists(band_dir):
-            idx_bands = spark.read.parquet(band_dir)
-            idx_sigs = spark.read.parquet(sig_dir)
+            idx_bands = spark.read.schema(bands.schema).parquet(band_dir)
+            idx_sigs = spark.read.schema(sig.schema).parquet(sig_dir)
             cross = (idx_bands.alias("i")
                      .join(bands.alias("n"), ["band", "band_hash"])
                      .select(F.col("i.doc_id").alias("old_id"),

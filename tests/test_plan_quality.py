@@ -147,6 +147,50 @@ def test_store_decode_is_one_task_per_core_in_two_jobs(spark):
     assert tasks == [want], tasks
 
 
+def _python_nodes(plan):
+    """The MapInPandas nodes of an executed physical plan, cached plans
+    and AQE query stages included."""
+    name = plan.nodeName()
+    if name == "MapInPandas":
+        yield plan
+    kids = [plan.children().apply(i) for i in range(plan.children().size())]
+    if name == "AdaptiveSparkPlan":
+        kids.append(plan.executedPlan())
+    elif name.endswith("QueryStage"):
+        kids.append(plan.plan())
+    elif name == "InMemoryTableScan":
+        kids.append(plan.relation().cachedPlan())
+    for kid in kids:
+        yield from _python_nodes(kid)
+
+
+def test_det_polygons_runs_its_python_stage_once_per_core(spark):
+    """det_polygons splits the map ids one partition per core with no
+    shuffle, and the sort after the Python stage reads its persisted
+    output: the stage runs exactly once, with min(n_maps,
+    defaultParallelism) tasks (the Python side receives each output
+    row once)."""
+    from paddleocr_spark.corpus import poly_map_count
+    from paddleocr_spark.operators._cache import release
+    from paddleocr_spark.operators.det_poly import det_polygons
+    from paddleocr_spark.plans.inspect import formatted_plan
+    from paddleocr_spark.sources.tables import table_rows
+
+    df = det_polygons(spark, SF)
+    try:
+        assert "RoundRobinPartitioning" not in formatted_plan(df)
+        n_rows = len(df.collect())
+        nodes = list(_python_nodes(df._jdf.queryExecution().executedPlan()))
+        assert len(nodes) == 1
+        received = nodes[0].metrics().apply("pythonNumRowsReceived").value()
+        assert received == n_rows > 0
+        n_maps = poly_map_count(table_rows(SF, "documents"))
+        assert (nodes[0].execute().getNumPartitions()
+                == min(n_maps, spark.sparkContext.defaultParallelism))
+    finally:
+        release(spark)
+
+
 def test_manifest_packing_is_byte_balanced(spark):
     """Task packing from the manifest must track BYTES: no task's byte
     total may exceed 2x the ideal share plus one file (the worst case
@@ -542,11 +586,13 @@ def test_link_graph_table_carries_outdegree(spark, tmp_path, monkeypatch):
 
     from paddleocr_spark import cachedir
     from paddleocr_spark.operators import html_extract
+    from paddleocr_spark.sources.tables import derived_dir
 
     monkeypatch.setattr(cachedir, "_ROOT", str(tmp_path))
-    key = html_extract._link_graph_dir(SF)
-    stale = os.path.join(os.path.dirname(key),
-                         "v1_" + os.path.basename(key).split("_", 1)[1])
+    source = [f"{SF}/documents.parquet"]
+    key, stale = (derived_dir("link_graph", v, source,
+                              html_extract.LINK_COEFFS)
+                  for v in ("v2", "v1"))
     assert stale != key
     spark.createDataFrame([(0, 1)], "src long, dst long") \
         .write.parquet(stale)
@@ -579,7 +625,8 @@ def test_bucket_count_mismatch_refused(spark, tmp_path):
     write_bucketed(df, "bspec_t1", path, "k", n_buckets=8)
     spark.sql("DROP TABLE IF EXISTS bspec_t1")
     with pytest.raises(ValueError, match="8 buckets"):
-        register_bucketed(spark, "bspec_t2", path, "k", n_buckets=4)
+        register_bucketed(spark, "bspec_t2", path, "k", "k long",
+                          n_buckets=4)
     # wrong clustering key: the files were hashed on k, so declaring
     # CLUSTERED BY (v) would silently join against the wrong buckets
     df2 = spark.range(100).selectExpr("id AS k", "id * 2 AS v")
@@ -587,8 +634,9 @@ def test_bucket_count_mismatch_refused(spark, tmp_path):
     write_bucketed(df2, "bspec_t4", path2, "k", n_buckets=8)
     spark.sql("DROP TABLE IF EXISTS bspec_t4")
     with pytest.raises(ValueError, match="hashed on"):
-        register_bucketed(spark, "bspec_t5", path2, "v", n_buckets=8)
-    register_bucketed(spark, "bspec_t3", path, "k", n_buckets=8)
+        register_bucketed(spark, "bspec_t5", path2, "v", "k long, v long",
+                          n_buckets=8)
+    register_bucketed(spark, "bspec_t3", path, "k", "k long", n_buckets=8)
     assert spark.table("bspec_t3").count() == 100
     # unsorted write -> the DDL must NOT claim SORTED BY
     ddl = spark.sql("SHOW CREATE TABLE bspec_t3").collect()[0][0]

@@ -120,6 +120,25 @@ def test_bucket_write_leaves_no_tmp_dirs(spark, corpus, tmp_path):
     assert read_output(spark, out).count() > 0
 
 
+def test_read_output_schema_is_the_written_one(spark, corpus, tmp_path):
+    """read_output takes the spans schema from a written footer on the
+    driver: building it runs no Spark job, and the schema, ``bucket``
+    included, is what inference over the directory gives."""
+    docs, media = corpus
+    out = str(tmp_path / "schema")
+    run_with_checkpoint(spark, docs, media, out, "r1", n_buckets=2)
+    sc = spark.sparkContext
+    group = "test_read_output_schema"
+    sc.setJobGroup(group, group)
+    try:
+        got = read_output(spark, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert got.schema == spark.read.parquet(
+        os.path.join(out, "spans")).schema
+
+
 def test_checkpoint_releases_only_its_own_cache(spark, corpus, tmp_path):
     """run_with_checkpoint must not unpersist sibling caches the
     caller is still using."""
@@ -137,10 +156,14 @@ def test_checkpoint_releases_only_its_own_cache(spark, corpus, tmp_path):
 
 # --- partitioning: fingerprint invalidation ---------------------------
 
-def test_partitioned_layout_rebuilds_on_source_change(spark, tmp_path):
+def test_partitioned_layout_rebuilds_on_source_change(spark, tmp_path,
+                                                     monkeypatch):
     from pyspark.sql import functions as F
 
+    from paddleocr_spark import cachedir
     from paddleocr_spark.operators import partitioning as P
+
+    monkeypatch.setattr(cachedir, "_ROOT", str(tmp_path / "cache"))
 
     src_dir = str(tmp_path / "sf_fake")
     os.makedirs(src_dir)
@@ -165,10 +188,35 @@ def test_partitioned_layout_rebuilds_on_source_change(spark, tmp_path):
 
     p2 = P.ensure_partitioned_events(spark, src_dir)
     assert spark.read.parquet(p2).count() == 25, \
-        "stale _DONE marker served old layout after source regeneration"
+        "stale layout served after source regeneration"
 
 
 # --- _cache: registration-before-count, identity guards ---------------
+
+def test_eager_persist_leaves_a_cached_frame_alone(spark):
+    """A pinned (already cached) DataFrame is returned as is: no second
+    persist, no count job, no registry entry."""
+    def registry():
+        return {id(s): {k: id(df) for k, (_, df) in e.items()}
+                for s, e in _cache._REGISTRY.items()}
+
+    key = "test_eager_on_pinned"
+    pinned = _cache.pinned_persist(spark, key,
+                                   lambda: spark.range(8).toDF("x"))
+    before = registry()
+    sc = spark.sparkContext
+    sc.setJobGroup(key, key)
+    try:
+        same = _cache.eager_persist(pinned)
+        after = registry()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        _cache._REGISTRY[spark].pop(key)
+        pinned.unpersist()
+    assert same is pinned
+    assert after == before
+    assert sc.statusTracker().getJobIdsForGroup(key) == []
+
 
 def test_eager_persist_registers_before_count(spark):
     """A failing materialization must leave the df tracked (and hence

@@ -40,12 +40,16 @@ def test_dataframe_lloyd_matches_numpy_twin(spark, tmp_path):
 
 
 def test_index_built_once_and_reused(spark):
+    def files(idx):
+        return {os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+                for d, _, fs in os.walk(idx) for f in fs}
+
     idx = similarity.build_ivf_index(spark, SF)
-    marker = os.path.join(idx, "assign", "_SUCCESS")
-    mtime = os.path.getmtime(marker)
+    assert idx == similarity.ivf_dir(SF)
+    before = files(idx)
     idx2 = similarity.build_ivf_index(spark, SF)
     assert idx2 == idx
-    assert os.path.getmtime(marker) == mtime  # no rebuild
+    assert files(idx) == before  # no rebuild
 
 
 def _recall(spark, sf_dir, nprobe):
