@@ -317,8 +317,9 @@ def _run_stress_study() -> dict:
     of the composed join (straggler evidence)."""
     from paddleocr_spark.operators._cache import release
     from paddleocr_spark.operators.dedup import (
+        _band_hashes,
+        _signatures,
         lsh_candidate_pairs_df,
-        minhash_signatures_df,
     )
     from paddleocr_spark.session import get_spark
     from pyspark.sql import functions as F
@@ -347,7 +348,7 @@ def _run_stress_study() -> dict:
         res: dict = {"n_docs": n, "hot_group": 2500}
 
         t0 = time.time()
-        minhash_signatures_df(corpus).write.mode("overwrite") \
+        _signatures(F, corpus).write.mode("overwrite") \
             .format("noop").save()
         res["sig_sec"] = round(time.time() - t0, 2)
 
@@ -372,11 +373,6 @@ def _run_stress_study() -> dict:
             release(spark)
 
         # band-key occupancy: the skew the exact-first pass removes
-        from paddleocr_spark.operators.dedup import (
-            _band_hashes,
-            _signatures,
-        )
-
         occ = (_band_hashes(F, _signatures(F, corpus))
                .groupBy("band", "band_hash").count()
                .agg(F.max("count").alias("mx"),

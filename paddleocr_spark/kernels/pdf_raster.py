@@ -341,6 +341,13 @@ def _draw_shading(canvas, clip, ctm, sh: dict, objects) -> None:
     ux = px * ia + py * ic + ie
     uy = px * ib + py * id_ + if_
 
+    ext0 = bool(ext and ext[0])
+    ext1 = bool(ext and len(ext) > 1 and ext[1])
+
+    def in_domain(s):
+        # /Extend leaves s < 0 (> 1) painted with the end color
+        return (ext0 | (s >= 0)) & (ext1 | (s <= 1))
+
     if stype == 2:
         x0, y0, x1, y1 = coords
         dx, dy = x1 - x0, y1 - y0
@@ -348,7 +355,7 @@ def _draw_shading(canvas, clip, ctm, sh: dict, objects) -> None:
         if den == 0:
             return
         s = ((ux - x0) * dx + (uy - y0) * dy) / den
-        defined = np.ones_like(s, dtype=bool)
+        defined = in_domain(s)
     elif stype == 3:
         x0, y0, r0, x1, y1, r1 = coords
         cdx, cdy, dr = x1 - x0, y1 - y0, r1 - r0
@@ -359,32 +366,29 @@ def _draw_shading(canvas, clip, ctm, sh: dict, objects) -> None:
         C = fx * fx + fy * fy - r0 * r0
         with np.errstate(invalid="ignore", divide="ignore"):
             if abs(A) < 1e-12:
-                s = C / (2.0 * B)
-                defined = np.abs(B) > 1e-12
+                roots = [(C / (2.0 * B), np.abs(B) > 1e-12)]
             else:
                 disc = B * B - A * C
-                defined = disc >= 0
-                sq = np.sqrt(np.where(defined, disc, 0.0))
-                s_hi = (B + sq) / A
-                s_lo = (B - sq) / A
-                # §8.7.4.5.4: the LARGER s with r(s) >= 0 wins
-                r_hi = r0 + s_hi * dr
-                s = np.where(r_hi >= 0, s_hi, s_lo)
-                defined &= (r0 + s * dr) >= 0
+                sq = np.sqrt(np.where(disc >= 0, disc, 0.0))
+                roots = [((B + sq) / A, disc >= 0),
+                         ((B - sq) / A, disc >= 0)]
+            # §8.7.4.5.4: circles paint in increasing s, so the LARGEST
+            # root with r(s) >= 0 inside the (extended) domain wins:
+            # without /Extend a larger root past 1 leaves the smaller
+            # one to paint. Which root is larger depends on the sign
+            # of A (A < 0 when one circle contains the other)
+            s = np.zeros_like(ux)
+            defined = np.zeros_like(ux, dtype=bool)
+            for root, ok in roots:
+                ok = ok & ((r0 + root * dr) >= 0) & in_domain(root)
+                take = ok & (~defined | (root > s))
+                s = np.where(take, root, s)
+                defined |= ok
     else:
         raise ValueError(
             f"unsupported shading type {stype} (axial/radial only)")
 
-    below = s < 0
-    above = s > 1
-    if ext and ext[0]:
-        s = np.where(below, 0.0, s)
-    else:
-        defined = defined & ~below
-    if ext and len(ext) > 1 and ext[1]:
-        s = np.where(above, 1.0, s)
-    else:
-        defined = defined & ~above
+    s = np.clip(s, 0.0, 1.0)
     paint = defined & clip
     if not paint.any():
         return

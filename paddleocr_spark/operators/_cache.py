@@ -12,11 +12,11 @@ accumulate across a multi-query bench/correctness run on one session.
 Every such cache is registered under its session with a scope:
 
 - ``"query"``: ``eager_persist`` caches and the localCheckpoint blocks
-  of iterative jobs (``iterate``). Unpersisting a localCheckpoint
-  discards data with no recompute path (the lineage was truncated), so
-  ``release(spark)`` is called only once a query's results are written
-  or collected (``bench.py`` between queries, a stream's batch body
-  after its sinks).
+  of iterative jobs (``_ckpt``, ``iterate``). Unpersisting a
+  localCheckpoint discards data with no recompute path (the lineage
+  was truncated), so ``release(spark)`` is called only once a query's
+  results are written or collected (``bench.py`` between queries, a
+  stream's batch body after its sinks).
 - ``"session"``: ``pinned_persist`` pins, intermediates shared ACROSS
   queries of one session (the decoded KIE token fragments). Only an
   explicit ``release(spark, "session")`` at teardown drops them.
@@ -104,6 +104,21 @@ def pinned_persist(spark, key: str, builder):
     return df
 
 
+def _ckpt(df, checkpoint_dir: str | None = None):
+    """Lazy checkpoint of ``df``: its plan becomes a ``LogicalRDD``
+    leaf, filled by the first action that reads it. ``iterate`` takes
+    one per checkpointed round, and a loop takes one of its input so
+    that no round's plan carries the caller's lineage. Local blocks are
+    tracked in query scope; ``checkpoint_dir`` selects the reliable
+    mode (see ``iterate``)."""
+    if checkpoint_dir is None:
+        return _track(df.localCheckpoint(eager=False))
+    sc = df.sparkSession.sparkContext
+    if checkpoint_dir not in (sc.getCheckpointDir() or ""):
+        sc.setCheckpointDir(checkpoint_dir)
+    return df.checkpoint(eager=False)
+
+
 def iterate(state, step, max_rounds: int, converged=None,
             checkpoint_dir: str | None = None):
     """The one round loop of iterative jobs: ``state = step(state, r)``
@@ -133,21 +148,13 @@ def iterate(state, step, max_rounds: int, converged=None,
     an executor loss; Spark cleans its files only with
     ``spark.cleaner.referenceTracking.cleanCheckpoints=true``. The
     modes are output-identical (tests/test_iter_checkpoint.py)."""
-
-    def ckpt(df):
-        if checkpoint_dir is None:
-            return _track(df.localCheckpoint(eager=False))
-        sc = df.sparkSession.sparkContext
-        if checkpoint_dir not in (sc.getCheckpointDir() or ""):
-            sc.setCheckpointDir(checkpoint_dir)
-        return df.checkpoint(eager=False)
-
     for r in range(1, max_rounds + 1):
         new = step(state, r)
         if converged is None:
-            state = ckpt(new) if r % 3 == 0 and r < max_rounds else new
+            state = (_ckpt(new, checkpoint_dir)
+                     if r % 3 == 0 and r < max_rounds else new)
             continue
-        new = ckpt(new)
+        new = _ckpt(new, checkpoint_dir)
         done = converged(new, state)
         release_one(state)
         state = new

@@ -48,7 +48,7 @@ __all__ = [
     "EXACT_PLANT_N", "EXACT_PLANT_OFFSET",
     "norm_content", "salted_hash60", "exact_dedup", "minhash_signatures",
     "lsh_candidate_pairs", "near_dup_pairs", "simhash32",
-    "minhash_signatures_df", "lsh_candidate_pairs_df",
+    "lsh_candidate_pairs_df",
     "simhash_near_dups", "duplicate_clusters", "fuzzy_dedup_survivors",
     "build_near_dup_edges",
     "HAM_BLOCKS", "MAX_HAMMING",
@@ -232,31 +232,9 @@ def minhash_signatures(spark, sf_dir: str):
 
 
 def lsh_candidate_pairs(spark, sf_dir: str):
-    """Banded LSH over the planted-augmented corpus: band hash = md5 of
-    8 concatenated minhashes; candidates = docs sharing any (band,
-    band_hash) key (a < b). The join key includes the band index so
-    cross-band hash coincidences can't create pairs."""
-    from pyspark.sql import functions as F
-
-    bands = _band_hashes(F, _signatures(F, _augmented_docs(spark, sf_dir)))
-    # the shingle→128-minhash aggregation is the expensive subtree and
-    # Catalyst does not reuse it across the self-join's two sides
-    # (0 ReusedExchange, measured); persist the tiny (doc_id, band,
-    # band_hash) rows so it runs once — EAGERLY, because the join's two
-    # sides racing a lazy cache each compute the subtree themselves
-    # (no in-flight dedup: 63.6 s vs 22.3 s cold at sf0.1). At
-    # production scale signatures are materialized as their own table.
-    # Tracked (operators._cache): bench releases between queries.
-    from paddleocr_spark.operators._cache import eager_persist
-
-    bands = eager_persist(bands)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (a.join(b, ["band", "band_hash"])
-            .where(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
+    """Banded-LSH candidates over the planted-augmented corpus (the
+    oracle-checked fixture; planted exact copies stay observable)."""
+    return lsh_candidate_pairs_df(_augmented_docs(spark, sf_dir))
 
 
 def near_dup_pairs(spark, sf_dir: str, threshold: float = 0.7):
@@ -296,17 +274,11 @@ def _compute_near_dup_pairs(spark, sf_dir: str, threshold: float = 0.7):
                     F.round("jaccard_raw", 6).alias("jaccard")))
 
 
-def minhash_signatures_df(docs_df):
-    """Signatures over an arbitrary (doc_id, text) DataFrame — the
-    stress-study / production entry (the sf_dir variants are the
-    oracle-checked fixtures)."""
-    from pyspark.sql import functions as F
-
-    return _signatures(F, docs_df)
-
-
 def lsh_candidate_pairs_df(docs_df, exact_first: bool = False):
-    """Banded-LSH candidates over an arbitrary (doc_id, text) corpus.
+    """Banded-LSH candidates over an arbitrary (doc_id, text) corpus:
+    band hash = md5 of 8 concatenated minhashes; candidates = docs
+    sharing any (band, band_hash) key (a < b). The join key includes
+    the band index so cross-band hash coincidences can't create pairs.
 
     ``exact_first=True`` is the scale-safe composition for corpora
     with large groups of IDENTICAL documents (boilerplate): a group of
@@ -328,10 +300,17 @@ def lsh_candidate_pairs_df(docs_df, exact_first: bool = False):
                 .agg(F.min("doc_id").alias("doc_id"),
                      F.first("text").alias("text"))
                 .drop("content_md5"))
-    bands = _band_hashes(F, _signatures(F, docs))
+    # the shingle→128-minhash aggregation is the expensive subtree and
+    # Catalyst does not reuse it across the self-join's two sides
+    # (0 ReusedExchange, measured); persist the tiny (doc_id, band,
+    # band_hash) rows so it runs once — EAGERLY, because the join's two
+    # sides racing a lazy cache each compute the subtree themselves
+    # (no in-flight dedup: 63.6 s vs 22.3 s cold at sf0.1). At
+    # production scale signatures are materialized as their own table.
+    # Tracked (operators._cache): bench releases between queries.
     from paddleocr_spark.operators._cache import eager_persist
 
-    bands = eager_persist(bands)
+    bands = eager_persist(_band_hashes(F, _signatures(F, docs)))
     a = bands.alias("a")
     b = bands.alias("b")
     return (a.join(b, ["band", "band_hash"])

@@ -25,6 +25,12 @@ after ~5 rounds), while the checkpoint replaces the plan with a leaf.
 ``checkpoint_dir=`` selects its cluster-durable reliable mode. Per-round
 driver work is one count over the new state, which also fills its
 checkpoint — loop control, not data collection.
+
+Both loops also read their input edges through one lazy checkpoint
+(``_cache._ckpt``), filled by round 1: every round joins the input, so
+without it the caller's whole lineage (an LSH verify over signatures,
+say) rides in every round's plan and is analyzed and optimized again
+each round, cached or not.
 """
 
 from __future__ import annotations
@@ -46,22 +52,31 @@ def _node_col(F, c: str):
     ).otherwise(casted)
 
 
-def _sym_edges(F, edges, src: str, dst: str):
+def _input_edges(F, edges, src: str, dst: str, checkpoint_dir):
+    """The caller's edges as checked long (src, dst) pairs behind one
+    lazy checkpoint: a ``LogicalRDD`` leaf in every plan built on
+    them."""
+    from paddleocr_spark.operators._cache import _ckpt
+
+    return _ckpt(edges.select(_node_col(F, src).alias("src"),
+                              _node_col(F, dst).alias("dst")),
+                 checkpoint_dir)
+
+
+def _sym_edges(F, e):
     """Symmetrized, deduplicated, self-loop-free (src, dst) pairs."""
-    e = (edges.select(_node_col(F, src).alias("src"),
-                      _node_col(F, dst).alias("dst"))
-         .where(F.col("src") != F.col("dst")))
+    e = e.where(F.col("src") != F.col("dst"))
     return (e.unionByName(e.select(F.col("dst").alias("src"),
                                    F.col("src").alias("dst")))
             .distinct())
 
 
-def _edge_nodes(F, edges, src: str, dst: str):
+def _edge_nodes(F, e):
     """EVERY node incident to an edge — including nodes whose only
     edges are self-loops, which _sym_edges' self-loop filter removes
     (they are their own singleton component, label = node)."""
-    return (edges.select(_node_col(F, src).alias("node"))
-            .unionByName(edges.select(_node_col(F, dst).alias("node")))
+    return (e.select(F.col("src").alias("node"))
+            .unionByName(e.select(F.col("dst").alias("node")))
             .distinct())
 
 
@@ -78,7 +93,8 @@ def _propagation(edges, src, dst, max_iters, checkpoint_dir=None):
 
     from paddleocr_spark.operators._cache import eager_persist, iterate
 
-    sym = eager_persist(_sym_edges(F, edges, src, dst), materialize=False)
+    e = _input_edges(F, edges, src, dst, checkpoint_dir)
+    sym = eager_persist(_sym_edges(F, e), materialize=False)
 
     def propagate(labels, r):
         # `was` carries each node's previous label through the min
@@ -93,8 +109,7 @@ def _propagation(edges, src, dst, max_iters, checkpoint_dir=None):
                 .agg(F.min("lbl").alias("lbl"), F.max("was").alias("was")))
 
     labels, rounds = iterate(
-        _edge_nodes(F, edges, src, dst)
-        .select("node", F.col("node").alias("lbl")),
+        _edge_nodes(F, e).select("node", F.col("node").alias("lbl")),
         propagate, max_iters,
         converged=lambda new, old: (
             new.where(F.col("lbl") != F.col("was")).count() == 0),
@@ -157,14 +172,15 @@ def _star(edges, src, dst, max_iters, checkpoint_dir=None):
                 .where(F.col("n").isNull() | F.col("o").isNull())
                 .count() == 0)
 
-    e, rounds = iterate(
-        eager_persist(_sym_edges(F, edges, src, dst), materialize=False),
+    e = _input_edges(F, edges, src, dst, checkpoint_dir)
+    forest, rounds = iterate(
+        eager_persist(_sym_edges(F, e), materialize=False),
         star_round, max_iters, converged=unmoved,
         checkpoint_dir=checkpoint_dir)
-    # fixpoint: e is a forest of stars (node -> component min)
-    parent = e.select(F.col("src").alias("node"),
-                      F.col("dst").alias("label"))
-    roots = (_edge_nodes(F, edges, src, dst)
+    # fixpoint: a forest of stars (node -> component min)
+    parent = forest.select(F.col("src").alias("node"),
+                           F.col("dst").alias("label"))
+    roots = (_edge_nodes(F, e)
              .join(parent, "node", "left_anti")
              .select("node", F.col("node").alias("label")))
     return parent.unionByName(roots), rounds

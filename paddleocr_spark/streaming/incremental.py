@@ -156,7 +156,7 @@ def streaming_page_ingest(spark, files_dir: str, out_dir: str,
 
 
 def streaming_partitioned_events(spark, events_dir: str, out_dir: str,
-                                 checkpoint_dir: str, schema=None):
+                                 checkpoint_dir: str):
     """Stream events into the SAME day-partitioned, pruning-ready
     layout that ``operators/partitioning.py`` builds in batch: a native
     parquet sink with ``partitionBy(event_day)``, so the landing table
@@ -165,15 +165,13 @@ def streaming_partitioned_events(spark, events_dir: str, out_dir: str,
     batch == streaming layout is asserted in the tests. Returns the
     StreamingQuery.
 
-    Pass ``schema`` explicitly to start the stream BEFORE any events
-    have landed (the production posture); the batch-inference fallback
-    below needs at least one parquet file present."""
+    The stream reads with the events table's declared schema, the one
+    batch partitioning reads with, so it can start before any event
+    has landed."""
     from paddleocr_spark.operators.partitioning import epoch_day
 
-    if schema is None:
-        schema = spark.read.parquet(events_dir).schema
     stream = (spark.readStream
-              .schema(schema)
+              .schema(SCHEMAS["events"])
               .option("maxFilesPerTrigger", 8)
               .parquet(events_dir)
               .withColumn("event_day", epoch_day()))
@@ -203,16 +201,21 @@ def streaming_fuzzy_dedup(spark, docs_dir: str, index_dir: str,
     operators document for 100 TB (`operators/dedup.py`). Per batch:
 
     1. signatures + band rows for the batch (one groupBy, as in batch);
-    2. candidates vs the index: equi-join on (band, band_hash) —
-       partitioned by the band key, never O(corpus) per doc;
-    3. candidates within the batch: band self-join (a < b);
-    4. verify by signature-estimated Jaccard (fraction of equal
+    2. ONE candidate join: the batch's bands against a pool of the
+       batch's own bands (a < b) and, when the index exists, the
+       index's bands tagged ``old`` — an equi-join on (band,
+       band_hash), partitioned by the band key, never O(corpus) per
+       doc. A first epoch is simply a pool without the ``old`` half;
+    3. ONE verify by signature-estimated Jaccard (fraction of equal
        minhash components; 128 hashes -> sigma ~= 0.04 at t=0.7). The
        index stores fixed-width 1 KB signatures, never shingle sets,
-       so verification needs no second look at historical text;
-    5. drop batch docs near an indexed doc; among the remainder, form
+       so verification needs no second look at historical text. The
+       verified pairs are tiny and persisted once (as are the batch's
+       signatures); everything below derives from them;
+    4. drop batch docs paired with an ``old`` doc;
+    5. the remaining pairs, minus dropped ends, form the within-batch
        duplicate components (min-label propagation, the batch twin's
-       exact semantics) and keep min doc_id per component;
+       exact semantics); min doc_id per component is kept;
     6. append survivors' sig + band rows to the index and their doc
        rows to ``out_dir``.
 
@@ -261,79 +264,67 @@ def streaming_fuzzy_dedup(spark, docs_dir: str, index_dir: str,
 
     def process(batch_df, epoch_id: int):
         batch_df = batch_df.select("doc_id", "text")
-        sig = _signatures(F, batch_df).select(
+        sig = eager_persist(_signatures(F, batch_df).select(
             "doc_id",
             F.array(*[F.col(f"mh{i}") for i in range(N_HASHES)])
-            .alias("sig"))
-        sig = eager_persist(sig)
-        bands = eager_persist(_band_hashes(
+            .alias("sig")))
+        bands = _band_hashes(
             F, sig.select("doc_id",
                           *[F.element_at("sig", i + 1).alias(f"mh{i}")
-                            for i in range(N_HASHES)])))
+                            for i in range(N_HASHES)]))
 
-        dropped = None
+        pool_bands = bands.withColumn("old", F.lit(False))
+        pool_sigs = sig.withColumn("old", F.lit(False))
         # require BOTH halves: a crash between the two index appends
         # must degrade to "index treated as absent this epoch" (the
         # replay re-appends, covered by the at-least-once caveat),
         # never to an unreadable or silently-partial index
         if os.path.exists(sig_dir) and os.path.exists(band_dir):
-            idx_bands = spark.read.schema(bands.schema).parquet(band_dir)
-            idx_sigs = spark.read.schema(sig.schema).parquet(sig_dir)
-            cross = (idx_bands.alias("i")
-                     .join(bands.alias("n"), ["band", "band_hash"])
-                     .select(F.col("i.doc_id").alias("old_id"),
-                             F.col("n.doc_id").alias("new_id"))
-                     .distinct())
-            verified = (cross
-                        .join(idx_sigs.select(
-                            F.col("doc_id").alias("old_id"),
-                            F.col("sig").alias("so")), "old_id")
-                        .join(sig.select(
-                            F.col("doc_id").alias("new_id"),
-                            F.col("sig").alias("sn")), "new_id")
-                        .where(_est_jaccard(F.col("so"), F.col("sn"))
-                               >= threshold))
-            dropped = verified.select(
-                F.col("new_id").alias("doc_id")).distinct()
+            old = F.lit(True).alias("old")
+            pool_bands = pool_bands.unionByName(
+                spark.read.schema(bands.schema).parquet(band_dir)
+                .select("*", old))
+            pool_sigs = pool_sigs.unionByName(
+                spark.read.schema(sig.schema).parquet(sig_dir)
+                .select("*", old))
 
-        fresh = (batch_df.join(dropped, "doc_id", "left_anti")
-                 if dropped is not None else batch_df)
-        fresh_sig = (sig.join(dropped, "doc_id", "left_anti")
-                     if dropped is not None else sig)
-        fresh_bands = (bands.join(dropped, "doc_id", "left_anti")
-                       if dropped is not None else bands)
+        p = pool_bands.alias("p")
+        n = bands.alias("n")
+        cand = (p.join(n, ["band", "band_hash"])
+                .where(F.col("p.old") | (F.col("p.doc_id")
+                                         < F.col("n.doc_id")))
+                .select(F.col("p.doc_id").alias("doc_a"), "p.old",
+                        F.col("n.doc_id").alias("doc_b"))
+                .distinct())
+        # (doc_a, old) keys the pool side: a replayed doc can sit in
+        # the index and in the batch under one id
+        pairs = eager_persist(
+            cand.join(pool_sigs.select(F.col("doc_id").alias("doc_a"),
+                                       "old", F.col("sig").alias("sa")),
+                      ["doc_a", "old"])
+            .join(sig.select(F.col("doc_id").alias("doc_b"),
+                             F.col("sig").alias("sb")), "doc_b")
+            .where(_est_jaccard(F.col("sa"), F.col("sb")) >= threshold)
+            .select("doc_a", "doc_b", "old"))
 
-        # within-batch duplicate components among the remainder —
-        # min-label propagation, exactly the batch twin's clustering
-        a = fresh_bands.alias("a")
-        b = fresh_bands.alias("b")
-        within = (a.join(b, ["band", "band_hash"])
-                  .where(F.col("a.doc_id") < F.col("b.doc_id"))
-                  .select(F.col("a.doc_id").alias("doc_a"),
-                          F.col("b.doc_id").alias("doc_b"))
-                  .distinct())
-        within = (within
-                  .join(fresh_sig.select(
-                      F.col("doc_id").alias("doc_a"),
-                      F.col("sig").alias("sa")), "doc_a")
-                  .join(fresh_sig.select(
-                      F.col("doc_id").alias("doc_b"),
-                      F.col("sig").alias("sb")), "doc_b")
-                  .where(_est_jaccard(F.col("sa"), F.col("sb"))
-                         >= threshold)
-                  .select("doc_a", "doc_b"))
+        dropped = (pairs.where(F.col("old"))
+                   .select(F.col("doc_b").alias("doc_id")).distinct())
+        within = (pairs.where(~F.col("old"))
+                  .join(dropped.withColumnRenamed("doc_id", "doc_a"),
+                        "doc_a", "left_anti")
+                  .join(dropped.withColumnRenamed("doc_id", "doc_b"),
+                        "doc_b", "left_anti"))
         labels = connected_components(within)
         # the component label IS the minimum node id (graph.py
         # contract), so losers are simply node != label
-        loser_ids = (labels.where(F.col("node") != F.col("label"))
-                     .select(F.col("node").alias("doc_id")))
-        survivors = fresh.join(loser_ids, "doc_id", "left_anti")
+        gone = dropped.unionByName(
+            labels.where(F.col("node") != F.col("label"))
+            .select(F.col("node").alias("doc_id")))
 
-        (survivors.write.mode("append").parquet(out_dir))
-        (fresh_sig.join(loser_ids, "doc_id", "left_anti")
-         .write.mode("append").parquet(sig_dir))
-        (fresh_bands.join(loser_ids, "doc_id", "left_anti")
-         .write.mode("append").parquet(band_dir))
+        for rows, path in ((batch_df, out_dir), (sig, sig_dir),
+                           (bands, band_dir)):
+            (rows.join(gone, "doc_id", "left_anti")
+             .write.mode("append").parquet(path))
         # the epoch's results are written: release its query scope
         # (caches and connected_components localCheckpoint blocks).
         # foreachBatch hands the body a NEW wrapped SparkSession per

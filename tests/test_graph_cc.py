@@ -109,3 +109,42 @@ def test_null_node_id_fails_loudly(spark):
     with pytest.raises((PySparkException, Exception),
                        match="CAST_INVALID_INPUT|NULL or non-numeric"):
         connected_components(bad).collect()
+
+
+def test_loops_plan_over_a_checkpointed_input(spark, monkeypatch):
+    """Both loops read their input edges through one checkpoint: no
+    round's plan and not the returned labels carry the input's
+    operators; a LogicalRDD leaf stands in for them."""
+    from pyspark.sql import functions as F
+
+    from paddleocr_spark.operators import _cache
+
+    # an aggregated input whose own lineage ends in a Range leaf: the
+    # path 0 - 1 - 2 - 3 - 4
+    edges = (spark.range(40)
+             .groupBy((F.col("id") % 4).alias("doc_a"))
+             .agg(F.max(F.col("id") % 4 + 1).alias("doc_b")))
+    plans = []
+    iterate = _cache.iterate
+
+    def recording(state, step, *args, **kwargs):
+        def traced(s, r):
+            new = step(s, r)
+            plans.append(new._jdf.queryExecution().logical())
+            return new
+        traced.__name__ = step.__name__
+        return iterate(state, traced, *args, **kwargs)
+
+    monkeypatch.setattr(_cache, "iterate", recording)
+    for fn in (graph.connected_components, graph.connected_components_star):
+        plans.clear()
+        labels = fn(edges)
+        assert {(r.node, r.label) for r in labels.collect()} == {
+            (i, 0) for i in range(5)}, fn.__name__
+        plans.append(labels._jdf.queryExecution().logical())
+        for plan in plans:
+            leaves = plan.collectLeaves()
+            names = {leaves.apply(i).nodeName()
+                     for i in range(leaves.size())}
+            assert names == {"LogicalRDD"}, (fn.__name__, names)
+        _cache.release(spark)

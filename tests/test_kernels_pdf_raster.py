@@ -129,6 +129,51 @@ class TestShadings:
         assert tuple(pg[0, 0]) == (255, 255, 255)         # no extend
         assert pg[10, 28, 0] > 100                        # bluish ring
 
+    @pytest.mark.parametrize("coords", [
+        (18.0, 10.0, 3.0, 22.0, 10.0, 9.0),   # nested: A < 0
+        (10.0, 10.0, 4.0, 30.0, 10.0, 8.0),   # apart: A > 0
+    ])
+    @pytest.mark.parametrize("extend", [False, True])
+    def test_radial_root_choice_matches_brute_force(self, coords, extend):
+        """Each pixel takes the largest s with r(s) >= 0 inside the
+        (extended) domain (ISO 32000-1 §8.7.4.5.4), checked against a
+        per-pixel enumeration of both roots. Nested circles have at
+        most one root with r(s) >= 0; circles apart can have two, and
+        without /Extend a larger root past 1 leaves the smaller one to
+        paint."""
+        import math
+
+        x0, y0, r0, x1, y1, r1 = coords
+        sh = (b"<< /ShadingType 3 /ColorSpace /DeviceRGB /Coords [%s] "
+              b"/Extend [%s] /Function << /FunctionType 2 /C0 [1 0 0] "
+              b"/C1 [0 0 1] /N 1 >> >>") % (
+                  " ".join(map(str, coords)).encode(),
+                  b"true true" if extend else b"false false")
+        pg = rasterize_pdf_pages(encode_vector_pdf(
+            [b"1 1 1 rg 0 0 40 20 re f /Sh0 sh"], [(40, 20)],
+            shadings={"Sh0": sh}), scale=1.0)[0].astype(int)
+        cdx, cdy, dr = x1 - x0, y1 - y0, r1 - r0
+        a = cdx * cdx + cdy * cdy - dr * dr
+        for row in range(20):
+            for col in range(40):
+                fx, fy = col + 0.5 - x0, 20 - (row + 0.5) - y0
+                b = fx * cdx + fy * cdy + r0 * dr
+                c = fx * fx + fy * fy - r0 * r0
+                disc = b * b - a * c
+                roots = ([] if disc < 0 else
+                         [(b + math.sqrt(disc)) / a,
+                          (b - math.sqrt(disc)) / a])
+                ok = [r for r in roots
+                      if r0 + r * dr >= 0 and (extend or 0 <= r <= 1)]
+                if not ok:
+                    assert tuple(pg[row, col]) == (255, 255, 255)
+                    continue
+                t = min(max(max(ok), 0.0), 1.0)
+                # BGR pixels of the red -> blue ramp
+                exp = (255 * t, 0, 255 * (1 - t))
+                assert np.abs(pg[row, col] - exp).max() <= 1, (
+                    row, col, pg[row, col], exp)
+
     def test_stitching_function_tent(self):
         sh = (b"<< /ShadingType 2 /ColorSpace /DeviceGray "
               b"/Coords [0 0 40 0] /Extend [true true] /Function "

@@ -93,6 +93,11 @@ def test_streaming_fuzzy_dedup_two_waves(spark, tmp_path):
     q = streaming_fuzzy_dedup(spark, str(docs_dir) + "/wave*", idx, out,
                               ckpt)
     q.awaitTermination(240)
+    # one candidate join and one verify per epoch: the stream's jobs
+    # (its job group is the query's run id) stay within a fixed budget
+    stream_jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(
+        q.runId)
+    assert 0 < len(stream_jobs) <= 100, len(stream_jobs)
     epoch_sessions = set(_cache._REGISTRY) - sessions_before - {spark}
     assert not epoch_sessions, "an epoch session's caches were kept"
     assert resident() <= rdds_before, "an epoch's blocks stayed resident"

@@ -268,8 +268,7 @@ def _schemaless_read(node) -> bool:
 
 def test_every_package_parquet_read_declares_its_schema():
     """A schema-less ``spark.read.parquet`` launches a footer job while
-    the plan is built. The one allowed is the documented inference
-    fallback of ``streaming_partitioned_events`` (no schema passed)."""
+    the plan is built: no package read may be one."""
     offenders = []
     for path in glob.glob(f"{ROOT}/paddleocr_spark/**/*.py", recursive=True):
         with open(path) as fh:
@@ -284,9 +283,7 @@ def test_every_package_parquet_read_declares_its_schema():
                         and _schemaless_read(node.func.value)):
                     offenders.append(
                         f"{os.path.relpath(path, ROOT)}:{fn.name}")
-    assert sorted(set(offenders)) == [
-        "paddleocr_spark/streaming/incremental.py:"
-        "streaming_partitioned_events"], offenders
+    assert not offenders, offenders
 
 
 def test_operators_hand_roll_no_table_store():
