@@ -122,14 +122,17 @@ def decode_media(media_df, repartition: int | None = None):
 # its parquet split directly with pyarrow — vectorized, no JVM copy.
 #
 # The decode runs ONE Python task per core, not more: every Python task
-# pays a fixed ~0.15-0.2 CPU-s before it touches a row (a trivial
-# 6-task mapInPandas at local[3] costs 1.0-1.1 worker CPU-s on a 4-core
-# x86 host, Python 3.11). Wrapping pyspark.worker.main in cProfile,
-# through a ``pyspark_``-prefixed module set as spark.python.worker.module,
-# puts >99% of it in worker_util.setup_spark_files ->
-# importlib.invalidate_caches(), which re-reads the 1,328-entry zip
-# directory of pyspark.zip 16 times per task. Byte-balanced groups
-# leave no straggler worth extra tasks to rebalance.
+# still pays a fixed setup cost before it touches a row. Under Spark's
+# stock worker daemon that was ~0.15-0.25 CPU-s, almost all of it in
+# worker_util.setup_spark_files -> importlib.invalidate_caches(), which
+# re-read the directory of every archive on the worker's sys.path
+# (pyspark.zip, the py4j zip, the spark-core jar). The session's daemon
+# (paddleocr_spark/worker_daemon.py) takes those archives off sys.path,
+# so a trivial mapInPandas at local[3] on a 4-core x86 host (Python
+# 3.11) now costs ~0.03-0.04 worker CPU-s per task: 3 tasks 0.09-0.12 s,
+# 12 tasks 0.35-0.47 s (stock daemon: 0.66-0.72 s and 2.65-2.89 s).
+# Byte-balanced groups leave no straggler worth extra tasks to
+# rebalance.
 
 MANIFEST_SUFFIX = "_manifest"
 MANIFEST_SCHEMA = "file string, n_rows long, n_bytes long"

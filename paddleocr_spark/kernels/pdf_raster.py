@@ -44,7 +44,8 @@ and image operators the way fitz would:
   DeviceRGB/DeviceGray; other shading/function types raise
 
 Device space follows the reference's fitz call: ``scale``x the
-MediaBox (default 2.0), y flipped so row 0 is the page top. Output is
+MediaBox (default 2.0; 1x when that would exceed 2000 px on a side),
+y flipped so row 0 is the page top. Output is
 (H, W, 3) uint8 BGR like every other decoder in the repo.
 
 ``encode_vector_pdf`` is the writer twin: structurally valid PDFs
@@ -548,22 +549,51 @@ def _decode_inline_image(d: dict, data: bytes):
     return "rgb", np.repeat(arr.reshape(h, w)[:, :, None], 3, axis=2)
 
 
+# a literal string's opening paren, a comment, or a BI operator
+_BI_SCAN = re.compile(rb"\(|%[^\r\n]*|(?:\A|(?<=[\s>\]]))BI(?=[\s/])")
+_STRING_STOP = re.compile(rb"[()\\]")
+
+
+def _skip_literal_string(stream: bytes, i: int) -> int:
+    """Index one past the ``)`` closing the literal string whose ``(``
+    ends at ``i``: balanced parentheses nest and a backslash escapes
+    the next byte (§7.3.4.2). An unclosed string runs to the end."""
+    depth = 1
+    while depth:
+        m = _STRING_STOP.search(stream, i)
+        if m is None:
+            return len(stream)
+        c = m.group()
+        if c == b"\\":
+            i = m.end() + 1
+            continue
+        depth += 1 if c == b"(" else -1
+        i = m.end()
+    return i
+
+
 def _extract_inline_images(stream: bytes):
     """Replace every ``BI .. ID <data> EI`` span with a numeric
     placeholder + custom ``INL`` operator so the tokenizer never sees
-    raw sample bytes. Returns (rewritten_stream, [(kind, payload)])."""
+    raw sample bytes. A ``BI`` inside a literal string or a ``%``
+    comment is text, not an operator. Returns (rewritten_stream,
+    [(kind, payload)])."""
     if b"BI" not in stream:
         return stream, []
     out = bytearray()
     imgs = []
     i = 0
-    n = len(stream)
-    pat = re.compile(rb"(?:\A|(?<=[\s>\]]))BI(?=[\s/])")
     while True:
-        m = pat.search(stream, i)
+        m = _BI_SCAN.search(stream, i)
         if not m:
             out += stream[i:]
             break
+        if m.group() != b"BI":
+            end = (_skip_literal_string(stream, m.end())
+                   if m.group() == b"(" else m.end())
+            out += stream[i:end]
+            i = end
+            continue
         out += stream[i:m.start()]
         d, dstart = _parse_inline_dict(stream, m.end())
         data, end = _inline_image_payload(stream, dstart, d)
@@ -871,10 +901,15 @@ def _draw_image(canvas, clip, ctm, img_rgb):
     region[inside] = img_rgb[sv[inside], su[inside]].astype(np.float64)
 
 
+# the reference's cap on a 2x page render: a larger page renders at 1x
+MAX_RENDER_PX = 2000
+
+
 def rasterize_pdf_pages(data: bytes, scale: float = 2.0
                         ) -> list[np.ndarray]:
     """PDF bytes → list of (H, W, 3) uint8 BGR page rasters at
-    ``scale``x the MediaBox (fitz's 2x default), page-tree order."""
+    ``scale``x the MediaBox (fitz's 2x default; 1x for a page that
+    would exceed ``MAX_RENDER_PX``), page-tree order."""
     if not is_pdf(data):
         raise ValueError("not a PDF")
     objects = _scan_objects(data)
@@ -892,10 +927,20 @@ def rasterize_pdf_pages(data: bytes, scale: float = 2.0
 def _rasterize_page(objects, page: int, scale: float = 2.0
                     ) -> np.ndarray:
     """One page object → (H, W, 3) uint8 BGR raster (also the
-    fallback ``kernels/pdf.py`` routes image-less pages through)."""
+    fallback ``kernels/pdf.py`` routes image-less pages through). A
+    raster wider or taller than ``MAX_RENDER_PX`` at ``scale`` renders
+    at 1x instead, as the reference does (``toddleocr/utils/
+    utility.py:116-117``); this also bounds a page's memory."""
     x0, y0, x1, y1 = _media_box(objects, page)
-    w = max(1, int(round((x1 - x0) * scale)))
-    h = max(1, int(round((y1 - y0) * scale)))
+
+    def size(s):
+        return (max(1, int(round((x1 - x0) * s))),
+                max(1, int(round((y1 - y0) * s))))
+
+    w, h = size(scale)
+    if max(w, h) > MAX_RENDER_PX:
+        scale = 1.0
+        w, h = size(scale)
     canvas = np.full((h, w, 3), 255.0)  # white, RGB float
     # user space -> device: translate to MediaBox origin, scale,
     # flip y so row 0 is the page TOP

@@ -89,7 +89,14 @@ _FILES = [
     # the same bilevel shape as a scanned-fax PDF: G4-compressed
     # /CCITTFaxDecode image XObjects (ISO 32000-1 §7.4.6)
     ("pages_19.pdf", "pdf_g4", 2),
+    # the pdf_vector layout on a page _WIDE user units wider: its 2x
+    # raster would pass 2000 px, so it renders at 1x (the reference's
+    # cap, toddleocr/utils/utility.py:116-117) and dims equal the
+    # MediaBox
+    ("pages_20.pdf", "pdf_vector_wide", 1),
 ]
+
+_WIDE = 1000
 
 
 def _v(f: int, p: int) -> int:
@@ -104,11 +111,12 @@ def _w(f: int, p: int) -> int:
     return 20 + f + 2 * p
 
 
-def _vector_geom(f: int, p: int):
-    """The vector page's analytic layout: MediaBox (w, h) user units,
-    a full-page fill of value v, and an inner rect of value
-    (v + 40) % 251 at integer coords (2, 3) sized (w//2, h//2)."""
-    h, w, v = _h(f, p), _w(f, p), _v(f, p)
+def _vector_geom(f: int, p: int, extra_w: int = 0):
+    """The vector page's analytic layout: MediaBox (w, h) user units
+    (``extra_w`` wider than ``_w``), a full-page fill of value v, and
+    an inner rect of value (v + 40) % 251 at integer coords (2, 3)
+    sized (w//2, h//2)."""
+    h, w, v = _h(f, p), _w(f, p) + extra_w, _v(f, p)
     return h, w, v, (v + 40) % 251, 2, 3, w // 2, h // 2
 
 
@@ -150,6 +158,11 @@ def _spec_row(f: int, name: str, kind: str, p: int, n: int):
         inner = 4 * rw * rh
         mean = (v * (npx - inner) + v2 * inner) / npx
         return (name, p, n > 1, 2 * h, 2 * w, mean)
+    if kind == "pdf_vector_wide":
+        # decoded at 1x: dims are the MediaBox's
+        h, w, v, v2, rx, ry, rw, rh = _vector_geom(f, p, _WIDE)
+        mean = (v * (h * w - rw * rh) + v2 * rw * rh) / (h * w)
+        return (name, p, n > 1, h, w, mean)
     return (name, p, n > 1, _h(f, p), _w(f, p), float(_v(f, p)))
 
 
@@ -171,6 +184,7 @@ def ensure_page_store(root: str) -> str:
     """Write the container files under ``root`` (idempotent; guarded by
     a DONE marker). Driver-side and O(1): 6 tiny files — this is
     fixture synthesis, not data-plane work."""
+    # v13: + a vector PDF page past the 2000 px render cap;
     # v12: + G4 fax PDFs (/CCITTFaxDecode XObjects); v11 added CCITT
     # G4 (T.6) fax TIFF; v10 added axial-shading PDF;
     # v9 added indexed-color (palette) PNG;
@@ -179,7 +193,7 @@ def ensure_page_store(root: str) -> str:
     # progressive JPEG, tiled/old-style JPEG-in-TIFF, LZW tile grid,
     # Adam7 PNG, vector-content PDF (cache key bumped so existing
     # stores rebuild)
-    store = os.path.join(root, "pagestore_v12")
+    store = os.path.join(root, "pagestore_v13")
     marker = os.path.join(store, "_DONE")
     if os.path.exists(marker):
         return store
@@ -261,14 +275,15 @@ def ensure_page_store(root: str) -> str:
             data = encode_png(idx, palette=pal, bit_depth=1)
         elif kind == "png_adam7":
             data = encode_png(imgs[0], interlace=True)
-        elif kind == "pdf_vector":
+        elif kind in ("pdf_vector", "pdf_vector_wide"):
             from paddleocr_spark.kernels.pdf_raster import (
                 encode_vector_pdf,
             )
 
+            extra_w = _WIDE if kind == "pdf_vector_wide" else 0
             contents, boxes = [], []
             for p in range(n):
-                h, w, v, v2, rx, ry, rw, rh = _vector_geom(f, p)
+                h, w, v, v2, rx, ry, rw, rh = _vector_geom(f, p, extra_w)
                 contents.append(
                     b"%.10f %.10f %.10f rg 0 0 %d %d re f "
                     b"%.10f %.10f %.10f rg %d %d %d %d re f"

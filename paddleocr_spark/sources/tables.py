@@ -29,6 +29,7 @@ schema and row counts are catalog metadata in the same way; parquet here
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import shutil
 import uuid
@@ -65,6 +66,9 @@ SCHEMAS = {
     "embeddings": "vec_id bigint, embedding array<float>, label int",
 }
 TABLES = list(SCHEMAS)
+
+# a derived table's record of its sources, inside its key directory
+_SOURCES = "_sources.json"
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -111,7 +115,14 @@ def derived_table(name: str, version: str, sources, params, build) -> str:
     sibling directory that is then ``os.rename``d into place (the
     protocol of ``operators/checkpoint.py``'s buckets). An existing key
     directory is therefore a complete table; a build that loses the
-    rename race to a concurrent one drops its copy."""
+    rename race to a concurrent one drops its copy.
+
+    The build directory also gets ``_sources.json``, the sources'
+    absolute paths (Spark's file index skips ``_`` files). After a
+    commit, sibling keys of the same table whose recorded sources no
+    longer all exist are deleted: no call can key to them again.
+    In-flight builds (``*.tmp-*``) and keys without the file are left
+    alone."""
     out = derived_dir(name, version, sources, params)
     if os.path.isdir(out):
         return out
@@ -119,13 +130,31 @@ def derived_table(name: str, version: str, sources, params, build) -> str:
     tmp = f"{out}.tmp-{uuid.uuid4().hex}"
     try:
         build(tmp)
+        with open(os.path.join(tmp, _SOURCES), "w") as fh:
+            json.dump([os.path.abspath(s) for s in sources], fh)
         os.rename(tmp, out)
     except OSError:
         if not os.path.isdir(out):
             raise
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+    _evict_dead_keys(out)
     return out
+
+
+def _evict_dead_keys(out: str) -> None:
+    parent = os.path.dirname(out)
+    for key in os.listdir(parent):
+        path = os.path.join(parent, key)
+        if path == out or ".tmp-" in key:
+            continue
+        try:
+            with open(os.path.join(path, _SOURCES)) as fh:
+                recorded = json.load(fh)
+        except (OSError, ValueError):
+            continue
+        if not all(map(os.path.exists, recorded)):
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def load_documents_sampled(spark, sf_dir: str, ratio: float, seed: int = 42):

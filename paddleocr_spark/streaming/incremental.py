@@ -240,7 +240,7 @@ def streaming_fuzzy_dedup(spark, docs_dir: str, index_dir: str,
 
     from pyspark.sql import functions as F
 
-    from paddleocr_spark.operators._cache import eager_persist, release
+    from paddleocr_spark.operators._cache import _ckpt, eager_persist, release
     from paddleocr_spark.operators.dedup import (
         N_HASHES,
         _band_hashes,
@@ -263,7 +263,10 @@ def streaming_fuzzy_dedup(spark, docs_dir: str, index_dir: str,
                 / F.lit(float(N_HASHES)))
 
     def process(batch_df, epoch_id: int):
-        batch_df = batch_df.select("doc_id", "text")
+        # read the micro-batch once: the signature job fills this lazy
+        # checkpoint and the out_dir write below reads its blocks. (A
+        # cache would do the same, but AQE fills it in a job of its own.)
+        batch_df = _ckpt(batch_df.select("doc_id", "text"))
         sig = eager_persist(_signatures(F, batch_df).select(
             "doc_id",
             F.array(*[F.col(f"mh{i}") for i in range(N_HASHES)])

@@ -18,6 +18,11 @@ metrics rows.
 The SparkSession is obtained with ``getOrCreate`` and NO master
 override, so spark-submit's ``--master`` wins; running the script
 directly (``python submit_extract.py``) falls back to ``local[*]``.
+
+It also keeps Spark's stock Python worker daemon, not
+``paddleocr_spark.worker_daemon`` (which ``session.get_spark`` sets):
+under ``--py-files`` the package reaches a worker's ``sys.path`` per
+task, after the daemon has started, so the daemon cannot import it.
 """
 
 from __future__ import annotations

@@ -280,6 +280,24 @@ class TestInlineImages:
         pg = _one(c, (20, 16), scale=2.0)
         assert tuple(pg[24, 4]) == (255, 255, 0)
 
+    def test_bi_in_a_string_is_text_not_an_image(self):
+        """A page that shows the text "A BI " is a valid page."""
+        (pg,) = rasterize_pdf_pages(encode_vector_pdf(
+            [b"BT /F1 12 Tf 72 700 Td (A BI ) Tj ET"], [(612, 792)]))
+        assert pg.shape == (1584, 1224, 3) and (pg == 255).all()
+
+    def test_scan_skips_strings_and_comments_to_the_real_image(self):
+        """Escaped and nested parentheses keep a string open; a comment
+        runs to the end of its line, a ``(`` in it included."""
+        img = np.full((2, 2, 3), 9, np.uint8)
+        c = (b"1 1 1 rg 0 0 20 16 re f "
+             b"BT (a \\) BI (nested BI ) x) Tj ET % BI /W 1 (\n"
+             b"q 16 0 0 8 0 0 cm BI /W 2 /H 2 /CS /RGB /BPC 8 ID "
+             + img.tobytes() + b" EI Q")
+        pg = _one(c, (20, 16), scale=2.0)
+        assert (pg[16:32, 0:32] == 9).all()
+        assert (pg[0:16] == 255).all()
+
     def test_unsupported_filter_raises(self):
         with pytest.raises(ValueError, match="filter"):
             _one(b"BI /W 1 /H 1 /CS /G /BPC 8 /F /DCT ID x EI",
@@ -296,6 +314,24 @@ def test_degenerate_clip_masks_everything():
     c = b"1 1 1 rg 0 0 10 10 re f W n 0 0 0 rg 0 0 10 10 re f"
     pg = _one(c, (10, 10))
     assert (pg == 255).all()
+
+
+def test_render_cap_falls_back_to_1x_past_2000_px():
+    """A 2x raster over 2000 px on either side renders at 1x, as the
+    reference's fitz call does; 2000 px itself stays at 2x."""
+    from paddleocr_spark.kernels.pdf import decode_pdf_pages
+
+    c = b"0 0 0 rg 10 10 20 20 re f"
+    data = encode_vector_pdf([c, c, c], [(1200, 800), (40, 1001),
+                                         (1000, 30)])
+    wide, tall, edge = rasterize_pdf_pages(data)
+    assert wide.shape == (800, 1200, 3)
+    assert (wide == 0).all(axis=2).sum() == 20 * 20
+    assert tall.shape == (1001, 40, 3)
+    assert edge.shape == (60, 2000, 3)
+    # kernels/pdf.py's image-less page path renders through the same cap
+    assert [p.shape for p in decode_pdf_pages(data)] == [
+        wide.shape, tall.shape, edge.shape]
 
 
 def test_decode_pdf_pages_falls_back_to_rasterizer():

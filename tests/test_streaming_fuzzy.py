@@ -53,6 +53,12 @@ def _greedy_oracle(waves, threshold=0.7):
     return {i for i, _ in kept}
 
 
+def _input_rows(q):
+    """numInputRows of each epoch that read data."""
+    return [p["numInputRows"] for p in q.recentProgress
+            if p["numInputRows"]]
+
+
 def test_streaming_fuzzy_dedup_two_waves(spark, tmp_path):
     docs_dir = tmp_path / "docs"
     docs_dir.mkdir()
@@ -93,11 +99,16 @@ def test_streaming_fuzzy_dedup_two_waves(spark, tmp_path):
     q = streaming_fuzzy_dedup(spark, str(docs_dir) + "/wave*", idx, out,
                               ckpt)
     q.awaitTermination(240)
+    # each micro-batch's files are read once: the progress counts each
+    # wave's docs once, not once per consumer of the batch
+    assert _input_rows(q) == [len(wave1), len(wave2)]
     # one candidate join and one verify per epoch: the stream's jobs
-    # (its job group is the query's run id) stay within a fixed budget
+    # (its job group is the query's run id) stay within a fixed budget.
+    # AQE's re-planning makes the count vary from run to run: 58-67 on
+    # local[4]
     stream_jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(
         q.runId)
-    assert 0 < len(stream_jobs) <= 100, len(stream_jobs)
+    assert 0 < len(stream_jobs) <= 70, len(stream_jobs)
     epoch_sessions = set(_cache._REGISTRY) - sessions_before - {spark}
     assert not epoch_sessions, "an epoch session's caches were kept"
     assert resident() <= rdds_before, "an epoch's blocks stayed resident"
@@ -124,6 +135,7 @@ def test_streaming_fuzzy_dedup_two_waves(spark, tmp_path):
     q = streaming_fuzzy_dedup(spark, str(docs_dir) + "/wave*", idx, out,
                               ckpt)
     q.awaitTermination(240)
+    assert _input_rows(q) == [len(wave3)]
     got = {r.doc_id for r in spark.read.parquet(out).collect()}
     assert got == expected | {201}
 

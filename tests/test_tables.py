@@ -144,6 +144,39 @@ def test_derived_table_commits_whole_tables_only(tmp_path, monkeypatch):
     assert derived_dir(*key) != out
 
 
+def test_derived_table_evicts_keys_whose_sources_are_gone(
+        spark, tmp_path, monkeypatch):
+    """A commit records its sources in the key (hidden from Spark's
+    file index) and deletes sibling keys whose recorded sources no
+    longer exist; a build in flight and a key with no record stay."""
+    import json
+
+    from paddleocr_spark import cachedir
+    from paddleocr_spark.sources.tables import derived_table
+
+    monkeypatch.setattr(cachedir, "_ROOT", str(tmp_path / "cache"))
+    srcs = [tmp_path / f"src{i}.parquet" for i in range(3)]
+    for src in srcs:
+        src.write_bytes(src.name.encode())
+
+    def build(tmp):
+        spark.range(3).write.parquet(tmp)
+
+    a, b = (derived_table("t", "v1", [str(s)], (), build) for s in srcs[:2])
+    with open(os.path.join(a, "_sources.json")) as fh:
+        assert json.load(fh) == [str(srcs[0])]
+    assert spark.read.parquet(a).count() == 3
+    parent = os.path.dirname(a)
+    for kept in ("v0_norecord", f"{os.path.basename(a)}.tmp-0"):
+        os.makedirs(os.path.join(parent, kept))
+    assert len(os.listdir(parent)) == 4
+    srcs[0].unlink()
+    c = derived_table("t", "v1", [str(srcs[2])], (), build)
+    assert sorted(os.listdir(parent)) == sorted(
+        map(os.path.basename, (b, c, "v0_norecord",
+                               f"{os.path.basename(a)}.tmp-0")))
+
+
 def _bucketed_dirs(spark):
     from paddleocr_spark.operators import bucketing
 
