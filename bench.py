@@ -384,11 +384,11 @@ def _run_stress_study() -> dict:
         # cluster formation at stress scale: connected components over
         # the exact-first candidate graph — the full fuzzy-dedup path
         # (signatures → bands → candidates → components) at 52.5k docs
-        from paddleocr_spark.operators.graph import _propagation
+        from paddleocr_spark.operators.graph import _star
 
         t0 = time.time()
         pairs = lsh_candidate_pairs_df(corpus, exact_first=True).persist()
-        labels, rounds = _propagation(pairs, "doc_a", "doc_b", 50)
+        labels, rounds = _star(pairs, "doc_a", "doc_b")
         res["cluster_nodes"] = labels.count()
         cstats = (labels.groupBy("label").count()
                   .agg(F.count("*").alias("ncl"),

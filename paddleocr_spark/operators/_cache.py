@@ -124,8 +124,8 @@ def iterate(state, step, max_rounds: int, converged=None,
     """The one round loop of iterative jobs: ``state = step(state, r)``
     for r = 1, 2, ...; returns ``(state, rounds)``.
 
-    Loop-carried state (PageRank ranks, connected-components labels)
-    is checkpointed, or its logical plan nests and multiplies every
+    Loop-carried state (PageRank ranks, the connected-components edge
+    set) is checkpointed, or its logical plan nests and multiplies every
     round (operators/graph.py). Checkpoints are lazy: under AQE building
     one already runs the plan's shuffle-map stages, and an eager one's
     count would be a job of its own.

@@ -443,18 +443,14 @@ def duplicate_clusters(spark, sf_dir: str, threshold: float = 0.7,
     document in a duplicate cluster labelled with the cluster's
     minimum doc_id, plus the cluster size.
 
-    Algorithm: iterative min-label propagation (hash-to-min, see
-    operators/graph.py): one join + one map-side-combinable min
-    groupBy per round, and one count to test the fixpoint. Rounds
-    needed = graph diameter — near-dup clusters are shallow (dups of a
-    common source), so this converges in 2-3 rounds here.
+    Algorithm: large-star/small-star rounds (operators/graph.py), each
+    three window/groupBy exchanges and one count to test the
+    fixpoint; rounds grow with log(cluster size), so a long near-dup
+    chain converges as surely as a shallow cluster of copies.
 
-    The DuckDB oracle computes the same fixpoint as a recursive CTE —
-    an independent algorithm (BFS closure, not label propagation), so
-    the hash match checks the component semantics, not the code.
-    For deep/adversarial graphs, operators.graph also provides the
-    O(log n)-round large-star/small-star variant (property-tested
-    equal to this one and to a union-find)."""
+    The DuckDB oracle computes the same components as a recursive CTE —
+    an independent algorithm (BFS closure, not star rewiring), so the
+    hash match checks the component semantics, not the code."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
@@ -463,8 +459,7 @@ def duplicate_clusters(spark, sf_dir: str, threshold: float = 0.7,
     # cluster formation and survivor selection are incremental jobs
     # over the persisted edge table, not re-runs of the LSH chain
     edges = near_dup_pairs(spark, sf_dir, threshold).select("doc_a", "doc_b")
-    labels = connected_components(edges, "doc_a", "doc_b", 20,
-                                  checkpoint_dir=checkpoint_dir)
+    labels = connected_components(edges, checkpoint_dir=checkpoint_dir)
     size = F.count("*").over(Window.partitionBy("cluster_id")).cast("long")
     return (labels.select(F.col("node").alias("doc_id"),
                           F.col("label").alias("cluster_id"))

@@ -1,41 +1,49 @@
 """Distributed connected components over an edge DataFrame.
 
-Two algorithms, both pure DataFrame ops (joins + map-side-combinable
-min aggregations), both returning (node, label) with label = the
-component's minimum node id:
+One algorithm, large-star / small-star (Kiveris et al., "Connected
+Components in MapReduce and Beyond", SoCC'14), as pure DataFrame ops
+returning (node, label) with label = the component's minimum node id.
+Each round rewires every node's neighbourhood toward its local minimum,
+so the loop converges in O(log n) rounds on ANY topology: a 1,000-edge
+near-dup chain takes about ten rounds where min-label propagation would
+take a thousand.
 
-- min-label propagation (``connected_components``): one join + one
-  min-groupBy per round; rounds = graph diameter. The right choice for
-  shallow components (duplicate clusters: copies of a common source,
-  diameter 2-3).
-- large-star / small-star (``connected_components_star``; Kiveris et
-  al., "Connected Components in MapReduce and Beyond", SoCC'14): each
-  round rewires every node's neighborhood toward its local minimum;
-  converges in O(log n) rounds on ANY topology — the scale path for
-  deep or adversarial graphs at 10^12 edges, where a diameter-bound
-  loop is unacceptable.
+A round is kept to three exchanges, since on small graphs the per-job
+cost dominates:
 
-Both loops are a ``step`` plus a fixpoint test on the one loop driver,
-``operators/_cache.iterate``, which checkpoints the loop-carried state
-(labels / the rewired edge set) every round: a cache alone keeps the
-EXECUTION flat but the logical plan still nests and multiplies every
-round (the join/union/groupBy tree references the previous round's
-tree several times — measured driver blowup from plan stringification
-after ~5 rounds), while the checkpoint replaces the plan with a leaf.
-``checkpoint_dir=`` selects its cluster-durable reliable mode. Per-round
-driver work is one count over the new state, which also fills its
-checkpoint — loop control, not data collection.
+- each neighbourhood minimum is ``min(dst) OVER (PARTITION BY src)``,
+  one exchange per half-round instead of a groupBy plus a join back;
+- the round's dedup is a ``groupBy(src, dst)`` over the new edges and
+  the round's input edges carrying two flags, ``is_new`` and
+  ``is_old``, so the fixpoint test is one filter count over the new
+  state (``is_new != is_old``) instead of a join against the old one,
+  and the next round reads ``where(is_new)``.
 
-Both loops also read their input edges through one lazy checkpoint
-(``_cache._ckpt``), filled by round 1: every round joins the input, so
-without it the caller's whole lineage (an LSH verify over signatures,
-say) rides in every round's plan and is analyzed and optimized again
-each round, cached or not.
+Every round symmetrises its input, so round 1 needs no special case:
+its "old" set is the raw input, which is a fixpoint only when it
+already is a child -> root star forest.
+
+The loop runs on the one loop driver, ``operators/_cache.iterate``,
+which checkpoints the loop-carried edge set every round: a cache alone
+keeps the EXECUTION flat but the logical plan still nests and
+multiplies every round (measured driver blowup from plan
+stringification after ~5 rounds), while the checkpoint replaces the
+plan with a leaf. ``checkpoint_dir=`` selects its cluster-durable
+reliable mode. Per-round driver work is the one count, which also fills
+the round's checkpoint.
+
+The input edges are read through one lazy checkpoint
+(``_cache._ckpt``), filled by round 1, so that neither round 1 nor the
+final labelling carries the caller's whole lineage (an LSH verify over
+signatures, say) in its plan.
 """
 
 from __future__ import annotations
 
-__all__ = ["connected_components", "connected_components_star"]
+__all__ = ["connected_components"]
+
+# a guard against non-convergence, not a tuning knob: >= 2*log2(2^31)+2
+MAX_ROUNDS = 64
 
 
 def _node_col(F, c: str):
@@ -63,124 +71,57 @@ def _input_edges(F, edges, src: str, dst: str, checkpoint_dir):
                  checkpoint_dir)
 
 
-def _sym_edges(F, e):
-    """Symmetrized, deduplicated, self-loop-free (src, dst) pairs."""
-    e = e.where(F.col("src") != F.col("dst"))
-    return (e.unionByName(e.select(F.col("dst").alias("src"),
-                                   F.col("src").alias("dst")))
-            .distinct())
-
-
-def _edge_nodes(F, e):
-    """EVERY node incident to an edge — including nodes whose only
-    edges are self-loops, which _sym_edges' self-loop filter removes
-    (they are their own singleton component, label = node)."""
-    return (e.select(F.col("src").alias("node"))
-            .unionByName(e.select(F.col("dst").alias("node")))
-            .distinct())
-
-
 def connected_components(edges, src: str = "doc_a", dst: str = "doc_b",
-                         max_iters: int = 50,
+                         max_iters: int = MAX_ROUNDS,
                          checkpoint_dir: str | None = None):
     """(node, label) for every node incident to an edge; label = the
-    minimum node id reachable from it. Rounds needed = diameter."""
-    return _propagation(edges, src, dst, max_iters, checkpoint_dir)[0]
-
-
-def _propagation(edges, src, dst, max_iters, checkpoint_dir=None):
-    from pyspark.sql import functions as F
-
-    from paddleocr_spark.operators._cache import eager_persist, iterate
-
-    e = _input_edges(F, edges, src, dst, checkpoint_dir)
-    sym = eager_persist(_sym_edges(F, e), materialize=False)
-
-    def propagate(labels, r):
-        # `was` carries each node's previous label through the min
-        # groupBy (null on the propagated side), so the fixpoint test
-        # reads the new state alone instead of joining the old one
-        prop = (sym.join(labels, sym.src == labels.node)
-                .select(F.col("dst").alias("node"), "lbl",
-                        F.lit(None).cast("long").alias("was")))
-        return (labels.select("node", "lbl", F.col("lbl").alias("was"))
-                .unionByName(prop)
-                .groupBy("node")
-                .agg(F.min("lbl").alias("lbl"), F.max("was").alias("was")))
-
-    labels, rounds = iterate(
-        _edge_nodes(F, e).select("node", F.col("node").alias("lbl")),
-        propagate, max_iters,
-        converged=lambda new, old: (
-            new.where(F.col("lbl") != F.col("was")).count() == 0),
-        checkpoint_dir=checkpoint_dir)
-    return labels.select("node", F.col("lbl").alias("label")), rounds
-
-
-def connected_components_star(edges, src: str = "doc_a",
-                              dst: str = "doc_b", max_iters: int = 64,
-                              checkpoint_dir: str | None = None):
-    """(node, label) via alternating large-star/small-star rounds —
-    O(log n) rounds regardless of diameter."""
+    minimum node id reachable from it."""
     return _star(edges, src, dst, max_iters, checkpoint_dir)[0]
 
 
-def _large_star(F, e):
-    """For each node u: attach every LARGER neighbor to
-    min(N(u) ∪ {u}). Kills long chains from the high end."""
-    mn = e.groupBy("src").agg(F.min("dst").alias("mn"))
-    m = F.least(F.col("mn"), F.col("src"))
-    return (e.join(mn, "src")
-            .where(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), m.alias("dst"))
-            .where(F.col("src") != F.col("dst"))
-            .distinct())
-
-
-def _small_star(F, e):
-    """For each node u: attach every neighbor ≤ u (and u itself) to
-    min(N⁻(u) ∪ {u}). Flattens local stars onto the minimum."""
-    down = e.where(F.col("dst") < F.col("src"))
-    mn = down.groupBy("src").agg(F.min("dst").alias("mn"))
-    attach = (down.join(mn, "src")
-              .select(F.col("dst").alias("src"), F.col("mn").alias("dst")))
-    self_edge = mn.select("src", F.col("mn").alias("dst"))
-    return (attach.unionByName(self_edge)
-            .where(F.col("src") != F.col("dst"))
-            .distinct())
-
-
-def _star(edges, src, dst, max_iters, checkpoint_dir=None):
+def _star(edges, src, dst, max_iters=MAX_ROUNDS, checkpoint_dir=None):
+    """``(labels, rounds)`` of ``connected_components``."""
     from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
 
-    from paddleocr_spark.operators._cache import eager_persist, iterate
+    from paddleocr_spark.operators._cache import iterate
 
-    def star_round(e, r):
-        # large-star input must see both directions; its output (and
-        # small-star's) is directed child -> smaller parent. Round 1's
-        # input is _sym_edges, already symmetric — re-symmetrizing it
-        # would double the largest round's shuffle volume for nothing
-        both = e if r == 1 else e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        return _small_star(F, _large_star(F, both))
-
-    def unmoved(new, old):
-        # both are distinct (src, dst) sets: count rows on one side only
-        return (new.withColumn("n", F.lit(1))
-                .join(old.withColumn("o", F.lit(1)), ["src", "dst"],
-                      "full_outer")
-                .where(F.col("n").isNull() | F.col("o").isNull())
-                .count() == 0)
+    def star_round(state, r):
+        old = state.where("is_new").select("src", "dst")
+        mn = F.min("dst").over(Window.partitionBy("src"))
+        # large star: attach every LARGER neighbour of u to
+        # min(N(u) ∪ {u}); the output is directed child -> parent
+        large = (old.unionByName(old.select(F.col("dst").alias("src"),
+                                            F.col("src").alias("dst")))
+                 .select("src", "dst", F.least(mn, "src").alias("m"))
+                 .where(F.col("dst") > F.col("src"))
+                 .select(F.col("dst").alias("src"), F.col("m").alias("dst")))
+        # small star: attach u and every parent of u to u's least parent
+        small = (large.select(F.explode(F.array("src", "dst")).alias("src"),
+                              mn.alias("dst"))
+                 .where(F.col("src") != F.col("dst")))
+        return (small.select("src", "dst", F.lit(True).alias("is_new"),
+                             F.lit(False).alias("is_old"))
+                .unionByName(old.select("src", "dst",
+                                        F.lit(False).alias("is_new"),
+                                        F.lit(True).alias("is_old")))
+                .groupBy("src", "dst")
+                .agg(F.max("is_new").alias("is_new"),
+                     F.max("is_old").alias("is_old")))
 
     e = _input_edges(F, edges, src, dst, checkpoint_dir)
     forest, rounds = iterate(
-        eager_persist(_sym_edges(F, e), materialize=False),
-        star_round, max_iters, converged=unmoved,
+        e.where(F.col("src") != F.col("dst"))
+        .withColumn("is_new", F.lit(True)),
+        star_round, max_iters,
+        converged=lambda new, old: (
+            new.where(F.col("is_new") != F.col("is_old")).count() == 0),
         checkpoint_dir=checkpoint_dir)
-    # fixpoint: a forest of stars (node -> component min)
-    parent = forest.select(F.col("src").alias("node"),
-                           F.col("dst").alias("label"))
-    roots = (_edge_nodes(F, e)
-             .join(parent, "node", "left_anti")
-             .select("node", F.col("node").alias("label")))
-    return parent.unionByName(roots), rounds
+    # fixpoint: a forest of stars (child -> component min); every input
+    # endpoint labels itself too, which covers the roots and the nodes
+    # whose only edges are self-loops
+    return (forest.select("src", "dst")
+            .unionByName(e.select("src", F.col("src").alias("dst")))
+            .unionByName(e.select(F.col("dst").alias("src"), "dst"))
+            .groupBy(F.col("src").alias("node"))
+            .agg(F.min("dst").alias("label"))), rounds

@@ -57,3 +57,20 @@ def test_simhash_near_dups_find_exact_plants_at_hamming_zero(spark):
         key = (d, d + dedup.EXACT_PLANT_OFFSET)
         assert pairs.get(key) == 0, f"exact plant pair {key} missing"
     assert all(h <= dedup.MAX_HAMMING for h in pairs.values())
+
+
+def test_duplicate_clusters_label_long_chains(spark, monkeypatch):
+    """A near-dup chain far longer than any round cap is one cluster:
+    the star loop's rounds grow with log(n), not with the diameter."""
+    from paddleocr_spark.operators._cache import release
+
+    for n_edges in (21, 1000):
+        path = spark.createDataFrame(
+            [(i, i + 1, 1.0) for i in range(n_edges)], dedup.NEAR_DUP_SCHEMA)
+        monkeypatch.setattr(dedup, "near_dup_pairs",
+                            lambda spark, sf_dir, threshold: path)
+        rows = dedup.duplicate_clusters(spark, SF_DIR).collect()
+        release(spark)
+        assert len(rows) == n_edges + 1
+        assert {(r.cluster_id, r.cluster_size) for r in rows} == {
+            (0, n_edges + 1)}

@@ -1,7 +1,7 @@
-"""Both connected-components algorithms vs a sequential union-find on
-seeded random graphs and a deep path graph (the topology where the
-diameter-bound propagation loop is at its worst and the star variant's
-O(log n) bound matters)."""
+"""The connected-components loop vs a sequential union-find on seeded
+random graphs, deep paths and combs (the topologies where a
+diameter-bound loop is at its worst and the star loop's O(log n)
+bound matters), plus its input contract and plan shape."""
 
 import os
 import sys
@@ -40,7 +40,13 @@ def _spark_labels(df):
     return {r.node: r.label for r in df.collect()}
 
 
+def _shuffled(rng, n_nodes, edges):
+    ids = rng.permutation(n_nodes)
+    return [(int(ids[a]), int(ids[b])) for a, b in edges]
+
+
 def _graphs():
+    """(n_nodes, edges) over ids 0..n_nodes-1."""
     rng = np.random.default_rng(7)
     out = []
     for n, m in [(20, 12), (40, 30), (60, 25)]:
@@ -48,45 +54,40 @@ def _graphs():
                  for a, b in zip(rng.integers(0, n, m),
                                  rng.integers(0, n, m)) if a != b}
         out.append((n, sorted(edges)))
-    # deep path: worst case for diameter-bound propagation
-    out.append((33, [(i, i + 1) for i in range(32)]))
+    # deep paths: sorted, reversed and with shuffled ids
+    path = [(i, i + 1) for i in range(32)]
+    out += [(33, path), (33, [(b, a) for a, b in path]),
+            (33, _shuffled(rng, 33, path))]
+    # a shuffled comb: a path with a pendant leaf at every node
+    comb = [(i, i + 1) for i in range(15)] + [(i, 16 + i) for i in range(16)]
+    out.append((32, _shuffled(rng, 32, comb)))
+    # nodes whose only edges are self-loops are their own components
+    out.append((9, [(5, 5), (1, 2), (7, 7), (7, 7), (8, 8), (8, 2)]))
     return out
 
 
-def test_propagation_matches_union_find(spark):
-    for n, edges in _graphs():
-        if len(edges) > 30:  # keep the diameter-bound loop off the
-            continue         # deep path (that's the star test's job)
-        df = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-        got = _spark_labels(graph.connected_components(df))
-        assert got == _union_find(n, edges), (n, edges)
-
-
 def test_star_matches_union_find_and_converges_fast(spark):
+    """Labels equal a union-find's on every graph, and the loop
+    converges in O(log n) rounds whatever the diameter: at most
+    2*log2(n)+2, where min-label propagation would need 33 rounds on
+    the 32-edge paths."""
     for n, edges in _graphs():
-        df = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-        labels, rounds = graph._star(df, "doc_a", "doc_b", 64)
+        df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        labels, rounds = graph._star(df, "doc_a", "doc_b")
         got = _spark_labels(labels)
         assert got == _union_find(n, edges), (n, edges)
-        # O(log n) bound with slack — on the 32-edge path plain
-        # propagation needs 32 rounds, the star variant stays small
-        assert rounds <= 10, (n, rounds)
+        assert rounds <= 2 * np.log2(n) + 2, (n, rounds, edges)
 
 
 def test_self_loop_only_nodes_are_singleton_components(spark):
     """A node whose only edge is a self-loop is incident to an edge and
     must appear in the output as its own component (the contract says
     'every node incident to an edge')."""
-    from paddleocr_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
-
     edges = spark.createDataFrame(
         [(5, 5), (1, 2)], "doc_a long, doc_b long")
-    for fn in (connected_components, connected_components_star):
-        got = {(r.node, r.label) for r in fn(edges).collect()}
-        assert got == {(5, 5), (1, 1), (2, 1)}, (fn.__name__, got)
+    got = {(r.node, r.label)
+           for r in graph.connected_components(edges).collect()}
+    assert got == {(5, 5), (1, 1), (2, 1)}, got
 
 
 def test_null_node_id_fails_loudly(spark):
@@ -112,7 +113,7 @@ def test_null_node_id_fails_loudly(spark):
 
 
 def test_loops_plan_over_a_checkpointed_input(spark, monkeypatch):
-    """Both loops read their input edges through one checkpoint: no
+    """The loop reads its input edges through one checkpoint: no
     round's plan and not the returned labels carry the input's
     operators; a LogicalRDD leaf stands in for them."""
     from pyspark.sql import functions as F
@@ -136,15 +137,13 @@ def test_loops_plan_over_a_checkpointed_input(spark, monkeypatch):
         return iterate(state, traced, *args, **kwargs)
 
     monkeypatch.setattr(_cache, "iterate", recording)
-    for fn in (graph.connected_components, graph.connected_components_star):
-        plans.clear()
-        labels = fn(edges)
-        assert {(r.node, r.label) for r in labels.collect()} == {
-            (i, 0) for i in range(5)}, fn.__name__
-        plans.append(labels._jdf.queryExecution().logical())
-        for plan in plans:
-            leaves = plan.collectLeaves()
-            names = {leaves.apply(i).nodeName()
-                     for i in range(leaves.size())}
-            assert names == {"LogicalRDD"}, (fn.__name__, names)
-        _cache.release(spark)
+    labels = graph.connected_components(edges)
+    assert {(r.node, r.label) for r in labels.collect()} == {
+        (i, 0) for i in range(5)}
+    plans.append(labels._jdf.queryExecution().logical())
+    assert len(plans) > 1
+    for plan in plans:
+        leaves = plan.collectLeaves()
+        names = {leaves.apply(i).nodeName() for i in range(leaves.size())}
+        assert names == {"LogicalRDD"}, names
+    _cache.release(spark)

@@ -44,20 +44,16 @@ def test_pagerank_modes_identical(spark, tmp_path):
 
 
 def test_connected_components_modes_identical(spark, tmp_path):
-    from paddleocr_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    from paddleocr_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 20), (5, 3)],
         "doc_a long, doc_b long")
     cdir = str(tmp_path / "cc_ckpt")
-    assert _rows(connected_components(edges)) == _rows(
-        connected_components(edges, checkpoint_dir=cdir))
-    assert _rows(connected_components_star(edges)) == _rows(
-        connected_components_star(
-            edges, checkpoint_dir=str(tmp_path / "cc_star")))
+    local = _rows(connected_components(edges))
+    assert local == _rows(connected_components(edges, checkpoint_dir=cdir))
+    assert local == [(1, 1), (2, 1), (3, 1), (5, 1), (10, 10), (11, 10),
+                     (20, 20)]
 
 
 def test_duplicate_clusters_mode_identical(spark, tmp_path):
@@ -79,19 +75,12 @@ def test_round_cap_raises(spark):
     driver's error, naming the loop, instead of returning a partial
     labelling."""
     from paddleocr_spark.operators._cache import release
-    from paddleocr_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    from paddleocr_spark.operators.graph import connected_components
 
-    # propagation needs 33 rounds on this path, the star loop 6
-    edges = _path(spark, 32)
-    for fn, cap in ((connected_components, 3),
-                    (connected_components_star, 2)):
-        with pytest.raises(RuntimeError,
-                           match=f"no fixpoint in {cap} rounds"):
-            fn(edges, max_iters=cap)
-        release(spark)
+    # the loop needs 6 rounds on this path
+    with pytest.raises(RuntimeError, match="no fixpoint in 3 rounds"):
+        connected_components(_path(spark, 32), max_iters=3)
+    release(spark)
 
 
 def _persistent_rdds(spark) -> set:
@@ -103,18 +92,14 @@ def test_release_leaves_no_persistent_rdd(spark):
     after the result is collected, release(spark) leaves no persisted
     RDD behind."""
     from paddleocr_spark.operators._cache import release
-    from paddleocr_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    from paddleocr_spark.operators.graph import connected_components
 
-    for fn in (connected_components, connected_components_star):
-        release(spark)
-        before = _persistent_rdds(spark)
-        fn(_path(spark, 6)).collect()
-        assert _persistent_rdds(spark) - before, fn.__name__
-        release(spark)
-        assert not _persistent_rdds(spark) - before, fn.__name__
+    release(spark)
+    before = _persistent_rdds(spark)
+    connected_components(_path(spark, 6)).collect()
+    assert _persistent_rdds(spark) - before
+    release(spark)
+    assert not _persistent_rdds(spark) - before
 
 
 def test_failed_first_action_releases_checkpoint_blocks(spark):
