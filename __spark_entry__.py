@@ -111,14 +111,6 @@ def _correctness_cache_dir() -> str:
     return os.path.join(CACHE_ROOT, f"v5_seed{SEED}_n{n}")
 
 
-def load_corpus(spark: SparkSession, sf_dir: str, n_docs: int | None = None):
-    """Returns (docs_df, media_df) for the interleaved corpus sized to
-    the sf directory (n_docs = |documents| rows at that sf)."""
-    docs_path, media_path = corpus_paths(spark, sf_dir, n_docs)
-    return (spark.read.schema(docs_schema()).parquet(docs_path),
-            spark.read.schema(media_schema()).parquet(media_path))
-
-
 # ---------------------------------------------------------------------------
 # Extraction queries (rows-only checks; pytest owns exact values)
 
@@ -141,16 +133,20 @@ def _q_media_fragments(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("cls_score", F.round("cls_score", 6)))
 
 
-def _q_corpus_rec_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, media = load_corpus(spark, sf_dir)
+def _media_and_fragments(spark: SparkSession, sf_dir: str):
+    """(media table, its decoded fragments) for the ground-truth
+    metrics, from one ``corpus_paths`` call."""
     _, media_path = corpus_paths(spark, sf_dir)
-    return metrics.corpus_rec_metric(media, decode_media_store(spark, media_path))
+    return (spark.read.schema(media_schema()).parquet(media_path),
+            decode_media_store(spark, media_path))
+
+
+def _q_corpus_rec_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return metrics.corpus_rec_metric(*_media_and_fragments(spark, sf_dir))
 
 
 def _q_corpus_det_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, media = load_corpus(spark, sf_dir)
-    _, media_path = corpus_paths(spark, sf_dir)
-    return metrics.corpus_det_metric(media, decode_media_store(spark, media_path))
+    return metrics.corpus_det_metric(*_media_and_fragments(spark, sf_dir))
 
 
 def _q_det_iou_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -159,10 +155,8 @@ def _q_det_iou_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_table_structure_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, media = load_corpus(spark, sf_dir)
-    _, media_path = corpus_paths(spark, sf_dir)
     return metrics.table_structure_metric(
-        media, decode_media_store(spark, media_path))
+        *_media_and_fragments(spark, sf_dir))
 
 
 def _q_sr_metric(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,6 +1,9 @@
 """Arrow-batched UDFs for the extraction stages.
 
-The hot path is ``decode_media``: one ``mapInPandas`` stage that runs
+Every media consumer reads the media store BY PATH through one row
+loop, ``map_media_store``: each Python task reads its byte-balanced
+group of store files with pyarrow and calls a per-row function on
+every media row. The hot consumer is ``decode_media_store``: it runs
 det (DB binarize + box post-process, ``toddleocr/postprocess/db.py``),
 reading-order sort (``utils/utility.py:170-192``), cls decode
 (``postprocess/cls.py``), CTC rec decode (``postprocess/rec.py``) and
@@ -11,14 +14,15 @@ rows, like the reference's one-image→many-boxes det stage).
 
 Doing all stages in ONE Python crossing (instead of det / cls / rec as
 separate UDF stages, as a literal port would) halves Arrow serialization
-traffic and keeps the fat tensor columns from ever entering a shuffle:
+traffic and keeps the fat tensor columns from ever entering the JVM:
 only small string fragments leave this stage.
 """
 
 from __future__ import annotations
 
-__all__ = ["MEDIA_FRAGMENT_SCHEMA", "ERROR_KIND", "decode_media",
-           "decode_errors", "write_store_manifest", "manifest_path"]
+__all__ = ["MEDIA_FRAGMENT_SCHEMA", "ERROR_KIND", "map_media_store",
+           "decode_media_store", "decode_errors", "write_store_manifest",
+           "manifest_path"]
 
 # out_kind of quarantined poison rows (decode raised); never a real
 # layout label, filtered out of span assembly
@@ -40,76 +44,34 @@ _FRAG_COLS = ["frag_idx", "box_idx", "out_kind", "out_text", "conf",
               "cls_label", "cls_score", "aux"]
 
 
-def _make_decode_batches(bundle_bc=None):
-    """Build the mapInPandas body, closing over an optional
+def _decode_row_fn(bundle_bc):
+    """The decode row function, closing over a
     ``sc.broadcast(MODEL_BUNDLE)`` handle — the charset/drop_score
     "weights" ship to each executor once via the broadcast machinery
     (torrent-style at cluster scale), not once per task in the
     serialized closure, mirroring the reference's load-model-once-per-
     process (toddleocr/engine.py:317-324)."""
 
-    def _decode_batches(batches):
-        # import inside the worker so only executors pay the import
-        import pandas as pd
-
+    def decode_row(d):
         from paddleocr_spark.extract_core import decode_media_row
 
-        bundle = bundle_bc.value if bundle_bc is not None else None
-        for pdf in batches:
-            out = {c: [] for c in ["media_ref", *_FRAG_COLS]}
-            for row in pdf.itertuples(index=False):
-                d = row._asdict()
-                try:
-                    frags = decode_media_row(d, bundle)
-                except Exception as exc:  # poison-row quarantine:
-                    # at 10^12 docs one corrupt media row must not
-                    # kill the job (the reference resamples on parse
-                    # error, simple.py:78-84); it becomes an ERROR_KIND
-                    # fragment — excluded from spans, countable via
-                    # decode_errors()
-                    frags = [{
-                        "frag_idx": -1, "box_idx": -1,
-                        "out_kind": ERROR_KIND, "out_text": "",
-                        "conf": 0.0, "cls_label": "", "cls_score": 0.0,
-                        "aux": f"{type(exc).__name__}: {exc}"[:200],
-                    }]
-                for frag in frags:
-                    out["media_ref"].append(d["media_ref"])
-                    for c in _FRAG_COLS:
-                        out[c].append(frag[c])
-            yield pd.DataFrame(out)
+        try:
+            frags = decode_media_row(d, bundle_bc.value)
+        except Exception as exc:  # poison-row quarantine:
+            # at 10^12 docs one corrupt media row must not kill the
+            # job (the reference resamples on parse error,
+            # simple.py:78-84); it becomes an ERROR_KIND fragment —
+            # excluded from spans, countable via decode_errors()
+            return [(d["media_ref"], -1, -1, ERROR_KIND, "", 0.0, "", 0.0,
+                     f"{type(exc).__name__}: {exc}"[:200])]
+        return [(d["media_ref"], *(f[c] for c in _FRAG_COLS))
+                for f in frags]
 
-    return _decode_batches
-
-
-# default body (module-level defaults; used where no SparkContext is
-# at hand, e.g. direct tests of the batch function)
-_decode_batches = _make_decode_batches(None)
-
-
-def _broadcast_bundle(spark):
-    from paddleocr_spark.extract_core import MODEL_BUNDLE
-
-    return spark.sparkContext.broadcast(MODEL_BUNDLE)
-
-
-def decode_media(media_df, repartition: int | None = None):
-    """media store DataFrame → fragment DataFrame.
-
-    ``repartition`` round-robins the (unkeyed) media rows so decode cost
-    spreads evenly across executors regardless of upstream file layout —
-    the fixture-world analogue of the reference's DataLoader sharding.
-    """
-    df = media_df.select(*_MEDIA_COLS)
-    if repartition:
-        df = df.repartition(repartition)
-    bc = _broadcast_bundle(media_df.sparkSession)
-    return df.mapInPandas(_make_decode_batches(bc),
-                          schema=MEDIA_FRAGMENT_SCHEMA)
+    return decode_row
 
 
 # ---------------------------------------------------------------------------
-# Fast path: pointer-passing media decode.
+# Pointer passing: the media store is read by path, never as a DataFrame.
 #
 # Shipping ~60 KB of tensor bytes per row from the JVM to Python through
 # the Arrow python-runner measures at ~8 MB/s/core (the row-to-Arrow
@@ -258,18 +220,26 @@ def _store_files_df(spark, store_path: str, n_tasks: int):
                 table, F.col("id").cast("int") + 1)).alias("path")))
 
 
-def map_media_store(spark, store_path: str, batch_fn, schema,
-                    columns: list[str] | None = None):
-    """Run ``batch_fn(iter_of_pandas)`` over the media store with
-    executor-side pyarrow reads: one Python task per core, each reading
+def map_media_store(spark, store_path: str, row_fn, schema: str,
+                    columns: list[str]):
+    """The one media row loop: ``row_fn(row)`` over every row of the
+    media store, ``row`` a dict of ``columns``, returning a list of
+    output tuples in ``schema`` order (zero, one or many per row).
+
+    Executor-side pyarrow reads: one Python task per core, each reading
     one byte-balanced group of data files (``_store_files_df``). One
     task per core rather than more, because every Python task has a
-    fixed cost (see "Fast path" above) that no rebalancing repays."""
+    fixed cost (see "Pointer passing" above) that no rebalancing
+    repays. Each Arrow batch of the store yields one output DataFrame,
+    empty ones included."""
+    from pyspark.sql.types import StructType
+
+    names = StructType.fromDDL(schema).fieldNames()
     files_df = _store_files_df(spark, store_path,
                                spark.sparkContext.defaultParallelism)
-    cols = columns
 
     def per_file(batches):
+        import pandas as pd
         import pyarrow.parquet as pq
 
         for pdf in batches:
@@ -281,17 +251,22 @@ def map_media_store(spark, store_path: str, batch_fn, schema,
                 # use_threads=False so workers don't each spin up
                 # Arrow's cpu_count-wide pool (~32x oversubscription)
                 pf = pq.ParquetFile(path)
-                for rb in pf.iter_batches(batch_size=512, columns=cols,
+                for rb in pf.iter_batches(batch_size=512, columns=columns,
                                           use_threads=False):
-                    yield from batch_fn(iter([rb.to_pandas()]))
+                    out = []
+                    for row in rb.to_pandas().itertuples(index=False):
+                        out.extend(row_fn(row._asdict()))
+                    yield pd.DataFrame(out, columns=names)
 
     return files_df.mapInPandas(per_file, schema=schema)
 
 
 def decode_media_store(spark, store_path: str):
-    """media store directory → fragment DataFrame (fast path)."""
-    return map_media_store(spark, store_path,
-                           _make_decode_batches(_broadcast_bundle(spark)),
+    """media store directory → fragment DataFrame."""
+    from paddleocr_spark.extract_core import MODEL_BUNDLE
+
+    bundle_bc = spark.sparkContext.broadcast(MODEL_BUNDLE)
+    return map_media_store(spark, store_path, _decode_row_fn(bundle_bc),
                            MEDIA_FRAGMENT_SCHEMA, columns=_MEDIA_COLS)
 
 
@@ -301,24 +276,15 @@ def decode_media_store(spark, store_path: str):
 _MASTER_COLS = [c for c in _MEDIA_COLS if c != "cls_probs"]
 
 
-def _master_html_batches(batches):
-    import pandas as pd
-
+def _master_html_row(d):
     from paddleocr_spark.extract_core import master_html_for_row
 
-    for pdf in batches:
-        refs, htmls = [], []
-        for row in pdf.itertuples(index=False):
-            d = row._asdict()
-            html = master_html_for_row(d)
-            if html is not None:
-                refs.append(d["media_ref"])
-                htmls.append(html)
-        yield pd.DataFrame({"media_ref": refs, "master_html": htmls})
+    html = master_html_for_row(d)
+    return [] if html is None else [(d["media_ref"], html)]
 
 
 def master_html_store(spark, store_path: str):
-    return map_media_store(spark, store_path, _master_html_batches,
+    return map_media_store(spark, store_path, _master_html_row,
                            "media_ref string, master_html string",
                            columns=_MASTER_COLS)
 

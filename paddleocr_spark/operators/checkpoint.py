@@ -94,16 +94,18 @@ def completed_buckets(spark, out_dir: str, run_id: str,
     return {r.bucket for r in rows}
 
 
-def run_with_checkpoint(spark, docs_df, media_df, out_dir: str,
+def run_with_checkpoint(spark, docs_df, store_path: str, out_dir: str,
                         run_id: str, n_buckets: int = 8,
                         input_snapshot: str = "synthetic",
                         fail_after_buckets: int | None = None,
                         salt_width: int | None = None):
     """Process all not-yet-completed buckets; returns the list of
-    buckets processed this invocation. ``fail_after_buckets`` simulates
-    a mid-run crash for the resume test. ``salt_width`` overrides the
-    salted-ordering bucket width (extract_spans.SALT_WIDTH default);
-    0 forces the plain per-doc window."""
+    buckets processed this invocation. ``store_path`` is the media
+    store's parquet directory, read by path only and decoded once for
+    all buckets. ``fail_after_buckets`` simulates a mid-run crash for
+    the resume test. ``salt_width`` overrides the salted-ordering
+    bucket width (extract_spans.SALT_WIDTH default); 0 forces the
+    plain per-doc window."""
     from pyspark.sql import functions as F
 
     done = completed_buckets(spark, out_dir, run_id, n_buckets,
@@ -121,17 +123,12 @@ def run_with_checkpoint(spark, docs_df, media_df, out_dir: str,
     # the store decode is the job's dominant cost and is the same for
     # every bucket — decode ONCE and share (was O(n_buckets x decode));
     # likewise resolve the auto-salt statistic once over all docs
-    from paddleocr_spark.functions.udfs import (
-        decode_media,
-        decode_media_store,
-    )
+    from paddleocr_spark.functions.udfs import decode_media_store
     from paddleocr_spark.operators._cache import eager_persist, release_one
 
     if salt_width is None:
         salt_width = auto_salt_width(docs_df)
-    fragments = eager_persist(
-        decode_media_store(spark, media_df) if isinstance(media_df, str)
-        else decode_media(media_df))
+    fragments = eager_persist(decode_media_store(spark, store_path))
 
     processed = []
     try:
@@ -140,7 +137,7 @@ def run_with_checkpoint(spark, docs_df, media_df, out_dir: str,
                 break
             t0 = time.time()
             docs_b = docs_df.where(bucket_of == b)
-            out = extract_spans(docs_b, media_df, salt_width=salt_width,
+            out = extract_spans(docs_b, store_path, salt_width=salt_width,
                                 fragments_df=fragments)
             # write to a temp dir, then os.rename into place: readers
             # never see a half-written bucket (POSIX rename is atomic;

@@ -48,11 +48,7 @@ Scale design notes (the parts that matter at 10^12 docs):
 from __future__ import annotations
 
 from paddleocr_spark.corpus import BOILERPLATE_RE
-from paddleocr_spark.functions.udfs import (
-    ERROR_KIND,
-    decode_media,
-    decode_media_store,
-)
+from paddleocr_spark.functions.udfs import ERROR_KIND, decode_media_store
 
 __all__ = ["explode_spans", "clean_text_col", "extract_spans",
            "SALT_WIDTH", "auto_salt_width"]
@@ -94,17 +90,16 @@ def explode_spans(docs_df):
             .select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset"))
 
 
-def extract_spans(docs_df, media, decode_partitions: int | None = None,
+def extract_spans(docs_df, store_path: str,
                   salt_width: int | str = "auto",
                   keep_offset: bool = False,
                   fragments_df=None):
     """docs + media store → ordered span rows
     (doc_id, order, kind, text, media_ref, conf).
 
-    ``media`` is either a DataFrame (generic path: tensors cross the
-    JVM→Python Arrow boundary — fine for small stores) or a parquet
-    store path (fast pointer-passing path: tasks read their split
-    directly with pyarrow; see functions/udfs.py).
+    ``store_path`` is the media store's parquet directory, read by path
+    only: each decode task reads its files directly with pyarrow (see
+    functions/udfs.py); no tensor column ever enters the JVM.
 
     ``salt_width``: "auto" (default) enables the salted two-phase
     ordering only when some doc exceeds SALT_WIDTH spans (one cheap
@@ -118,15 +113,11 @@ def extract_spans(docs_df, media, decode_partitions: int | None = None,
 
     if salt_width == "auto":
         salt_width = auto_salt_width(docs_df)
-    if fragments_df is not None:
-        # pre-decoded fragments (the checkpoint loop decodes the store
-        # ONCE and shares it across buckets instead of paying the
-        # dominant decode cost per bucket)
-        fragments = fragments_df
-    elif isinstance(media, str):
-        fragments = decode_media_store(docs_df.sparkSession, media)
-    else:
-        fragments = decode_media(media, repartition=decode_partitions)
+    # pre-decoded fragments: the checkpoint loop and the stream decode
+    # the store ONCE and share it instead of paying the dominant decode
+    # cost per bucket or per epoch
+    fragments = (fragments_df if fragments_df is not None
+                 else decode_media_store(docs_df.sparkSession, store_path))
     frags = fragments.select(
         F.col("media_ref").alias("join_key"),
         # second join key: fragments only ever match MEDIA spans — a

@@ -194,49 +194,34 @@ def corpus_det_metric(media_df, fragments_df):
     )
 
 
-def det_iou_metric(media):
+def det_iou_metric(store_path: str):
     """DetectionIoUEvaluator as a distributed job (the reference's
     valid() evaluation flow, ``toddleocr/utils/valid.py:10-82``):
-    per-media greedy IoU matching in a mapInPandas stage emitting
+    per-media greedy IoU matching in the media row loop emitting
     (matched, gt_care, det_care) partials, then a global agg +
     combine_results finalize — partial/final exactly as DetMetric
-    (``toddleocr/metrics/det.py:6-53``).
-
-    ``media``: DataFrame or media-store path (fast pointer-passing
-    read, see functions/udfs.map_media_store)."""
+    (``toddleocr/metrics/det.py:6-53``)."""
     from pyspark.sql import functions as F
 
-    def eval_batches(batches):
+    def eval_row(d):
         import numpy as np
-        import pandas as pd
 
         from paddleocr_spark.corpus import dequantize_map
         from paddleocr_spark.kernels.db import db_postprocess
         from paddleocr_spark.kernels.eval_det_iou import evaluate_image
 
-        for pdf in batches:
-            out = {"media_ref": [], "matched": [], "gt_care": [],
-                   "det_care": []}
-            for row in pdf.itertuples(index=False):
-                d = row._asdict()
-                pm = dequantize_map(d["det_map"], int(d["det_h"]),
-                                    int(d["det_w"]))
-                pred = db_postprocess(pm, [float(x) for x in d["shape_list"]])
-                gt = [{"points": np.asarray(b, dtype=np.float64).reshape(4, 2)}
-                      for b in d["gt_boxes"]]
-                m, g, dc = evaluate_image(
-                    gt, [{"points": p} for p in pred])
-                out["media_ref"].append(d["media_ref"])
-                out["matched"].append(m)
-                out["gt_care"].append(g)
-                out["det_care"].append(dc)
-            yield pd.DataFrame(out)
+        pm = dequantize_map(d["det_map"], int(d["det_h"]), int(d["det_w"]))
+        pred = db_postprocess(pm, [float(x) for x in d["shape_list"]])
+        gt = [{"points": np.asarray(b, dtype=np.float64).reshape(4, 2)}
+              for b in d["gt_boxes"]]
+        return [(d["media_ref"],
+                 *evaluate_image(gt, [{"points": p} for p in pred]))]
 
-    eval_cols = ["media_ref", "det_map", "det_h", "det_w", "shape_list",
-                 "gt_boxes"]
-    eval_schema = ("media_ref string, matched long, gt_care long, "
-                   "det_care long")
-    partials = _map_media(media, eval_batches, eval_schema, eval_cols)
+    partials = _map_media(
+        store_path, eval_row,
+        "media_ref string, matched long, gt_care long, det_care long",
+        ["media_ref", "det_map", "det_h", "det_w", "shape_list",
+         "gt_boxes"])
     totals = partials.agg(F.sum("matched").alias("m"),
                           F.sum("gt_care").alias("g"),
                           F.sum("det_care").alias("d"))
@@ -254,46 +239,35 @@ def det_iou_metric(media):
     )
 
 
-def _map_media(media, batch_fn, schema, columns):
-    """DataFrame-or-store-path dispatch shared by the mapInPandas
-    metric jobs (same pattern as det_iou_metric)."""
-    if isinstance(media, str):
-        from pyspark.sql import SparkSession
+def _map_media(store_path, row_fn, schema, columns):
+    """The per-media partials of a store metric, through the shared
+    media row loop in the active session."""
+    from pyspark.sql import SparkSession
 
-        from paddleocr_spark.functions.udfs import map_media_store
+    from paddleocr_spark.functions.udfs import map_media_store
 
-        return map_media_store(SparkSession.active(), media, batch_fn,
-                               schema, columns=columns)
-    return media.select(*columns).mapInPandas(batch_fn, schema=schema)
+    return map_media_store(SparkSession.active(), store_path, row_fn,
+                           schema, columns=columns)
 
 
-def sr_metric(media):
+def sr_metric(store_path: str):
     """SRMetric (``toddleocr/metrics/sr.py:87-150``): mean PSNR + SSIM
     between image pairs, as per-media partials + a global mean. The
     pair is the stored det map vs a deterministic 4-bit-requantized
     degradation of it (the fixture stand-in for SR input/output)."""
     from pyspark.sql import functions as F
 
-    def eval_batches(batches):
+    def eval_row(d):
         import numpy as np
-        import pandas as pd
 
         from paddleocr_spark.corpus import dequantize_map
         from paddleocr_spark.kernels.sr import psnr, ssim
 
-        for pdf in batches:
-            out = {"media_ref": [], "psnr": [], "ssim": []}
-            for row in pdf.itertuples(index=False):
-                d = row._asdict()
-                img = dequantize_map(d["det_map"], int(d["det_h"]),
-                                     int(d["det_w"]))
-                degraded = (np.round(img * 15.0) / 15.0).astype(np.float32)
-                out["media_ref"].append(d["media_ref"])
-                out["psnr"].append(psnr(img, degraded))
-                out["ssim"].append(ssim(img, degraded))
-            yield pd.DataFrame(out)
+        img = dequantize_map(d["det_map"], int(d["det_h"]), int(d["det_w"]))
+        degraded = (np.round(img * 15.0) / 15.0).astype(np.float32)
+        return [(d["media_ref"], psnr(img, degraded), ssim(img, degraded))]
 
-    partials = _map_media(media, eval_batches,
+    partials = _map_media(store_path, eval_row,
                           "media_ref string, psnr double, ssim double",
                           ["media_ref", "det_map", "det_h", "det_w"])
     return partials.agg(
@@ -302,7 +276,7 @@ def sr_metric(media):
         F.round(F.avg("ssim"), 6).alias("mean_ssim"))
 
 
-def can_metric(media):
+def can_metric(store_path: str):
     """CANMetric (``toddleocr/metrics/rec.py:90-148``): difflib
     SequenceMatcher word scores + exact-match exp rate, accumulated as
     length-weighted partials. Pairs are (gt text, RAW un-rotated
@@ -310,43 +284,30 @@ def can_metric(media):
     from the trivial 1.0."""
     from pyspark.sql import functions as F
 
-    def eval_batches(batches):
+    def eval_row(d):
         from difflib import SequenceMatcher
-
-        import pandas as pd
 
         from paddleocr_spark.corpus import CHARSET, dequantize_logits
         from paddleocr_spark.kernels.ctc import ctc_decode
 
-        for pdf in batches:
-            out = {"media_ref": [], "word_right": [], "exp_right": [],
-                   "n": []}
-            for row in pdf.itertuples(index=False):
-                d = row._asdict()
-                idxs = [int(i) for i in d["gt_text_idx"]]
-                if not idxs:
-                    continue
-                scores = []
-                for i in idxs:
-                    gt = d["gt_texts"][i]
-                    raw, _ = ctc_decode(
-                        dequantize_logits(d["rec_logits"][i],
-                                          int(d["rec_t"]),
-                                          int(d["rec_c"])), CHARSET)
-                    m = SequenceMatcher(None, gt, raw,
-                                        autojunk=False).ratio()
-                    scores.append(m * (len(gt) + len(raw)) / len(gt) / 2)
-                n = len(scores)
-                word_rate = sum(scores) / n
-                exp_rate = sum(1 for s in scores if s == 1) / n
-                out["media_ref"].append(d["media_ref"])
-                out["word_right"].append(word_rate * n)
-                out["exp_right"].append(exp_rate * n)
-                out["n"].append(n)
-            yield pd.DataFrame(out)
+        idxs = [int(i) for i in d["gt_text_idx"]]
+        if not idxs:
+            return []
+        scores = []
+        for i in idxs:
+            gt = d["gt_texts"][i]
+            raw, _ = ctc_decode(
+                dequantize_logits(d["rec_logits"][i], int(d["rec_t"]),
+                                  int(d["rec_c"])), CHARSET)
+            m = SequenceMatcher(None, gt, raw, autojunk=False).ratio()
+            scores.append(m * (len(gt) + len(raw)) / len(gt) / 2)
+        n = len(scores)
+        word_rate = sum(scores) / n
+        exp_rate = sum(1 for s in scores if s == 1) / n
+        return [(d["media_ref"], word_rate * n, exp_rate * n, n)]
 
     partials = _map_media(
-        media, eval_batches,
+        store_path, eval_row,
         "media_ref string, word_right double, exp_right double, n long",
         ["media_ref", "gt_texts", "gt_text_idx", "rec_logits",
          "rec_t", "rec_c"])
@@ -356,7 +317,7 @@ def can_metric(media):
         F.round(F.sum("exp_right") / F.sum("n"), 6).alias("exp_rate"))
 
 
-def e2e_metric(media):
+def e2e_metric(store_path: str):
     """E2EMetric (``toddleocr/metrics/e2e.py:7-66`` +
     ``_det_eval.get_score_A``): end-to-end text spotting — a predicted
     box counts only if it IoU>0.5-matches a gt box AND its recognized
@@ -366,9 +327,11 @@ def e2e_metric(media):
     combine_results finalize."""
     from pyspark.sql import functions as F
 
-    def eval_batches(batches):
+    def norm(t):
+        return "".join(c for c in t.lower() if c.isalnum())
+
+    def eval_row(d):
         import numpy as np
-        import pandas as pd
 
         from paddleocr_spark.corpus import CHARSET, dequantize_logits, \
             dequantize_map
@@ -377,50 +340,35 @@ def e2e_metric(media):
         from paddleocr_spark.kernels.eval_det_iou import poly_iou
         from paddleocr_spark.kernels.reading_order import sorted_boxes
 
-        def norm(t):
-            return "".join(c for c in t.lower() if c.isalnum())
-
-        for pdf in batches:
-            out = {"media_ref": [], "matched": [], "gt_care": [],
-                   "det_care": []}
-            for row in pdf.itertuples(index=False):
-                d = row._asdict()
-                pm = dequantize_map(d["det_map"], int(d["det_h"]),
-                                    int(d["det_w"]))
-                # rec_logits are stored in sorted_boxes order — sort
-                # pred_boxes the same way or texts[pi] pairs with a
-                # DIFFERENT box (same fix as golden.py's e2e twin)
-                pred_boxes = sorted_boxes(db_postprocess(
-                    pm, [float(x) for x in d["shape_list"]]))
-                texts = []
-                for lg in d["rec_logits"]:
-                    t, _ = ctc_decode(
-                        dequantize_logits(lg, int(d["rec_t"]),
-                                          int(d["rec_c"])), CHARSET)
-                    texts.append(t)
-                gt = [(np.asarray(b, dtype=np.float64).reshape(4, 2),
-                       norm(d["gt_texts"][i]))
-                      for i, b in enumerate(d["gt_boxes"])]
-                used = set()
-                matched = 0
-                for pi, pb in enumerate(pred_boxes):
-                    for gi, (gb, gtext) in enumerate(gt):
-                        if gi in used:
-                            continue
-                        if poly_iou(np.asarray(pb, dtype=np.float64),
-                                    gb) > 0.5 \
-                                and norm(texts[pi]) == gtext:
-                            used.add(gi)
-                            matched += 1
-                            break
-                out["media_ref"].append(d["media_ref"])
-                out["matched"].append(matched)
-                out["gt_care"].append(len(gt))
-                out["det_care"].append(len(pred_boxes))
-            yield pd.DataFrame(out)
+        pm = dequantize_map(d["det_map"], int(d["det_h"]), int(d["det_w"]))
+        # rec_logits are stored in sorted_boxes order — sort pred_boxes
+        # the same way or texts[pi] pairs with a DIFFERENT box (same
+        # fix as golden.py's e2e twin)
+        pred_boxes = sorted_boxes(db_postprocess(
+            pm, [float(x) for x in d["shape_list"]]))
+        texts = []
+        for lg in d["rec_logits"]:
+            t, _ = ctc_decode(dequantize_logits(lg, int(d["rec_t"]),
+                                                int(d["rec_c"])), CHARSET)
+            texts.append(t)
+        gt = [(np.asarray(b, dtype=np.float64).reshape(4, 2),
+               norm(d["gt_texts"][i]))
+              for i, b in enumerate(d["gt_boxes"])]
+        used = set()
+        matched = 0
+        for pi, pb in enumerate(pred_boxes):
+            for gi, (gb, gtext) in enumerate(gt):
+                if gi in used:
+                    continue
+                if poly_iou(np.asarray(pb, dtype=np.float64), gb) > 0.5 \
+                        and norm(texts[pi]) == gtext:
+                    used.add(gi)
+                    matched += 1
+                    break
+        return [(d["media_ref"], matched, len(gt), len(pred_boxes))]
 
     partials = _map_media(
-        media, eval_batches,
+        store_path, eval_row,
         "media_ref string, matched long, gt_care long, det_care long",
         ["media_ref", "det_map", "det_h", "det_w", "shape_list",
          "gt_boxes", "gt_texts", "rec_logits", "rec_t", "rec_c"])
@@ -440,7 +388,7 @@ def e2e_metric(media):
                 .otherwise(0.0), 6).alias("f_score_e2e"))
 
 
-def ct_metric(media):
+def ct_metric(store_path: str):
     """CTMetric (``toddleocr/metrics/ct.py:6-28``): DetEval-protocol
     scoring of detections — per-media sigma/tau coverage tables +
     one-to-one/one-to-many/many-to-one matching
@@ -451,9 +399,8 @@ def ct_metric(media):
     detections at the fsc_k=0.8 discount."""
     from pyspark.sql import functions as F
 
-    def eval_batches(batches):
+    def eval_row(d):
         import numpy as np
-        import pandas as pd
 
         from paddleocr_spark.corpus import dequantize_map
         from paddleocr_spark.kernels.db import db_postprocess
@@ -462,28 +409,15 @@ def ct_metric(media):
             sigma_tau_tables,
         )
 
-        for pdf in batches:
-            out = {"media_ref": [], "recall_accum": [],
-                   "precision_accum": [], "n_gt": [], "n_det": []}
-            for row in pdf.itertuples(index=False):
-                d = row._asdict()
-                pm = dequantize_map(d["det_map"], int(d["det_h"]),
-                                    int(d["det_w"]))
-                pred = db_postprocess(pm, [float(x) for x in d["shape_list"]])
-                gt_polys = [np.asarray(b, dtype=np.float64).reshape(4, 2)
-                            for b in d["gt_boxes"]]
-                sigma, tau = sigma_tau_tables(gt_polys, list(d["gt_texts"]),
-                                              pred)
-                r, p, ng, nd = deteval_sample(sigma, tau)
-                out["media_ref"].append(d["media_ref"])
-                out["recall_accum"].append(r)
-                out["precision_accum"].append(p)
-                out["n_gt"].append(ng)
-                out["n_det"].append(nd)
-            yield pd.DataFrame(out)
+        pm = dequantize_map(d["det_map"], int(d["det_h"]), int(d["det_w"]))
+        pred = db_postprocess(pm, [float(x) for x in d["shape_list"]])
+        gt_polys = [np.asarray(b, dtype=np.float64).reshape(4, 2)
+                    for b in d["gt_boxes"]]
+        sigma, tau = sigma_tau_tables(gt_polys, list(d["gt_texts"]), pred)
+        return [(d["media_ref"], *deteval_sample(sigma, tau))]
 
     partials = _map_media(
-        media, eval_batches,
+        store_path, eval_row,
         "media_ref string, recall_accum double, precision_accum double, "
         "n_gt long, n_det long",
         ["media_ref", "det_map", "det_h", "det_w", "shape_list",

@@ -34,25 +34,16 @@ PHASH_MAX_HAMMING = 3
 _N_BLOCKS = 4  # 4 x 16-bit blocks: pigeonhole-complete for hamming <= 3
 
 
-def _phash_batches(batches):
+def _phash_row(d):
     import numpy as np
-    import pandas as pd
 
     from paddleocr_spark.corpus import dequantize_map
     from paddleocr_spark.kernels.phash import phash64
 
-    for pdf in batches:
-        out = {"media_ref": [], "variant": [], "phash": []}
-        for row in pdf.itertuples(index=False):
-            d = row._asdict()
-            pm = dequantize_map(d["det_map"], int(d["det_h"]),
-                                int(d["det_w"]))
-            degraded = (np.round(pm * 15.0) / 15.0).astype(np.float32)
-            for variant, img in ((0, pm), (1, degraded)):
-                out["media_ref"].append(d["media_ref"])
-                out["variant"].append(variant)
-                out["phash"].append(phash64(img))
-        yield pd.DataFrame(out)
+    pm = dequantize_map(d["det_map"], int(d["det_h"]), int(d["det_w"]))
+    degraded = (np.round(pm * 15.0) / 15.0).astype(np.float32)
+    return [(d["media_ref"], variant, phash64(img))
+            for variant, img in ((0, pm), (1, degraded))]
 
 
 def _phash_relation(spark, sf_dir: str):
@@ -61,13 +52,17 @@ def _phash_relation(spark, sf_dir: str):
 
     _, media_path = entry_mod.corpus_paths(spark, sf_dir)
     return map_media_store(
-        spark, media_path, _phash_batches,
+        spark, media_path, _phash_row,
         "media_ref string, variant long, phash long",
         columns=["media_ref", "det_map", "det_h", "det_w"])
 
 
 def image_phash(spark, sf_dir: str):
-    return (_phash_relation(spark, sf_dir)
+    from paddleocr_spark.operators._cache import eager_persist
+
+    # the sort's range-partition sampling job fills the cache, so the
+    # Python stage runs once, not once more for the sampling
+    return (eager_persist(_phash_relation(spark, sf_dir), materialize=False)
             .orderBy("media_ref", "variant"))
 
 

@@ -21,11 +21,12 @@ __all__ = ["incremental_extract", "windowed_event_counts",
            "streaming_page_ingest", "streaming_partitioned_events"]
 
 
-def incremental_extract(spark, docs_dir: str, media_df, out_dir: str,
-                        checkpoint_dir: str):
+def incremental_extract(spark, docs_dir: str, store_path: str,
+                        out_dir: str, checkpoint_dir: str):
     """Start a stream: new parquet files under ``docs_dir`` →
-    extract_spans → epoch-partitioned write to ``out_dir``. Returns the
-    StreamingQuery (caller drives it; tests use processAllAvailable()).
+    extract_spans against the media store at ``store_path`` →
+    epoch-partitioned write to ``out_dir``. Returns the StreamingQuery
+    (caller drives it; tests use processAllAvailable()).
 
     Exactly-once: each epoch lands in its own ``epoch=<id>`` partition
     via dynamic partition overwrite, so a crash-replayed epoch REPLACES
@@ -33,23 +34,24 @@ def incremental_extract(spark, docs_dir: str, media_df, out_dir: str,
     be at-least-once only — the streaming checkpoint dedups source
     offsets, not sink writes).
 
-    The media store is decoded ONCE, before the stream starts, and the
+    The media store is read by path and decoded ONCE
+    (``decode_media_store``), before the stream starts, and the
     persisted fragments are shared by every micro-batch — re-decoding
     the (static) store per epoch would multiply the job's dominant cost
     by the number of batches."""
     from pyspark.sql import functions as F
 
-    from paddleocr_spark.functions.udfs import decode_media
+    from paddleocr_spark.functions.udfs import decode_media_store
     from paddleocr_spark.operators._cache import eager_persist
 
-    fragments = eager_persist(decode_media(media_df))
+    fragments = eager_persist(decode_media_store(spark, store_path))
     stream = (spark.readStream
               .schema(docs_schema())
               .option("maxFilesPerTrigger", 8)
               .parquet(docs_dir))
 
     def process(batch_df, epoch_id: int):
-        (extract_spans(batch_df, media_df, fragments_df=fragments)
+        (extract_spans(batch_df, store_path, fragments_df=fragments)
          .withColumn("epoch", F.lit(int(epoch_id)))
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")

@@ -6,7 +6,7 @@ import shutil
 
 import pytest
 
-from paddleocr_spark.corpus import synthesize_docs, synthesize_media
+from paddleocr_spark.corpus import synthesize_docs
 from paddleocr_spark.operators.checkpoint import (
     completed_buckets,
     read_output,
@@ -14,11 +14,10 @@ from paddleocr_spark.operators.checkpoint import (
 )
 
 
-@pytest.fixture()
-def corpus(spark):
+@pytest.fixture(scope="module")
+def corpus(spark, media_store):
     docs = synthesize_docs(spark, 20, seed=11, heavy_frac=0.0)
-    media = synthesize_media(spark, docs, seed=11)
-    return docs, media
+    return docs, media_store(docs, 11)
 
 
 def _rows(df):
@@ -88,19 +87,13 @@ def test_checkpoint_metrics_rows(spark, corpus, tmp_path):
     assert total_spans == extract_spans(docs, media).count()
 
 
-def test_resume_with_different_bucket_count_refused(spark, tmp_path):
+def test_resume_with_different_bucket_count_refused(spark, tmp_path,
+                                                   media_store):
     """Re-running the same run_id with a changed --buckets must raise:
     completed bucket ids under a different partitioning would be
     skipped wrongly and documents silently dropped."""
-    import pytest
-
-    from paddleocr_spark.corpus import synthesize_docs, synthesize_media
-    from paddleocr_spark.operators.checkpoint import run_with_checkpoint
-
     docs = synthesize_docs(spark, 8, seed=5, heavy_frac=0.0)
-    media = synthesize_media(spark, docs, seed=5)
-    media.write.mode("overwrite").parquet(str(tmp_path / "m"))
-    media = spark.read.parquet(str(tmp_path / "m"))
+    media = media_store(docs, 5)
     out = str(tmp_path / "out")
     run_with_checkpoint(spark, docs, media, out, "runX", n_buckets=4,
                         fail_after_buckets=2)

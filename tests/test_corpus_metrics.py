@@ -5,20 +5,27 @@ path (IoU geometry / token equality) beside span-sequence equality."""
 import pytest
 
 import __spark_entry__ as entry_mod
-from paddleocr_spark.functions.udfs import decode_media
+from paddleocr_spark.corpus import media_schema
+from paddleocr_spark.functions.udfs import decode_media_store
 from paddleocr_spark.operators import metrics
 
 SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
-def media(spark):
-    _, m = entry_mod.load_corpus(spark, SF, n_docs=80)
-    return m
+def store(spark):
+    _, path = entry_mod.corpus_paths(spark, SF, n_docs=80)
+    return path
 
 
-def test_corpus_rec_metric_perfect(spark, media):
-    row = metrics.corpus_rec_metric(media, decode_media(media)).collect()[0]
+@pytest.fixture(scope="module")
+def media_and_fragments(spark, store):
+    return (spark.read.schema(media_schema()).parquet(store),
+            decode_media_store(spark, store))
+
+
+def test_corpus_rec_metric_perfect(spark, media_and_fragments):
+    row = metrics.corpus_rec_metric(*media_and_fragments).collect()[0]
     assert row.all_num > 0
     # only rows dropped by DROP_SCORE/empty-text may miss; the rest
     # must match exactly
@@ -26,14 +33,14 @@ def test_corpus_rec_metric_perfect(spark, media):
     assert row.norm_edit_dis >= 0.99
 
 
-def test_det_iou_metric_perfect(spark, media):
-    row = metrics.det_iou_metric(media).collect()[0]
+def test_det_iou_metric_perfect(spark, store):
+    row = metrics.det_iou_metric(store).collect()[0]
     assert row.gt_total > 0
     assert row.precision == 1.0 and row.recall == 1.0 and row.hmean == 1.0
 
 
-def test_table_structure_metric_perfect(spark, media):
-    row = metrics.table_structure_metric(media, decode_media(media)).collect()[0]
+def test_table_structure_metric_perfect(spark, media_and_fragments):
+    row = metrics.table_structure_metric(*media_and_fragments).collect()[0]
     assert row.all_num > 0
     assert row.acc == 1.0
 

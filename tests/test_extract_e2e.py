@@ -5,7 +5,7 @@ BASELINE.json per-row invariant, verified per FIXTURES.md §3."""
 
 import pytest
 
-from paddleocr_spark.corpus import synthesize_docs, synthesize_media
+from paddleocr_spark.corpus import synthesize_docs
 from paddleocr_spark.operators.extract import extract_spans
 from paddleocr_spark.reference_path import golden_corpus
 
@@ -20,9 +20,9 @@ def _golden_key_rows(golden):
 
 
 @pytest.fixture(scope="module")
-def pipeline_result(spark):
+def pipeline_result(spark, media_store):
     docs = synthesize_docs(spark, N_DOCS, seed=SEED, heavy_frac=HEAVY)
-    media = synthesize_media(spark, docs, seed=SEED)
+    media = media_store(docs, SEED)
     out = extract_spans(docs, media).collect()
     _, _, golden = golden_corpus(N_DOCS, seed=SEED, heavy_frac=HEAVY)
     return out, golden
@@ -41,28 +41,36 @@ def test_confidences_match(pipeline_result):
     assert got == want
 
 
-def test_partition_count_independence(spark):
+def test_partition_count_independence(spark, media_store):
     """Same results at different parallelism (FIXTURES.md §3 invariant:
-    local[2]-vs-local[8] analogue via shuffle partition counts)."""
+    local[2]-vs-local[8] analogue via partition counts): the docs'
+    partitions and the store's file count (so the decode's task count)
+    both vary."""
+    import glob
+    import os
+
     docs = synthesize_docs(spark, 15, seed=7, heavy_frac=0.0)
-    media = synthesize_media(spark, docs, seed=7)
-    a = extract_spans(docs.repartition(1), media.repartition(1)).collect()
+    one = media_store(docs, 7, partitions=1)
+    five = media_store(docs, 7, partitions=5)
+    n_files = lambda p: len(glob.glob(os.path.join(p, "*.parquet")))
+    assert (n_files(one), n_files(five)) == (1, 5)
+    a = extract_spans(docs.repartition(1), one).collect()
     # salt_width=3 forces multi-bucket salted ordering even on these
     # small docs (every doc with >3 spans spans several buckets)
-    b = extract_spans(docs.repartition(7), media.repartition(5),
-                      decode_partitions=3, salt_width=3).collect()
+    b = extract_spans(docs.repartition(7), five, salt_width=3).collect()
     key = lambda rows: sorted((r.doc_id, r.order, r.kind, r.text, r.media_ref)
                               for r in rows)
     assert key(a) == key(b)
 
 
-def test_salted_ordering_equals_window_on_pathological_doc(spark):
+def test_salted_ordering_equals_window_on_pathological_doc(spark,
+                                                           media_store):
     """The salted two-phase ordering must be bit-identical to the
     plain per-doc window, including on a pathological media-heavy doc
     that spans many offset buckets (the skew case it exists for)."""
     docs = synthesize_docs(spark, 10, seed=11, heavy_frac=0.0,
                            patho_docs=1, patho_spans=3000, patho_pool=4)
-    media = synthesize_media(spark, docs, seed=11)
+    media = media_store(docs, 11)
     rows = lambda out: sorted(
         (r.doc_id, r.order, r.kind, r.text, r.media_ref, round(r.conf, 9))
         for r in out)
@@ -117,30 +125,31 @@ def test_order_is_dense_per_doc(pipeline_result):
         assert sorted(orders) == list(range(len(orders)))
 
 
-def test_fast_path_equals_generic_path(spark, tmp_path):
-    """Pointer-passing decode (decode_media_store) must equal the
-    generic DataFrame path row-for-row."""
-    from paddleocr_spark.functions.udfs import decode_media, decode_media_store
+def test_store_decode_equals_sequential_reference(spark, media_store):
+    """The store decode (one Spark row loop over executor-side pyarrow
+    reads) equals the sequential reference: ``decode_media_row`` over
+    the store's rows read with pyarrow, fragment for fragment."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from paddleocr_spark.extract_core import decode_media_row
+    from paddleocr_spark.functions.udfs import decode_media_store
 
     docs = synthesize_docs(spark, 12, seed=21, heavy_frac=0.0)
-    media = synthesize_media(spark, docs, seed=21, partitions=3)
-    store = str(tmp_path / "media_store")
-    media.write.mode("overwrite").parquet(store)
-    media_df = spark.read.parquet(store)
-
-    key = lambda rows: sorted((r.media_ref, r.box_idx, r.out_kind,
-                               r.out_text, round(r.conf, 9), r.aux)
-                              for r in rows)
-    a = key(decode_media(media_df).collect())
-    b = key(decode_media_store(spark, store).collect())
-    assert a == b
-
-    # extract_spans accepts either form with identical results
-    ra = extract_spans(docs, media_df).collect()
-    rb = extract_spans(docs, store).collect()
-    k2 = lambda rows: sorted((r.doc_id, r.order, r.kind, r.text,
-                              r.media_ref) for r in rows)
-    assert k2(ra) == k2(rb)
+    store = media_store(docs, 21, partitions=3)
+    want = []
+    for path in sorted(glob.glob(os.path.join(store, "*.parquet"))):
+        for row in pq.read_table(path).to_pylist():
+            want += [(row["media_ref"], f["frag_idx"], f["box_idx"],
+                      f["out_kind"], f["out_text"], round(f["conf"], 9),
+                      f["cls_label"], round(f["cls_score"], 9), f["aux"])
+                     for f in decode_media_row(row)]
+    got = [(r.media_ref, r.frag_idx, r.box_idx, r.out_kind, r.out_text,
+            round(r.conf, 9), r.cls_label, round(r.cls_score, 9), r.aux)
+           for r in decode_media_store(spark, store).collect()]
+    assert want and sorted(got) == sorted(want)
 
 
 def test_model_bundle_roundtrip():
@@ -159,43 +168,49 @@ def test_model_bundle_roundtrip():
     assert resolve_bundle(None) == (_CHARSET, DROP_SCORE)
 
 
-def test_poison_media_row_quarantined(spark):
-    """A corrupt media row must not kill the decode job: it becomes an
-    ERROR_KIND fragment (countable via decode_errors), is excluded
-    from span assembly, and every other row decodes unchanged."""
+def test_poison_media_row_quarantined(spark, media_store, tmp_path):
+    """A corrupt media row in the store must not kill the decode job:
+    it becomes an ERROR_KIND fragment (countable via decode_errors), is
+    excluded from span assembly, and every other row decodes
+    unchanged."""
     from pyspark.sql import functions as F
 
+    from paddleocr_spark.corpus import media_schema
     from paddleocr_spark.functions.udfs import (
         ERROR_KIND,
         decode_errors,
-        decode_media,
+        decode_media_store,
     )
 
     docs = synthesize_docs(spark, 8, seed=33, heavy_frac=0.0)
-    media = synthesize_media(spark, docs, seed=33, partitions=2)
+    clean = media_store(docs, 33, partitions=2)
+    media = spark.read.schema(media_schema()).parquet(clean)
     victim = media.select("media_ref").orderBy("media_ref").first()[0]
     # truncate the victim's det_map so dequantize/reshape raises
-    poisoned = media.withColumn(
+    poisoned = str(tmp_path / "poisoned")
+    (media.withColumn(
         "det_map",
         F.when(F.col("media_ref") == victim,
                F.substring(F.col("det_map"), 1, 3))
         .otherwise(F.col("det_map")))
+     .write.parquet(poisoned))
 
-    frags = decode_media(poisoned)
+    frags = decode_media_store(spark, poisoned)
     errs = decode_errors(frags).collect()
     assert [e["media_ref"] for e in errs] == [victim]
     assert errs[0]["error"]  # non-empty reason string
 
-    # all other media decode exactly as before
+    # all other media decode exactly as from the clean store
     key = lambda rows: sorted((r.media_ref, r.box_idx, r.out_kind,
                                r.out_text, round(r.conf, 9))
                               for r in rows if r.media_ref != victim)
-    clean = decode_media(media).collect()
     assert key([r for r in frags.collect()
-                if r.out_kind != ERROR_KIND]) == key(clean)
+                if r.out_kind != ERROR_KIND]) == key(
+        decode_media_store(spark, clean).collect())
 
     # span assembly drops the quarantined media silently
     spans = extract_spans(docs, poisoned).collect()
+    assert spans
     assert all(r.media_ref != victim for r in spans)
     assert not any(r.kind == ERROR_KIND for r in spans)
 
@@ -223,15 +238,14 @@ def test_clean_text_python_twin_matches_spark_on_control_chars(spark):
     assert got == want, list(zip(cases, got, want))
 
 
-def test_duplicate_offsets_order_deterministically(spark):
+def test_duplicate_offsets_order_deterministically(spark, media_store):
     """The schema allows two spans at the SAME offset; the ordering
     tie must break deterministically (kind/media_ref/text tiebreak) and
     identically on the plain and salted paths."""
-    from paddleocr_spark.corpus import docs_schema, synthesize_docs, synthesize_media
-    from paddleocr_spark.operators.extract import extract_spans
+    from paddleocr_spark.corpus import docs_schema
 
     docs = synthesize_docs(spark, 4, seed=7, heavy_frac=0.0)
-    media = synthesize_media(spark, docs, seed=7)
+    media = media_store(docs, 7)
     dup = spark.createDataFrame(
         [("dup_doc", [("text", "zz ties last", "", 5),
                       ("text", "aa ties first", "", 5),

@@ -56,10 +56,12 @@ def test_revenue_by_region_all_broadcast(spark):
 def test_extract_shuffle_budget(spark):
     """Flagship extract: fragments join + final per-doc window; the
     fat tensor columns must not appear past the decode stage."""
-    docs, media = entry_mod.load_corpus(spark, SF, n_docs=50)
+    from paddleocr_spark.corpus import docs_schema
     from paddleocr_spark.operators.extract import extract_spans
 
-    df = extract_spans(docs, media)
+    docs_path, media_path = entry_mod.corpus_paths(spark, SF, n_docs=50)
+    df = extract_spans(spark.read.schema(docs_schema()).parquet(docs_path),
+                       media_path)
     import re
 
     from paddleocr_spark.plans.inspect import formatted_plan
@@ -147,13 +149,15 @@ def test_store_decode_is_one_task_per_core_in_two_jobs(spark):
     assert tasks == [want], tasks
 
 
-def _python_nodes(plan):
-    """The MapInPandas nodes of an executed physical plan, cached plans
-    and AQE query stages included."""
+def _python_nodes(plan, parent=None):
+    """(MapInPandas node, name of the node reading its output) of an
+    executed physical plan, cached plans and AQE query stages included
+    (the wrappers are looked through, not named as the reader)."""
     name = plan.nodeName()
     if name == "MapInPandas":
-        yield plan
+        yield plan, parent
     kids = [plan.children().apply(i) for i in range(plan.children().size())]
+    wrapper = name == "AdaptiveSparkPlan" or name.endswith("QueryStage")
     if name == "AdaptiveSparkPlan":
         kids.append(plan.executedPlan())
     elif name.endswith("QueryStage"):
@@ -161,7 +165,7 @@ def _python_nodes(plan):
     elif name == "InMemoryTableScan":
         kids.append(plan.relation().cachedPlan())
     for kid in kids:
-        yield from _python_nodes(kid)
+        yield from _python_nodes(kid, parent if wrapper else name)
 
 
 def test_det_polygons_runs_its_python_stage_once_per_core(spark):
@@ -180,7 +184,8 @@ def test_det_polygons_runs_its_python_stage_once_per_core(spark):
     try:
         assert "RoundRobinPartitioning" not in formatted_plan(df)
         n_rows = len(df.collect())
-        nodes = list(_python_nodes(df._jdf.queryExecution().executedPlan()))
+        nodes = [n for n, _ in
+                 _python_nodes(df._jdf.queryExecution().executedPlan())]
         assert len(nodes) == 1
         received = nodes[0].metrics().apply("pythonNumRowsReceived").value()
         assert received == n_rows > 0
@@ -296,22 +301,48 @@ def test_bm25_topk_writes_no_trail_for_any_corpus_path(spark, tmp_path):
     assert not list(tmp_path.rglob("bm25_debug"))
 
 
-def test_manifest_planned_decode_matches_dataframe_decode(spark):
-    """Pointer-passing decode planned from the manifest produces the
-    same fragments as the generic DataFrame-decode path."""
-    from paddleocr_spark.functions.udfs import (
-        decode_media,
-        decode_media_store,
-    )
+def test_manifest_planned_decode_matches_glob_planned_decode(spark,
+                                                             monkeypatch):
+    """Store decode planned from the manifest table produces the same
+    fragments as the same store planned from a file glob (the planner
+    for stores that never wrote a manifest)."""
+    from paddleocr_spark.functions import udfs
 
-    docs, media_df = entry_mod.load_corpus(spark, SF, n_docs=50)
     _, media_path = entry_mod.corpus_paths(spark, SF, n_docs=50)
     key = lambda r: (r["media_ref"], r["frag_idx"], r["box_idx"])
-    a = sorted((r.asDict() for r in
-                decode_media_store(spark, media_path).collect()), key=key)
-    b = sorted((r.asDict() for r in
-                decode_media(media_df).collect()), key=key)
-    assert a == b
+    decode = lambda: sorted((r.asDict() for r in udfs.decode_media_store(
+        spark, media_path).collect()), key=key)
+    manifested = decode()
+    monkeypatch.setattr(udfs, "manifest_path", lambda p: p + "_absent")
+    globbed = decode()
+    assert manifested and manifested == globbed
+
+
+@pytest.mark.parametrize("query", [
+    "extract_media_fragments", "det_iou_metric", "sr_metric", "can_metric",
+    "e2e_metric", "ct_metric", "table_master_html", "image_phash"])
+def test_media_query_runs_one_python_stage(spark, query):
+    """Every media query reads the store through ONE Python stage with
+    one task per byte-balanced file group, min(#store files,
+    defaultParallelism), and no shuffle reads the Python output
+    directly (a sort's range-partition sampling over it would run the
+    stage twice)."""
+    from paddleocr_spark.functions.udfs import _list_store_files
+    from paddleocr_spark.operators._cache import release
+
+    _, media_path = entry_mod.corpus_paths(spark, SF)
+    df = entry_mod.queries()[query](spark, SF)
+    try:
+        assert df.collect()
+        nodes = list(_python_nodes(df._jdf.queryExecution().executedPlan()))
+        assert len(nodes) == 1, nodes
+        node, reader = nodes[0]
+        assert reader != "Exchange", query
+        assert node.execute().getNumPartitions() == min(
+            len(_list_store_files(media_path)),
+            spark.sparkContext.defaultParallelism)
+    finally:
+        release(spark)
 
 
 def test_simhash_single_aggregation_pass(spark):

@@ -7,7 +7,7 @@ import os
 
 import pytest
 
-from paddleocr_spark.corpus import synthesize_docs, synthesize_media
+from paddleocr_spark.corpus import synthesize_docs
 from paddleocr_spark.operators import _cache
 from paddleocr_spark.operators.checkpoint import (
     read_output,
@@ -73,11 +73,10 @@ def test_pushed_filters_in_list(spark):
 
 # --- checkpoint: lineage validation, atomic move, targeted release ----
 
-@pytest.fixture()
-def corpus(spark):
+@pytest.fixture(scope="module")
+def corpus(spark, media_store):
     docs = synthesize_docs(spark, 16, seed=23, heavy_frac=0.0)
-    media = synthesize_media(spark, docs, seed=23)
-    return docs, media
+    return docs, media_store(docs, 23)
 
 
 def test_resume_rejects_changed_input_snapshot(spark, corpus, tmp_path):

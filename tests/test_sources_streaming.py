@@ -3,7 +3,7 @@ incremental extraction."""
 
 import os
 
-from paddleocr_spark.corpus import synthesize_docs, synthesize_media
+from paddleocr_spark.corpus import synthesize_docs
 from paddleocr_spark.operators.extract import extract_spans
 from paddleocr_spark.sources.media_files import explode_pages, read_binary_files
 from paddleocr_spark.streaming.incremental import incremental_extract
@@ -27,16 +27,14 @@ def test_binary_source_page_explode(spark, tmp_path):
     assert bytes(by_path["b.bin"][0].content) == b"plain-image-bytes"
 
 
-def test_incremental_extract_matches_batch(spark, tmp_path):
+def test_incremental_extract_matches_batch(spark, tmp_path, media_store):
     """Two file-arrival waves through the stream == one batch run."""
     docs_dir = str(tmp_path / "docs")
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
 
     docs = synthesize_docs(spark, 12, seed=3, heavy_frac=0.0)
-    media = synthesize_media(spark, docs, seed=3)
-    media.write.mode("overwrite").parquet(str(tmp_path / "media"))
-    media = spark.read.parquet(str(tmp_path / "media"))
+    media = media_store(docs, 3)
 
     from pyspark.sql import functions as F
 
