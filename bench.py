@@ -4,7 +4,7 @@
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   input dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[] parallelism (default 32)
+  SPARK_GRAFT_CPUS     local[] parallelism (default: the host's cores)
   SPARK_GRAFT_SCALING  if set, additionally run the flagship extract at
                        local[8] and local[32] on the SAME cached corpus
                        (media store copied to tmpfs, removed after),
@@ -35,18 +35,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Bench sessions need the large driver heap by default: in local mode the
-# executors live in the driver JVM, and at the 24g session default GC
-# doubles the wall time of every Arrow-heavy query (measured on one
-# commit: suite 169-179 s at 24g vs 89 s at 48g — see BENCH/BASELINE.md
-# "host variance" note). Still overridable via the env knob.
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-
 from paddleocr_spark.corpus import docs_schema  # noqa: E402
+from paddleocr_spark.session import default_parallelism  # noqa: E402
 from paddleocr_spark.sources.tables import load_table, table_rows  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_parallelism()
 # override corpus size (docs); default = |documents| at SF_DIR
 NDOCS = int(os.environ.get("SPARK_GRAFT_NDOCS", "0")) or None
 

@@ -599,18 +599,6 @@ def media_record(media_ref: str, seed: int = 42) -> dict:
     return rec
 
 
-def _self_check():  # pragma: no cover — used by tests
-    """Generator invariant: logits decode back to their text (reversed
-    for boxes the cls stage flags as 180)."""
-    r = media_record("m00000042")
-    for lg_bytes, txt, cp in zip(r["rec_logits"], r["gt_texts"],
-                                 r["cls_probs"]):
-        lg = dequantize_logits(lg_bytes, REC_T, REC_C)
-        got, _ = ctc_decode(lg, CHARSET)
-        rotated = cp[1] > cp[0]
-        assert got == (txt[::-1] if rotated else txt), (got, txt)
-
-
 # ---------------------------------------------------------------------------
 # Spark-side distributed synthesis
 

@@ -21,7 +21,7 @@ def test_contamination_flags_only_training_docs(spark):
 
 
 def test_stratified_sample_rates_and_no_shuffle(spark):
-    from paddleocr_spark.plans.inspect import formatted_plan
+    from tests.plan_inspect import formatted_plan
 
     df = curation.stratified_sample(spark, SF_DIR)
     # deterministic hash filter rides the scan: zero Exchange

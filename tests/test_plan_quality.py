@@ -10,8 +10,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
 from paddleocr_spark.operators import relational, text
-from paddleocr_spark.plans.inspect import (
+from tests.plan_inspect import (
     count_exchanges,
+    formatted_plan,
     has_broadcast_join,
     has_partial_aggregate,
     has_sort_merge_join,
@@ -64,8 +65,6 @@ def test_extract_shuffle_budget(spark):
                        media_path)
     import re
 
-    from paddleocr_spark.plans.inspect import formatted_plan
-
     plan = formatted_plan(df)
     # the per-doc window must consume only small string columns — the
     # fat tensor columns (det_map, rec_logits) stop at the decode UDF
@@ -89,7 +88,6 @@ def test_media_store_planning_from_manifest(spark, monkeypatch):
     import re
 
     from paddleocr_spark.functions import udfs
-    from paddleocr_spark.plans.inspect import formatted_plan
 
     _, media_path = entry_mod.corpus_paths(spark, SF, n_docs=50)
     assert _os.path.exists(_os.path.join(udfs.manifest_path(media_path),
@@ -110,7 +108,6 @@ def test_manifest_packing_has_no_global_file_window(spark):
     byte packing happens on the driver and the decode reads a
     JVM-only relation with one partition per group."""
     from paddleocr_spark.functions.udfs import decode_media_store
-    from paddleocr_spark.plans.inspect import formatted_plan
 
     _, media_path = entry_mod.corpus_paths(spark, SF, n_docs=50)
     df = decode_media_store(spark, media_path)
@@ -177,7 +174,6 @@ def test_det_polygons_runs_its_python_stage_once_per_core(spark):
     from paddleocr_spark.corpus import poly_map_count
     from paddleocr_spark.operators._cache import release
     from paddleocr_spark.operators.det_poly import det_polygons
-    from paddleocr_spark.plans.inspect import formatted_plan
     from paddleocr_spark.sources.tables import table_rows
 
     df = det_polygons(spark, SF)
@@ -270,7 +266,6 @@ def test_bm25_plan_shape(spark):
     import re
 
     from paddleocr_spark.operators.retrieval import bm25_topk
-    from paddleocr_spark.plans.inspect import formatted_plan
 
     df = bm25_topk(spark, SF)
     plan = formatted_plan(df)
@@ -351,9 +346,7 @@ def test_simhash_single_aggregation_pass(spark):
     from paddleocr_spark.operators import dedup
 
     df = dedup.simhash32(spark, SF)
-    plan = __import__(
-        "paddleocr_spark.plans.inspect", fromlist=["formatted_plan"]
-    ).formatted_plan(df)
+    plan = formatted_plan(df)
     assert has_partial_aggregate(df)
     assert count_exchanges(df) <= 2
     assert "CartesianProduct" not in plan
@@ -364,7 +357,6 @@ def test_lsh_pairs_never_cartesian(spark):
     """Banded LSH candidates must be an equi-join on (band, band_hash),
     never an all-pairs product."""
     from paddleocr_spark.operators import dedup, similarity
-    from paddleocr_spark.plans.inspect import formatted_plan
 
     for df in (dedup.lsh_candidate_pairs(spark, SF),
                similarity.embedding_near_dups(spark, SF)):
@@ -378,7 +370,6 @@ def test_simhash_block_join_never_cartesian(spark):
     equi-join — the brute-force O(N²) hamming product lives only in
     the DuckDB oracle."""
     from paddleocr_spark.operators import dedup
-    from paddleocr_spark.plans.inspect import formatted_plan
 
     plan = formatted_plan(dedup.simhash_near_dups(spark, SF))
     assert "CartesianProduct" not in plan
@@ -394,7 +385,6 @@ def test_bucketed_join_is_shuffle_free(spark):
     from pyspark.sql import functions as F
 
     from paddleocr_spark.operators import bucketing
-    from paddleocr_spark.plans.inspect import formatted_plan
 
     orders_t, lineitem_t = bucketing.ensure_bucketed_pair(spark, SF)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -439,7 +429,6 @@ def test_bucketed_reattach_preserves_mapping_and_plan(spark):
     shuffle-free and value-identical (a wrong bucket-id <-> file
     mapping would silently drop join rows)."""
     from paddleocr_spark.operators import bucketing
-    from paddleocr_spark.plans.inspect import formatted_plan
 
     orders_t, lineitem_t = bucketing.ensure_bucketed_pair(spark, SF)
     before = sorted(map(tuple,
@@ -471,7 +460,6 @@ def test_partitioned_scan_prunes_at_planning_time(spark):
     from pyspark.sql import functions as F
 
     from paddleocr_spark.operators import partitioning
-    from paddleocr_spark.plans.inspect import formatted_plan
 
     path = partitioning.ensure_partitioned_events(spark, SF)
     ev = spark.read.parquet(path)
@@ -519,7 +507,6 @@ def test_pagerank_no_cartesian_beyond_count_broadcast(spark):
     nested-loop join of any kind is left in the plan (the name is
     kept from when the one-row count was broadcast)."""
     from paddleocr_spark.operators import html_extract
-    from paddleocr_spark.plans.inspect import formatted_plan
 
     df = html_extract.html_pagerank(spark, SF, iters=2)
     plan = formatted_plan(df)
@@ -617,7 +604,6 @@ def test_pagerank_reads_documents_once_in_plan(spark):
     import re
 
     from paddleocr_spark.operators import html_extract
-    from paddleocr_spark.plans.inspect import formatted_plan
 
     for iters in (1, 3, 5):
         plan = formatted_plan(html_extract.html_pagerank(
@@ -702,7 +688,6 @@ def test_pdf_text_single_python_crossing(spark):
     corpus size."""
     import re
 
-    from paddleocr_spark.plans.inspect import formatted_plan
     from paddleocr_spark.sources import pdf_text_store
 
     def n_crossings(df):

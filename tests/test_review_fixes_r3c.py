@@ -24,7 +24,7 @@ def test_read_schema_nested_struct(spark, tmp_path):
     columns only — no phantom nested names, no dropped trailers."""
     from pyspark.sql import functions as F
 
-    from paddleocr_spark.plans.inspect import scan_read_schema
+    from tests.plan_inspect import scan_read_schema
 
     path = str(tmp_path / "nested")
     (spark.range(3).select(
@@ -41,7 +41,7 @@ def test_read_schema_nested_struct(spark, tmp_path):
 
 
 def test_split_top_level_helper():
-    from paddleocr_spark.plans.inspect import _split_top_level
+    from tests.plan_inspect import _split_top_level
 
     body = "a:bigint,spans:array<struct<k:string,v:int>>,z:string"
     assert [p.split(":")[0] for p in _split_top_level(body)] \
@@ -55,7 +55,7 @@ def test_pushed_filters_in_list(spark):
     are not dropped at its inner ']'."""
     from pyspark.sql import functions as F
 
-    from paddleocr_spark.plans.inspect import pushed_filters
+    from tests.plan_inspect import pushed_filters
 
     df = (spark.read.parquet(f"{SF}/documents.parquet")
           .where(F.col("lang").isin("en", "de", "fr")
