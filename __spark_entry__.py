@@ -27,7 +27,7 @@ from paddleocr_spark.corpus import (
     synthesize_docs,
     synthesize_media,
 )
-from paddleocr_spark.functions.udfs import decode_media_store
+from paddleocr_spark.functions.udfs import data_rows, decode_media_store
 from paddleocr_spark.golden import materialize_goldens
 from paddleocr_spark.operators import (
     bucketing,
@@ -128,7 +128,7 @@ def _q_media_fragments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     _, media_path = corpus_paths(spark, sf_dir)
-    return (decode_media_store(spark, media_path)
+    return (data_rows(decode_media_store(spark, media_path))
             .withColumn("conf", F.round("conf", 6))
             .withColumn("cls_score", F.round("cls_score", 6)))
 

@@ -1,9 +1,12 @@
 """Arrow-batched UDFs for the extraction stages.
 
-Every media consumer reads the media store BY PATH through one row
-loop, ``map_media_store``: each Python task reads its byte-balanced
-group of store files with pyarrow and calls a per-row function on
-every media row. The hot consumer is ``decode_media_store``: it runs
+Every byte consumer reads its input BY PATH through one loop,
+``map_media_store``: each Python task reads its byte-balanced group of
+files on the worker and calls the consumer's function once per unit —
+a media store row (read with pyarrow) or a whole raw file (audio,
+video, paged containers, text PDFs). A unit whose function raises
+becomes one quarantine row, reported by ``decode_errors``. The hot
+consumer is ``decode_media_store``: it runs
 det (DB binarize + box post-process, ``toddleocr/postprocess/db.py``),
 reading-order sort (``utils/utility.py:170-192``), cls decode
 (``postprocess/cls.py``), CTC rec decode (``postprocess/rec.py``) and
@@ -20,13 +23,11 @@ only small string fragments leave this stage.
 
 from __future__ import annotations
 
-__all__ = ["MEDIA_FRAGMENT_SCHEMA", "ERROR_KIND", "map_media_store",
-           "decode_media_store", "decode_errors", "write_store_manifest",
-           "manifest_path"]
+from pathlib import Path
 
-# out_kind of quarantined poison rows (decode raised); never a real
-# layout label, filtered out of span assembly
-ERROR_KIND = "__error__"
+__all__ = ["MEDIA_FRAGMENT_SCHEMA", "map_media_store",
+           "decode_media_store", "decode_errors", "data_rows",
+           "write_store_manifest", "manifest_path"]
 
 MEDIA_FRAGMENT_SCHEMA = (
     "media_ref string, frag_idx int, box_idx int, out_kind string, "
@@ -55,23 +56,16 @@ def _decode_row_fn(bundle_bc):
     def decode_row(d):
         from paddleocr_spark.extract_core import decode_media_row
 
-        try:
-            frags = decode_media_row(d, bundle_bc.value)
-        except Exception as exc:  # poison-row quarantine:
-            # at 10^12 docs one corrupt media row must not kill the
-            # job (the reference resamples on parse error,
-            # simple.py:78-84); it becomes an ERROR_KIND fragment —
-            # excluded from spans, countable via decode_errors()
-            return [(d["media_ref"], -1, -1, ERROR_KIND, "", 0.0, "", 0.0,
-                     f"{type(exc).__name__}: {exc}"[:200])]
         return [(d["media_ref"], *(f[c] for c in _FRAG_COLS))
-                for f in frags]
+                for f in decode_media_row(d, bundle_bc.value)]
 
     return decode_row
 
 
 # ---------------------------------------------------------------------------
-# Pointer passing: the media store is read by path, never as a DataFrame.
+# Pointer passing: media bytes are read by path on the worker, never
+# scanned into a DataFrame (a parquet scan of the store, or Spark's
+# binary-file source for raw files).
 #
 # Shipping ~60 KB of tensor bytes per row from the JVM to Python through
 # the Arrow python-runner measures at ~8 MB/s/core (the row-to-Arrow
@@ -81,7 +75,8 @@ def _decode_row_fn(bundle_bc):
 # passes image PATHS and reads executor-side (toddleocr/datasets/
 # simple.py:68). We do the same: the driver plans over FILE POINTERS
 # (at production scale, Iceberg manifest entries) and each task reads
-# its parquet split directly with pyarrow — vectorized, no JVM copy.
+# its parquet split directly with pyarrow — vectorized, no JVM copy —
+# or opens its raw files itself.
 #
 # The decode runs ONE Python task per core, not more: every Python task
 # still pays a fixed setup cost before it touches a row. Under Spark's
@@ -120,13 +115,13 @@ def write_store_manifest(spark, store_path: str):
     below runs only here, at write time (the Iceberg-commit analogue);
     footers are read executor-side. Planning collects this table to
     the driver (one (file, bytes) pair per file, see
-    ``_store_files_df``)."""
+    ``_store_files``)."""
     import os as _os
 
-    files = _list_store_files(store_path)
-    names = [_os.path.basename(f) for f in files]
+    names = [_os.path.basename(f)
+             for f, _ in _list_files(store_path, "*.parquet")]
     # degenerate stores: a single parquet FILE is a valid store
-    # (_list_store_files supports it) — footers must open the file
+    # (_list_files supports it) — footers must open the file
     # itself, not <file>/<file>; an empty store still writes an empty
     # manifest rather than crashing repartition(0)
     root = (_os.path.dirname(store_path)
@@ -155,16 +150,20 @@ def write_store_manifest(spark, store_path: str):
      .write.mode("overwrite").parquet(manifest_path(store_path)))
 
 
-def _list_store_files(path: str) -> list[str]:
-    """Driver-side glob — used at manifest WRITE time and for ad-hoc
-    stores that never wrote one (single files, tests). Stores with a
-    manifest plan from the manifest table instead."""
+def _list_files(path: str, pattern: str = "*") -> list[tuple[str, int]]:
+    """Driver-side (path, n_bytes) listing of a file, a directory (its
+    ``pattern`` children) or a glob, skipping ``_``/``.``-prefixed
+    names as Spark's file sources do. Stores with a manifest plan from
+    the manifest instead."""
     import glob as _glob
     import os as _os
 
-    if _os.path.isfile(path):
-        return [path]
-    return sorted(_glob.glob(_os.path.join(path, "*.parquet")))
+    if _os.path.isdir(path):
+        path = _os.path.join(path, pattern)
+    files = [path] if _os.path.isfile(path) else sorted(
+        f for f in _glob.glob(path) if _os.path.isfile(f)
+        and not _os.path.basename(f).startswith("_"))
+    return [(f, _os.path.getsize(f)) for f in files]
 
 
 def _pack_groups(files: list[tuple[str, int]],
@@ -183,23 +182,11 @@ def _pack_groups(files: list[tuple[str, int]],
     return groups
 
 
-def _store_files_df(spark, store_path: str, n_tasks: int):
-    """DataFrame of data-file paths with exactly one partition per
-    byte-balanced group of files, ``min(#files, n_tasks)`` groups.
-
-    The file list comes from the manifest table (read on the driver
-    with pyarrow, no Spark job — the Iceberg seam) or, for ad-hoc
-    stores that never wrote one, from a glob; both go through the same
-    driver-side packer. The driver holds one (path, bytes) pair per
-    file, as ``spark.read.parquet`` already does when it lists a
-    directory. The groups reach the JVM as a literal array of path
-    arrays indexed by ``spark.range`` — no shuffle, no window and no
-    Python task before the decode itself (``createDataFrame`` of a
-    Python list would convert through a Python RDD: one more Python
-    task per partition)."""
+def _store_files(store_path: str) -> list[tuple[str, int]]:
+    """(path, n_bytes) of every data file of a parquet store: from the
+    manifest table (read on the driver with pyarrow, no Spark job — the
+    Iceberg seam) or, for ad-hoc stores that never wrote one, a glob."""
     import os as _os
-
-    from pyspark.sql import functions as F
 
     man = manifest_path(store_path)
     if _os.path.exists(_os.path.join(man, "_SUCCESS")):
@@ -207,11 +194,21 @@ def _store_files_df(spark, store_path: str, n_tasks: int):
                 if _os.path.isfile(store_path) else store_path)
         import pyarrow.parquet as pq
 
-        files = [(_os.path.join(root, r["file"]), r["n_bytes"]) for r in
-                 pq.read_table(man, columns=["file", "n_bytes"]).to_pylist()]
-    else:
-        files = [(f, _os.path.getsize(f))
-                 for f in _list_store_files(store_path)]
+        return [(_os.path.join(root, r["file"]), r["n_bytes"]) for r in
+                pq.read_table(man, columns=["file", "n_bytes"]).to_pylist()]
+    return _list_files(store_path, "*.parquet")
+
+
+def _groups_df(spark, files: list[tuple[str, int]], n_tasks: int):
+    """DataFrame of the ``files`` paths with exactly one partition per
+    byte-balanced group, ``min(#files, n_tasks)`` groups
+    (``_pack_groups``). The groups reach the JVM as a literal array of
+    path arrays indexed by ``spark.range`` — no shuffle, no window and
+    no Python task before the loop itself (``createDataFrame`` of a
+    Python list would convert through a Python RDD: one more Python
+    task per partition)."""
+    from pyspark.sql import functions as F
+
     groups = _pack_groups(files, max(1, min(len(files), n_tasks)))
     table = F.array(*[F.array(*map(F.lit, g)) for g in groups]).cast(
         "array<array<string>>")
@@ -220,30 +217,79 @@ def _store_files_df(spark, store_path: str, n_tasks: int):
                 table, F.col("id").cast("int") + 1)).alias("path")))
 
 
-def map_media_store(spark, store_path: str, row_fn, schema: str,
-                    columns: list[str]):
-    """The one media row loop: ``row_fn(row)`` over every row of the
-    media store, ``row`` a dict of ``columns``, returning a list of
-    output tuples in ``schema`` order (zero, one or many per row).
+def map_media_store(spark, source, fn, schema: str,
+                    columns: list[str] | None = None):
+    """The one loop over media bytes: ``fn`` once per unit, inside one
+    quarantine. A unit and its key are either
 
-    Executor-side pyarrow reads: one Python task per core, each reading
-    one byte-balanced group of data files (``_store_files_df``). One
-    task per core rather than more, because every Python task has a
-    fixed cost (see "Pointer passing" above) that no rebalancing
-    repays. Each Arrow batch of the store yields one output DataFrame,
-    empty ones included."""
+    - a media store ROW (``columns`` given): ``source`` is a parquet
+      store path (manifest or glob), ``fn(row)`` gets a dict of
+      ``columns``, the key is ``row["media_ref"]``; or
+    - a whole FILE (``columns`` None): ``source`` is a directory or
+      glob of files, or a DataFrame with a ``path`` column (the ingest
+      stream's micro-batch, paths as ``file:`` URIs); ``fn(path,
+      content)`` gets the file's bytes, read on the worker; the key is
+      the path.
+
+    ``fn`` returns (or yields) output tuples in ``schema`` order (zero,
+    one or many per unit). The output schema is ``schema`` plus a
+    trailing ``error string``, null on data rows. A unit whose ``fn``
+    (or file read) raises yields exactly one row instead of any of its
+    own: the key in the first column, nulls elsewhere and
+    ``"<type>: <message>"`` (200 chars at most) in ``error`` — at
+    10^12 docs one corrupt input must not kill the job (the reference
+    resamples on parse error, ``datasets/simple.py:78-84``).
+    ``decode_errors`` reports those rows, ``data_rows`` drops them.
+
+    One Python task per core, each reading one byte-balanced group of
+    files (``_groups_df``): every Python task has a fixed cost (see
+    "Pointer passing" above) that no rebalancing repays. Each Arrow
+    batch of a store file (each raw file) yields one output DataFrame,
+    empty ones included, plus one of its quarantine rows if any."""
     from pyspark.sql.types import StructType
 
+    schema += ", error string"
     names = StructType.fromDDL(schema).fieldNames()
-    files_df = _store_files_df(spark, store_path,
-                               spark.sparkContext.defaultParallelism)
+    nulls = (None,) * (len(names) - 2)
+    if not isinstance(source, str):
+        paths_df = source.select("path")
+    else:
+        files = (_store_files(source) if columns is not None
+                 else _list_files(source))
+        paths_df = _groups_df(spark, files,
+                              spark.sparkContext.defaultParallelism)
+    call = fn if columns is not None else (
+        lambda path: fn(path, Path(path).read_bytes()))
+
+    def frames(units):
+        import pandas as pd
+
+        rows, errors = [], []
+        for key, unit in units:
+            n = len(rows)
+            try:
+                rows.extend(call(unit))
+            except Exception as exc:
+                del rows[n:]  # a generator's partial rows
+                errors.append((key, *nulls,
+                               f"{type(exc).__name__}: {exc}"[:200]))
+        out = pd.DataFrame(rows, columns=names[:-1])
+        out["error"] = None
+        yield out
+        if errors:
+            # object dtype: a null must not turn an int column into
+            # float64 (a 64-bit value would lose its low bits)
+            yield pd.DataFrame(errors, columns=names, dtype=object)
 
     def per_file(batches):
-        import pandas as pd
         import pyarrow.parquet as pq
 
         for pdf in batches:
             for path in pdf["path"]:
+                if columns is None:
+                    path = path.removeprefix("file:")
+                    yield from frames([(path, path)])
+                    continue
                 # stream row-group batches instead of whole-file
                 # to_pandas: bounds per-task transient memory to ~tens
                 # of MB regardless of file size (whole-file pandas at
@@ -253,16 +299,18 @@ def map_media_store(spark, store_path: str, row_fn, schema: str,
                 pf = pq.ParquetFile(path)
                 for rb in pf.iter_batches(batch_size=512, columns=columns,
                                           use_threads=False):
-                    out = []
-                    for row in rb.to_pandas().itertuples(index=False):
-                        out.extend(row_fn(row._asdict()))
-                    yield pd.DataFrame(out, columns=names)
+                    yield from frames(
+                        (d["media_ref"], d) for d in
+                        (row._asdict() for row in
+                         rb.to_pandas().itertuples(index=False)))
 
-    return files_df.mapInPandas(per_file, schema=schema)
+    return paths_df.mapInPandas(per_file, schema=schema)
 
 
 def decode_media_store(spark, store_path: str):
-    """media store directory → fragment DataFrame."""
+    """media store directory → fragment DataFrame
+    (``MEDIA_FRAGMENT_SCHEMA`` + ``error``; a media row whose decode
+    raised is one quarantine row, see ``decode_errors``)."""
     from paddleocr_spark.extract_core import MODEL_BUNDLE
 
     bundle_bc = spark.sparkContext.broadcast(MODEL_BUNDLE)
@@ -284,16 +332,26 @@ def _master_html_row(d):
 
 
 def master_html_store(spark, store_path: str):
-    return map_media_store(spark, store_path, _master_html_row,
-                           "media_ref string, master_html string",
-                           columns=_MASTER_COLS)
+    return data_rows(map_media_store(spark, store_path, _master_html_row,
+                                     "media_ref string, master_html string",
+                                     columns=_MASTER_COLS))
 
 
-def decode_errors(fragments_df):
-    """Quarantined decode failures: (media_ref, error). Zero rows on a
-    healthy corpus; at scale this is the per-run data-quality report
-    the lineage/checkpoint rows point at."""
+def decode_errors(df):
+    """The quarantine report of any ``map_media_store`` output: (key,
+    error), one row per failed unit, the key under the output's first
+    column name (``media_ref`` for the store consumers). Zero rows on
+    healthy input; at scale this is the per-run data-quality report the
+    lineage/checkpoint rows point at."""
     from pyspark.sql import functions as F
 
-    return (fragments_df.where(F.col("out_kind") == ERROR_KIND)
-            .select("media_ref", F.col("aux").alias("error")))
+    return df.where(F.col("error").isNotNull()).select(df.columns[0],
+                                                       "error")
+
+
+def data_rows(df):
+    """The data rows of a ``map_media_store`` output, in the caller's
+    schema: quarantine rows and the ``error`` column dropped."""
+    from pyspark.sql import functions as F
+
+    return df.where(F.col("error").isNull()).drop("error")

@@ -48,7 +48,7 @@ Scale design notes (the parts that matter at 10^12 docs):
 from __future__ import annotations
 
 from paddleocr_spark.corpus import BOILERPLATE_RE
-from paddleocr_spark.functions.udfs import ERROR_KIND, decode_media_store
+from paddleocr_spark.functions.udfs import decode_media_store
 
 __all__ = ["explode_spans", "clean_text_col", "extract_spans",
            "SALT_WIDTH", "auto_salt_width"]
@@ -151,10 +151,10 @@ def extract_spans(docs_df, store_path: str,
                .where(((F.col("kind") == "text")
                        & (F.length("clean") > 0))
                       | ((F.col("kind") == "media")
-                         & F.col("f_kind").isNotNull()
-                         # quarantined decode failures never become
-                         # spans (surfaced via decode_errors instead)
-                         & (F.col("f_kind") != ERROR_KIND)))
+                         # null for an unmatched ref and for a
+                         # quarantined decode failure (surfaced via
+                         # decode_errors instead)
+                         & F.col("f_kind").isNotNull()))
                .select("doc_id", "offset",
                        F.coalesce("frag_idx", F.lit(0)).alias("frag_idx"),
                        F.when(F.col("kind") == "text", F.lit("text"))

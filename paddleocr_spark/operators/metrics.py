@@ -241,13 +241,14 @@ def det_iou_metric(store_path: str):
 
 def _map_media(store_path, row_fn, schema, columns):
     """The per-media partials of a store metric, through the shared
-    media row loop in the active session."""
+    media row loop in the active session. Quarantined rows are dropped,
+    so no aggregate counts a media row whose evaluation raised."""
     from pyspark.sql import SparkSession
 
-    from paddleocr_spark.functions.udfs import map_media_store
+    from paddleocr_spark.functions.udfs import data_rows, map_media_store
 
-    return map_media_store(SparkSession.active(), store_path, row_fn,
-                           schema, columns=columns)
+    return data_rows(map_media_store(SparkSession.active(), store_path,
+                                     row_fn, schema, columns=columns))
 
 
 def sr_metric(store_path: str):

@@ -48,13 +48,13 @@ def _phash_row(d):
 
 def _phash_relation(spark, sf_dir: str):
     import __spark_entry__ as entry_mod
-    from paddleocr_spark.functions.udfs import map_media_store
+    from paddleocr_spark.functions.udfs import data_rows, map_media_store
 
     _, media_path = entry_mod.corpus_paths(spark, sf_dir)
-    return map_media_store(
+    return data_rows(map_media_store(
         spark, media_path, _phash_row,
         "media_ref string, variant long, phash long",
-        columns=["media_ref", "det_map", "det_h", "det_w"])
+        columns=["media_ref", "det_map", "det_h", "det_w"]))
 
 
 def image_phash(spark, sf_dir: str):

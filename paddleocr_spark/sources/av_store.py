@@ -30,10 +30,11 @@ bit-for-bit, not approximate):
   expression (same literal coefficients, same op order, clip then
   truncate) on plain Python floats.
 
-The Spark queries drive the REAL distributed path: ``binaryFile`` scan
--> mapInPandas decode (WAV parse / Y4M parse + uniform frame sampling)
--> feature rows. This is the exact plumbing a 100 TB multimodal corpus
-needs; only the store size is toy.
+The Spark queries drive the REAL distributed path: the shared file
+loop (``functions/udfs.map_media_store``) reads each file by path on
+the worker and runs its per-file function (WAV parse + framed RMS, or
+Y4M parse + uniform frame sampling) -> feature rows. This is the exact
+plumbing a 100 TB multimodal corpus needs; only the store size is toy.
 """
 
 from __future__ import annotations
@@ -186,91 +187,71 @@ def ensure_av_store(root: str) -> str:
     return store
 
 
-def audio_features(spark, sf_dir: str):
-    """CORRECTNESS query for the audio leg: binaryFile scan of the WAV
-    store -> mapInPandas (RIFF parse, mono mixdown, framed RMS) -> one
-    row per frame. Store is sf-independent (the operator under test is
-    decode+framing, not corpus scaling)."""
-    from paddleocr_spark.sources.media_files import read_binary_files
+AUDIO_SCHEMA = ("file string, frame long, rms double, sample_rate long, "
+                "n_channels long")
+VIDEO_SCHEMA = ("file string, frame long, n_frames long, height long, "
+                "width long, mean_y double, r long, g long, b long")
+
+_K_BY_FILE = {name: k for name, _, _, _, _, k in _VIDS}
+
+
+def _audio_rows(path: str, content: bytes):
+    """One WAV file → one row per RMS frame (mono mixdown)."""
+    from paddleocr_spark.kernels.audio import decode_wav, rms_frames
+
+    samples, rate = decode_wav(content)
+    name = os.path.basename(path)
+    return [(name, k, float(e), int(rate), samples.shape[1])
+            for k, e in enumerate(rms_frames(samples.mean(axis=1),
+                                             _FRAME, _FRAME))]
+
+
+def _video_rows(path: str, content: bytes):
+    """One Y4M file → one row per uniformly sampled frame: mean luma
+    and the BT.601 RGB of its first pixel."""
+    from paddleocr_spark.kernels.video import (
+        decode_y4m,
+        sample_frame_indices,
+        yuv420_to_rgb,
+    )
+
+    name = os.path.basename(path)
+    frames, meta = decode_y4m(content)
+    out = []
+    for i in sample_frame_indices(meta["n_frames"], _K_BY_FILE[name]):
+        fr = frames[i]
+        if "u" in fr:
+            rgb = yuv420_to_rgb(fr)
+            r, g, b = (int(rgb[0, 0, c]) for c in range(3))
+        else:
+            r = g = b = int(fr["y"][0, 0])
+        out.append((name, i, meta["n_frames"], meta["h"], meta["w"],
+                    float(fr["y"].mean()), r, g, b))
+    return out
+
+
+def _store_query(spark, leaf: str, rows_fn, schema: str):
+    from paddleocr_spark.functions.udfs import data_rows, map_media_store
 
     store = ensure_av_store(cache_root())
+    return data_rows(map_media_store(spark, os.path.join(store, leaf),
+                                     rows_fn, schema))
 
-    def dec(batches):
-        import os as _os
 
-        import pandas as pd
-
-        from paddleocr_spark.kernels.audio import decode_wav, rms_frames
-
-        for pdf in batches:
-            out = {"file": [], "frame": [], "rms": [],
-                   "sample_rate": [], "n_channels": []}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                samples, rate = decode_wav(bytes(content))
-                mono = samples.mean(axis=1)
-                for k, e in enumerate(rms_frames(mono, _FRAME, _FRAME)):
-                    out["file"].append(_os.path.basename(path))
-                    out["frame"].append(k)
-                    out["rms"].append(float(e))
-                    out["sample_rate"].append(int(rate))
-                    out["n_channels"].append(samples.shape[1])
-            yield pd.DataFrame(out)
-
-    return read_binary_files(spark, os.path.join(store, "audio")) \
-        .mapInPandas(dec, schema=("file string, frame long, rms double, "
-                                  "sample_rate long, n_channels long"))
+def audio_features(spark, sf_dir: str):
+    """CORRECTNESS query for the audio leg: every WAV of the store
+    through the file loop (RIFF parse, mono mixdown, framed RMS) -> one
+    row per frame. Store is sf-independent (the operator under test is
+    decode+framing, not corpus scaling)."""
+    return _store_query(spark, "audio", _audio_rows, AUDIO_SCHEMA)
 
 
 def video_frames(spark, sf_dir: str):
-    """CORRECTNESS query for the video leg: binaryFile scan of the Y4M
-    store -> mapInPandas (Y4M parse, uniform temporal sampling,
+    """CORRECTNESS query for the video leg: every Y4M of the store
+    through the file loop (Y4M parse, uniform temporal sampling,
     per-sampled-frame mean luma + BT.601 RGB) -> one row per sampled
     frame."""
-    from paddleocr_spark.sources.media_files import read_binary_files
-
-    store = ensure_av_store(cache_root())
-    k_by_file = {name: k for name, _, _, _, _, k in _VIDS}
-
-    def dec(batches):
-        import os as _os
-
-        import pandas as pd
-
-        from paddleocr_spark.kernels.video import (
-            decode_y4m,
-            sample_frame_indices,
-            yuv420_to_rgb,
-        )
-
-        for pdf in batches:
-            out = {"file": [], "frame": [], "n_frames": [], "height": [],
-                   "width": [], "mean_y": [], "r": [], "g": [], "b": []}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                name = _os.path.basename(path)
-                frames, meta = decode_y4m(bytes(content))
-                for i in sample_frame_indices(meta["n_frames"],
-                                              k_by_file[name]):
-                    fr = frames[i]
-                    if "u" in fr:
-                        rgb = yuv420_to_rgb(fr)
-                        r, g, b = (int(rgb[0, 0, c]) for c in range(3))
-                    else:
-                        r = g = b = int(fr["y"][0, 0])
-                    out["file"].append(name)
-                    out["frame"].append(i)
-                    out["n_frames"].append(meta["n_frames"])
-                    out["height"].append(meta["h"])
-                    out["width"].append(meta["w"])
-                    out["mean_y"].append(float(fr["y"].mean()))
-                    out["r"].append(r)
-                    out["g"].append(g)
-                    out["b"].append(b)
-            yield pd.DataFrame(out)
-
-    return read_binary_files(spark, os.path.join(store, "video")) \
-        .mapInPandas(dec, schema=("file string, frame long, n_frames long, "
-                                  "height long, width long, mean_y double, "
-                                  "r long, g long, b long"))
+    return _store_query(spark, "video", _video_rows, VIDEO_SCHEMA)
 
 
 def audio_oracle_sql() -> str:

@@ -9,14 +9,17 @@ uncompressed-TIFF via the repo's pure-NumPy codecs
 (``kernels/imgcodec.py``, ``kernels/jpeg.py``, ``kernels/tiff.py``;
 stdlib zlib for PNG, pure-Python LZW for GIF → first frame per
 check_and_read, Huffman+IDCT for JPEG) with cv2 IMREAD_COLOR
-semantics. Multi-page TIFF (one IFD per page) and scanned image-based
-PDF (``kernels/pdf.py``: real object-graph + page-tree walk,
-DCTDecode/FlateDecode image XObjects) are the real page-exploding
-containers; text/vector PDF pages need a full rasterizer (the
-reference uses fitz, absent here) and raise explicitly. The
-Spark-side plumbing — binaryFile scan, page explode (1 file → N page
-rows, a UDTF like det's 1-image→N-boxes), schema, Arrow batching — is
-real and tested via the real codecs and the fake paged codec.
+semantics. Multi-page TIFF (one IFD per page) and PDF are the real
+page-exploding containers: ``kernels/pdf.py`` walks the object graph
+and page tree, decodes a scanned page's image XObject directly
+(DCTDecode/FlateDecode/CCITTFaxDecode) and rasterizes any other
+page's content stream (``kernels/pdf_raster.py``, at the reference's
+2x fitz matrix; vector paths and images are drawn, text operators are
+skipped — born-digital text is read by ``kernels/pdf_text.py``).
+``explode_pages`` runs the page split (1 file → N page rows, a UDTF
+like det's 1-image→N-boxes) over files read by path in the shared file
+loop (``functions/udfs.map_media_store``), so a corrupt container
+becomes one quarantine row.
 
 Fake paged-document codec (tests only):
     b"FAKEDOC" + <n_pages:uint8> + payload
@@ -26,18 +29,12 @@ explodes to n_pages rows whose page bytes are
 
 from __future__ import annotations
 
-__all__ = ["read_binary_files", "explode_pages", "page_errors",
-           "decode_image_bytes", "check_img", "is_link", "PAGES_SCHEMA",
-           "ERROR_PAGE"]
+__all__ = ["explode_pages", "decode_image_bytes", "check_img", "is_link",
+           "PAGES_SCHEMA"]
 
 PAGES_SCHEMA = ("path string, page int, content binary, is_multipage boolean")
 
 _FAKE_MAGIC = b"FAKEDOC"
-
-
-def read_binary_files(spark, path_glob: str):
-    """binaryFile source: (path, modificationTime, length, content)."""
-    return spark.read.format("binaryFile").load(path_glob)
 
 
 def _ppm_bytes(img) -> bytes:
@@ -54,19 +51,18 @@ def _split_pages(content: bytes):
 
     The reference's check_and_read explodes multi-page containers
     (PDF via fitz, GIF frames) to per-page images. The REAL containers
-    here are multi-page TIFF (kernels/tiff.py: IFD-chain walk) and
-    scanned image-based PDF (kernels/pdf.py: page-tree walk); each
-    page re-emits as PPM/PGM bytes so every page row is independently
-    decodable downstream. Single-page TIFFs also pass through this
-    path (1 page, not multipage). The FAKEDOC framing stays for
-    plumbing tests."""
+    here are multi-page TIFF (kernels/tiff.py: IFD-chain walk) and PDF
+    (kernels/pdf.py: page-tree walk); each page re-emits as PPM/PGM
+    bytes so every page row is independently decodable downstream.
+    Single-page TIFFs also pass through this path (1 page, not
+    multipage). The FAKEDOC framing stays for plumbing tests."""
     if content.startswith(_FAKE_MAGIC):
         if len(content) < len(_FAKE_MAGIC) + 1:
             raise ValueError("truncated FAKEDOC header (no page count)")
         n = content[len(_FAKE_MAGIC)]
         if n == 0:
-            # a zero-page container must surface as an error row in
-            # quarantine mode, not vanish from data AND report
+            # a zero-page container must surface as a quarantine row,
+            # not vanish from the data AND the report
             raise ValueError("FAKEDOC container with zero pages")
         payload = content[len(_FAKE_MAGIC) + 1:]
         return [(i, b"PAGE" + bytes([i]) + payload, True) for i in range(n)]
@@ -77,10 +73,9 @@ def _split_pages(content: bytes):
         multi = len(pages) > 1
         return [(i, _ppm_bytes(p), multi) for i, p in enumerate(pages)]
     if content.startswith(b"%PDF-"):
-        # real PDF object-graph walk for scanned image-based PDFs
-        # (kernels/pdf.py: page tree → image XObject → JPEG/Flate
-        # decode). Text/vector pages need a full rasterizer (the
-        # reference uses fitz, absent here) and raise ValueError.
+        # real PDF object-graph walk (kernels/pdf.py: page tree → image
+        # XObject decode, or the rasterized content stream of a page
+        # without one — text operators draw no ink)
         from paddleocr_spark.kernels.pdf import decode_pdf_pages
 
         pages = decode_pdf_pages(content)
@@ -90,57 +85,21 @@ def _split_pages(content: bytes):
     return [(0, content, False)]
 
 
-ERROR_PAGE = -1
+def _page_rows(path: str, content: bytes):
+    return [(path, idx, page, multi)
+            for idx, page, multi in _split_pages(content)]
 
 
-def explode_pages(files_df, on_error: str = "raise"):
-    """1 file row → N page rows via mapInPandas (Arrow-batched; binary
-    payloads never pass through per-row Python).
+def explode_pages(spark, files):
+    """1 file → N page rows (``PAGES_SCHEMA`` + ``error``) through the
+    shared file loop: ``files`` is a directory or glob of container
+    files, or a DataFrame with a ``path`` column (the ingest stream's
+    micro-batch). Each file is read by path on the worker; a malformed
+    container becomes one quarantine row (``decode_errors``) and the
+    other files' pages are unaffected."""
+    from paddleocr_spark.functions.udfs import map_media_store
 
-    ``on_error``: at 10^12-doc scale one malformed container must not
-    kill the job (the reference resamples/skips bad rows,
-    ``datasets/simple.py:78-84``; the extraction decode quarantines
-    them as ERROR_KIND fragments). "raise" (default) keeps fail-fast
-    semantics for tests/fixtures; "quarantine" emits one row per bad
-    file with ``page == ERROR_PAGE`` and the error message utf-8 in
-    ``content`` — filter ``page >= 0`` for data, ``page == ERROR_PAGE``
-    for the per-run data-quality report (page_errors)."""
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(on_error)
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"path": [], "page": [], "content": [],
-                   "is_multipage": []}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    pages = _split_pages(bytes(content))
-                except Exception as ex:
-                    if on_error == "raise":
-                        raise
-                    pages = [(ERROR_PAGE,
-                              f"{type(ex).__name__}: {ex}".encode(),
-                              False)]
-                for idx, page_bytes, multi in pages:
-                    out["path"].append(path)
-                    out["page"].append(idx)
-                    out["content"].append(page_bytes)
-                    out["is_multipage"].append(multi)
-            yield pd.DataFrame(out)
-
-    return files_df.select("path", "content").mapInPandas(
-        gen, schema=PAGES_SCHEMA)
-
-
-def page_errors(pages_df):
-    """Quarantined container failures: (path, error). Zero rows on a
-    healthy store — the page-explode twin of ``decode_errors``."""
-    from pyspark.sql import functions as F
-
-    return (pages_df.where(F.col("page") == ERROR_PAGE)
-            .select("path", F.col("content").cast("string").alias("error")))
+    return map_media_store(spark, files, _page_rows, PAGES_SCHEMA)
 
 
 def decode_image_bytes(content: bytes):

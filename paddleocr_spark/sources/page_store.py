@@ -20,9 +20,11 @@ DCTDecode PDF checks pixel values, not just shapes. The DuckDB oracle
 is a constant ``VALUES`` table generated from the same formulas — the
 codecs never run on the oracle side.
 
-The Spark query drives the REAL path end-to-end: ``binaryFile`` scan →
-``explode_pages`` (mapInPandas UDTF, 1 file → N page rows) → per-page
-decode → (file, page, is_multipage, height, width, mean_px).
+The Spark query drives the REAL path end-to-end in ONE Python
+crossing: the shared file loop (``functions/udfs.map_media_store``)
+reads each container by path on the worker, splits it into pages
+(``media_files._split_pages``, 1 file → N pages) and decodes every page
+→ (file, page, is_multipage, height, width, mean_px).
 """
 
 from __future__ import annotations
@@ -182,7 +184,7 @@ def _page_img(f: int, p: int):
 
 def ensure_page_store(root: str) -> str:
     """Write the container files under ``root`` (idempotent; guarded by
-    a DONE marker). Driver-side and O(1): 6 tiny files — this is
+    a DONE marker). Driver-side and O(1): 21 tiny files — this is
     fixture synthesis, not data-plane work."""
     # v13: + a vector PDF page past the 2000 px render cap;
     # v12: + G4 fax PDFs (/CCITTFaxDecode XObjects); v11 added CCITT
@@ -332,47 +334,36 @@ def ensure_page_store(root: str) -> str:
     return store
 
 
-def paged_store_pages(spark, sf_dir: str):
-    """CORRECTNESS query for the page-explode operator: scan the
-    fixture store with binaryFile, explode every container into page
-    rows, decode each page, and report its shape + mean pixel. The
-    store is sf-independent (the operator under test is the container
-    walk, not corpus scaling)."""
-    from paddleocr_spark.sources.media_files import (
-        explode_pages,
-        read_binary_files,
-    )
+PAGES_OUT_SCHEMA = ("file string, page long, is_multipage boolean, "
+                    "height long, width long, mean_px double")
 
+
+def _decoded_pages(path: str, content: bytes):
+    """One container → one row per page: split, decode, and report the
+    page's shape and mean pixel."""
+    from paddleocr_spark.kernels.imgcodec import decode_image
+    from paddleocr_spark.sources.media_files import _split_pages
+
+    name = os.path.basename(path)
+    out = []
+    for page, page_bytes, multi in _split_pages(content):
+        img = decode_image(page_bytes)
+        out.append((name, page, multi, img.shape[0], img.shape[1],
+                    float(img.mean())))
+    return out
+
+
+def paged_store_pages(spark, sf_dir: str):
+    """CORRECTNESS query for the page-explode operator: every container
+    of the fixture store split into pages and each page decoded, in one
+    pass of the file loop. The store is sf-independent (the operator
+    under test is the container walk, not corpus scaling)."""
     from paddleocr_spark.cachedir import cache_root
+    from paddleocr_spark.functions.udfs import data_rows, map_media_store
 
     store = ensure_page_store(cache_root())
-
-    def dec(batches):
-        import os as _os
-
-        import pandas as pd
-
-        from paddleocr_spark.kernels.imgcodec import decode_image
-
-        for pdf in batches:
-            out = {"file": [], "page": [], "is_multipage": [],
-                   "height": [], "width": [], "mean_px": []}
-            for path, page, content, multi in zip(
-                    pdf["path"], pdf["page"], pdf["content"],
-                    pdf["is_multipage"]):
-                img = decode_image(bytes(content))
-                out["file"].append(_os.path.basename(path))
-                out["page"].append(int(page))
-                out["is_multipage"].append(bool(multi))
-                out["height"].append(img.shape[0])
-                out["width"].append(img.shape[1])
-                out["mean_px"].append(float(img.mean()))
-            yield pd.DataFrame(out)
-
-    pages = explode_pages(read_binary_files(spark, store))
-    return pages.mapInPandas(
-        dec, schema=("file string, page long, is_multipage boolean, "
-                     "height long, width long, mean_px double"))
+    return data_rows(map_media_store(spark, store, _decoded_pages,
+                                     PAGES_OUT_SCHEMA))
 
 
 def pages_oracle_sql() -> str:

@@ -25,8 +25,9 @@ oracle-checked query, not just unit tests.
 
 Two queries:
 
-- ``pdf_text_runs``: binaryFile scan → one Arrow-batched mapInPandas
-  (bytes → runs; the only Python crossing) → one row per run.
+- ``pdf_text_runs``: the shared file loop
+  (``functions/udfs.map_media_store``: each file read by path on the
+  worker, bytes → runs; the only Python crossing) → one row per run.
 - ``pdf_page_text``: the same extraction, then READING-ORDER page
   assembly entirely in Catalyst — ``sort_array`` over
   (-y, x, text) structs + ``array_join`` (device y grows upward, so
@@ -88,7 +89,7 @@ TEXT_RUN_SPEC = [
 
 def ensure_pdf_text_store(root: str) -> str:
     """Write the text-PDF files under ``root`` (idempotent, DONE
-    marker). Driver-side and O(1): 4 tiny files — fixture synthesis,
+    marker). Driver-side and O(1): 5 tiny files — fixture synthesis,
     not data-plane work."""
     # v2: + file 4 (Type0/CID composite font, CJK runs)
     store = os.path.join(root, "pdftextstore_v2")
@@ -109,40 +110,28 @@ def ensure_pdf_text_store(root: str) -> str:
     return store
 
 
+RUNS_SCHEMA = ("file string, page long, run_idx long, text string, "
+               "x double, y double, size double")
+
+
+def _run_rows(path: str, content: bytes):
+    """One text PDF → one row per run, in content-stream order."""
+    from paddleocr_spark.kernels.pdf_text import extract_pdf_text
+
+    name = os.path.basename(path)
+    return [(name, p, r, text, x, y, size)
+            for p, runs in enumerate(extract_pdf_text(content))
+            for r, (text, x, y, size) in enumerate(runs)]
+
+
 def _runs_df(spark):
-    """binaryFile scan of the store → per-run rows via ONE
-    mapInPandas (bytes in, rows out — no per-row Python)."""
+    """Every run of the store through the file loop (one Python
+    crossing, bytes in, rows out)."""
     from paddleocr_spark.cachedir import cache_root
-    from paddleocr_spark.sources.media_files import read_binary_files
+    from paddleocr_spark.functions.udfs import data_rows, map_media_store
 
     store = ensure_pdf_text_store(cache_root())
-
-    def ext(batches):
-        import os as _os
-
-        import pandas as pd
-
-        from paddleocr_spark.kernels.pdf_text import extract_pdf_text
-
-        for pdf in batches:
-            out = {"file": [], "page": [], "run_idx": [], "text": [],
-                   "x": [], "y": [], "size": []}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                for p, runs in enumerate(
-                        extract_pdf_text(bytes(content))):
-                    for r, (text, x, y, size) in enumerate(runs):
-                        out["file"].append(_os.path.basename(path))
-                        out["page"].append(p)
-                        out["run_idx"].append(r)
-                        out["text"].append(text)
-                        out["x"].append(x)
-                        out["y"].append(y)
-                        out["size"].append(size)
-            yield pd.DataFrame(out)
-
-    return read_binary_files(spark, store).mapInPandas(
-        ext, schema=("file string, page long, run_idx long, "
-                     "text string, x double, y double, size double"))
+    return data_rows(map_media_store(spark, store, _run_rows, RUNS_SCHEMA))
 
 
 def pdf_text_runs(spark, sf_dir: str):

@@ -121,15 +121,18 @@ def streaming_exact_dedup(spark, docs_dir: str, watermark: str = "1 hour"):
 def streaming_page_ingest(spark, files_dir: str, out_dir: str,
                           checkpoint_dir: str):
     """Incremental container ingest: new PDF/TIFF/image files landing
-    under ``files_dir`` → page explode (corrupt containers quarantined
-    as ERROR_PAGE rows, never failing the stream) → append page rows to
-    ``out_dir``. The ingest-side half of check_and_read as a stream —
-    at production scale this is the feed that keeps the media store
-    growing while extraction streams behind it. Same implementation as
-    the batch path (explode_pages); exactly-once like
-    incremental_extract — per-epoch dynamic partition overwrite, so a
-    crash-replayed epoch replaces its own rows. Returns the
-    StreamingQuery."""
+    under ``files_dir`` → page explode (a corrupt container becomes one
+    quarantine row with its ``error``, never failing the stream) →
+    page rows appended to ``out_dir``. The ingest-side half of
+    check_and_read as a stream — at production scale this is the feed
+    that keeps the media store growing while extraction streams behind
+    it. Same implementation as the batch path (``explode_pages``, the
+    shared file loop): the ``binaryFile`` stream source only lists the
+    new files, each micro-batch passes their paths alone (the scan
+    reads no ``content``) and the loop reads the bytes on the worker.
+    Exactly-once like incremental_extract — per-epoch dynamic
+    partition overwrite, so a crash-replayed epoch replaces its own
+    rows. Returns the StreamingQuery."""
     from pyspark.sql import functions as F
 
     from paddleocr_spark.sources.media_files import explode_pages
@@ -141,10 +144,14 @@ def streaming_page_ingest(spark, files_dir: str, out_dir: str,
               .schema("path string, modificationTime timestamp, "
                       "length long, content binary")
               .option("maxFilesPerTrigger", 8)
-              .load(files_dir))
+              .load(files_dir)
+              # projected on the stream, not in foreachBatch: the batch
+              # handed to foreachBatch is already an executed scan, so
+              # a select there would not prune `content` from it
+              .select("path"))
 
     def process(batch_df, epoch_id: int):
-        (explode_pages(batch_df, on_error="quarantine")
+        (explode_pages(batch_df.sparkSession, batch_df)
          .withColumn("epoch", F.lit(int(epoch_id)))
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")

@@ -168,51 +168,75 @@ def test_model_bundle_roundtrip():
     assert resolve_bundle(None) == (_CHARSET, DROP_SCORE)
 
 
-def test_poison_media_row_quarantined(spark, media_store, tmp_path):
-    """A corrupt media row in the store must not kill the decode job:
-    it becomes an ERROR_KIND fragment (countable via decode_errors), is
-    excluded from span assembly, and every other row decodes
-    unchanged."""
+@pytest.fixture(scope="module")
+def poisoned(spark, media_store, tmp_path_factory):
+    """(docs, clean store, poisoned store, victim media_ref, store
+    without the victim): the poisoned store is the clean one with the
+    victim's det_map truncated so dequantize/reshape raises."""
     from pyspark.sql import functions as F
 
     from paddleocr_spark.corpus import media_schema
-    from paddleocr_spark.functions.udfs import (
-        ERROR_KIND,
-        decode_errors,
-        decode_media_store,
-    )
 
     docs = synthesize_docs(spark, 8, seed=33, heavy_frac=0.0)
     clean = media_store(docs, 33, partitions=2)
     media = spark.read.schema(media_schema()).parquet(clean)
     victim = media.select("media_ref").orderBy("media_ref").first()[0]
-    # truncate the victim's det_map so dequantize/reshape raises
-    poisoned = str(tmp_path / "poisoned")
+    root = tmp_path_factory.mktemp("poison")
+    poisoned = str(root / "poisoned")
     (media.withColumn(
         "det_map",
         F.when(F.col("media_ref") == victim,
                F.substring(F.col("det_map"), 1, 3))
         .otherwise(F.col("det_map")))
      .write.parquet(poisoned))
+    without = str(root / "without")
+    media.where(F.col("media_ref") != victim).write.parquet(without)
+    return docs, clean, poisoned, victim, without
 
+
+def test_poison_media_row_quarantined(spark, poisoned):
+    """A corrupt media row in the store must not kill the decode job:
+    it becomes one quarantine row (countable via decode_errors), is
+    excluded from span assembly, and every other row decodes
+    unchanged."""
+    from paddleocr_spark.functions.udfs import (
+        decode_errors,
+        decode_media_store,
+    )
+
+    docs, clean, poisoned, victim, _ = poisoned
     frags = decode_media_store(spark, poisoned)
     errs = decode_errors(frags).collect()
     assert [e["media_ref"] for e in errs] == [victim]
     assert errs[0]["error"]  # non-empty reason string
 
+    # the victim leaves exactly its quarantine row: key, nulls, error
+    (bad,) = [r for r in frags.collect() if r.media_ref == victim]
+    assert bad.error and all(v is None for k, v in bad.asDict().items()
+                             if k not in ("media_ref", "error"))
     # all other media decode exactly as from the clean store
     key = lambda rows: sorted((r.media_ref, r.box_idx, r.out_kind,
                                r.out_text, round(r.conf, 9))
                               for r in rows if r.media_ref != victim)
-    assert key([r for r in frags.collect()
-                if r.out_kind != ERROR_KIND]) == key(
+    assert key([r for r in frags.collect() if r.error is None]) == key(
         decode_media_store(spark, clean).collect())
 
     # span assembly drops the quarantined media silently
     spans = extract_spans(docs, poisoned).collect()
     assert spans
     assert all(r.media_ref != victim for r in spans)
-    assert not any(r.kind == ERROR_KIND for r in spans)
+    assert all(r.kind is not None for r in spans)
+
+
+def test_store_metric_skips_quarantined_row(spark, poisoned):
+    """A store metric counts no quarantine row: det_iou_metric over the
+    poisoned store equals its value over the store without the victim
+    row."""
+    from paddleocr_spark.operators.metrics import det_iou_metric
+
+    _, _, poisoned, _, without = poisoned
+    assert (det_iou_metric(poisoned).collect()
+            == det_iou_metric(without).collect())
 
 
 def test_clean_text_python_twin_matches_spark_on_control_chars(spark):

@@ -76,13 +76,12 @@ def test_jpeg_stream_bytes_do_not_confuse_the_scanner():
 
 
 def test_split_pages_pdf_explodes_and_decodes(spark, tmp_path):
-    """binaryFile → PDF page explode → decode → det-resize, the
+    """PDF files read by path → page explode → decode → det-resize, the
     reference's PDF ingest shape (utility.py:105-123) end-to-end."""
     from paddleocr_spark.kernels.preprocess import det_resize_for_test
     from paddleocr_spark.sources.media_files import (
         decode_image_bytes,
         explode_pages,
-        read_binary_files,
     )
 
     rng = np.random.default_rng(23)
@@ -91,7 +90,7 @@ def test_split_pages_pdf_explodes_and_decodes(spark, tmp_path):
     pages = _pages(rng, 3)
     (d / "scan.pdf").write_bytes(
         encode_pdf(pages, image_filter="FlateDecode"))
-    out = explode_pages(read_binary_files(spark, str(d))).collect()
+    out = explode_pages(spark, str(d)).collect()
     assert sorted(r.page for r in out) == [0, 1, 2]
     assert all(r.is_multipage for r in out)
     for r in sorted(out, key=lambda r: r.page):
@@ -181,17 +180,10 @@ def test_flate_roundtrip_property():
 
 
 def test_explode_pages_quarantines_corrupt_containers(spark, tmp_path):
-    """One malformed container must not kill a 10^12-doc job:
-    on_error='quarantine' emits an ERROR_PAGE row and keeps the good
-    files' pages; the default stays fail-fast."""
-    from pyspark.sql.utils import PythonException
-
-    from paddleocr_spark.sources.media_files import (
-        ERROR_PAGE,
-        explode_pages,
-        page_errors,
-        read_binary_files,
-    )
+    """One malformed container must not kill a 10^12-doc job: it
+    becomes one quarantine row and the good files' pages are kept."""
+    from paddleocr_spark.functions.udfs import data_rows, decode_errors
+    from paddleocr_spark.sources.media_files import explode_pages
 
     d = tmp_path / "mixed"
     d.mkdir()
@@ -200,14 +192,10 @@ def test_explode_pages_quarantines_corrupt_containers(spark, tmp_path):
                                           image_filter="FlateDecode"))
     (d / "bad.pdf").write_bytes(b"%PDF-1.4\ntruncated garbage")
 
-    files = read_binary_files(spark, str(d))
-    with pytest.raises(PythonException):
-        explode_pages(files).collect()  # default: fail fast
-
-    rows = explode_pages(files, on_error="quarantine").collect()
-    ok = sorted(r.page for r in rows if r.page != ERROR_PAGE)
+    pages = explode_pages(spark, str(d))
+    ok = sorted(r.page for r in data_rows(pages).collect())
     assert ok == [0, 1]
-    errs = page_errors(explode_pages(files, on_error="quarantine")).collect()
+    errs = decode_errors(pages).collect()
     assert len(errs) == 1
     assert errs[0].path.endswith("bad.pdf") and "ValueError" in errs[0].error
 

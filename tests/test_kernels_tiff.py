@@ -106,7 +106,7 @@ def test_split_pages_tiff_explodes():
 
 
 def test_tiff_binaryfile_to_det_ingest(spark, tmp_path):
-    """binaryFile scan → TIFF page explode → real decode →
+    """TIFF files read by path → page explode → real decode →
     DetResizeForTest, end-to-end through Spark (the reference's
     PDF-page ingest shape on a real container)."""
     from pyspark.sql import functions as F
@@ -115,7 +115,6 @@ def test_tiff_binaryfile_to_det_ingest(spark, tmp_path):
     from paddleocr_spark.sources.media_files import (
         decode_image_bytes,
         explode_pages,
-        read_binary_files,
     )
 
     rng = np.random.default_rng(13)
@@ -125,7 +124,7 @@ def test_tiff_binaryfile_to_det_ingest(spark, tmp_path):
     for i, n in enumerate(n_pages):
         (doc_dir / f"d{i}.tiff").write_bytes(encode_tiff(_pages(rng, n)))
 
-    pages = explode_pages(read_binary_files(spark, str(doc_dir)))
+    pages = explode_pages(spark, str(doc_dir))
     assert pages.count() == sum(n_pages)
 
     def shapes(batches):

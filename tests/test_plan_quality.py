@@ -96,7 +96,7 @@ def test_media_store_planning_from_manifest(spark, monkeypatch):
     def no_glob(path):
         raise AssertionError(f"store {path} was globbed at plan time")
 
-    monkeypatch.setattr(udfs, "_list_store_files", no_glob)
+    monkeypatch.setattr(udfs, "_list_files", no_glob)
     plan = formatted_plan(udfs.decode_media_store(spark, media_path))
     media_dir = _os.path.basename(media_path.rstrip("/"))
     for loc in re.findall(r"Location: \S+ \[([^\]]*)\]", plan):
@@ -124,7 +124,7 @@ def test_store_decode_is_one_task_per_core_in_two_jobs(spark):
     range-partition sampling job, or a Python-RDD conversion of the
     file list, fails this."""
     from paddleocr_spark.functions.udfs import (
-        _list_store_files,
+        _store_files,
         decode_media_store,
     )
 
@@ -142,7 +142,7 @@ def test_store_decode_is_one_task_per_core_in_two_jobs(spark):
     last = max(jobs)
     tasks = [tracker.getStageInfo(s).numTasks
              for s in tracker.getJobInfo(last).stageIds]
-    want = min(len(_list_store_files(media_path)), sc.defaultParallelism)
+    want = min(len(_store_files(media_path)), sc.defaultParallelism)
     assert tasks == [want], tasks
 
 
@@ -200,10 +200,10 @@ def test_manifest_packing_is_byte_balanced(spark):
 
     from pyspark.sql import functions as F
 
-    from paddleocr_spark.functions.udfs import _store_files_df
+    from paddleocr_spark.functions.udfs import _groups_df, _store_files
 
     _, media_path = entry_mod.corpus_paths(spark, SF, n_docs=50)
-    files_df = _store_files_df(spark, media_path, n_tasks=4)
+    files_df = _groups_df(spark, _store_files(media_path), n_tasks=4)
     rows = (files_df.select(F.spark_partition_id().alias("pid"), "path")
             .collect())
     by_task: dict[int, int] = {}
@@ -227,7 +227,8 @@ def test_skewed_store_packs_within_share_plus_largest_file(spark,
     from pyspark.sql import functions as F
 
     from paddleocr_spark.functions.udfs import (
-        _store_files_df,
+        _groups_df,
+        _store_files,
         write_store_manifest,
     )
 
@@ -243,7 +244,7 @@ def test_skewed_store_packs_within_share_plus_largest_file(spark,
                            compression="none")
         if kind:
             write_store_manifest(spark, str(store))
-        rows = (_store_files_df(spark, str(store), n_tasks=4)
+        rows = (_groups_df(spark, _store_files(str(store)), n_tasks=4)
                 .select(F.spark_partition_id().alias("pid"), "path")
                 .collect())
         assert len(rows) == 12
@@ -322,7 +323,7 @@ def test_media_query_runs_one_python_stage(spark, query):
     defaultParallelism), and no shuffle reads the Python output
     directly (a sort's range-partition sampling over it would run the
     stage twice)."""
-    from paddleocr_spark.functions.udfs import _list_store_files
+    from paddleocr_spark.functions.udfs import _store_files
     from paddleocr_spark.operators._cache import release
 
     _, media_path = entry_mod.corpus_paths(spark, SF)
@@ -334,7 +335,7 @@ def test_media_query_runs_one_python_stage(spark, query):
         node, reader = nodes[0]
         assert reader != "Exchange", query
         assert node.execute().getNumPartitions() == min(
-            len(_list_store_files(media_path)),
+            len(_store_files(media_path)),
             spark.sparkContext.defaultParallelism)
     finally:
         release(spark)
@@ -680,27 +681,60 @@ def test_bucket_count_mismatch_refused(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS bspec_t5")
 
 
-def test_pdf_text_single_python_crossing(spark):
-    """Text-PDF extraction: the binaryFile scan feeds ONE Arrow-batched
-    mapInPandas (bytes → runs) and the page assembly is pure Catalyst —
-    exactly one Python crossing and one aggregation shuffle, so the
-    plan is scan → UDF → partial agg → exchange → final agg at any
-    corpus size."""
+def _n_crossings(df):
+    # count node DETAIL headers — the formatted plan prints each node
+    # once in the tree and once in the detail section
     import re
 
+    return len(re.findall(r"^\(\d+\) MapInPandas", formatted_plan(df),
+                          re.MULTILINE))
+
+
+@pytest.mark.parametrize("query", [
+    "pdf_text_runs", "audio_features", "video_frames",
+    "paged_store_pages"])
+def test_file_query_single_python_crossing(spark, query):
+    """Each file consumer reads its files by path in ONE Python crossing
+    (the shared file loop: split, decode and quarantine in one body)
+    with no shuffle — no binaryFile scan feeding a second UDF."""
+    df = entry_mod.queries()[query](spark, SF)
+    assert _n_crossings(df) == 1, formatted_plan(df)
+    assert count_exchanges(df) == 0
+    assert "binaryFile" not in formatted_plan(df)
+
+
+def test_pdf_page_text_single_python_crossing(spark):
+    """Text-PDF page assembly is pure Catalyst over the file loop: one
+    Python crossing and one aggregation shuffle, so the plan is loop →
+    partial agg → exchange → final agg at any corpus size."""
     from paddleocr_spark.sources import pdf_text_store
 
-    def n_crossings(df):
-        # count node DETAIL headers — the formatted plan prints each
-        # node once in the tree and once in the detail section
-        return len(re.findall(r"^\(\d+\) MapInPandas",
-                              formatted_plan(df), re.MULTILINE))
-
-    runs = pdf_text_store.pdf_text_runs(spark, SF)
-    assert n_crossings(runs) == 1, formatted_plan(runs)
-    assert count_exchanges(runs) == 0
-
     page = pdf_text_store.pdf_page_text(spark, SF)
-    assert n_crossings(page) == 1, formatted_plan(page)
+    assert _n_crossings(page) == 1, formatted_plan(page)
     assert has_partial_aggregate(page)
     assert count_exchanges(page) <= 1
+
+
+def test_stream_ingest_scan_reads_no_content(spark, tmp_path):
+    """The ingest stream's binaryFile source only lists files: each
+    micro-batch's scan reads ``path`` alone, never ``content`` (the
+    loop reads the bytes on the worker)."""
+    import re
+
+    from paddleocr_spark.streaming.incremental import streaming_page_ingest
+
+    files_dir = tmp_path / "landing"
+    files_dir.mkdir()
+    (files_dir / "a.doc").write_bytes(b"FAKEDOC" + bytes([2]) + b"x")
+    store = spark._jsparkSession.sharedState().statusStore()
+    seen = store.executionsList().size()
+    streaming_page_ingest(spark, str(files_dir), str(tmp_path / "out"),
+                          str(tmp_path / "ckpt")).awaitTermination()
+    executions = store.executionsList()
+    plans = [executions.apply(i).physicalPlanDescription()
+             for i in range(seen, executions.size())]
+    scans = [p for p in plans if "Scan binaryFile" in p]
+    assert scans, plans
+    for plan in scans:
+        for m in re.finditer(r"ReadSchema: (struct<[^\n]*>)", plan):
+            assert "content" not in m.group(1), plan

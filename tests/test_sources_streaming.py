@@ -5,7 +5,7 @@ import os
 
 from paddleocr_spark.corpus import synthesize_docs
 from paddleocr_spark.operators.extract import extract_spans
-from paddleocr_spark.sources.media_files import explode_pages, read_binary_files
+from paddleocr_spark.sources.media_files import explode_pages
 from paddleocr_spark.streaming.incremental import incremental_extract
 
 
@@ -14,8 +14,7 @@ def test_binary_source_page_explode(spark, tmp_path):
     d.mkdir()
     (d / "a.bin").write_bytes(b"FAKEDOC" + bytes([3]) + b"payloadA")
     (d / "b.bin").write_bytes(b"plain-image-bytes")
-    files = read_binary_files(spark, str(d))
-    pages = explode_pages(files).collect()
+    pages = explode_pages(spark, str(d)).collect()
     by_path = {}
     for r in pages:
         by_path.setdefault(os.path.basename(r.path), []).append(r)
@@ -25,6 +24,7 @@ def test_binary_source_page_explode(spark, tmp_path):
     assert bytes(by_path["a.bin"][0].content).startswith(b"PAGE")
     assert len(by_path["b.bin"]) == 1
     assert bytes(by_path["b.bin"][0].content) == b"plain-image-bytes"
+    assert all(r.error is None for r in pages)
 
 
 def test_incremental_extract_matches_batch(spark, tmp_path, media_store):
@@ -110,16 +110,12 @@ def test_windowed_event_counts_stream(spark, tmp_path):
 
 
 def test_real_image_ingest_pipeline(spark, tmp_path):
-    """Non-fictional ingest: PNG/BMP bytes on disk → binaryFile scan →
-    page explode → REAL decode (pure-NumPy codecs) → DetResizeForTest
+    """Non-fictional ingest: PNG/BMP bytes on disk → page explode (files
+    read by path) → REAL decode (pure-NumPy codecs) → DetResizeForTest
     inside one Arrow-batched stage, emitting per-image shape records."""
     import numpy as np
 
     from paddleocr_spark.kernels.imgcodec import encode_png
-    from paddleocr_spark.sources.media_files import (
-        explode_pages,
-        read_binary_files,
-    )
 
     rng = np.random.default_rng(5)
     img_dir = tmp_path / "imgs"
@@ -129,7 +125,7 @@ def test_real_image_ingest_pipeline(spark, tmp_path):
         (img_dir / name).write_bytes(
             encode_png(rng.integers(0, 256, (h, w, 3), dtype=np.uint8)))
 
-    pages = explode_pages(read_binary_files(spark, str(img_dir)))
+    pages = explode_pages(spark, str(img_dir))
 
     def decode_resize(batches):
         import os
@@ -263,13 +259,9 @@ def test_streaming_page_ingest_matches_batch(spark, tmp_path):
     must survive it, not die)."""
     import numpy as np
 
+    from paddleocr_spark.functions.udfs import decode_errors
     from paddleocr_spark.kernels.pdf import encode_pdf
     from paddleocr_spark.kernels.tiff import encode_tiff
-    from paddleocr_spark.sources.media_files import (
-        ERROR_PAGE,
-        explode_pages,
-        read_binary_files,
-    )
     from paddleocr_spark.streaming.incremental import streaming_page_ingest
 
     files_dir = tmp_path / "landing"
@@ -290,15 +282,16 @@ def test_streaming_page_ingest_matches_batch(spark, tmp_path):
     q = streaming_page_ingest(spark, str(files_dir), out_dir, ckpt)
     q.awaitTermination()
 
-    streamed = spark.read.parquet(out_dir).collect()
-    batch = explode_pages(read_binary_files(spark, str(files_dir)),
-                          on_error="quarantine").collect()
-    key = lambda rows: sorted((r.path.rsplit("/", 1)[-1], r.page,
-                               bytes(r.content), r.is_multipage)
-                              for r in rows)
+    streamed = spark.read.parquet(out_dir).drop("epoch")
+    batch = explode_pages(spark, str(files_dir))
+    key = lambda df: sorted(
+        (r.path.rsplit("/", 1)[-1], r.page,
+         None if r.content is None else bytes(r.content), r.is_multipage,
+         r.error) for r in df.collect())
     assert key(streamed) == key(batch)
-    assert sum(1 for r in streamed if r.page == ERROR_PAGE) == 1
-    assert sum(1 for r in streamed if r.page >= 0) == 5
+    errs = decode_errors(streamed).collect()
+    assert [e.path.rsplit("/", 1)[-1] for e in errs] == ["bad.pdf"]
+    assert streamed.where("error IS NULL").count() == 5
 
 
 def test_streaming_partitioned_sink_matches_batch_layout(spark, tmp_path):
@@ -383,22 +376,16 @@ def test_check_img_rejects_unknown_types():
 def test_zero_page_and_truncated_fakedoc_quarantine(spark, tmp_path):
     """A zero-page container and a truncated FAKEDOC header must each
     surface as a quarantine row — never vanish from both the data and
-    the page_errors report."""
-    from paddleocr_spark.sources.media_files import (
-        explode_pages,
-        page_errors,
-        read_binary_files,
-    )
+    the decode_errors report."""
+    from paddleocr_spark.functions.udfs import data_rows, decode_errors
 
     (tmp_path / "zero.doc").write_bytes(b"FAKEDOC\x00payload")
     (tmp_path / "trunc.doc").write_bytes(b"FAKEDOC")
-    files = read_binary_files(spark, str(tmp_path / "*.doc"))
-    pages = explode_pages(files, on_error="quarantine")
+    pages = explode_pages(spark, str(tmp_path / "*.doc"))
     errs = {r["path"].rsplit("/", 1)[-1]: r["error"]
-            for r in page_errors(pages).collect()}
+            for r in decode_errors(pages).collect()}
     assert set(errs) == {"zero.doc", "trunc.doc"}
     assert "zero pages" in errs["zero.doc"]
     assert "truncated FAKEDOC" in errs["trunc.doc"]
     # and nothing leaked into the data rows
-    from pyspark.sql import functions as F
-    assert pages.where(F.col("page") >= 0).count() == 0
+    assert data_rows(pages).count() == 0
