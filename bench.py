@@ -130,21 +130,18 @@ def _storage_memory_used(spark) -> int:
 
 
 def _warm_workers(spark, cores: int) -> None:
-    """Pre-fork python workers and pay the heavy-import cost (numpy/
-    pandas/pyarrow + kernels, ~2.5 s/worker) outside the timings — a
-    cold job otherwise spends ~cores×2.5 core-seconds on an import
-    storm before any real work."""
+    """Pre-fork python workers and pay their import cost (pyarrow +
+    the kernels) outside the timings."""
 
     def warm(batches):
-        import pandas as pd  # noqa: F401
+        import pyarrow  # noqa: F401
 
         import paddleocr_spark.extract_core  # noqa: F401
 
-        for pdf in batches:
-            yield pdf
+        yield from batches
 
     (spark.range(cores * 4).repartition(cores * 4)
-     .mapInPandas(warm, schema="id long")
+     .mapInArrow(warm, schema="id long")
      .write.mode("overwrite").format("noop").save())
 
 

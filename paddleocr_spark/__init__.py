@@ -9,15 +9,15 @@ Re-creates the query/data-processing capabilities of the reference
                   inside executors, unit-tested against golden fixtures.
 - ``corpus``    : deterministic synthesizer for the interleaved
                   (doc_id, spans[]) corpus and the media fixture store.
-- ``functions`` : vectorized pandas/Arrow UDF wrappers around the kernels.
+- ``functions`` : Arrow-batched Python stages around the kernels.
 - ``operators`` : DataFrame-level operators — the extraction pipeline,
                   dedup (exact/minhash/simhash), similarity search, text
                   analysis, metric aggregations, checkpoint/resume.
 - ``sources``   : table loaders for the driver-generated parquet corpus.
 
-Design: DataFrame/SQL end-to-end; Python only inside Arrow-batched
-pandas UDFs (never per-row); small dims broadcast; skew handled by
-salted repartitioning; resume via a per-partition checkpoint table.
+Design: DataFrame/SQL end-to-end; Python only inside ``mapInArrow``
+stages (never per-row); small dims broadcast; skew handled by salted
+repartitioning; resume via a per-partition checkpoint table.
 """
 
 __version__ = "0.1.0"

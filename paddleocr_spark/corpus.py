@@ -13,7 +13,7 @@ model-free analogue of the reference's det/rec/cls/tab tensors
 (``toddleocr/engine.py:326-391``, ``toddleocr/config.py:294-439``).
 
 Every value is a pure function of ``(seed, doc index)`` or of the
-``media_ref`` string, so generation is distributed (``mapInPandas``),
+``media_ref`` string, so generation is distributed (``mapInArrow``),
 reproducible, and independent of partition count — the property that
 lets the same generator run at SF=1e-6 locally and at 10^12-doc scale
 on a real cluster.
@@ -603,48 +603,29 @@ def media_record(media_ref: str, seed: int = 42) -> dict:
 # Spark-side distributed synthesis
 
 
-def docs_schema():
-    from pyspark.sql import types as T
+_DOCS_DDL = ("doc_id string, spans array<struct<kind: string, "
+             "text: string, media_ref: string, offset: int>>")
+_MEDIA_DDL = (
+    "media_ref string, media_kind string, gt_boxes array<array<float>>, "
+    "gt_structure string, cand_boxes array<array<float>>, "
+    "cand_scores array<array<float>>, gt_regions array<array<float>>, "
+    "gt_text_idx array<int>, det_map binary, det_h int, det_w int, "
+    "shape_list array<float>, n_boxes int, rec_logits array<binary>, "
+    "rec_t int, rec_c int, cls_probs array<array<float>>, "
+    "gt_texts array<string>, structure_probs binary, struct_t int, "
+    "struct_v int, loc_preds binary")
 
-    span = T.StructType([
-        T.StructField("kind", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("offset", T.IntegerType()),
-    ])
-    return T.StructType([
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("spans", T.ArrayType(span)),
-    ])
+
+def docs_schema():
+    from pyspark.sql.types import StructType
+
+    return StructType.fromDDL(_DOCS_DDL)
 
 
 def media_schema():
-    from pyspark.sql import types as T
+    from pyspark.sql.types import StructType
 
-    return T.StructType([
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("media_kind", T.StringType()),
-        T.StructField("gt_boxes", T.ArrayType(T.ArrayType(T.FloatType()))),
-        T.StructField("gt_structure", T.StringType()),
-        T.StructField("cand_boxes", T.ArrayType(T.ArrayType(T.FloatType()))),
-        T.StructField("cand_scores", T.ArrayType(T.ArrayType(T.FloatType()))),
-        T.StructField("gt_regions", T.ArrayType(T.ArrayType(T.FloatType()))),
-        T.StructField("gt_text_idx", T.ArrayType(T.IntegerType())),
-        T.StructField("det_map", T.BinaryType()),
-        T.StructField("det_h", T.IntegerType()),
-        T.StructField("det_w", T.IntegerType()),
-        T.StructField("shape_list", T.ArrayType(T.FloatType())),
-        T.StructField("n_boxes", T.IntegerType()),
-        T.StructField("rec_logits", T.ArrayType(T.BinaryType())),
-        T.StructField("rec_t", T.IntegerType()),
-        T.StructField("rec_c", T.IntegerType()),
-        T.StructField("cls_probs", T.ArrayType(T.ArrayType(T.FloatType()))),
-        T.StructField("gt_texts", T.ArrayType(T.StringType())),
-        T.StructField("structure_probs", T.BinaryType()),
-        T.StructField("struct_t", T.IntegerType()),
-        T.StructField("struct_v", T.IntegerType()),
-        T.StructField("loc_preds", T.BinaryType()),
-    ])
+    return StructType.fromDDL(_MEDIA_DDL)
 
 
 def synthesize_docs(spark, n_docs: int, seed: int = 42,
@@ -652,36 +633,36 @@ def synthesize_docs(spark, n_docs: int, seed: int = 42,
                     patho_docs: int = 0, patho_spans: int = 100_000,
                     patho_pool: int = 8):
     """Distributed, partition-independent corpus generation:
-    spark.range drives per-index mapInPandas; each row derives only
+    spark.range drives per-index mapInArrow; each row derives only
     from (seed, id). ``patho_docs`` appends that many pathological
     ~10^5-span documents (ids n_docs..n_docs+patho_docs) for the skew
     study — the first n_docs rows are bit-identical either way."""
+    from paddleocr_spark.functions.udfs import row_batch
+
     if media_pool is None:
         media_pool = max(16, n_docs * 2)
+    to_batch = row_batch(docs_schema())
 
     def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = [doc_record(int(i), seed, heavy_frac, media_pool)
-                    if int(i) < n_docs
-                    else patho_doc_record(int(i) - n_docs, seed,
+        for b in batches:
+            rows = [doc_record(i, seed, heavy_frac, media_pool)
+                    if i < n_docs
+                    else patho_doc_record(i - n_docs, seed,
                                           patho_spans, patho_pool)
-                    for i in pdf["id"]]
-            yield pd.DataFrame({
-                "doc_id": [r["doc_id"] for r in rows],
-                "spans": [[(s["kind"], s["text"], s["media_ref"], s["offset"])
-                           for s in r["spans"]] for r in rows],
-            })
+                    for i in b.column("id").to_pylist()]
+            yield to_batch([
+                (r["doc_id"],
+                 [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                  for s in r["spans"]]) for r in rows])
 
-    return spark.range(n_docs + patho_docs).mapInPandas(
+    return spark.range(n_docs + patho_docs).mapInArrow(
         gen, schema=docs_schema())
 
 
 def synthesize_media(spark, docs_df, seed: int = 42,
                      partitions: int | None = None):
     """Media store for exactly the refs the corpus uses: distinct
-    media_ref → explicit repartition → mapInPandas content generation.
+    media_ref → explicit repartition → mapInArrow content generation.
 
     The explicit repartition AFTER distinct matters: the distinct's
     shuffle carries only tiny media_ref strings, so AQE coalesces it to
@@ -689,6 +670,8 @@ def synthesize_media(spark, docs_df, seed: int = 42,
     write) would run on one core. Cheap-rows-in / fat-rows-out UDF
     stages must set their own parallelism."""
     from pyspark.sql import functions as F
+
+    from paddleocr_spark.functions.udfs import row_batch
 
     if partitions is None:
         partitions = spark.sparkContext.defaultParallelism * 2
@@ -699,17 +682,17 @@ def synthesize_media(spark, docs_df, seed: int = 42,
             .distinct()
             .repartition(partitions, "media_ref"))
 
-    def gen(batches):
-        import pandas as pd
+    cols = media_schema().fieldNames()
+    to_batch = row_batch(media_schema())
 
-        cols = [f.name for f in media_schema().fields]
-        for pdf in batches:
-            # chunk the fat output rows so each yielded frame stays
+    def gen(batches):
+        for b in batches:
+            # chunk the fat output rows so each yielded batch stays
             # ~10 MB regardless of the session's Arrow input batch size
-            refs_list = list(pdf["media_ref"])
+            refs_list = b.column("media_ref").to_pylist()
             for i in range(0, len(refs_list), 256):
                 rows = [media_record(ref, seed)
                         for ref in refs_list[i:i + 256]]
-                yield pd.DataFrame({c: [r[c] for r in rows] for c in cols})
+                yield to_batch([tuple(r[c] for c in cols) for r in rows])
 
-    return refs.mapInPandas(gen, schema=media_schema())
+    return refs.mapInArrow(gen, schema=media_schema())

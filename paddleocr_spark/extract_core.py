@@ -32,8 +32,8 @@ from .kernels.matcher import filter_ocr_result, get_pred_html, match_result
 from .kernels.reading_order import sorted_boxes
 from .kernels.table import TableVocab, table_decode, wrap_html
 
-__all__ = ["clean_text", "decode_media_row", "master_html_for_row",
-           "DROP_SCORE"]
+__all__ = ["clean_text", "det_boxes", "raw_rec", "decode_media_row",
+           "master_html_for_row", "DROP_SCORE"]
 
 # rec results below this confidence are dropped, as the engine's
 # drop_score (toddleocr/engine.py:355, config default 0.5).
@@ -95,6 +95,33 @@ def _expand_xyxy(box: np.ndarray, h: float, w: float, margin: int = 2):
     ]
 
 
+def det_boxes(row: dict) -> list:
+    """A media row's det boxes: its stored uint8 prob map dequantized,
+    then the DB post-process (db.py:201-230) at the row's
+    ``shape_list``, in the kernel's order (unsorted)."""
+    pm = dequantize_map(row["det_map"], int(row["det_h"]),
+                        int(row["det_w"]))
+    return db_postprocess(pm, [float(x) for x in row["shape_list"]])
+
+
+def raw_rec(row: dict) -> list[tuple[str, float]]:
+    """(text, conf) of each stored rec logits tensor, CTC-decoded one by
+    one with the default charset: no cls rotation, no drop_score."""
+    t, c = int(row["rec_t"]), int(row["rec_c"])
+    return [ctc_decode(dequantize_logits(lg, t, c), _CHARSET)
+            for lg in row["rec_logits"]]
+
+
+def _table_decode(row: dict, shape_list: list[float]):
+    """(tokens, cell boxes, score) of a media row's stored table-structure
+    tensors: float16 structure probs and float32 location preds."""
+    t = int(row["struct_t"])
+    sp = np.frombuffer(row["structure_probs"], dtype=np.float16).reshape(
+        t, int(row["struct_v"])).astype(np.float32)
+    lp = np.frombuffer(row["loc_preds"], dtype=np.float32).reshape(t, 8)
+    return table_decode(sp, lp, shape_list, _VOCAB)
+
+
 def decode_media_row(row: dict, bundle: dict | None = None) -> list[dict]:
     """Decode one media fixture row into output span fragments.
 
@@ -125,10 +152,8 @@ def decode_media_row(row: dict, bundle: dict | None = None) -> list[dict]:
     if not regions:
         return []
 
-    pm = dequantize_map(row["det_map"], int(row["det_h"]),
-                        int(row["det_w"]))
     shape_list = [float(x) for x in row["shape_list"]]
-    boxes = sorted_boxes(db_postprocess(pm, shape_list))
+    boxes = sorted_boxes(det_boxes(row))
     t, c = int(row["rec_t"]), int(row["rec_c"])
     # rec in wh-ratio-sorted micro-batches with scatter-back, as the
     # reference batches before the model forward (config.py:387-416)
@@ -171,12 +196,7 @@ def decode_media_row(row: dict, bundle: dict | None = None) -> list[dict]:
                 })
             continue
         # table region
-        sp = np.frombuffer(row["structure_probs"], dtype=np.float16).reshape(
-            int(row["struct_t"]), int(row["struct_v"])).astype(np.float32)
-        lp = np.frombuffer(row["loc_preds"], dtype=np.float32).reshape(
-            int(row["struct_t"]), 8)
-        tokens, cell_bboxes, struct_score = table_decode(
-            sp, lp, shape_list, _VOCAB)
+        tokens, cell_bboxes, struct_score = _table_decode(row, shape_list)
         h, w = shape_list[0], shape_list[1]
         dt_xyxy = [_expand_xyxy(np.asarray(boxes[i]), h, w) for i in idxs]
         rec_reg = [rec[i] for i in idxs]
@@ -213,21 +233,14 @@ def master_html_for_row(row: dict) -> str | None:
     treg = next((r for r in regions if r["label"] == "table"), None)
     if treg is None:
         return None
-    pm = dequantize_map(row["det_map"], int(row["det_h"]), int(row["det_w"]))
     shape_list = [float(x) for x in row["shape_list"]]
     h, w = shape_list[0], shape_list[1]
-    boxes = sorted_boxes(db_postprocess(pm, shape_list))
-    t, c = int(row["rec_t"]), int(row["rec_c"])
-    rec = [ctc_decode(dequantize_logits(lg, t, c), _CHARSET)
-           for lg in row["rec_logits"]]
+    boxes = sorted_boxes(det_boxes(row))
+    rec = raw_rec(row)
     _, y1, _, y2, _ = treg["bbox"]
     idxs = [i for i, b in enumerate(boxes)
             if y1 <= float(np.asarray(b)[:, 1].mean()) < y2]
-    sp = np.frombuffer(row["structure_probs"], dtype=np.float16).reshape(
-        int(row["struct_t"]), int(row["struct_v"])).astype(np.float32)
-    lp = np.frombuffer(row["loc_preds"], dtype=np.float32).reshape(
-        int(row["struct_t"]), 8)
-    tokens, cell_bboxes, _ = table_decode(sp, lp, shape_list, _VOCAB)
+    tokens, cell_bboxes, _ = _table_decode(row, shape_list)
     cells_xyxy = [[float(b[0::2].min()), float(b[1::2].min()),
                    float(b[0::2].max()), float(b[1::2].max())]
                   for b in np.asarray(cell_bboxes).reshape(-1, 8)]

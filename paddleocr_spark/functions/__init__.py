@@ -1,1 +1,1 @@
-"""Vectorized pandas/Arrow UDF wrappers around the NumPy kernels."""
+"""Arrow-batched Python stages (``mapInArrow``) around the NumPy kernels."""

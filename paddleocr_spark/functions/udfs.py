@@ -1,4 +1,7 @@
-"""Arrow-batched UDFs for the extraction stages.
+"""Arrow-batched Python stages for the extraction pipeline.
+
+Every Python stage of the package is a ``mapInArrow`` body yielding
+``row_batch`` batches: no worker converts through pandas.
 
 Every byte consumer reads its input BY PATH through one loop,
 ``map_media_store``: each Python task reads its byte-balanced group of
@@ -25,7 +28,7 @@ from __future__ import annotations
 
 from pathlib import Path
 
-__all__ = ["MEDIA_FRAGMENT_SCHEMA", "map_media_store",
+__all__ = ["MEDIA_FRAGMENT_SCHEMA", "row_batch", "map_media_store",
            "decode_media_store", "decode_errors", "data_rows",
            "write_store_manifest", "manifest_path"]
 
@@ -62,6 +65,72 @@ def _decode_row_fn(bundle_bc):
     return decode_row
 
 
+# str(pa type) -> numpy dtype of the fixed-width types the stages emit
+_FIXED = {"bool": "?", "int32": "i4", "int64": "i8", "float": "f4",
+          "double": "f8"}
+
+
+def _arrow_array(values: list, typ):
+    """The pyarrow array of ``typ`` holding ``values`` (Python or NumPy
+    values; None is a null), assembled from its buffers: ``pa.array``
+    over Python objects (like ``Array.to_numpy``) loads pandas through
+    pyarrow's pandas shim, ``Array.from_buffers`` does not."""
+    import numpy as np
+    import pyarrow as pa
+
+    valid = [v is not None for v in values]
+    n_null = valid.count(False)
+    bufs = [pa.py_buffer(np.packbits(valid, bitorder="little"))
+            if n_null else None]
+    kids = None
+    if pa.types.is_struct(typ):
+        kids = [_arrow_array([v[i] if ok else None
+                              for v, ok in zip(values, valid)], f.type)
+                for i, f in enumerate(typ)]
+    elif typ in (pa.string(), pa.binary()) or pa.types.is_list(typ):
+        # list items, or the bytes of a string/binary value
+        parts = [(v.encode() if isinstance(v, str) else v) if ok else b""
+                 for v, ok in zip(values, valid)]
+        ends = np.cumsum([len(p) for p in parts], dtype=np.int64)
+        if ends.size and ends[-1] >= 2 ** 31:
+            raise OverflowError(f"{typ} offsets past 2^31 in one batch")
+        bufs.append(pa.py_buffer(np.concatenate(([0], ends)).astype("i4")))
+        if pa.types.is_list(typ):
+            kids = [_arrow_array([x for p in parts for x in p],
+                                 typ.value_type)]
+        else:
+            bufs.append(pa.py_buffer(b"".join(parts)))
+    else:
+        data = np.array([v if ok else 0 for v, ok in zip(values, valid)],
+                        dtype=_FIXED[str(typ)])
+        bufs.append(pa.py_buffer(np.packbits(data, bitorder="little")
+                                 if data.dtype == bool else data))
+    return pa.Array.from_buffers(typ, len(values), bufs, n_null,
+                                 children=kids)
+
+
+def row_batch(schema):
+    """The one way a Python stage hands rows back to the JVM: a function
+    from a list of output tuples (in ``schema`` order, None a typed null
+    in any column) to a ``pa.RecordBatch`` of ``schema`` — a DDL string
+    or a ``StructType`` — for a ``mapInArrow`` body to yield. The schema
+    converts to Arrow once, here on the driver; the closure ships it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    row_type = pa.struct(to_arrow_schema(schema))
+
+    def to_batch(rows):
+        import pyarrow as pa
+
+        return pa.RecordBatch.from_struct_array(_arrow_array(rows, row_type))
+
+    return to_batch
+
+
 # ---------------------------------------------------------------------------
 # Pointer passing: media bytes are read by path on the worker, never
 # scanned into a DataFrame (a parquet scan of the store, or Spark's
@@ -69,7 +138,7 @@ def _decode_row_fn(bundle_bc):
 #
 # Shipping ~60 KB of tensor bytes per row from the JVM to Python through
 # the Arrow python-runner measures at ~8 MB/s/core (the row-to-Arrow
-# copy of large binaries dominates; a passthrough mapInPandas over the
+# copy of large binaries dominates; a passthrough Python stage over the
 # fat columns costs 68 s for 540 MB at local[8] while the actual decode
 # is 32 core-seconds). The reference never ships pixels either — it
 # passes image PATHS and reads executor-side (toddleocr/datasets/
@@ -85,7 +154,7 @@ def _decode_row_fn(bundle_bc):
 # re-read the directory of every archive on the worker's sys.path
 # (pyspark.zip, the py4j zip, the spark-core jar). The session's daemon
 # (paddleocr_spark/worker_daemon.py) takes those archives off sys.path,
-# so a trivial mapInPandas at local[3] on a 4-core x86 host (Python
+# so a trivial Python stage at local[3] on a 4-core x86 host (Python
 # 3.11) now costs ~0.03-0.04 worker CPU-s per task: 3 tasks 0.09-0.12 s,
 # 12 tasks 0.35-0.47 s (stock daemon: 0.66-0.72 s and 2.65-2.89 s).
 # Byte-balanced groups leave no straggler worth extra tasks to
@@ -127,26 +196,25 @@ def write_store_manifest(spark, store_path: str):
     root = (_os.path.dirname(store_path)
             if _os.path.isfile(store_path) else store_path)
 
+    to_batch = row_batch(MANIFEST_SCHEMA)
+
     def footer(batches):
         import os as _os2
 
-        import pandas as pd
         import pyarrow.parquet as pq
 
-        for pdf in batches:
-            files, rows, bts = [], [], []
-            for name in pdf["file"]:
+        for b in batches:
+            rows = []
+            for name in b.column("file").to_pylist():
                 full = _os2.path.join(root, name)
-                files.append(name)
-                rows.append(pq.ParquetFile(full).metadata.num_rows)
-                bts.append(_os2.path.getsize(full))
-            yield pd.DataFrame(
-                {"file": files, "n_rows": rows, "n_bytes": bts})
+                rows.append((name, pq.ParquetFile(full).metadata.num_rows,
+                             _os2.path.getsize(full)))
+            yield to_batch(rows)
 
     (spark.createDataFrame([(n,) for n in names], "file string")
      .repartition(max(1, min(len(names),
                              spark.sparkContext.defaultParallelism)))
-     .mapInPandas(footer, schema=MANIFEST_SCHEMA)
+     .mapInArrow(footer, schema=MANIFEST_SCHEMA)
      .write.mode("overwrite").parquet(manifest_path(store_path)))
 
 
@@ -244,13 +312,14 @@ def map_media_store(spark, source, fn, schema: str,
     One Python task per core, each reading one byte-balanced group of
     files (``_groups_df``): every Python task has a fixed cost (see
     "Pointer passing" above) that no rebalancing repays. Each Arrow
-    batch of a store file (each raw file) yields one output DataFrame,
-    empty ones included, plus one of its quarantine rows if any."""
+    batch of a store file (each raw file) yields one output batch, empty
+    ones included, its quarantine rows in the same batch as its data
+    rows."""
     from pyspark.sql.types import StructType
 
     schema += ", error string"
-    names = StructType.fromDDL(schema).fieldNames()
-    nulls = (None,) * (len(names) - 2)
+    to_batch = row_batch(schema)
+    nulls = (None,) * (len(StructType.fromDDL(schema)) - 2)
     if not isinstance(source, str):
         paths_df = source.select("path")
     else:
@@ -261,9 +330,7 @@ def map_media_store(spark, source, fn, schema: str,
     call = fn if columns is not None else (
         lambda path: fn(path, Path(path).read_bytes()))
 
-    def frames(units):
-        import pandas as pd
-
+    def batch_of(units):
         rows, errors = [], []
         for key, unit in units:
             n = len(rows)
@@ -273,38 +340,30 @@ def map_media_store(spark, source, fn, schema: str,
                 del rows[n:]  # a generator's partial rows
                 errors.append((key, *nulls,
                                f"{type(exc).__name__}: {exc}"[:200]))
-        out = pd.DataFrame(rows, columns=names[:-1])
-        out["error"] = None
-        yield out
-        if errors:
-            # object dtype: a null must not turn an int column into
-            # float64 (a 64-bit value would lose its low bits)
-            yield pd.DataFrame(errors, columns=names, dtype=object)
+        return to_batch([(*r, None) for r in rows] + errors)
 
     def per_file(batches):
         import pyarrow.parquet as pq
 
-        for pdf in batches:
-            for path in pdf["path"]:
+        for b in batches:
+            for path in b.column("path").to_pylist():
                 if columns is None:
                     path = path.removeprefix("file:")
-                    yield from frames([(path, path)])
+                    yield batch_of([(path, path)])
                     continue
-                # stream row-group batches instead of whole-file
-                # to_pandas: bounds per-task transient memory to ~tens
-                # of MB regardless of file size (whole-file pandas at
-                # full task concurrency caused reclaim stalls), and
+                # stream row-group batches instead of whole-file reads:
+                # bounds per-task transient memory to ~tens of MB
+                # regardless of file size (whole-file reads at full task
+                # concurrency caused reclaim stalls), and
                 # use_threads=False so workers don't each spin up
                 # Arrow's cpu_count-wide pool (~32x oversubscription)
                 pf = pq.ParquetFile(path)
                 for rb in pf.iter_batches(batch_size=512, columns=columns,
                                           use_threads=False):
-                    yield from frames(
-                        (d["media_ref"], d) for d in
-                        (row._asdict() for row in
-                         rb.to_pandas().itertuples(index=False)))
+                    yield batch_of((d["media_ref"], d)
+                                   for d in rb.to_pylist())
 
-    return paths_df.mapInPandas(per_file, schema=schema)
+    return paths_df.mapInArrow(per_file, schema=schema)
 
 
 def decode_media_store(spark, store_path: str):

@@ -172,7 +172,7 @@ def compute_goldens(n_docs: int, seed: int = 42, heavy_frac: float = 0.01):
     }]
 
     # --- SR / CAN / E2E metric goldens (sequential replicas of the
-    # Spark mapInPandas jobs in operators/metrics.py) ---
+    # Spark mapInArrow jobs in operators/metrics.py) ---
     from difflib import SequenceMatcher
 
     from .corpus import CHARSET

@@ -14,7 +14,7 @@ geometric primitives the reference gets from cv2 / shapely / pyclipper:
   shape the quad pipeline feeds it (input is always a minAreaRect box)
 - shoelace area / perimeter              (shapely Polygon.area/.length)
 
-These run inside Arrow-batched pandas UDFs on executors; no Spark or
+These run inside Arrow-batched Python stages on executors; no Spark or
 third-party imports beyond NumPy.
 """
 

@@ -2,7 +2,7 @@
 segmentation + boilerpipe/readability-style heuristics. Pure Python —
 the DOM walk is genuinely unexpressible in Catalyst, so this is the
 one text operator that earns its Arrow-batched UDF (driven through
-mapInPandas in ``operators/html_extract.py``; no per-row Python).
+mapInArrow in ``operators/html_extract.py``; no per-row Python).
 
 North-rule item: "main-content extraction (HTML boilerplate strip,
 PDF/layout parse, DOM heuristics)". The PDF/layout half lives in
@@ -83,7 +83,7 @@ def _decode_entities(s: str) -> str:
                 if 0xD800 <= code <= 0xDFFF:
                     # a lone surrogate is a valid Python str but NOT
                     # valid UTF-8 — it would crash the Arrow transfer
-                    # of the very mapInPandas stage this kernel feeds;
+                    # of the very mapInArrow stage this kernel feeds;
                     # html.unescape maps these to U+FFFD, so do we
                     return "�"
                 return chr(code) if 0 < code < 0x110000 else m.group(0)

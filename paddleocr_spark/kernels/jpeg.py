@@ -30,7 +30,7 @@ spec (ITU-T T.81):
 Out of scope (explicit errors, not wrong pixels): arithmetic coding,
 lossless/hierarchical modes, 12-bit precision, CMYK. The Huffman bit
 loop is sequential Python — inherent to the format's entropy coding;
-at scale each image decodes inside one mapInPandas task, so the
+at scale each image decodes inside one mapInArrow task, so the
 sequential part parallelizes across media exactly like the
 reference's per-image loop.
 

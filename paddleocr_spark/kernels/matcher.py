@@ -12,7 +12,7 @@ Exact re-creation of ``TableMatch`` (``toddleocr/postprocess/matcher.py``):
 
 Logically this is a per-document nearest-neighbor theta-join
 (boxes x cells with a rank-1 window); both sides are tiny per document,
-so it runs inside the per-table pandas UDF group.
+so it runs inside the per-media Python stage.
 """
 
 from __future__ import annotations

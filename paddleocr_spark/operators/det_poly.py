@@ -4,7 +4,7 @@
 (``corpus.poly_map_record``) with the poly-mode DB kernel
 (``kernels/db_poly.db_postprocess_poly`` — box_type="poly" +
 use_dilation, ``toddleocr/postprocess/db.py:38-84,213-216``) inside one
-Arrow ``mapInPandas`` pass and emits every output polygon vertex as an
+Arrow ``mapInArrow`` pass and emits every output polygon vertex as an
 integer row, hash-comparable against the sequential golden
 (``golden.py`` -> ``golden_det_polygons.parquet``).
 
@@ -28,40 +28,33 @@ __all__ = ["det_polygons"]
 
 
 def det_polygons(spark, sf_dir: str, seed: int = 42):
-    import pandas as pd
-
     from paddleocr_spark.corpus import (
         POLY_SHAPE_LIST,
         poly_map_count,
         poly_map_record,
     )
+    from paddleocr_spark.functions.udfs import row_batch
     from paddleocr_spark.kernels.db_poly import db_postprocess_poly
     from paddleocr_spark.operators._cache import eager_persist
 
     n_maps = poly_map_count(table_rows(sf_dir, "documents"))
     schema = ("map_id long, poly_idx long, point_idx long, "
               "x long, y long, score_micro long")
+    to_batch = row_batch(schema)
 
     def gen(batches):
-        for pdf in batches:
-            out = {c: [] for c in ("map_id", "poly_idx", "point_idx",
-                                   "x", "y", "score_micro")}
-            for mid in pdf["id"]:
-                mid = int(mid)
+        for b in batches:
+            rows = []
+            for mid in b.column("id").to_pylist():
                 pm = poly_map_record(mid, seed)
                 polys, scores = db_postprocess_poly(pm, POLY_SHAPE_LIST)
                 for pi, (poly, sc) in enumerate(zip(polys, scores)):
                     smicro = int(round(sc * 1e6))
-                    for ki, (x, y) in enumerate(poly.tolist()):
-                        out["map_id"].append(mid)
-                        out["poly_idx"].append(pi)
-                        out["point_idx"].append(ki)
-                        out["x"].append(int(x))
-                        out["y"].append(int(y))
-                        out["score_micro"].append(smicro)
-            yield pd.DataFrame(out)
+                    rows.extend((mid, pi, ki, int(x), int(y), smicro)
+                                for ki, (x, y) in enumerate(poly.tolist()))
+            yield to_batch(rows)
 
     ids = spark.range(n_maps, numPartitions=min(
         n_maps, spark.sparkContext.defaultParallelism))
-    polys = eager_persist(ids.mapInPandas(gen, schema), materialize=False)
+    polys = eager_persist(ids.mapInArrow(gen, schema), materialize=False)
     return polys.orderBy("map_id", "poly_idx", "point_idx")

@@ -8,7 +8,7 @@ inverted from per-image loops into set-at-a-time DataFrame stages:
       → explode(spans)
       → text branch:  boilerplate strip via JVM-side regexp (no Python)
       → media branch: decode ONCE PER DISTINCT media_ref (the media
-        store is already distinct) via one mapInPandas stage, then
+        store is already distinct) via one mapInArrow stage, then
         equi-join the small string fragments back to the spans
       → union → per-doc (offset, frag_idx) window → order
       → (doc_id, order, kind, text, media_ref, conf)

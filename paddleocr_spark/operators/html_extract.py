@@ -7,7 +7,7 @@ doc's text in a deterministic page template — title, nav link bar,
 short h1, the article paragraph (markup-escaped), a related-links
 farm, a second fixed paragraph, a short teaser, footer — with PURE
 column expressions, mirrored verbatim in the DuckDB oracle. The
-extractor (``kernels/html.py``, Arrow-batched mapInPandas) must then
+extractor (``kernels/html.py``, Arrow-batched mapInArrow) must then
 invert the construction exactly: drop the nav/footer subtrees, the
 link farm (link density), and the short blocks (min length), keep the
 two real paragraphs in order, decode the escaped entities, and recover
@@ -47,6 +47,7 @@ PR_SCALE = 10 ** 12  # fixed-point: rank 1.0 == 10^12
 
 _RESULT_SCHEMA = ("doc_id long, title string, main_text string, "
                   "n_blocks_kept long, n_blocks_dropped long")
+_RESULT_KEYS = ("title", "main_text", "n_blocks_kept", "n_blocks_dropped")
 
 
 def htmlize_documents(spark, sf_dir: str):
@@ -90,27 +91,20 @@ def html_main_content(spark, sf_dir: str):
     DOM heuristics. Expected on this template: title 'Doc <id>', main
     text = normalized article + PARA2, 2 kept / 3 dropped blocks (the
     short h1, the link farm, the teaser)."""
+    from paddleocr_spark.functions.udfs import row_batch
+
     docs = htmlize_documents(spark, sf_dir)
+    to_batch = row_batch(_RESULT_SCHEMA)
 
     def extract(batches):
-        import pandas as pd
-
         from paddleocr_spark.kernels.html import main_content
 
-        for pdf in batches:
-            rows = [main_content(h) for h in pdf["html"]]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "title": [r["title"] for r in rows],
-                "main_text": [r["main_text"] for r in rows],
-                "n_blocks_kept": pd.Series(
-                    [r["n_blocks_kept"] for r in rows], dtype="int64"),
-                "n_blocks_dropped": pd.Series(
-                    [r["n_blocks_dropped"] for r in rows],
-                    dtype="int64"),
-            })
+        for b in batches:
+            yield to_batch([(d["doc_id"], *map(main_content(d["html"]).get,
+                                               _RESULT_KEYS))
+                            for d in b.to_pylist()])
 
-    return docs.mapInPandas(extract, schema=_RESULT_SCHEMA)
+    return docs.mapInArrow(extract, schema=_RESULT_SCHEMA)
 
 
 def html_links(spark, sf_dir: str):
@@ -119,30 +113,22 @@ def html_links(spark, sf_dir: str):
     main-content extractor uses (so script bodies and comments can
     never fake a link). On this template each page yields 7 rows: the
     3 nav links, the 3 related-doc links, the footer /tos."""
-    from pyspark.sql import functions as F
+    from paddleocr_spark.functions.udfs import row_batch
 
     docs = htmlize_documents(spark, sf_dir)
+    schema = "doc_id long, pos long, href string"
+    to_batch = row_batch(schema)
 
     def extract(batches):
-        import pandas as pd
-
         from paddleocr_spark.kernels.html import extract_links
 
-        for pdf in batches:
-            ids, poss, hrefs = [], [], []
-            for doc_id, h in zip(pdf["doc_id"], pdf["html"]):
-                for pos, href in enumerate(extract_links(h)):
-                    ids.append(doc_id)
-                    poss.append(pos)
-                    hrefs.append(href)
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "pos": pd.Series(poss, dtype="int64"),
-                "href": pd.Series(hrefs, dtype="object"),
-            })
+        for b in batches:
+            yield to_batch([(d["doc_id"], pos, href)
+                            for d in b.to_pylist()
+                            for pos, href in enumerate(
+                                extract_links(d["html"]))])
 
-    return docs.mapInPandas(
-        extract, schema="doc_id long, pos long, href string")
+    return docs.mapInArrow(extract, schema=schema)
 
 
 def html_link_graph(spark, sf_dir: str):

@@ -177,21 +177,27 @@ def corpus_det_metric(media_df, fragments_df):
                       .alias("det_care"),
                       F.sum(((F.col("pred_text") == F.col("gt_text"))
                              .cast("long"))).alias("matched")))
-    totals = per_media.agg(F.sum("gt_care").alias("g"),
-                           F.sum("det_care").alias("d"),
-                           F.sum("matched").alias("m"))
+    return _combine_results(per_media, "gdm")
+
+
+def _combine_results(partials, order: str, f_name: str = "hmean"):
+    """The combine_results finalize (``toddleocr/metrics/det.py``) over
+    per-media (matched, gt_care, det_care) partials: the three totals
+    in ``order`` (``m``, ``g``, ``d``), then precision, recall and
+    their harmonic mean named ``f_name``, each rounded to 6 places."""
+    from pyspark.sql import functions as F
+
+    names = {"m": "matched_total", "g": "gt_total", "d": "det_total"}
+    m, g, d = F.col("m"), F.col("g"), F.col("d")
+    totals = partials.agg(F.sum("matched").alias("m"),
+                          F.sum("gt_care").alias("g"),
+                          F.sum("det_care").alias("d"))
     return totals.select(
-        F.col("g").cast("long").alias("gt_total"),
-        F.col("d").cast("long").alias("det_total"),
-        F.col("m").cast("long").alias("matched_total"),
-        F.round(F.when(F.col("d") > 0, F.col("m") / F.col("d"))
-                .otherwise(0.0), 6).alias("precision"),
-        F.round(F.when(F.col("g") > 0, F.col("m") / F.col("g"))
-                .otherwise(0.0), 6).alias("recall"),
-        F.round(F.when((F.col("d") + F.col("g")) > 0,
-                       2 * F.col("m") / (F.col("d") + F.col("g")))
-                .otherwise(0.0), 6).alias("hmean"),
-    )
+        *[F.col(c).cast("long").alias(names[c]) for c in order],
+        F.round(F.when(d > 0, m / d).otherwise(0.0), 6).alias("precision"),
+        F.round(F.when(g > 0, m / g).otherwise(0.0), 6).alias("recall"),
+        F.round(F.when((d + g) > 0, 2 * m / (d + g)).otherwise(0.0), 6)
+        .alias(f_name))
 
 
 def det_iou_metric(store_path: str):
@@ -201,17 +207,14 @@ def det_iou_metric(store_path: str):
     (matched, gt_care, det_care) partials, then a global agg +
     combine_results finalize — partial/final exactly as DetMetric
     (``toddleocr/metrics/det.py:6-53``)."""
-    from pyspark.sql import functions as F
 
     def eval_row(d):
         import numpy as np
 
-        from paddleocr_spark.corpus import dequantize_map
-        from paddleocr_spark.kernels.db import db_postprocess
+        from paddleocr_spark.extract_core import det_boxes
         from paddleocr_spark.kernels.eval_det_iou import evaluate_image
 
-        pm = dequantize_map(d["det_map"], int(d["det_h"]), int(d["det_w"]))
-        pred = db_postprocess(pm, [float(x) for x in d["shape_list"]])
+        pred = det_boxes(d)
         gt = [{"points": np.asarray(b, dtype=np.float64).reshape(4, 2)}
               for b in d["gt_boxes"]]
         return [(d["media_ref"],
@@ -222,21 +225,7 @@ def det_iou_metric(store_path: str):
         "media_ref string, matched long, gt_care long, det_care long",
         ["media_ref", "det_map", "det_h", "det_w", "shape_list",
          "gt_boxes"])
-    totals = partials.agg(F.sum("matched").alias("m"),
-                          F.sum("gt_care").alias("g"),
-                          F.sum("det_care").alias("d"))
-    return totals.select(
-        F.col("m").cast("long").alias("matched_total"),
-        F.col("g").cast("long").alias("gt_total"),
-        F.col("d").cast("long").alias("det_total"),
-        F.round(F.when(F.col("d") > 0, F.col("m") / F.col("d"))
-                .otherwise(0.0), 6).alias("precision"),
-        F.round(F.when(F.col("g") > 0, F.col("m") / F.col("g"))
-                .otherwise(0.0), 6).alias("recall"),
-        F.round(F.when((F.col("d") + F.col("g")) > 0,
-                       2 * F.col("m") / (F.col("d") + F.col("g")))
-                .otherwise(0.0), 6).alias("hmean"),
-    )
+    return _combine_results(partials, "mgd")
 
 
 def _map_media(store_path, row_fn, schema, columns):
@@ -326,7 +315,6 @@ def e2e_metric(store_path: str):
     un-rotated decode, so rotated boxes miss — precision/recall/f sit
     strictly below the det-only metric. Greedy per-media matching +
     combine_results finalize."""
-    from pyspark.sql import functions as F
 
     def norm(t):
         return "".join(c for c in t.lower() if c.isalnum())
@@ -334,24 +322,15 @@ def e2e_metric(store_path: str):
     def eval_row(d):
         import numpy as np
 
-        from paddleocr_spark.corpus import CHARSET, dequantize_logits, \
-            dequantize_map
-        from paddleocr_spark.kernels.ctc import ctc_decode
-        from paddleocr_spark.kernels.db import db_postprocess
+        from paddleocr_spark.extract_core import det_boxes, raw_rec
         from paddleocr_spark.kernels.eval_det_iou import poly_iou
         from paddleocr_spark.kernels.reading_order import sorted_boxes
 
-        pm = dequantize_map(d["det_map"], int(d["det_h"]), int(d["det_w"]))
         # rec_logits are stored in sorted_boxes order — sort pred_boxes
         # the same way or texts[pi] pairs with a DIFFERENT box (same
         # fix as golden.py's e2e twin)
-        pred_boxes = sorted_boxes(db_postprocess(
-            pm, [float(x) for x in d["shape_list"]]))
-        texts = []
-        for lg in d["rec_logits"]:
-            t, _ = ctc_decode(dequantize_logits(lg, int(d["rec_t"]),
-                                                int(d["rec_c"])), CHARSET)
-            texts.append(t)
+        pred_boxes = sorted_boxes(det_boxes(d))
+        texts = [t for t, _ in raw_rec(d)]
         gt = [(np.asarray(b, dtype=np.float64).reshape(4, 2),
                norm(d["gt_texts"][i]))
               for i, b in enumerate(d["gt_boxes"])]
@@ -373,20 +352,7 @@ def e2e_metric(store_path: str):
         "media_ref string, matched long, gt_care long, det_care long",
         ["media_ref", "det_map", "det_h", "det_w", "shape_list",
          "gt_boxes", "gt_texts", "rec_logits", "rec_t", "rec_c"])
-    totals = partials.agg(F.sum("matched").alias("m"),
-                          F.sum("gt_care").alias("g"),
-                          F.sum("det_care").alias("d"))
-    return totals.select(
-        F.col("m").cast("long").alias("matched_total"),
-        F.col("g").cast("long").alias("gt_total"),
-        F.col("d").cast("long").alias("det_total"),
-        F.round(F.when(F.col("d") > 0, F.col("m") / F.col("d"))
-                .otherwise(0.0), 6).alias("precision"),
-        F.round(F.when(F.col("g") > 0, F.col("m") / F.col("g"))
-                .otherwise(0.0), 6).alias("recall"),
-        F.round(F.when((F.col("d") + F.col("g")) > 0,
-                       2 * F.col("m") / (F.col("d") + F.col("g")))
-                .otherwise(0.0), 6).alias("f_score_e2e"))
+    return _combine_results(partials, "mgd", "f_score_e2e")
 
 
 def ct_metric(store_path: str):
@@ -394,7 +360,7 @@ def ct_metric(store_path: str):
     scoring of detections — per-media sigma/tau coverage tables +
     one-to-one/one-to-many/many-to-one matching
     (``metrics/_det_eval.py:293-834``, rec_flag=False), distributed as
-    mapInPandas partials (recall_accum, precision_accum, n_gt, n_det)
+    mapInArrow partials (recall_accum, precision_accum, n_gt, n_det)
     + a global sum/ratio finalize. Unlike the greedy IoU metric, this
     credits split (one gt → many dets) and merged (many gts → one det)
     detections at the fsc_k=0.8 discount."""
@@ -403,15 +369,13 @@ def ct_metric(store_path: str):
     def eval_row(d):
         import numpy as np
 
-        from paddleocr_spark.corpus import dequantize_map
-        from paddleocr_spark.kernels.db import db_postprocess
+        from paddleocr_spark.extract_core import det_boxes
         from paddleocr_spark.kernels.det_eval import (
             deteval_sample,
             sigma_tau_tables,
         )
 
-        pm = dequantize_map(d["det_map"], int(d["det_h"]), int(d["det_w"]))
-        pred = db_postprocess(pm, [float(x) for x in d["shape_list"]])
+        pred = det_boxes(d)
         gt_polys = [np.asarray(b, dtype=np.float64).reshape(4, 2)
                     for b in d["gt_boxes"]]
         sigma, tau = sigma_tau_tables(gt_polys, list(d["gt_texts"]), pred)

@@ -3,7 +3,7 @@
 Two oracle-checked queries extending the dedup family
 (``operators/dedup.py``) to IMAGE payloads:
 
-- ``image_phash``: one Arrow ``mapInPandas`` pass over the media store
+- ``image_phash``: one Arrow ``mapInArrow`` pass over the media store
   computing the 64-bit pHash (``kernels/phash.py``) of every stored
   image AND of its deterministic 4-bit-requantized degradation (the
   same degradation ``sr_metric`` uses) — the fixture stand-in for

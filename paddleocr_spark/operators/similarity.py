@@ -38,7 +38,6 @@ the operator is observed producing output.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd  # module-level: pandas_udf type hints resolve here
 
 from paddleocr_spark.sources.tables import (
     derived_dir,
@@ -112,7 +111,6 @@ def _augmented(spark, sf_dir):
 
 def cosine_topk_bruteforce(spark, sf_dir: str, n_queries: int = N_QUERIES,
                            k: int = TOP_K):
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     emb = _load(spark, sf_dir).withColumn("nrm", _norm(F, F.col("emb")))
@@ -120,12 +118,24 @@ def cosine_topk_bruteforce(spark, sf_dir: str, n_queries: int = N_QUERIES,
                .select(F.col("vec_id").alias("query_id"),
                        F.col("emb").alias("qemb"),
                        F.col("nrm").alias("qnrm")))
-    scored = (emb.crossJoin(F.broadcast(queries))
-              .where(F.col("vec_id") != F.col("query_id"))
+    return _top_k(F, emb.crossJoin(F.broadcast(queries)), k, dedup=False)
+
+
+def _top_k(F, pairs, k: int, dedup: bool = True):
+    """(query_id, rank, vec_id, cosine): the ``k`` best-scoring vectors
+    of each query over its candidate ``pairs`` (query_id, qemb, qnrm,
+    vec_id, emb, nrm), self-pairs excluded, rank ties to the smaller
+    vec_id. ``dedup`` scores a pair once however often it appears (a
+    shuffle that pairs known to be distinct skip)."""
+    from pyspark.sql import Window
+
+    scored = (pairs.where(F.col("vec_id") != F.col("query_id"))
               .select("query_id", "vec_id",
                       F.round(_dot(F, F.col("qemb"), F.col("emb"))
                               / (F.col("qnrm") * F.col("nrm")), 6)
                       .alias("cosine")))
+    if dedup:
+        scored = scored.dropDuplicates(["query_id", "vec_id"])
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("vec_id"))
     return (scored.withColumn("rank", F.row_number().over(w).cast("int"))
@@ -134,7 +144,8 @@ def cosine_topk_bruteforce(spark, sf_dir: str, n_queries: int = N_QUERIES,
 
 
 def _band_buckets(F, df, emb_col: str = "emb"):
-    """vec rows → (…, band, bucket) via ONE vectorized pandas_udf.
+    """vec rows → (…, band, bucket): ONE mapInArrow appends each row's
+    ``SIGN_BANDS`` bucket ids, then ``posexplode`` makes the band rows.
 
     The naive Catalyst form — SIGN_BANDS*SIGN_BITS = 64
     ``aggregate(zip_with(...))`` folds per row — is interpreted
@@ -146,59 +157,60 @@ def _band_buckets(F, df, emb_col: str = "emb"):
     (one vectorized add per dim), the exact fold order of the previous
     Catalyst ``aggregate`` and of the oracle's SQL fold — no matmul,
     whose pairwise summation could flip a near-zero sign."""
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import StructType
+
+    from paddleocr_spark.functions.udfs import row_batch
 
     planes = np.asarray(PLANES, dtype=np.float64)  # (bands*bits, dim)
+    to_buckets = row_batch("buckets array<int>")
+    schema = StructType([*df.schema,
+                         *StructType.fromDDL("buckets array<int>")])
 
-    @pandas_udf("array<int>")
-    def _buckets(emb: pd.Series) -> pd.Series:
-        if len(emb) == 0:  # np.stack raises on an empty Arrow batch
-            return pd.Series([], dtype=object)
-        m = np.stack(emb.to_numpy()).astype(np.float64)  # (n, dim)
-        dots = np.empty((m.shape[0], planes.shape[0]))
-        for p in range(planes.shape[0]):
-            acc = np.zeros(m.shape[0])
-            for d in range(m.shape[1]):
-                acc = acc + m[:, d] * planes[p, d]
-            dots[:, p] = acc
-        bits = (dots >= 0).astype(np.int32)
-        res = np.zeros((m.shape[0], SIGN_BANDS), dtype=np.int32)
-        for band in range(SIGN_BANDS):
-            for bit in range(SIGN_BITS):
-                res[:, band] |= bits[:, band * SIGN_BITS + bit] << bit
-        return pd.Series([row.tolist() for row in res])
+    def buckets(batches):
+        import pyarrow as pa
 
-    return df.select("*", F.posexplode(_buckets(F.col(emb_col)))
-                     .alias("band", "bucket"))
+        for b in batches:
+            if not b.num_rows:
+                continue
+            m = np.array(b.column(emb_col).to_pylist(), dtype=np.float64)
+            dots = np.empty((m.shape[0], planes.shape[0]))
+            for p in range(planes.shape[0]):
+                acc = np.zeros(m.shape[0])
+                for d in range(m.shape[1]):
+                    acc = acc + m[:, d] * planes[p, d]
+                dots[:, p] = acc
+            # band b's bucket: its SIGN_BITS sign bits, bit k = plane
+            # b * SIGN_BITS + k
+            bits = (dots >= 0).reshape(len(m), SIGN_BANDS, SIGN_BITS)
+            res = (bits << np.arange(SIGN_BITS)).sum(axis=2)
+            out = to_buckets([(row,) for row in res.tolist()])
+            yield pa.RecordBatch.from_arrays(
+                [*b.columns, out.column(0)],
+                schema=b.schema.append(out.schema.field(0)))
+
+    return (df.mapInArrow(buckets, schema)
+            .select(*df.columns, F.posexplode("buckets")
+                    .alias("band", "bucket")))
 
 
 def cosine_topk_lsh(spark, sf_dir: str, n_queries: int = N_QUERIES,
                     k: int = TOP_K):
     """Approximate top-k: candidates = vectors sharing ≥1 (band,
     bucket) key with the query, exact cosine on candidates only."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     emb = _load(spark, sf_dir)
     bands = _band_buckets(F, emb).withColumn("nrm", _norm(F, F.col("emb")))
-    qbands = (bands.where(F.col("vec_id") < n_queries)
+    # the query side buckets its n_queries rows in a stage of its own:
+    # Catalyst pushes no filter below a mapInArrow
+    qbands = (_band_buckets(F, emb.where(F.col("vec_id") < n_queries))
               .select(F.col("vec_id").alias("query_id"),
                       F.col("emb").alias("qemb"),
-                      F.col("nrm").alias("qnrm"), "band", "bucket"))
-    scored = (bands.join(F.broadcast(qbands), ["band", "bucket"])
-              .where(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", "vec_id",
-                      F.round(_dot(F, F.col("qemb"), F.col("emb"))
-                              / (F.col("qnrm") * F.col("nrm")), 6)
-                      .alias("cosine"))
-              # a pair colliding in several bands scores identically in
-              # each; dedup the small (id, id, score) rows, not the embs
-              .dropDuplicates(["query_id", "vec_id"]))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("int"))
-            .where(F.col("rank") <= k)
-            .select("query_id", "rank", "vec_id", "cosine"))
+                      _norm(F, F.col("emb")).alias("qnrm"), "band", "bucket"))
+    # a pair colliding in several bands scores identically in each;
+    # _top_k dedups the small (id, id, score) rows, not the embs
+    return _top_k(F, bands.join(F.broadcast(qbands), ["band", "bucket"]),
+                  k)
 
 
 def embedding_near_dups(spark, sf_dir: str, threshold: float = 0.9):
@@ -287,19 +299,8 @@ def _ivf_probe_rerank(F, Window, emb, cent, assign, n_queries: int,
                        F.col("qnrm").alias("nrm")),
         cent, "query_id", nprobe)
         .select("query_id", "cid"))
-    cand = (probes.join(queries, "query_id")
-            .join(members, "cid")
-            .where(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", "vec_id",
-                    F.round(_dot(F, F.col("qemb"), F.col("emb"))
-                            / (F.col("qnrm") * F.col("nrm")), 6)
-                    .alias("cosine"))
-            .dropDuplicates(["query_id", "vec_id"]))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id"))
-    return (cand.withColumn("rank", F.row_number().over(w).cast("int"))
-            .where(F.col("rank") <= k)
-            .select("query_id", "rank", "vec_id", "cosine"))
+    return _top_k(F, probes.join(queries, "query_id").join(members, "cid"),
+                  k)
 
 
 def cosine_topk_ivf(spark, sf_dir: str, n_queries: int = N_QUERIES,

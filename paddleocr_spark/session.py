@@ -1,11 +1,11 @@
 """SparkSession factory with scale-aware defaults.
 
 Single place for the physical-execution knobs the pipeline relies on:
-AQE (runtime coalesce + skew-join split), Arrow for all pandas UDF
-traffic, and a small Arrow batch size — media fixture rows carry
-~40 KB of tensor bytes each, so the default 10k-records-per-batch
-would materialize ~400 MB pandas batches per task; 512 keeps peak
-executor memory flat at any scale.
+AQE (runtime coalesce + skew-join split), Arrow for the driver's
+``toPandas``, and a small Arrow batch size for the ``mapInArrow``
+stages — media fixture rows carry ~40 KB of tensor bytes each, so the
+default 10k-records-per-batch would materialize ~400 MB batches per
+task; 512 keeps peak executor memory flat at any scale.
 
 Python workers start from ``paddleocr_spark.worker_daemon`` (set as
 ``spark.python.daemon.module``), which takes pyspark's archives off the

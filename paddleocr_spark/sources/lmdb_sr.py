@@ -13,7 +13,7 @@ Iceberg table of (idx, image_hr, image_lr, label) rows — the same
 shard/index scheme LMDBDataSet maps to (SURVEY §2.1) — and str_filt is
 a pure-JVM regexp_replace, so the whole source is one pruned scan +
 codegen'd projection; images decode downstream in the usual
-mapInPandas stage (kernels/imgcodec), feeding ``sr_metric``.
+mapInArrow stage (kernels/imgcodec), feeding ``sr_metric``.
 """
 
 from __future__ import annotations

@@ -147,11 +147,11 @@ def test_store_decode_is_one_task_per_core_in_two_jobs(spark):
 
 
 def _python_nodes(plan, parent=None):
-    """(MapInPandas node, name of the node reading its output) of an
+    """(MapInArrow node, name of the node reading its output) of an
     executed physical plan, cached plans and AQE query stages included
     (the wrappers are looked through, not named as the reader)."""
     name = plan.nodeName()
-    if name == "MapInPandas":
+    if name == "MapInArrow":
         yield plan, parent
     kids = [plan.children().apply(i) for i in range(plan.children().size())]
     wrapper = name == "AdaptiveSparkPlan" or name.endswith("QueryStage")
@@ -686,7 +686,7 @@ def _n_crossings(df):
     # once in the tree and once in the detail section
     import re
 
-    return len(re.findall(r"^\(\d+\) MapInPandas", formatted_plan(df),
+    return len(re.findall(r"^\(\d+\) MapInArrow", formatted_plan(df),
                           re.MULTILINE))
 
 

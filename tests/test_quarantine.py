@@ -137,25 +137,62 @@ def test_failed_unit_leaks_no_partial_rows(spark, tmp_path):
                    (str(tmp_path / "b.bin"), None,
                     "ValueError: after one row")}
 
+    # store rows: one Arrow batch carries a long above 2^53, a null in
+    # the same column and a quarantine row; the long comes out exact
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    store = tmp_path / "store"
+    store.mkdir()
+    pq.write_table(pa.table({"media_ref": ["a", "b"]}),
+                   store / "part-0.parquet")
+    big = 2 ** 53 + 1
+
+    def store_rows(d):
+        yield (d["media_ref"], big)
+        if d["media_ref"] == "b":
+            raise ValueError("after one row")
+        yield (d["media_ref"], None)
+
+    got = {tuple(r) for r in map_media_store(
+        spark, str(store), store_rows, "name string, i long",
+        columns=["media_ref"]).collect()}
+    assert got == {("a", big, None), ("a", None, None),
+                   ("b", None, "ValueError: after one row")}
+
 
 def test_one_byte_loop_in_the_package():
     """No sixth byte loop: only the ingest stream names the binaryFile
-    source, and no module under sources/ or streaming/ runs a
-    mapInPandas of its own (they pass per-unit functions to the shared
+    source, and no module under sources/ or streaming/ runs a Python
+    stage of its own (they pass per-unit functions to the shared
     loop)."""
     binary, loops = [], []
-    for d, _, files in os.walk(PKG):
-        for f in files:
-            if not f.endswith(".py"):
-                continue
-            path = os.path.join(d, f)
-            rel = os.path.relpath(path, PKG)
-            with open(path, encoding="utf-8") as fh:
-                src = fh.read()
-            if "binaryFile" in src:
-                binary.append(rel)
-            if (rel.startswith(("sources", "streaming"))
-                    and re.search(r"\.mapInPandas\(", src)):
-                loops.append(rel)
+    for rel, src in _package_sources():
+        if "binaryFile" in src:
+            binary.append(rel)
+        if (rel.startswith(("sources", "streaming"))
+                and re.search(r"\.(mapInArrow|mapInPandas)\(", src)):
+            loops.append(rel)
     assert binary == [os.path.join("streaming", "incremental.py")]
     assert loops == []
+
+
+def test_one_arrow_crossing_in_the_package():
+    """Every Python stage is a ``mapInArrow``: pandas is named only by
+    the grouped-state stream (``applyInPandasWithState``) and the
+    driver-side golden writer."""
+    pandas = [rel for rel, src in _package_sources()
+              if re.search(r"mapInPandas|pandas_udf|^\s*import pandas",
+                           src, re.MULTILINE)]
+    assert sorted(pandas) == ["golden.py",
+                              os.path.join("streaming", "stateful.py")]
+
+
+def _package_sources():
+    """(path relative to the package, source) of every module."""
+    for d, _, files in sorted(os.walk(PKG)):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(d, f)
+                with open(path, encoding="utf-8") as fh:
+                    yield os.path.relpath(path, PKG), fh.read()
